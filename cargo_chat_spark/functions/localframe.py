@@ -18,7 +18,8 @@ the 32-task parallelize path — profiled as ~50 s of summed zero-CPU task
 wall in events_merge_on_read). Anything the pandas path cannot
 faithfully represent falls back to the original ``createDataFrame``:
 
-- empty input, non-list rows, shape mismatch;
+- non-list rows, shape mismatch (empty input goes through an empty
+  Arrow table, so it plans as an empty ``LocalTableScan`` too);
 - timestamp / struct / map / date / decimal fields (pandas coercions
   differ from the tuple path's);
 - any float NaN cell: pandas→Arrow turns NaN into NULL while the tuple
@@ -72,11 +73,15 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
             return spark.createDataFrame(rows, schema)
     else:
         return spark.createDataFrame(rows, schema)
-    if not rows:
-        return spark.createDataFrame(rows, schema)
     try:
         import pandas as pd
 
+        if not rows:
+            # an empty Arrow table plans as an empty LocalTableScan; the
+            # pandas path would refuse the empty frame and parallelize
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            return spark.createDataFrame(to_arrow_schema(st).empty_table(), schema=st)
         names = [f.name for f in st.fields]
         first = rows[0]
         if not isinstance(first, (tuple, list)) or len(first) != len(names):

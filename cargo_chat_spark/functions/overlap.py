@@ -36,6 +36,9 @@ class _JobThread(threading.Thread):
 
     def join(self, timeout=None):  # type: ignore[override]
         super().join(timeout)
+        if self.is_alive():
+            # an unfinished job must not read as a finished one
+            raise TimeoutError(f"job still running after {timeout} s")
         if self.exc is not None:
             raise self.exc
         return self.result
@@ -44,7 +47,8 @@ class _JobThread(threading.Thread):
 def spawn_job(fn: Callable[[], object]) -> _JobThread:
     """Start ``fn`` (a driver-blocking Spark action) on a side thread;
     returns the thread. ``join()`` re-raises the job's exception and
-    returns its result."""
+    returns its result; ``join(timeout)`` raises ``TimeoutError`` if the
+    job is still running when the timeout expires."""
     t = _JobThread(fn)
     t.start()
     return t

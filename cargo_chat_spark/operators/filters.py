@@ -1,8 +1,13 @@
 """Classification-driven candidate filters (SURVEY §2.3 F2-F5, F8).
 
-Each predicate is implemented twice, deliberately adjacent so they cannot
-drift: a Spark Column expression and a DuckDB SQL emitter used by the oracle
-queries. Semantics are exactly the reference's retain() closures:
+The scope filters F2-F4 are implemented twice, deliberately adjacent so
+they cannot drift: a Spark Column expression and a DuckDB SQL emitter used
+by the oracle queries. The ranking predicates (F5, F8 and the O5 language
+match) are one SQL text emitter each, shared by both engines: Spark runs
+the text through ``selectExpr`` in ``ranking.reference_rank`` (one driver
+round trip per plan pass instead of hundreds of Column calls) and the
+oracle embeds it in DuckDB SQL.
+Semantics are exactly the reference's retain() closures:
 
 - F2 folder filter      /root/reference/src/hyde.rs:825-866
 - F3 extension filter   /root/reference/src/hyde.rs:869-927
@@ -10,6 +15,8 @@ queries. Semantics are exactly the reference's retain() closures:
 - F5 code/doc split     /root/reference/src/hyde.rs:1012-1056 (high-conf
                         branch; path fallback when extension is NULL) and
                         hyde.rs:1190-1199 (simple ext-only variant, no adoc)
+- F8 confidence gate    hyde.rs:1008
+- O5 language match     hyde.rs:1065-1103
 
 A NULL or empty array means "filter disabled" (the reference wraps each in
 ``if let Some(..) if !empty``).
@@ -29,6 +36,7 @@ from pyspark.sql import functions as F
 from cargo_chat_spark.functions.language import (
     DOC_EXTENSIONS,
     DOC_EXTENSIONS_SIMPLE,
+    detect_language_sql_case,
 )
 
 
@@ -124,53 +132,49 @@ def exclude_match_sql(file: str, patterns: str) -> str:
 
 
 # ---------------------------------------------------------- F5 code vs doc
+# F5, F8 and the O5 language match are SQL text for BOTH engines:
+# ``ranking.reference_rank`` passes it to Spark's ``selectExpr`` and the
+# oracle embeds it in DuckDB SQL, so every function used here must exist
+# in both dialects (suffix tests are LIKE, not ends_with/endswith).
 _PATH_DOC_MARKERS = ["/docs/", "readme", "resources", "changelog", "license"]
 
 
-def is_code(ext: Column, file: Column) -> Column:
+def is_code_sql(ext: str, file: str) -> str:
     """High-confidence branch partition (hyde.rs:1016-1056): with an
     extension, code = ext ∉ {md,txt,rst,adoc}; without, path analysis."""
-    file_lower = F.lower(file)
-    path_is_code = (
-        ~file_lower.endswith(".md")
-        & ~file_lower.endswith(".txt")
-        & ~file_lower.contains("/docs/")
-        & ~file_lower.contains("readme")
-        & ~file_lower.contains("resources")
-        & ~file_lower.contains("changelog")
-        & ~file_lower.contains("license")
-    )
-    return F.when(ext.isNotNull(), ~ext.isin(DOC_EXTENSIONS)).otherwise(path_is_code)
-
-
-def is_code_sql(ext: str, file: str) -> str:
     doc_exts = ", ".join(f"'{e}'" for e in DOC_EXTENSIONS)
     not_markers = " AND ".join(
-        f"NOT contains(lower({file}), '{m}')" for m in _PATH_DOC_MARKERS[2:]
+        f"NOT contains(lower({file}), '{m}')" for m in _PATH_DOC_MARKERS
     )
     return f"""(
         CASE WHEN {ext} IS NOT NULL THEN {ext} NOT IN ({doc_exts})
-             ELSE NOT ends_with(lower({file}), '.md')
-                  AND NOT ends_with(lower({file}), '.txt')
-                  AND NOT contains(lower({file}), '/docs/')
-                  AND NOT contains(lower({file}), 'readme')
+             ELSE NOT lower({file}) LIKE '%.md'
+                  AND NOT lower({file}) LIKE '%.txt'
                   AND {not_markers}
         END
     )"""
 
 
-def is_doc_simple(ext: Column) -> Column:
+def is_doc_simple_sql(ext: str) -> str:
     """Low-confidence branch doc flag (hyde.rs:1190-1199): ext-only,
     {md,txt,rst} — the reference omits adoc here; quirk preserved."""
-    return F.when(ext.isNotNull(), ext.isin(DOC_EXTENSIONS_SIMPLE)).otherwise(F.lit(False))
-
-
-def is_doc_simple_sql(ext: str) -> str:
     exts = ", ".join(f"'{e}'" for e in DOC_EXTENSIONS_SIMPLE)
     return f"(COALESCE({ext} IN ({exts}), FALSE))"
 
 
 # ----------------------------------------------------------- F8 confidence
-def high_confidence_code(wants_code: Column, confidence: Column) -> Column:
+def high_confidence_code_sql(wants_code: str, confidence: str) -> str:
     """Branch gate (hyde.rs:1008): wants_code AND confidence > 0.7."""
-    return wants_code & (confidence > 0.7)
+    return f"({wants_code} AND {confidence} > 0.7)"
+
+
+# ------------------------------------------------------ O5 language match
+def lang_match_sql(language: str, extension: str, target_lang: str) -> str:
+    """O5 (hyde.rs:1065-1103): the metadata language equals the target
+    case-insensitively, OR the extension-detected language's display name
+    does."""
+    detected = detect_language_sql_case(extension)
+    return f"""(
+        COALESCE(lower({language}) = lower({target_lang}), FALSE)
+        OR COALESCE(lower({detected}) = lower({target_lang}), FALSE)
+    )"""

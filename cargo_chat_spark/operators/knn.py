@@ -25,10 +25,33 @@ Spark-first physical strategy
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.functions import vectors
+
+
+def _distance(metric: str, query_vec: str, corpus_vec: str, dim) -> Column:
+    """The ``metric`` distance between the two vector columns; raises when
+    their lengths differ. Unchecked, ``zip_with`` pads the shorter vector
+    with NULLs, every distance is NULL, and NULLs sort first, so a provider
+    whose embedding dim differs from the index's would silently rank
+    arbitrary rows."""
+    if isinstance(dim, int):
+        # one SQL string, one py4j round trip — the Column-loop form costs
+        # hundreds of driver round trips per plan build (see vectors.py)
+        sql = vectors.DISTANCES_FIXED_SQL[metric](
+            f"`{query_vec}`", f"`{corpus_vec}`", dim
+        )
+        distance = F.expr(sql)
+    else:
+        distance = vectors.DISTANCES[metric](F.col(query_vec), F.col(corpus_vec))
+    q_dim, c_dim = F.size(query_vec), F.size(corpus_vec)
+    mismatch = F.raise_error(F.concat(
+        F.lit("query vector has dim "), q_dim.cast("string"),
+        F.lit(" but the corpus vectors have dim "), c_dim.cast("string"),
+    ))
+    return F.when(q_dim != c_dim, mismatch).otherwise(distance)
 
 
 def knn_join(
@@ -59,6 +82,8 @@ def knn_join(
     Returns columns: query_id, neighbor_id, distance, rank (1-based)
     plus any ``keep_corpus_cols`` (J3 metadata resolution folded into the
     same join — no positional parallel arrays, unlike ann.rs:263-268).
+    Executing the plan raises if a query vector and a corpus vector differ
+    in length; the error names both dims.
 
     ``dim``: pass the vector dimension (or ``"auto"`` to sniff it from the
     corpus with one scalar job, like the reference's load-time dim sniff,
@@ -69,15 +94,7 @@ def knn_join(
     """
     if dim == "auto":
         dim = vectors.infer_dim(corpus, corpus_vec)
-    if isinstance(dim, int):
-        # one SQL string, one py4j round trip — the Column-loop form costs
-        # hundreds of driver round trips per plan build (see vectors.py)
-        sql = vectors.DISTANCES_FIXED_SQL[metric](
-            f"`{query_vec}`", f"`{corpus_vec}`", dim
-        )
-        distance = F.expr(sql)
-    else:
-        distance = vectors.DISTANCES[metric](F.col(query_vec), F.col(corpus_vec))
+    distance = _distance(metric, query_vec, corpus_vec, dim)
     keep = keep_corpus_cols or []
 
     joined = corpus.crossJoin(F.broadcast(queries))  # corpus never shuffles
@@ -262,19 +279,10 @@ def knn_join_batched(
         qp = blocked.repartition(nblocks, F.col(query_id)).hint(
             "shuffle_replicate_nl"
         )
-        if isinstance(dim, int):
-            sql = vectors.DISTANCES_FIXED_SQL[metric](
-                f"`{query_vec}`", f"`{corpus_vec}`", dim
-            )
-            distance = F.expr(sql)
-        else:
-            distance = vectors.DISTANCES[metric](
-                F.col(query_vec), F.col(corpus_vec)
-            )
         scored = corpus.crossJoin(qp).select(
             F.col(query_id).alias("query_id"),
             F.col(corpus_id).alias("neighbor_id"),
-            distance.alias("distance"),
+            _distance(metric, query_vec, corpus_vec, dim).alias("distance"),
         )
         w = Window.partitionBy("query_id").orderBy(
             F.asc("distance"), F.asc("neighbor_id")

@@ -1,11 +1,11 @@
-"""Reference retrieval ranking (SURVEY §2.5 O1-O7) as one window pass.
+"""Reference retrieval ranking (SURVEY §2.5 O1-O7) as SQL window passes.
 
 Reproduces apply_llm_based_filtering (/root/reference/src/hyde.rs:975-1215)
 plus the final truncate(k) (hyde.rs:519) declaratively:
 
 high-confidence code branch (wants_code AND confidence > 0.7):
-  1. partition candidates into code/doc (filters.is_code)
-  2. code sorted by (lang_match DESC when query.language set, distance)
+  1. partition candidates into code/doc (filters.is_code_sql)
+  2. code sorted by (lang_match_sql DESC when query.language set, distance)
   3. docs sorted by distance, capped at doc_limit:
        confidence > 0.8                      -> 0
        intent how_it_works, ≥3 code hits     -> 0, else 1
@@ -14,17 +14,21 @@ high-confidence code branch (wants_code AND confidence > 0.7):
        other                                 -> 0
   4. code first, then allowed docs
 else branch:
-  sort by (is_doc_simple DESC when NOT wants_code, distance)
+  sort by (is_doc_simple_sql DESC when NOT wants_code, distance)
 
 The reference relies on stable Vec sorts for tie order; Spark sorts are not
 stable across partitions, so every ordering adds the chunk_id tie-break
 (SURVEY §2.11) — this makes results totally ordered and oracle-hashable.
 
-Physical shape: everything is expressed as window functions over
-(query_id) — Catalyst plans ONE shuffle on query_id shared by all four
-windows (count, doc_rank, rank), and WindowGroupLimit prunes per-partition
-before the exchange for the final rank<=k filter. No driver-side loops, no
-UDFs; scales with executors × candidates.
+Physical shape: every pass is one ``selectExpr``/``where`` over SQL
+text (the F5/F8/O5 predicates come from the shared emitters in
+``operators.filters``, the same text the DuckDB oracle embeds), so
+building the plan costs tens of driver round trips; the same logic built
+from Column expressions costs over a thousand, paid on every interactive
+question. All windows partition by query_id, so
+Catalyst plans ONE shuffle on query_id shared by the four windows
+(code count, doc rank, selection rank, final rank). No driver-side loops,
+no UDFs; scales with executors × candidates.
 """
 
 from __future__ import annotations
@@ -32,17 +36,39 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cargo_chat_spark.functions.language import detect_language_expr
 from cargo_chat_spark.operators import filters
 
-
-def lang_match(language: Column, extension: Column, target_lang: Column) -> Column:
-    """O5 language match (hyde.rs:1065-1103): metadata language equals the
-    target case-insensitively, OR the extension-detected language's display
-    name does."""
-    meta_match = F.lower(language) == F.lower(target_lang)
-    ext_match = F.lower(detect_language_expr(extension)) == F.lower(target_lang)
-    return F.coalesce(meta_match, F.lit(False)) | F.coalesce(ext_match, F.lit(False))
+# tier: branch A puts code first; branch B puts docs first only when NOT
+# wants_code (hyde.rs:1184-1205). Language priority applies only in
+# branch A, to code rows, when the classification carries a language
+# (hyde.rs:1065-1103).
+_TIER = """CASE WHEN _branch_a THEN CASE WHEN _is_code THEN 0 ELSE 1 END
+    ELSE CASE WHEN NOT wants_code AND _is_doc_simple THEN 0 ELSE 1 END END"""
+_LANGKEY = """CASE WHEN _branch_a AND _is_code AND q_language IS NOT NULL
+    AND _lmatch THEN 0 ELSE 1 END"""
+_CODE_COUNT = """SUM(CASE WHEN _branch_a AND _is_code THEN 1 ELSE 0 END)
+    OVER (PARTITION BY query_id)"""
+_DOC_RANK = """row_number() OVER (
+    PARTITION BY query_id, _is_code ORDER BY distance, chunk_id)"""
+# doc caps: a branch-A doc survives while its distance rank among the
+# query's docs is within the intent's limit (table above)
+_INCLUDED = """NOT _branch_a OR _is_code OR _doc_rank <=
+    CASE WHEN confidence > 0.8 THEN 0
+         WHEN intent = 'how_it_works' THEN CASE WHEN _code_count >= 3 THEN 0 ELSE 1 END
+         WHEN intent IN ('implementation', 'debugging') THEN 0
+         WHEN intent = 'explanation' THEN 1
+         ELSE 0 END"""
+_SEL_RANK = """row_number() OVER (
+    PARTITION BY query_id ORDER BY _tier, _langkey, distance, chunk_id)"""
+# The tiered order only decides WHICH rows survive truncate(k); the
+# reference then re-sorts the truncated results purely by ascending
+# distance (hyde.rs:545-552, non-rerank path). That Vec sort is STABLE: on
+# exact distance ties it preserves the tiered selection order — so the
+# final window tie-breaks on _sel_rank (the selection rank), not chunk_id
+# (ADVICE r2). _sel_rank is unique per query, so the output stays totally
+# ordered and oracle-hashable.
+_FINAL_RANK = """row_number() OVER (
+    PARTITION BY query_id ORDER BY distance, _sel_rank)"""
 
 
 def reference_rank(
@@ -62,102 +88,28 @@ def reference_rank(
     the output of apply_llm_based_filtering itself (what the reference's
     unit tests assert against, hyde.rs:1451-1549).
     """
-    branch_a = filters.high_confidence_code(F.col("wants_code"), F.col("confidence"))
-    code = filters.is_code(F.col("extension"), F.col("file"))
-    doc_simple = filters.is_doc_simple(F.col("extension"))
-    lmatch = lang_match(F.col("language"), F.col("extension"), F.col("q_language"))
-
-    df = (
-        candidates.withColumn("_branch_a", branch_a)
-        .withColumn("_is_code", code)
-        # tier: branch A puts code first; branch B puts docs first only
-        # when NOT wants_code (hyde.rs:1184-1205)
-        .withColumn(
-            "_tier",
-            F.when(F.col("_branch_a"), F.when(code, 0).otherwise(1)).otherwise(
-                F.when(~F.col("wants_code") & doc_simple, 0).otherwise(1)
-            ),
+    out_cols = [f"`{c}`" for c in candidates.columns if c != "rank"]
+    flagged = candidates.selectExpr(
+        "*",
+        f"{filters.high_confidence_code_sql('wants_code', 'confidence')} AS _branch_a",
+        f"{filters.is_code_sql('extension', 'file')} AS _is_code",
+        f"{filters.is_doc_simple_sql('extension')} AS _is_doc_simple",
+        f"{filters.lang_match_sql('language', 'extension', 'q_language')} AS _lmatch",
+    )
+    selected = (
+        flagged.selectExpr(
+            "*",
+            f"{_TIER} AS _tier",
+            f"{_LANGKEY} AS _langkey",
+            f"{_CODE_COUNT} AS _code_count",
+            f"{_DOC_RANK} AS _doc_rank",
         )
-        # language priority applies only in branch A, to code rows, when the
-        # classification carries a language (hyde.rs:1065-1103)
-        .withColumn(
-            "_langkey",
-            F.when(
-                F.col("_branch_a")
-                & code
-                & F.col("q_language").isNotNull()
-                & lmatch,
-                0,
-            ).otherwise(1),
-        )
+        .where(_INCLUDED)
+        .selectExpr("*", f"{_SEL_RANK} AS _sel_rank")
+        .where(f"_sel_rank <= `{k_col}`")
     )
-
-    per_query = Window.partitionBy("query_id")
-    code_count = F.sum(F.when(F.col("_branch_a") & F.col("_is_code"), 1).otherwise(0)).over(
-        per_query
-    )
-
-    doc_window = Window.partitionBy("query_id", "_is_code").orderBy(
-        F.asc("distance"), F.asc("chunk_id")
-    )
-    df = (
-        df.withColumn("_code_count", code_count)
-        .withColumn("_doc_rank", F.row_number().over(doc_window))
-        .withColumn(
-            "_doc_limit",
-            F.when(F.col("confidence") > 0.8, 0).otherwise(
-                F.when(
-                    F.col("intent") == "how_it_works",
-                    F.when(F.col("_code_count") >= 3, 0).otherwise(1),
-                )
-                .when(F.col("intent").isin("implementation", "debugging"), 0)
-                .when(F.col("intent") == "explanation", 1)
-                .otherwise(0)
-            ),
-        )
-        .withColumn(
-            "_included",
-            ~F.col("_branch_a")
-            | F.col("_is_code")
-            | (F.col("_doc_rank") <= F.col("_doc_limit")),
-        )
-    )
-
-    # The tiered order only decides WHICH rows survive truncate(k); the
-    # reference then re-sorts the truncated results purely by ascending
-    # distance (hyde.rs:545-552, non-rerank path). That Vec sort is STABLE:
-    # on exact distance ties it preserves the tiered selection order — so
-    # the final window tie-breaks on _sel_rank (the selection rank), not
-    # chunk_id (ADVICE r2). _sel_rank is unique per query, so the output
-    # stays totally ordered and oracle-hashable.
-    select_window = Window.partitionBy("query_id").orderBy(
-        F.asc("_tier"), F.asc("_langkey"), F.asc("distance"), F.asc("chunk_id")
-    )
-    final_window = Window.partitionBy("query_id").orderBy(
-        F.asc("distance"), F.asc("_sel_rank")
-    )
-    out = (
-        df.where(F.col("_included"))
-        .withColumn("_sel_rank", F.row_number().over(select_window))
-        .where(F.col("_sel_rank") <= F.col(k_col))
-    )
-    rank_col = (
-        F.row_number().over(final_window) if final_sort else F.col("_sel_rank")
-    )
-    return (
-        out.withColumn("rank", rank_col)
-        .drop(
-            "_branch_a",
-            "_is_code",
-            "_tier",
-            "_langkey",
-            "_code_count",
-            "_doc_rank",
-            "_doc_limit",
-            "_included",
-            "_sel_rank",
-        )
-    )
+    rank = _FINAL_RANK if final_sort else "_sel_rank"
+    return selected.selectExpr(*out_cols, f"{rank} AS rank")
 
 
 def global_topk_ranked(

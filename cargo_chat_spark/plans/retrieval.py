@@ -18,44 +18,32 @@ from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
+from cargo_chat_spark.functions.localframe import local_frame
 from cargo_chat_spark.models.provider import Classification, ModelProvider
 from cargo_chat_spark.operators import filters, ranking
+from cargo_chat_spark.operators.context import assemble_prompt
 from cargo_chat_spark.operators.knn import knn_join
-from cargo_chat_spark.functions.localframe import local_frame
 
 
 def _classification_df(
     spark: SparkSession, cls: Classification, query_id: int, k: int
 ) -> DataFrame:
-    row = {
-        "query_id": query_id,
-        "q_language": cls.language,
-        "intent": cls.intent,
-        "wants_code": cls.wants_code,
-        "confidence": float(cls.confidence),
-        "target_folders": cls.target_folders,
-        "target_extensions": cls.target_extensions,
-        "exclude_patterns": cls.exclude_patterns,
-        "k": k,
-    }
+    # a tuple row: local_frame sends a dict row down the parallelize()
+    # path, which plans as Scan ExistingRDD and runs a Python-worker job
+    # every time the plan executes
+    row = (
+        query_id, cls.language, cls.intent, cls.wants_code,
+        float(cls.confidence), cls.target_folders, cls.target_extensions,
+        cls.exclude_patterns, k,
+    )
     schema = (
         "query_id bigint, q_language string, intent string, wants_code boolean, "
         "confidence double, target_folders array<string>, "
         "target_extensions array<string>, exclude_patterns array<string>, k int"
     )
     return local_frame(spark, [row], schema)
-
-
-def _with_chunk_index(hits: DataFrame) -> DataFrame:
-    """Assign the reference's HydeResult.index: the 0-based enumerate
-    position over the RAW k*2 similarity output, BEFORE filtering/rerank
-    (hyde.rs:1227-1231). P6 prints this as Chunk ID, so when filters drop
-    candidates the printed ids are non-contiguous, like the reference."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("distance"), F.asc("neighbor_id")
-    )
-    return hits.withColumn("chunk_index", (F.row_number().over(w) - 1).cast("int"))
 
 
 def _apply_filters(df: DataFrame) -> DataFrame:
@@ -68,9 +56,17 @@ def _apply_filters(df: DataFrame) -> DataFrame:
     )
 
 
+def _rerank_order(ranked: DataFrame) -> DataFrame:
+    """Re-rank by descending rerank score, chunk_id breaking ties (M5/J2/O4)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("rerank_score"), F.asc("chunk_id")
+    )
+    return ranked.withColumn("rank", F.row_number().over(w))
+
+
 def _rerank_map_fn(provider_spec, query: str):
-    """Arrow-batched (chunk_id, code) -> rerank_score kernel. The
-    provider is instantiated INSIDE the Python worker when a factory is
+    """Arrow-batched kernel adding ``rerank_score`` to each candidate row.
+    The provider is instantiated INSIDE the Python worker when a factory is
     passed (the embed_chunks per-executor-singleton pattern — real
     cross-encoder weights load worker-side, never pickle); a stateless
     picklable instance (the mock) ships as-is. Scores are per-document
@@ -92,13 +88,7 @@ def _rerank_map_fn(provider_spec, query: str):
                 if len(pdf)
                 else []
             )
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "chunk_id": pdf["chunk_id"],
-                    "rerank_score": pd.Series(scores, dtype="float64"),
-                }
-            )
+            yield pdf.assign(rerank_score=pd.Series(scores, dtype="float64"))
 
     return fn
 
@@ -115,8 +105,29 @@ def retrieve(
 ) -> dict:
     """Full retrieve() (hyde.rs:468-576) under a pluggable provider.
 
-    Returns {"classification", "hypothetical", "results" (DataFrame with
-    rank order), "answer" (token iterator)}.
+    The question's ranked plan (k-NN → filters → ``reference_rank``, plus
+    the executor rerank stage) runs exactly once: its rows are collected,
+    and both the results and the prompt are built from them.
+
+    Returns a dict:
+
+    - ``classification``, ``hypothetical``: the provider's outputs;
+    - ``results``: a driver-local DataFrame (an Arrow ``LocalTableScan``)
+      over the collected rows, one per result, with a 1-based ``rank``
+      (plus ``rerank_score`` under rerank). Collecting or ordering it runs
+      no job over the index;
+    - ``executed``: the DataFrame whose one execution produced those rows,
+      for inspecting its physical plan;
+    - ``answer``: the provider's token iterator over the prompt.
+
+    Rerank scores the ranked rows and re-orders them by (score desc,
+    chunk_id). ``rerank_distributed`` picks where the provider runs:
+    ``True`` in an executor-side ``mapInPandas`` stage inside the single
+    execution (SURVEY M5's mapping, hyde.rs:530-542), so scoring scales
+    with executors like the embed stage; ``False`` in the driver over the
+    collected rows. The default is executors for k > 50 and the driver for
+    the small interactive case (at most 2k = 100 candidates, where one
+    in-process provider call beats a Python-worker launch).
     """
     cls = provider.classify_query(query)  # M3 (driver-side: one tiny call)
     hypo = provider.hyde_document(query, cls.intent, 1000)  # M4
@@ -124,10 +135,10 @@ def retrieve(
     # (hyde.rs:500, SURVEY §2.11)
     qvec = provider.embed_batch([hypo])[0]
 
-    queries = local_frame(spark, 
-        [(0, qvec)], "query_id bigint, query_vec array<double>"
+    queries = local_frame(
+        spark, [(0, qvec)], "query_id bigint, query_vec array<double>"
     )
-    cls_df = _classification_df(spark, cls, 0, k)
+    cls_df = F.broadcast(_classification_df(spark, cls, 0, k))
 
     corpus = index.withColumnRenamed("chunk_id", "vec_id")
     if mode == "improved":
@@ -137,72 +148,63 @@ def retrieve(
         # exactly k could under-fill; the candidate set here is a strict
         # superset of reference mode's (any filtered row in the global
         # top-2k is also in the filtered top-2k).
-        pre = corpus.crossJoin(F.broadcast(cls_df.drop("query_id", "k")))
-        pre = _apply_filters(pre).select(corpus.columns)
-        hits = knn_join(
-            queries, pre, 2 * k,
-            keep_corpus_cols=["file", "code", "language", "extension"],
-        )
-        joined = _with_chunk_index(hits).join(F.broadcast(cls_df), "query_id")
-    else:
-        hits = knn_join(
-            queries, corpus, 2 * k,  # O2 over-fetch (hyde.rs:500)
-            keep_corpus_cols=["file", "code", "language", "extension"],
-        )
-        joined = _with_chunk_index(hits).join(F.broadcast(cls_df), "query_id")
+        corpus = _apply_filters(corpus.crossJoin(cls_df)).select(corpus.columns)
+    hits = knn_join(
+        queries, corpus, 2 * k,  # O2 over-fetch (hyde.rs:500)
+        keep_corpus_cols=["file", "code", "language", "extension"],
+    )
+    joined = hits.join(cls_df, "query_id")
+    if mode != "improved":
         joined = _apply_filters(joined)
-
-    candidates = joined.select(
-        "query_id",
-        F.col("neighbor_id").alias("chunk_id"),
-        "file", "code", "language", "extension", "distance", "chunk_index",
+    # chunk_index is the reference's HydeResult.index: the 0-based
+    # enumerate position over the RAW k*2 similarity output, BEFORE
+    # filtering/rerank (hyde.rs:1227-1231), i.e. knn_join's rank - 1. P6
+    # prints it as Chunk ID, so when filters drop candidates the printed
+    # ids are non-contiguous, like the reference.
+    candidates = joined.selectExpr(
+        "query_id", "neighbor_id AS chunk_id",
+        "file", "code", "language", "extension", "distance",
+        "rank - 1 AS chunk_index",
         "q_language", "intent", "wants_code", "confidence", "k",
     )
     ranked = ranking.reference_rank(candidates)
 
+    schema = ranked.schema
+    driver_rerank = False
     if use_rerank:
-        # M5/J2/O4: score (query, code) pairs, re-sort descending.
-        # Default path is the EXECUTOR-SIDE Arrow stage (SURVEY M5's
-        # mapInPandas mapping, hyde.rs:530-542): candidates never
-        # round-trip through the driver, so the rerank scales with
-        # executors like the embed stage does. The driver path survives
-        # only for the small interactive case (k <= 50 → at most 2k=100
-        # candidates, where one tiny in-process provider call beats a
-        # Python-worker launch).
+        schema = StructType([*schema.fields, StructField("rerank_score", DoubleType())])
         if rerank_distributed is None:
             rerank_distributed = k > 50
+        driver_rerank = not rerank_distributed
         if rerank_distributed:
-            score_df = ranked.select("query_id", "chunk_id", "code").mapInPandas(
-                _rerank_map_fn(provider, query),
-                schema="query_id bigint, chunk_id bigint, rerank_score double",
-            ).drop("query_id")
-        else:
-            rows = ranked.select("chunk_id", "code").collect()
-            scores = provider.rerank_scores(query, [r["code"] for r in rows])
-            score_df = local_frame(spark, 
-                [(r["chunk_id"], s) for r, s in zip(rows, scores)],
-                "chunk_id bigint, rerank_score double",
+            ranked = _rerank_order(
+                ranked.mapInPandas(_rerank_map_fn(provider, query), schema=schema)
             )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("rerank_score"), F.asc("chunk_id")
-        )
-        ranked = (
-            ranked.join(F.broadcast(score_df), "chunk_id")
-            .withColumn("rank", F.row_number().over(w))
-        )
+    rows = ranked.collect()  # the one execution of the question's plan
+    if driver_rerank:
+        scores = provider.rerank_scores(query, [r["code"] for r in rows])
+        rows = [(*r, s) for r, s in zip(rows, scores)]
+    # at most 2k rows in one partition: the rerank window, the prompt's
+    # groupBy and a caller's orderBy then need no shuffle
+    results = local_frame(spark, rows, schema).coalesce(1)
+    if driver_rerank:
+        results = _rerank_order(results)
 
     # P6 context assembly — reference-exact prompt format (hyde.rs:645-740)
-    from cargo_chat_spark.operators.context import assemble_prompt
-
-    prompt_rows = assemble_prompt(
-        ranked.withColumn("query_text", F.lit(query)), F.col("query_text")
-    ).collect()
-    prompt = prompt_rows[0]["user_prompt"] if prompt_rows else query
+    # over the same rows; no rows leaves the bare question as the prompt
+    prompt = (
+        assemble_prompt(
+            results.withColumn("query_text", F.lit(query)), F.col("query_text")
+        ).first()["user_prompt"]
+        if rows
+        else query
+    )
     answer = provider.synthesize_answer(prompt)  # M6
 
     return {
         "classification": asdict(cls),
         "hypothetical": hypo,
-        "results": ranked,
+        "results": results,
+        "executed": ranked,
         "answer": answer,
     }

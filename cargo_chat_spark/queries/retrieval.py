@@ -130,11 +130,6 @@ def _indexed_candidates(spark, sf_dir):
     return j.withColumn("chunk_index", (F.row_number().over(w) - 1).cast("int"))
 
 
-_LMATCH_SQL = f"""(
-    COALESCE(lower(language) = lower(q_language), FALSE)
-    OR COALESCE(lower({detect_language_sql_case('extension')}) = lower(q_language), FALSE)
-)"""
-
 _RETRIEVAL_SQL = f"""{_BASE},
 indexed AS (
     -- the reference enumerates the RAW k*2 similarity output BEFORE any
@@ -153,10 +148,10 @@ filtered AS (
 ),
 flags AS (
     SELECT *,
-        (wants_code AND confidence > 0.7) AS _branch_a,
+        {filters.high_confidence_code_sql('wants_code', 'confidence')} AS _branch_a,
         {filters.is_code_sql('extension', 'file')} AS _is_code,
         {filters.is_doc_simple_sql('extension')} AS _is_doc_simple,
-        {_LMATCH_SQL} AS _lmatch
+        {filters.lang_match_sql('language', 'extension', 'q_language')} AS _lmatch
     FROM filtered
 ),
 enriched AS (

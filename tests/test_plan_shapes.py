@@ -302,7 +302,7 @@ def test_rp_tree_candidates_are_equijoin(spark):
     from cargo_chat_spark.queries.ann_lsh import _rpt_leaves
 
     leaf_plan = (
-        _rpt_leaves(spark, "/root/testdata/sf0.001")
+        _rpt_leaves(spark, SF_DIR_SMALL)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" in leaf_plan, (
