@@ -9,7 +9,7 @@ caller must ``join()`` before depending on the side job's effects;
 exceptions re-raise at ``join()``, so a guard job (a contract check, a
 uniqueness probe) still aborts the caller before any dependent write.
 
-First used by ``sources/index_io.upsert_index_cells`` (r15); shared here
+First used by ``sources/index_cells.upsert_index_cells`` (r15); shared here
 for the snapshot-lifecycle operators. Job descriptions/groups are
 thread-local in Spark, so overlapped jobs label independently in the UI.
 """

@@ -118,25 +118,9 @@ def dot_normed_distance(a: Column, b: Column) -> Column:
     ``cosine_distance(_fixed)`` evaluates three dim-length folds per PAIR
     (dot, |a|², |b|²); in a kNN cross join that is 3·dim·|Q|·|C| work and,
     unrolled, a 3×-wider codegen expression. Normalizing each side once
-    (``l2_normalize``, O(dim) per ROW) collapses per-pair work to a single
+    (``with_l2_normalized``, O(dim) per ROW) collapses per-pair work to a single
     fold — the form every production vector engine uses."""
     return F.lit(1.0) - dot(a, b)
-
-
-def l2_normalize(a: Column) -> Column:
-    """L2-normalize; a zero vector maps to all-zeros (so the downstream
-    ``1 - dot`` distance degrades to 1.0, matching cosine_distance's
-    zero-norm guard).
-
-    NB: the lambda captures ``nrm`` INSIDE the transform, so the
-    interpreter recomputes the full norm per ELEMENT — O(dim²) per row
-    (measured 2.3 s just to normalize 2k×64 at sf0.1). Use
-    ``with_l2_normalized`` when the dim is known; this form is kept for
-    dim-agnostic/streaming paths where rows are few."""
-    nrm = norm(a)
-    return F.transform(
-        a, lambda x: F.when(nrm == 0.0, F.lit(0.0)).otherwise(_d(x) / nrm)
-    )
 
 
 def with_l2_normalized(df, vec_col: str, dim: int, out_col: str | None = None):

@@ -270,10 +270,6 @@ def simhash32_agg(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return g.select(id_col, F.expr(f"({fp})").alias("simhash"))
 
 
-def hamming32(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # --------------------------------------------------------- 64-bit simhash
 # Kept as FOUR 16-bit band words (w0..w3) rather than one BIGINT: bit 63
 # would make a packed int64 negative, and signed shift/modulo semantics

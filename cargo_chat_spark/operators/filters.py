@@ -131,6 +131,20 @@ def exclude_match_sql(file: str, patterns: str) -> str:
     )"""
 
 
+# ------------------------------------------------------------ F2-F4 scope
+def scope_match() -> Column:
+    """F2 ∧ F3 ∧ F4 over the standard column names: ``file`` and
+    ``extension`` from the candidate, ``target_folders``,
+    ``target_extensions`` and ``exclude_patterns`` from the
+    classification."""
+    file = F.col("file")
+    return (
+        folder_match(file, F.col("target_folders"))
+        & extension_match(F.col("extension"), file, F.col("target_extensions"))
+        & exclude_match(file, F.col("exclude_patterns"))
+    )
+
+
 # ---------------------------------------------------------- F5 code vs doc
 # F5, F8 and the O5 language match are SQL text for BOTH engines:
 # ``ranking.reference_rank`` passes it to Spark's ``selectExpr`` and the

@@ -19,7 +19,7 @@ the DataFrame API:
 At 100 TB you train on a deterministic hash-sample of the corpus (the
 `sample_mod` knob) — centroid quality needs ~k×1000 points, not the full
 corpus — then assign the full corpus once and write it partitioned by
-cell (sources/index_io.write_index_partitioned).
+cell (sources/index_cells.write_index_partitioned).
 """
 
 from __future__ import annotations

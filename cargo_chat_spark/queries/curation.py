@@ -318,7 +318,7 @@ def contamination_bloom(spark, sf_dir):
 
     Steps: (1) the Bloom bit array is built SPARK-SIDE (round-6 verdict
     item 6, the ``bit_or`` word-aggregate pattern from
-    ``index_io._refresh_cell_blooms``): each eval gram explodes to its k
+    ``index_cells._refresh_cell_blooms``): each eval gram explodes to its k
     bit positions, a map-side-combinable ``bit_or(shiftleft(1L, bit))``
     per 64-bit word aggregates them, and only the aggregated (word, bits)
     rows — ≤ m/64, never the grams — reach the driver; (2) the power-of-

@@ -15,6 +15,12 @@ from cargo_chat_spark.functions.language import (
     detect_language_sql_case,
 )
 from cargo_chat_spark.operators import filters, ranking
+from cargo_chat_spark.operators.context import (
+    DEFAULT_INSTRUCTION,
+    INTENT_INSTRUCTIONS,
+    OUTPUT_TEMPLATE,
+    assemble_prompt,
+)
 from cargo_chat_spark.queries import fixtures
 from cargo_chat_spark.queries.registry import register
 
@@ -215,13 +221,7 @@ def retrieval_rank_reference(spark, sf_dir):
     passes. ``chunk_index`` is the 0-based enumerate position over the RAW
     pre-filter candidate list (hyde.rs:1227-1231) carried through for P6."""
     j = _indexed_candidates(spark, sf_dir)
-    j = j.where(
-        filters.folder_match(F.col("file"), F.col("target_folders"))
-        & filters.extension_match(
-            F.col("extension"), F.col("file"), F.col("target_extensions")
-        )
-        & filters.exclude_match(F.col("file"), F.col("exclude_patterns"))
-    )
+    j = j.where(filters.scope_match())
     out = ranking.reference_rank(j)
     return out.select(
         "query_id", "chunk_id", "file", "language", "extension", "distance",
@@ -230,57 +230,68 @@ def retrieval_rank_reference(spark, sf_dir):
 
 
 # ------------------------------------------------------- P6 context assembly
-# Reuse the retrieval WITH-chain (everything before its final SELECT) and
-# aggregate the surviving rows into one ordered prompt context per query.
+# The engine's prompt (operators/context.assemble_prompt, the one retrieve()
+# sends) over the ranked rows, one per query, against the reference's
+# prompt layout (hyde.rs:645-740) restated in DuckDB SQL. Only the constant
+# texts are shared; every format rule is written out again here. The
+# question text is fixed per query.
+def _sql_str(text: str) -> str:
+    return "'" + text.replace("'", "''") + "'"
+
+
+_NL = "chr(10)"
+# Rust's str::trim: the Unicode White_Space characters
+_RUST_WHITESPACE = " || ".join(
+    f"chr({c})"
+    for c in [9, 10, 11, 12, 13, 32, 0x85, 0xA0, 0x1680, *range(0x2000, 0x200B),
+              0x2028, 0x2029, 0x202F, 0x205F, 0x3000]
+)
+_INSTRUCTION_SQL = (
+    "CASE q.intent "
+    + " ".join(
+        f"WHEN {_sql_str(k)} THEN {_sql_str(v)}" for k, v in INTENT_INSTRUCTIONS.items()
+    )
+    + f" ELSE {_sql_str(DEFAULT_INSTRUCTION)} END"
+)
+# one "## Code Reference N" block (hyde.rs:648-685); Chunk ID is the
+# pre-filter enumerate position, the fence language defaults to rust
+_CLEAN_FILE = "regexp_replace(r.file, '^(\\./)+', '')"
+_BLOCK_SQL = f"""
+    '## Code Reference ' || CAST(r."rank" AS VARCHAR) || ' - ' || {_CLEAN_FILE}
+    || CASE WHEN r.extension IS NULL THEN '' ELSE '.' || r.extension END
+    || CASE WHEN r.language IS NULL THEN '' ELSE ' [' || upper(r.language) || ']' END
+    || {_NL} || '**Location:** ' || {_CLEAN_FILE} || {_NL}
+    || '**Relevance Score:** ' || printf('%.3f', r.distance)
+    || ' (lower = more relevant)' || {_NL}
+    || '**Chunk ID:** ' || CAST(r.chunk_index AS VARCHAR) || {_NL} || {_NL}
+    || '```' || coalesce(r.language, 'rust') || {_NL}
+    || trim(r.code, {_RUST_WHITESPACE}) || '```' || {_NL}
+"""
+# Reuse the retrieval WITH-chain (everything before its final SELECT)
 _CONTEXT_SQL = f"""{_RETRIEVAL_SQL.rsplit('SELECT query_id', 1)[0]}
-SELECT query_id,
-    string_agg(
-        '### ' || CAST("rank" AS VARCHAR) || '. ' || file
-        || ' (distance: ' || printf('%.3f', distance) || ')'
-        || chr(10) || '```' || chr(10) || code || chr(10) || '```',
-        chr(10) || chr(10) ORDER BY "rank"
-    ) AS context
-FROM ranked WHERE "rank" <= k
-GROUP BY query_id
+SELECT r.query_id,
+    '# User Query' || {_NL} || 'question ' || CAST(r.query_id AS VARCHAR) || {_NL} || {_NL}
+    || '# Analysis Task' || {_NL} || {_INSTRUCTION_SQL} || {_NL} || {_NL}
+    || '# System Context' || {_NL} || 'You are analyzing a software repository'
+    || {_NL} || {_NL} || '# Available Code References' || {_NL}
+    || string_agg({_BLOCK_SQL}, {_NL} || {_NL} ORDER BY r."rank")
+    || {_NL} || {_NL} || {_sql_str(OUTPUT_TEMPLATE)} AS context
+FROM ranked r JOIN cls q ON r.query_id = q.query_id
+WHERE r."rank" <= r.k
+GROUP BY r.query_id, q.intent
 """
 
 
 @register("context_assembly", sql=_CONTEXT_SQL)
 def context_assembly(spark, sf_dir):
-    """P6 (hyde.rs:645-740): format each top-k row into a markdown block,
-    concatenate rank-ascending into one prompt context per query.
-    Spark: sort_array(collect_list(struct(rank, block))) keeps the
-    aggregation deterministic without an ordered-window shuffle."""
-    j = fixtures.joined_candidates_df(spark, sf_dir)
-    j = j.where(
-        filters.folder_match(F.col("file"), F.col("target_folders"))
-        & filters.extension_match(
-            F.col("extension"), F.col("file"), F.col("target_extensions")
-        )
-        & filters.exclude_match(F.col("file"), F.col("exclude_patterns"))
+    """P6 (hyde.rs:645-740): the prompt ``retrieve()`` builds, one
+    ``context`` row per query, from the reference-ranked rows —
+    ``assemble_prompt`` over ``reference_rank``, with the pre-filter
+    ``chunk_index`` printed as Chunk ID."""
+    ranked = ranking.reference_rank(
+        _indexed_candidates(spark, sf_dir).where(filters.scope_match())
     )
-    ranked = ranking.reference_rank(j)
-    block = F.concat(
-        F.lit("### "),
-        F.col("rank").cast("string"),
-        F.lit(". "),
-        F.col("file"),
-        F.lit(" (distance: "),
-        F.format_string("%.3f", F.col("distance")),
-        F.lit(")\n```\n"),
-        F.col("code"),
-        F.lit("\n```"),
-    )
-    return (
-        ranked.withColumn("_block", block)
-        .groupBy("query_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("rank", "_block"))),
-                    lambda x: x["_block"],
-                ),
-                "\n\n",
-            ).alias("context")
-        )
-    )
+    question = F.concat(F.lit("question "), F.col("query_id").cast("string"))
+    return assemble_prompt(
+        ranked.withColumn("query_text", question), F.col("query_text")
+    ).withColumnRenamed("user_prompt", "context")

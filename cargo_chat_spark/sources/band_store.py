@@ -27,7 +27,7 @@ history again — the standard answer is to PERSIST the banded LSH state
 
 This is beyond-reference training-pipeline machinery (the reference's
 index maintenance analog is the JSON-blob rebuild, main.rs:365-368);
-the same incremental pattern as `index_io.upsert_index_cells`, applied
+the same incremental pattern as `index_cells.upsert_index_cells`, applied
 to dedup state instead of ANN state.
 """
 

@@ -169,7 +169,7 @@ def compact_deletes(
     are all deleted simply removed), leave every other file untouched,
     then clear the log. Returns the basenames of the files rewritten or
     removed (empty = no-op). Single-writer maintenance pass, like
-    ``index_io.compact_index_cells``; crash-safe via the journal —
+    ``index_cells.compact_index_cells``; crash-safe via the journal —
     the survivor copies are staged (underscore-hidden, invisible to
     readers), then a journal of the exact moves+removals commits by
     atomic rename, then :func:`recover_compaction` applies it; any crash

@@ -1,6 +1,6 @@
 """Persisted inverted index — incremental lexical (BM25) search state.
 
-Completes the persisted-index triad: ANN cells (`index_io.
+Completes the persisted-index triad: ANN cells (`index_cells.
 upsert_index_cells`), near-dup band store (`band_store.py`), and now the
 lexical posting lists a production retrieval stack pairs with them. The
 batch `bm25_topk` gate recomputes tf/df/dl from the corpus per query;
@@ -286,7 +286,7 @@ def bm25_query(
 # bounded tombstone set; corpus stats adjust additively from the LIVE
 # postings of the dying docs (sum(tf) of a doc's postings IS its dl, so
 # no pre-image text is needed). The same follow-the-log pattern as
-# index_io.upsert_index_cells, applied to lexical state.
+# index_cells.upsert_index_cells, applied to lexical state.
 
 
 def sync_index_from_snapshot(

@@ -151,9 +151,8 @@ def scan_repo(
     Python-style repos should know dunder/underscore modules never
     surface here.
 
-    Unreadable/non-UTF8 content decodes with replacement (the reference
-    skips with a warning — S2, chunker.rs:80-87; we keep the row and let
-    downstream filters drop it, flagged by is_valid_utf8)."""
+    Files whose bytes are not valid UTF-8 are skipped, as the reference
+    skips files it cannot read as a string (S2, chunker.rs:80-87)."""
     keep: list[str] = []
     rules: list[_Rule] = []
     for dirpath, dirnames, filenames in os.walk(root):
@@ -206,7 +205,10 @@ def scan_repo(
         files.join(F.broadcast(rel_paths), "rel_path")
         .select(
             F.col("rel_path").alias("path"),
-            F.decode("content", "UTF-8").alias("content"),
+            # the cast keeps the bytes as they are; decode() would raise
+            # MALFORMED_CHARACTER_CODING under ANSI mode instead of skipping
+            F.col("content").cast("string").alias("content"),
         )
+        .where(F.expr("is_valid_utf8(content)"))
         .withColumn("extension", extension_from_path(F.col("path")))
     )

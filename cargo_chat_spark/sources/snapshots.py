@@ -1,7 +1,7 @@
 """Snapshot-versioned parquet table: time travel, CoW deletes, vacuum.
 
 The remaining lakehouse primitive after data skipping
-(``sorted_layout``), compaction (``index_io``/``deletes``) and
+(``sorted_layout``), compaction (``index_cells``/``deletes``) and
 merge-on-read deletes (``deletes``): SNAPSHOT ISOLATION. A 100 TB
 training corpus needs reproducible reads ("train on exactly the corpus
 as of snapshot 12"), safe concurrent readers while a writer lands a new
@@ -898,7 +898,7 @@ def _require_unique_keys(
     """Delta MERGE raises when a target row matches MULTIPLE source rows;
     without this guard the left join silently fans matched rows out and
     whole-row upserts insert both duplicates (same contract as
-    ``index_io.upsert_index_cells``).
+    ``index_cells.upsert_index_cells``).
 
     Exact Delta semantics (round-7 ADVICE): duplicate source keys that
     match NO target row are legal — each row inserts (both entry points'
@@ -937,7 +937,7 @@ def snap_merge(
     themselves land as new files; everything else is shared with the
     previous manifest. Cost: O(affected files + update size), never a
     table rewrite — the same replace-by-key primitive as the ANN index
-    upsert (``index_io.upsert_index_cells``), lifted to table snapshots."""
+    upsert (``index_cells.upsert_index_cells``), lifted to table snapshots."""
     from pyspark.sql import functions as F
 
     prev = manifest(path)

@@ -133,14 +133,3 @@ def parquet_rows(path: str) -> int:
             if f.endswith(".parquet")
         )
     return pq.ParquetFile(path).metadata.num_rows
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` pipelines can
-    address them by the same names the DuckDB oracle uses."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

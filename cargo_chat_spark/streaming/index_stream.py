@@ -5,7 +5,7 @@ The reference rebuilds its whole JSON index per ingest run
 must instead absorb a continuous embedding feed; this module closes that
 loop with Structured Streaming: each micro-batch of (chunk_id, embedding)
 rows upserts into the IVF-cell-partitioned index via
-``sources/index_io.upsert_index_cells`` — only the touched cells'
+``sources/index_cells.upsert_index_cells`` — only the touched cells'
 partitions rewrite, and replaying a micro-batch converges to the same
 table (the upsert is replace-by-chunk_id, hence idempotent), which is
 exactly the at-least-once contract ``foreachBatch`` gives.
@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from cargo_chat_spark.sources.index_io import upsert_index_cells
+from cargo_chat_spark.sources.index_cells import upsert_index_cells
 
 
 def run_index_maintenance_stream(

@@ -1,85 +1,8 @@
-"""Chunking operator tests: char-window spec edge cases + the structured
-(syntax-aware) splitter."""
+"""Chunking operator tests: char-window spec edge cases."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from cargo_chat_spark.operators.chunking import (
-    chunk_structured,
-    chunk_text,
-    split_structured,
-)
-
-RUST = (
-    "use std::io;\n\n"
-    "fn main() {\n    println!(\"hi\");\n}\n\n"
-    "fn helper(x: i32) -> i32 {\n    x + 1\n}\n\n"
-    "struct Point { x: f32, y: f32 }\n"
-)
-
-
-def test_split_structured_boundaries():
-    chunks = split_structured(RUST, "Rust", max_chars=60)
-    # every declaration starts a piece; merged forward under the cap
-    assert all(len(c) <= 60 for c in chunks)
-    assert "".join(chunks) == RUST  # lossless
-    starts = [c.lstrip().split("(")[0].split()[0] for c in chunks if c.strip()]
-    assert "fn" in {s for s in starts} or "use" in {s for s in starts}
-
-
-# One fixture per reference-supported language (language.rs:57-72): a file
-# with two declarations whose combined size exceeds the cap, so a correct
-# boundary split MUST put the second declaration at a chunk start.
-_LANG_FIXTURES = {
-    "Rust": ("fn first() {\n    1\n}\n", "pub fn second() {\n    2\n}\n", "pub fn second"),
-    "Python": ("def first():\n    return 1\n", "class Second:\n    pass\n", "class Second"),
-    "JavaScript": ("function first() {\n  return 1;\n}\n", "class Second {}\n", "class Second"),
-    "TypeScript": ("function first(): number {\n  return 1;\n}\n", "interface Second {\n  x: number;\n}\n", "interface Second"),
-    "Java": ("public int first() {\n    return 1;\n}\n", "private void second() {\n}\n", "private void second"),
-    "Go": ("func first() int {\n\treturn 1\n}\n", "type Second struct {\n\tX int\n}\n", "type Second"),
-    "C": ("int first(void)\n{\n    return 1;\n}\n", "void second(int x)\n{\n}\n", "void second"),
-    "C++": ("int first()\n{\n    return 1;\n}\n", "void Klass::second(int x)\n{\n}\n", "void Klass::second"),
-    "Ruby": ("def first\n  1\nend\n", "class Second\nend\n", "class Second"),
-    "C#": ("public int First() {\n    return 1;\n}\n", "private void Second() {\n}\n", "private void Second"),
-    "Swift": ("func first() -> Int {\n    return 1\n}\n", "struct Second {\n    var x: Int\n}\n", "struct Second"),
-    "Markdown": ("# First\nbody text here\n", "## Second\nmore body\n", "## Second"),
-}
-
-
-def test_split_structured_all_reference_languages():
-    """Boundary tier is language-table-complete (VERDICT r1 missing #1):
-    for each of the 12 reference languages the splitter is lossless, capped,
-    and aligns a chunk start with the second declaration."""
-    from cargo_chat_spark.functions.language import LANGUAGE_EXTENSIONS
-    from cargo_chat_spark.operators.chunking import _BOUNDARY_PATTERNS
-
-    assert set(_BOUNDARY_PATTERNS) == set(LANGUAGE_EXTENSIONS), (
-        "boundary table out of sync with the reference language table"
-    )
-    for lang, (first, second, marker) in _LANG_FIXTURES.items():
-        text = first + second
-        cap = max(len(first), len(second)) + 4  # forces a split, fits each
-        chunks = split_structured(text, lang, max_chars=cap)
-        assert "".join(chunks) == text, f"{lang}: lossy split"
-        assert all(len(c) <= cap for c in chunks), f"{lang}: cap violated"
-        assert len(chunks) >= 2, f"{lang}: no split happened"
-        assert any(c.lstrip().startswith(marker) for c in chunks), (
-            f"{lang}: declaration '{marker}' not at a chunk boundary: {chunks}"
-        )
-
-
-def test_split_structured_unknown_lang_falls_back_to_window():
-    text = "x" * 250
-    chunks = split_structured(text, None, max_chars=100)
-    assert [len(c) for c in chunks] == [100, 100, 50]
-
-
-def test_split_structured_oversized_decl_hard_wraps():
-    text = "fn big() {\n" + "a" * 500 + "\n}\n"
-    chunks = split_structured(text, "Rust", max_chars=100)
-    assert all(len(c) <= 100 for c in chunks)
-    assert "".join(chunks) == text
+from cargo_chat_spark.operators.chunking import chunk_text
 
 
 def test_chunk_text_empty_and_exact_boundary(spark):
@@ -93,125 +16,3 @@ def test_chunk_text_empty_and_exact_boundary(spark):
     assert 1 not in by_doc  # empty text -> no chunks
     assert len(by_doc[2]) == 1 and by_doc[2][0]["chunk_len"] == 120
     assert len(by_doc[3]) == 2 and by_doc[3][1]["chunk_len"] == 1
-
-
-# ---------------------------------------------------------------------------
-# Boundary-behavior fixtures vs the reference chunker (chunker.rs:64-116):
-# tree-sitter wheels aren't installable in this environment (r2 advice item
-# 8 / r3 verdict item 7), so these pin the OUR-spec splitter against the
-# behaviors the reference's syntax-aware splitter exhibits — nested
-# declarations stay inside their parent, leading comments/attributes travel
-# with the preceding text, small declarations merge greedily up to the cap,
-# counting is chars (the reference uses CharCounter, chunker.rs:68), and
-# every split is lossless over the original bytes.
-
-
-def test_split_structured_nested_decls_stay_with_parent():
-    """Only top-level Python declarations match the ^def/^class anchor —
-    an indented (nested/method) def must NOT open a new chunk, matching
-    tree-sitter's subtree-based splits which never cut inside a parent
-    node smaller than the cap."""
-    text = (
-        "class Outer:\n"
-        "    def method_a(self):\n"
-        "        return 1\n"
-        "    def method_b(self):\n"
-        "        return 2\n"
-    )
-    chunks = split_structured(text, "Python", max_chars=len(text) + 10)
-    assert chunks == [text]  # one top-level decl, fits the cap, never split
-
-
-def test_split_structured_comment_attaches_backward():
-    """A comment line between two declarations stays with the text BEFORE
-    the next declaration start (our spec: splits happen exactly at
-    declaration-start lines, nothing else moves)."""
-    first = "fn a() {}\n"
-    comment = "// docs for b\n"
-    second = "fn b() {}\n"
-    text = first + comment + second
-    cap = len(first + comment) + 2
-    chunks = split_structured(text, "Rust", max_chars=cap)
-    assert "".join(chunks) == text
-    assert chunks[0] == first + comment
-    assert chunks[1] == second
-
-
-def test_split_structured_greedy_forward_merge():
-    """Many small declarations merge into as few chunks as the cap allows
-    (the reference merges sibling subtrees until max_size,
-    text-splitter semantics)."""
-    decls = [f"fn f{i}() {{}}\n" for i in range(6)]  # 11 chars each
-    text = "".join(decls)
-    chunks = split_structured(text, "Rust", max_chars=30)
-    assert "".join(chunks) == text
-    # 11-char decls under a 30 cap → exactly two per chunk
-    assert [len(c) for c in chunks] == [22, 22, 22]
-
-
-def test_split_structured_crlf_lossless():
-    text = "fn a() {}\r\nfn b() {}\r\n"
-    chunks = split_structured(text, "Rust", max_chars=12)
-    assert "".join(chunks) == text
-    assert all(len(c) <= 12 for c in chunks)
-    assert chunks[1].startswith("fn b")
-
-
-def test_split_structured_counts_chars_not_bytes():
-    """CharCounter parity (chunker.rs:68): the cap is CHARACTERS. A decl
-    of 10 chars that is 30 UTF-8 bytes must fit a cap of 10."""
-    decl = 'fn x() {"é世\U0001f600"}\n'  # multibyte payload
-    text = decl * 3
-    cap = len(decl)  # chars, much smaller than the byte length
-    chunks = split_structured(text, "Rust", max_chars=cap)
-    assert "".join(chunks) == text
-    assert all(len(c) <= cap for c in chunks)
-    assert len(chunks) == 3
-
-
-def test_split_structured_decorator_attaches_backward():
-    """Python decorators are not declaration starts in our spec: they ride
-    with the preceding chunk, the split lands on the def line. (Documented
-    divergence from tree-sitter, which groups the decorator with its
-    function — callers wanting that put decorators in _BOUNDARY_PATTERNS.)"""
-    first = "def a():\n    return 1\n"
-    deco = "@wraps(a)\n"
-    second = "def b():\n    return 2\n"
-    text = first + deco + second
-    cap = len(first + deco) + 2
-    chunks = split_structured(text, "Python", max_chars=cap)
-    assert "".join(chunks) == text
-    assert chunks[0] == first + deco
-    assert chunks[1] == second
-
-
-def test_split_structured_empty_and_whitespace():
-    assert split_structured("", "Rust", max_chars=100) == []
-    ws = "\n\n   \n"
-    chunks = split_structured(ws, "Rust", max_chars=100)
-    assert "".join(chunks) == ws  # whitespace-only: preserved, one chunk
-
-
-def test_split_structured_markdown_heading_levels():
-    """Every heading level 1-6 opens a chunk; setext/body lines do not."""
-    parts = [f"{'#' * i} H{i}\nbody {i}\n" for i in range(1, 7)]
-    text = "".join(parts)
-    cap = max(len(p) for p in parts) + 2
-    chunks = split_structured(text, "Markdown", max_chars=cap)
-    assert "".join(chunks) == text
-    for i in range(2, 7):
-        assert any(c.startswith("#" * i + " ") for c in chunks), f"H{i} lost"
-
-
-def test_chunk_structured_dataframe(spark):
-    df = spark.createDataFrame(
-        [("src/main.rs", "Rust", RUST), ("docs/a.md", "Markdown", "# T\nbody\n## S\nmore\n")],
-        "path string, language string, content string",
-    )
-    rows = chunk_structured(df, max_chars=60).collect()
-    assert {r["path"] for r in rows} == {"src/main.rs", "docs/a.md"}
-    # chunk_seq dense per path from 0
-    for path in ("src/main.rs", "docs/a.md"):
-        seqs = sorted(r["chunk_seq"] for r in rows if r["path"] == path)
-        assert seqs == list(range(len(seqs)))
-    assert all(r["chunk_len"] <= 60 for r in rows)

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cargo_chat_spark.sources.index_io import write_index_partitioned
+from cargo_chat_spark.sources.index_cells import write_index_partitioned
 from cargo_chat_spark.sources.testdata import load_table
 from cargo_chat_spark.streaming.index_stream import run_index_maintenance_stream
 from tests.conftest import SF_DIR_SMALL

@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from cargo_chat_spark.sources.index_io import (
+from cargo_chat_spark.sources.index_cells import (
     read_index_cells,
     write_index_partitioned,
 )
@@ -52,7 +52,7 @@ def test_import_reference_index(spark, tmp_path):
 
     import pytest
 
-    from cargo_chat_spark.sources.index_io import import_reference_index
+    from cargo_chat_spark.sources.index_cells import import_reference_index
 
     blob = {
         "index": {"opaque": "rp-tree state, ignored on import"},
@@ -121,7 +121,7 @@ def _partition_sig(out):
 
 
 def test_upsert_rewrites_only_touched_cells(spark, tmp_path):
-    from cargo_chat_spark.sources.index_io import upsert_index_cells
+    from cargo_chat_spark.sources.index_cells import upsert_index_cells
 
     out, index = _mk_index(spark, tmp_path)
     before = _partition_sig(out)
@@ -146,7 +146,7 @@ def test_upsert_rewrites_only_touched_cells(spark, tmp_path):
 def test_upsert_moves_vector_and_drops_emptied_cell(spark, tmp_path):
     import os as _os
 
-    from cargo_chat_spark.sources.index_io import upsert_index_cells
+    from cargo_chat_spark.sources.index_cells import upsert_index_cells
 
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
     # two far-apart centroids; all corpus vectors near-origin -> cell 0,
@@ -193,7 +193,7 @@ def test_bloom_manifest_fast_path_matches_scan_fallback(spark, tmp_path):
     import json as _json
     import os as _os
 
-    from cargo_chat_spark.sources.index_io import (
+    from cargo_chat_spark.sources.index_cells import (
         _CELL_BLOOMS,
         _read_cell_blooms,
         upsert_index_cells,
@@ -252,7 +252,7 @@ def test_bloom_manifest_fast_path_matches_scan_fallback(spark, tmp_path):
 def test_compact_index_cells_defragments_without_changing_values(spark, tmp_path):
     import os as _os
 
-    from cargo_chat_spark.sources.index_io import (
+    from cargo_chat_spark.sources.index_cells import (
         compact_index_cells,
         upsert_index_cells,
     )
@@ -321,7 +321,7 @@ def test_compact_index_cells_defragments_without_changing_values(spark, tmp_path
 def test_upsert_rejects_duplicate_chunk_ids(spark, tmp_path):
     import pytest
 
-    from cargo_chat_spark.sources.index_io import upsert_index_cells
+    from cargo_chat_spark.sources.index_cells import upsert_index_cells
 
     out, index = _mk_index(spark, tmp_path)
     dup = index.where(F.col("chunk_id") == 5).unionByName(
@@ -337,7 +337,7 @@ def test_delete_index_ids_and_ann_cdc_lifecycle(spark, tmp_path):
     wrapper keeps the index equal to a from-scratch build of the table's
     CURRENT content after every step (update-with-cell-move, delete,
     reinsert), and idle applies are fenced no-ops."""
-    from cargo_chat_spark.sources.index_io import (
+    from cargo_chat_spark.sources.index_cells import (
         ann_synced_version,
         apply_ann_cdc,
         delete_index_ids,

@@ -90,8 +90,7 @@ def test_knn_batched_never_collects(spark, monkeypatch):
     def _no_collect(self):
         raise AssertionError("knn_exact_batched collected a DataFrame")
 
-    from cargo_chat_spark.operators.knn import knn_join_batched
-    from cargo_chat_spark.queries.vector_search import _query_vectors
+    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_batched
     from cargo_chat_spark.sources.testdata import load_table
 
     monkeypatch.setattr(DataFrame, "collect", _no_collect)
@@ -121,8 +120,7 @@ def test_knn_numpy_large_q_never_collects_full_side(spark, monkeypatch):
     a query set above max_collect_queries must route to the no-collect
     batched form, and no collect during plan construction may ever return
     more than the cap+1 probe rows."""
-    from cargo_chat_spark.operators.knn import knn_join_numpy
-    from cargo_chat_spark.queries.vector_search import _query_vectors
+    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_numpy
     from cargo_chat_spark.sources.testdata import load_table
 
     cap = 3
@@ -172,8 +170,7 @@ def test_knn_batched_plan_growth_capped_above_union_ceiling(spark):
     (block × corpus-partition) form: exactly one CartesianProduct node,
     zero Unions, plan size O(1) in |Q| — with the same map-side
     WindowGroupLimit prune and the same exact result."""
-    from cargo_chat_spark.operators.knn import knn_join_batched
-    from cargo_chat_spark.queries.vector_search import _query_vectors
+    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_batched
     from cargo_chat_spark.sources.testdata import load_table
 
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")

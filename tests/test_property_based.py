@@ -102,40 +102,6 @@ def test_universal_perm_stays_in_field(h):
         assert 0 <= v < PRIME
 
 
-# ----------------------------------------------------- chunk assembly (r9)
-# merge_pieces is the shared assembly of BOTH P3 boundary tiers
-# (operators/chunking.py regex tier, operators/chunking_ts.py AST tier):
-# its invariants are what make any provider's output a valid chunking.
-
-_pieces = st.lists(st.text(max_size=40), max_size=8)
-_cap = st.integers(min_value=1, max_value=30)
-
-
-@given(_pieces, _cap)
-def test_merge_pieces_lossless_capped_nonempty(pieces, cap):
-    from cargo_chat_spark.operators.chunking import merge_pieces
-
-    out = merge_pieces(pieces, cap)
-    assert "".join(out) == "".join(pieces)   # partition of the input
-    assert all(len(c) <= cap for c in out)   # chunker.rs:70 cap
-    assert all(c for c in out)               # no empty chunks
-
-
-_langs = st.sampled_from(
-    ["Rust", "Python", "Go", "Markdown", "C++", None, "NoSuchLang"]
-)
-
-
-@given(st.text(max_size=200), _langs, st.integers(min_value=5, max_value=64))
-def test_split_structured_lossless_capped(text, lang, cap):
-    from cargo_chat_spark.operators.chunking import split_structured
-
-    out = split_structured(text, lang, cap)
-    assert "".join(out) == text
-    assert all(len(c) <= cap for c in out)
-    assert all(c for c in out)
-
-
 # ------------------------------------------------------- mock rules (r9)
 @given(st.text(max_size=120))
 def test_classifier_invariants(q):

@@ -56,11 +56,7 @@ def _rank(spark, cand_rows, cls_kwargs):
     c = _candidates(spark, cand_rows)
     cls = _classification(spark, **cls_kwargs)
     joined = c.join(F.broadcast(cls), "query_id")
-    joined = joined.where(
-        filters.folder_match(F.col("file"), F.col("target_folders"))
-        & filters.extension_match(F.col("extension"), F.col("file"), F.col("target_extensions"))
-        & filters.exclude_match(F.col("file"), F.col("exclude_patterns"))
-    )
+    joined = joined.where(filters.scope_match())
     # final_sort=False: these scenarios are the reference's unit tests of
     # apply_llm_based_filtering itself (hyde.rs:1451-1549) — the SELECTION
     # order, before retrieve()'s final distance re-sort (hyde.rs:545-552)

@@ -3,16 +3,14 @@ results and its prompt from those rows.
 
 The prompt must stay byte-identical to ``assemble_prompt`` over the lazy
 ``knn_join -> filters -> reference_rank`` plan, restated here from the
-public operators, for every result shape: both modes, both rerank paths,
-an under-filled result whose Chunk IDs have holes, and the empty result.
+public operators, for every result shape: both modes, rerank at a small
+and a large k, an under-filled result whose Chunk IDs have holes, and the
+empty result.
 """
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-from pyspark import cloudpickle
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -35,11 +33,6 @@ _LAYOUT = [  # (folder, extension, language)
     ("src", "rs", "Rust"), ("src", "py", "Python"), ("docs", "md", "Markdown"),
     ("tests", "rs", "Rust"), ("notes", "txt", None),
 ]
-
-
-# the executor rerank ships the provider to Python workers, which cannot
-# import this test module: pickle its classes by value
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 class RecordingProvider(MockProvider):
@@ -89,11 +82,7 @@ def _lazy_prompt(spark, index, provider, query, k, mode, rerank):
         0, cls.language, cls.intent, cls.wants_code, float(cls.confidence),
         cls.target_folders, cls.target_extensions, cls.exclude_patterns, k,
     )], CLS_DDL))
-    in_scope = (
-        filters.folder_match(F.col("file"), F.col("target_folders"))
-        & filters.extension_match(F.col("extension"), F.col("file"), F.col("target_extensions"))
-        & filters.exclude_match(F.col("file"), F.col("exclude_patterns"))
-    )
+    in_scope = filters.scope_match()
     corpus = index.withColumnRenamed("chunk_id", "vec_id")
     if mode == "improved":
         corpus = corpus.crossJoin(cls_df).where(in_scope).select(corpus.columns)
@@ -125,21 +114,20 @@ def _lazy_prompt(spark, index, provider, query, k, mode, rerank):
     return out[0]["user_prompt"] if out else query
 
 
-@pytest.mark.parametrize("mode, rerank, distributed", [
-    ("reference", False, None),
-    ("improved", False, None),
-    ("reference", True, False),
-    ("reference", True, True),
+@pytest.mark.parametrize("mode, rerank, k", [
+    ("reference", False, 5),
+    ("improved", False, 5),
+    ("reference", True, 5),
+    ("reference", True, 60),
 ])
-def test_prompt_matches_lazy_plan(spark, index, mode, rerank, distributed):
+def test_prompt_matches_lazy_plan(spark, index, mode, rerank, k):
     query = "how does the rust parser work"
     provider = RecordingProvider()
-    out = retrieve(spark, index, query, 5, provider, use_rerank=rerank, mode=mode,
-                   rerank_distributed=distributed)
+    out = retrieve(spark, index, query, k, provider, use_rerank=rerank, mode=mode)
     list(out["answer"])
     assert out["results"].count() > 1
     assert provider.prompts == [
-        _lazy_prompt(spark, index, provider, query, 5, mode, rerank)
+        _lazy_prompt(spark, index, provider, query, k, mode, rerank)
     ]
 
 

@@ -88,7 +88,7 @@ def band_store_sync(tmp_path):
 
 @_case
 def ann_sync(tmp_path):
-    from cargo_chat_spark.sources import index_io as M
+    from cargo_chat_spark.sources import index_cells as M
 
     p = tmp_path / "ivf"
     assert M.ann_synced_version(str(p)) == -1
@@ -144,7 +144,7 @@ def test_ivm_state_defaults_by_design(tmp_path):
 
 def test_readers_still_parse_good_state(tmp_path):
     from cargo_chat_spark.streaming import dedup_ingest, upsert_sink
-    from cargo_chat_spark.sources import band_store, index_io
+    from cargo_chat_spark.sources import band_store, index_cells
 
     for mod_path, payload, reader, want in [
         (
@@ -168,9 +168,9 @@ def test_readers_still_parse_good_state(tmp_path):
             2,
         ),
         (
-            str(tmp_path / "d") + index_io._ANN_SYNC,
+            str(tmp_path / "d") + index_cells._ANN_SYNC,
             {"synced_version": 5},
-            lambda: index_io.ann_synced_version(str(tmp_path / "d")),
+            lambda: index_cells.ann_synced_version(str(tmp_path / "d")),
             5,
         ),
     ]:
