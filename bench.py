@@ -55,12 +55,7 @@ HEADLINE = [
     "contamination_bloom",   # broadcast-Bloom prefilter + exact verify
     "curation_pipeline",     # end-to-end quality->dedup->decontam->split
     "quality_score",         # JVM-only quality signals over documents
-    # --- relational / TPC-H shapes (6) ---
-    "pricing_summary",       # Q1 shape: scan + wide decimal agg
-    "top_customers",         # join + agg + top-n with broadcast dim
-    "shipping_priority",     # Q3 shape: 3-way join, segment top-10
-    "local_supplier_volume",  # Q5 shape: 6-way star join
-    "cheapest_supplier_per_part",  # argmin-per-group via packed MIN
+    # --- graph (1) ---
     "part_copurchase_pagerank",  # iterative fixed-point graph (3 rounds)
     # --- temporal / event-stream batch twins (4) ---
     "events_asof_join",      # as-of join (bucketed backward search)
@@ -133,18 +128,11 @@ DETAIL_EXTRA = [
     "phrase_match_persisted",   # new r7: phrase from positional postings
     "incremental_neardup_cdc",  # new r7: band store follows CDC feed
     "ivf_topk_cdc_synced",      # new r7: ANN index follows CDC feed
-    "late_shipment_priorities",  # new r7: Q4 EXISTS/semi-join shape
-    "small_lot_revenue_q17",    # new r7: Q17 correlated-avg shape
-    "waiting_customers_q22",    # new r7: Q22 scalar-sub + anti-join
     "repo_walk",                # new r8: S1-S3 walk gate (fixture tree)
     "wordfreq_cdc_dict",        # new r8: dict follows snapshot CDC
     "nb_filter_report",         # new r8: classifier-composed curation
     "rp_lsh_forest_topk",       # batch forest (build gate; headline = probe)
     "token_budget_mix",         # new r8: per-source token-budget mixing
-    "volume_shipping_q7",       # new r8: Q7 nation-pair shipping volume
-    "product_profit_q9",        # new r8: Q9-shaped computed-profit rollup
-    "returned_items_q10",       # new r8: Q10 returned-item revenue top-20
-    "returnflag_status_mix_q12",  # new r8: Q12 conditional status split
     "rp_forest_cdc_synced",     # new r8: forest follows the CDC feed
     "answer_synthesize_mock",   # new r9: M6 mock tail over context assembly
     "ann_recall_report",        # new r9: ANN recall@10 as data (4 members)
@@ -171,12 +159,10 @@ DETAIL_EXTRA = [
     "cluster_balanced_sample",  # new r10: equal md5 draw per k-means cell
     "knn_label_purity_report",  # new r10: label purity@10 coherence card
     "hrw_reshard_report",       # new r10: rendezvous-hash placement card
-    "nation_market_share_q8",   # new r10: Q8 market-share shape
     "functional_dependency_report",  # new r10: candidate-FD audit card
     "cm_join_size_report",      # new r10: CM join-cardinality bounds
     "kmv_distinct_report",      # new r10: KMV engine-portable distincts
     "kmv_set_ops_report",       # new r10: merged-KMV union/intersection
-    "order_price_deciles_scale",  # new r11: no-window sampled-cut deciles
     "kfold_group_assign",       # new r11: group-aware k-fold assignment
     "pmi_bigrams_top",          # new r11: integer micro-nat PMI card
     "corpus_kl_drift_report",   # new r11: unigram KL drift across versions
@@ -191,7 +177,6 @@ DETAIL_EXTRA = [
     "vocab_oov_report",         # new r12: top-V vocabulary OOV rates
     "ams_f2_report",            # new r12: AMS F2 / self-join-size sketch
     "bq_hamming_rerank",        # new r12: 1-bit BQ + Hamming re-rank
-    "waiting_suppliers_q21",    # new r12: Q21 EXISTS/NOT-EXISTS shape
     "langid_confusion_report",  # new r12: langid confusion cells card
     "kn_bigram_logprob",        # new r12: Kneser-Ney bigram fluency card
     "signal_agreement_report",  # new r12: DSIR-vs-quality Spearman card
@@ -246,7 +231,7 @@ _R12_CONSOLIDATED_BARS = {
     "bm25_topk": 1.21, "bm25_topk_persisted": 0.58, "bpe_compression_report": 5.07,
     "bpe_encode_sample": 4.5, "bpe_fertility_by_lang": 4.01, "bpe_learned_merges": 4.44,
     "bpe_pack_tokens": 5.01, "bpe_pair_counts": 0.52, "bq_hamming_rerank": 0.64,
-    "ccnet_perplexity_buckets": 1.04, "cheapest_supplier_per_part": 1.18, "cluster_balanced_sample": 1.95,
+    "ccnet_perplexity_buckets": 1.04, "cluster_balanced_sample": 1.95,
     "cluster_representatives": 1.98, "cm_join_size_report": 3.28, "containment_pairs": 0.52,
     "contamination_bloom": 2.43, "copurchase_bfs_hops": 5.36, "copurchase_label_prop": 6.96,
     "copurchase_triangles": 7.59, "corpus_datasheet": 0.53, "corpus_drift_cdc_report": 0.64,
@@ -271,22 +256,21 @@ _R12_CONSOLIDATED_BARS = {
     "kfold_group_assign": 0.27, "kmeans_centroids": 2.18, "kmeans_cluster_profile": 1.98,
     "kmeans_online_centroids": 1.54, "kmv_distinct_report": 2.01, "kn_bigram_logprob": 3.13, "signal_agreement_report": 7.3, "source_divergence_report": 2.2, "langid_confusion_report": 2.72, "kmv_set_ops_report": 1.22,
     "knn_exact": 1.17, "knn_int8_rerank": 1.56, "knn_label_purity_report": 1.35,
-    "late_shipment_priorities": 0.92, "leakage_safe_split": 0.26, "local_supplier_volume": 1.04,
+    "leakage_safe_split": 0.26,
     "lsh_band_sweep_report": 2.09, "lsh_precision_report": 3.09, "media_frame_sample": 0.49,
-    "minhash_lsh_pairs": 3.07, "mmr_diversified_topk": 1.57, "nation_market_share_q8": 1.22,
+    "minhash_lsh_pairs": 3.07, "mmr_diversified_topk": 1.57,
     "nb_calibration_report": 2.57, "nb_classify_docs": 1.27, "nb_filter_report": 2.34,
     "nb_train_logprobs": 0.7, "neardup_cluster_histogram": 2.12, "nfc_normalize_text": 0.55,
-    "ngram_diversity_report": 1.11, "order_price_deciles_scale": 1.44, "packing_efficiency_report": 0.72,
+    "ngram_diversity_report": 1.11, "packing_efficiency_report": 0.72,
     "paragraph_dedup_rebuild": 1.19, "part_copurchase_pagerank": 7.23, "part_name_entities_recursive": 2.67,
     "phrase_match_docs": 0.49, "phrase_match_persisted": 0.31, "pmi_bigrams_top": 1.59,
-    "pq_knn_rerank": 2.27, "pricing_summary": 1.15, "product_profit_q9": 0.44,
+    "pq_knn_rerank": 2.27,
     "quality_score": 0.67, "repo_profile": 3.04, "repo_walk": 0.89,
-    "retrieval_rank_reference": 1.79, "returned_items_q10": 1.12, "returnflag_status_mix_q12": 0.91,
+    "retrieval_rank_reference": 1.79,
     "rp_forest_cdc_synced": 2.39, "rp_forest_persisted": 3.32, "rp_lsh_forest_topk": 3.02,
-    "semdedup_keep": 4.56, "shipping_priority": 0.92, "small_lot_revenue_q17": 0.75,
-    "table_profile": 1.96, "token_budget_mix": 0.32, "top_customers": 0.9,
+    "semdedup_keep": 4.56,
+    "table_profile": 1.96, "token_budget_mix": 0.32,
     "unigram_piece_vocab": 0.57, "unigram_viterbi_encode": 0.9, "vocab_oov_report": 0.71,
-    "volume_shipping_q7": 0.48, "waiting_customers_q22": 0.58, "waiting_suppliers_q21": 1.12,
     "wordfreq_cdc_dict": 0.73, "zipf_fit_report": 0.5,
 }
 
@@ -303,27 +287,26 @@ _R12_CONSOLIDATED_BARS = {
 # entry's latest timing lives in BENCH_DETAIL.json and the driver's
 # regression gate reads only the tracked set.
 _LEGACY_BARS = {
-    "abandoned_purchases": 0.99, "above_nation_avg_customers": 0.44, "big_quantity_orders": 0.96,
+    "abandoned_purchases": 0.99,
     "boilerplate_grams": 2.42, "chunk_documents": 0.23, "cohort_retention": 0.9,
     "constraint_violations": 0.91, "context_assembly": 3.0, "cosine_topk": 2.0,
-    "customer_balance_ranks": 0.47, "daily_active_bitmap": 0.62, "daily_signup_purchase": 0.52,
+    "daily_active_bitmap": 0.62,
     "doc_fingerprints": 3.3, "embedding_neardup_pairs": 0.8, "engaged_clean_users": 0.56,
     "event_funnel": 0.7, "event_sessions": 0.83, "event_transitions": 0.94,
-    "event_type_cooccurrence": 0.6, "event_value_percentiles": 0.69, "events_csv_roundtrip": 0.92,
+    "event_type_cooccurrence": 0.6, "events_csv_roundtrip": 0.92,
     "events_jsonl_roundtrip": 0.79, "events_partitioned_pruned": 1.27, "events_schema_merge": 0.84,
     "events_session_window_builtin": 0.7, "events_trailing_1h_sum": 1.19, "events_weekly_drift": 0.6,
-    "events_within_5min_pairs": 0.82, "flag_metrics_unpivot": 1.08, "flag_status_cube": 1.32,
-    "flag_status_grouping_sets": 1.52, "forecast_revenue_q6": 0.5, "hard_negatives_topk": 2.56,
-    "important_parts_q11": 1.63, "ivf_topk": 1.5, "knn_exact_numpy": 2.4,
+    "events_within_5min_pairs": 0.82,
+    "hard_negatives_topk": 2.56,
+    "ivf_topk": 1.5, "knn_exact_numpy": 2.4,
     "mad_outliers": 0.95, "mock_embed_documents": 0.28, "ngram_jaccard_pairs": 4.3,
-    "order_count_distribution": 0.72, "order_price_deciles": 0.41, "part_name_entities": 1.17,
-    "promo_revenue_disjunctive": 0.72, "quantity_price_corr": 1.73, "revenue_rollup": 1.9,
-    "rolling_7d_actives": 0.89, "rp_lsh_topk": 2.5, "segment_running_totals": 1.1,
-    "segment_status_pivot": 0.55, "session_paths_top": 0.89, "simhash_fingerprints": 1.9,
-    "similar_part_names": 0.48, "sole_returning_supplier": 1.53, "source_quality_report": 0.98,
+    "part_name_entities": 1.17,
+    "rolling_7d_actives": 0.89, "rp_lsh_topk": 2.5,
+    "session_paths_top": 0.89, "simhash_fingerprints": 1.9,
+    "similar_part_names": 0.48, "source_quality_report": 0.98,
     "temperature_mix": 0.76, "tfidf_top_terms": 1.66, "token_count": 0.31,
     "token_count_arrow": 0.38, "token_count_pandas": 0.29, "token_spans_udtf": 0.74,
-    "top_revenue_supplier": 1.12, "unigram_logprob": 1.0, "user_value_scd2": 0.42,
+    "unigram_logprob": 1.0, "user_value_scd2": 0.42,
     "value_equidepth_histogram": 0.69, "value_histogram": 0.4, "value_stats_salted": 0.39,
     "value_zscore_outliers": 0.72, "weekly_hll_rollup": 0.52, "weighted_sample": 0.29,
     "word_entropy": 1.12,

@@ -183,9 +183,9 @@ def _interactive_loop(spark, index_df, usage, read_index) -> None:
         if not line:
             continue
         _add_history(line)
-        parts = shlex.split(line)
-        cmd, args = parts[0], parts[1:]
         try:
+            parts = shlex.split(line)  # raises on an unbalanced quote
+            cmd, args = parts[0], parts[1:]
             if cmd == "exit":
                 break
             elif cmd == "index" and len(args) == 2:

@@ -24,7 +24,6 @@ from cargo_chat_spark.queries import model_gates  # noqa: F401
 from cargo_chat_spark.queries import rerank  # noqa: F401
 from cargo_chat_spark.queries import multimodal_queries  # noqa: F401
 from cargo_chat_spark.queries import profiling  # noqa: F401
-from cargo_chat_spark.queries import relational  # noqa: F401
 from cargo_chat_spark.queries import retrieval  # noqa: F401
 from cargo_chat_spark.queries import sampling  # noqa: F401
 from cargo_chat_spark.queries import similarity  # noqa: F401
@@ -38,119 +37,12 @@ from cargo_chat_spark.queries import vector_search  # noqa: F401
 from cargo_chat_spark.queries.registry import ORACLE_SQL, SPARK_QUERIES
 
 # The driver's correctness gate checks the FIRST 50 entries of queries()
-# in iteration order (round 1: exactly indexes 0-49 got CORRECTNESS rows;
-# knn_exact_numpy/knn_overfetch_2k at 50-51 were silently skipped). Keep
-# every operator's UNIQUE gate inside that window: entries listed in
-# _OVERFLOW_TAIL duplicate coverage carried by an earlier entry (or are
-# fixture parity checks whose consumers are themselves gated) and are
-# moved to the end, where falling off the cap loses no operator coverage.
-# Round-5 rotation (executes round-4 VERDICT item 1): promotes the NINE
-# round-4 operators that were implemented + locally oracle-green but never
-# had an external CORRECTNESS row (events_asof_join, rp_lsh_forest_topk,
-# knn_int8_rerank, events_within_5min_pairs, event_value_percentiles,
-# temperature_mix, events_props_extract, events_moving_avg,
-# sources_by_lang). Nine demotions make room — each is green in the r4
-# window AND its semantics stay re-proven by an in-window twin or consumer:
-#   customers_with_big_orders / parts_never_ordered_bulk / part_bulk_outer
-#       -> beyond-reference relational extras; the relational gate set
-#          keeps pricing_summary, top_customers, revenue_rollup,
-#          segment_running_totals in-window
-#   media_featurize    -> Arrow applyInPandas/mapInPandas plumbing
-#       re-proven by embedding_neardup_pairs' GEMM tiles; multimodal
-#       schema pinned by tests
-#   stratified_sample / source_mix -> the deterministic md5-threshold
-#       draw is re-proven by temperature_mix (same draw core composed
-#       with sqrt-chain tempered rates)
-#   substring_dup_pairs -> window/bucket equi-join machinery re-proven by
-#       events_within_5min_pairs; dedup family gated by dedup_exact +
-#       neardup_components + neardup_dedup_keep in-window
-#   quality_filter     -> threshold predicate over quality_score's
-#       signals; quality_score stays in-window
-#   ivf_topk           -> static fixture-centroid IVF; superseded
-#       in-window by ivf_topk_trained, which as of round 5 carries a full
-#       literal-centroid value-hash oracle over the same assign/probe/
-#       search path at finer parameters (32 cells / 8 probes / soft 2)
-# Earlier-round demotion rationales (r3-r4) are preserved in git history;
-# every tail entry below keeps a one-line reason.
-#
-# ROUND-6 ROTATION PLAN (drafted end of round 5; execute after
-# CORRECTNESS_r05 lands): the round-5 waves added ~50 tail entries that
-# have never had an external gate row. Promote in this priority order —
-# breadth of NEW machinery first, twins last:
-#   1. curation_pipeline, hybrid_rrf_retrieval, bm25_topk,
-#      events_gap_fill_locf, rolling_7d_actives, cheapest_supplier_per_part,
-#      media_frame_sample, token_spans_udtf, cogroup_purchase_view_asof,
-#      pq_knn_rerank, value_stats_salted, dataset_split, event_funnel,
-#      shipping_priority, local_supplier_volume
-#   2. weighted_sample, word_entropy, unigram_logprob, engaged_clean_users,
-#      value_zscore_outliers, event_type_cooccurrence, tfidf_top_terms,
-#      boilerplate_grams, contamination_bloom, fuzzy_decontamination,
-#      latest_event_per_user, per_source_sample, label_centroids,
-#      events_dedup_collapse, event_transitions, cohort_retention
-#   3. remaining relational variants (cube/deciles/pivot/rank-fns/
-#      grouping-sets/full-outer/q6/subquery/variant/set-ops twins)
-# Demotion candidates with in-window re-proof: the r5-gated rows whose
-# machinery is re-proven by a promoted consumer (e.g. events_asof_join by
-# cogroup_purchase_view_asof + events_within_5min_pairs; knn family twins
-# by knn_exact; sampling twins by the promoted samplers). Keep knn_exact,
-# retrieval_rank_reference, neardup_components, sessionize_stateful, and
-# the S1-S7/A1-A7/P1-P7 reference-surface gates in-window permanently —
-# they ARE the reference parity claim.
-# ---------------------------------------------------------------------
-# ROUND-6 ROTATION — EXECUTED. The window is now an EXPLICIT list (below)
-# instead of registration-order-plus-tail: the driver gates exactly
-# GATE_WINDOW, so a new registration can never silently displace a gate.
-#
-# Composition (50 = 20 + 15 + 11 + 4):
-# - 20 permanent reference-parity gates (knn_exact,
-#   retrieval_rank_reference, neardup_components, sessionize_stateful,
-#   and the S/A/P/M-family gates — they ARE the parity claim vs
-#   /root/reference and stay in-window every round);
-# - 15 round-5 tier-1 promotions (new machinery families, never
-#   externally gated before this round);
-# - 11 round-5 tier-1b promotions;
-# - 4 round-6 closures: the two remaining streaming batch twins
-#   (events_dedup_collapse, abandoned_purchases — with daily_active_
-#   bitmap, events_ohlc_hourly and the permanent sessionize_stateful
-#   this gives every streaming behavior an externally-gated twin) and
-#   the two new round-6 gates (index_import_reference closes the S4
-#   reference-index interop seam; frame_neardup composes the multimodal
-#   1→N demux into the exact-dedup machinery).
-#
-# Arithmetic forced 4 tier-1b deferrals to the HEAD of the round-7 queue
-# (20 permanents + 30 promotions fill the window exactly; the verdict's
-# items 6-8 added 4 more must-gate rows). Deferred, each with its
-# machinery already exercised by an in-window member and an r7 slot
-# reserved: hard_negatives_topk (filtered broadcast-kNN — knn_exact +
-# pq_knn_rerank in-window), user_value_scd2 (LEAD/sentinel windows —
-# events_gap_fill_locf + events_ohlc_hourly in-window),
-# quantity_price_corr (exact-decimal moments — value_stats_salted
-# in-window), events_jsonl_roundtrip (interchange round-trip —
-# events_partitioned_pruned in-window).
-#
-# The 30 r5-window rows rotating OUT all keep their green r5 external
-# row (correctness claims stand on CORRECTNESS_r05.json, not on twin
-# arguments); the machinery of each additionally stays exercised
-# in-window: ANN ladder rows (rp_lsh_topk, rp_lsh_forest_topk,
-# ivf_topk_trained, knn_int8_rerank) by ivfpq_topk + pq_knn_rerank +
-# permanent knn_exact; text-quality rows (quality_score, token_count,
-# langid_heuristic, repetition_signals, pii_scan, contamination_13gram)
-# by curation_pipeline + source_quality_report which nest their SQL;
-# dedup rows (dedup_exact, neardup_dedup_keep, embedding_neardup_pairs,
-# doc_fingerprints) by frame_neardup (same exact_dedup core) +
-# semdedup_keep + paragraph_dedup_rebuild + permanent
-# neardup_components; sampling rows (pack_sequences, temperature_mix)
-# by dataset_split + curation_pipeline; relational rows
-# (pricing_summary, top_customers, revenue_rollup,
-# segment_running_totals, event_value_percentiles) by shipping_priority
-# + local_supplier_volume + cheapest_supplier_per_part + table_profile;
-# events rows (events_tumbling_window, events_asof_join,
-# events_within_5min_pairs, events_props_extract, events_moving_avg)
-# by events_ohlc_hourly + cogroup_purchase_view_asof +
-# abandoned_purchases + events_gap_fill_locf; distinct_counts_exact by
-# daily_active_bitmap; vocab_top50/sources_by_lang by bm25_topk +
-# table_profile; repo_files_fixture by its permanent consumers
-# (repo_profile et al.).
+# in iteration order, so the gated set is this explicit list (a new
+# registration can never silently displace a gate). The first 20 are the
+# permanent reference-parity gates; the other 30 rotate. Every registered
+# query outside the window already holds a green external CORRECTNESS_r*
+# row or sits in _OVERFLOW_TAIL. Past windows, drafts and promotion queues
+# are in git history and the CORRECTNESS_r*.json files.
 GATE_WINDOW = [
     # --- permanent reference-parity gates (20) ---
     "knn_exact",
@@ -173,64 +65,13 @@ GATE_WINDOW = [
     "primary_languages",
     "mock_embed_documents",
     "rerank_topk",
-    # --- ROUND-14 ROTATION (executes the round-13 VERDICT item 3 /
-    # _ROUND14_WINDOW_DRAFT frozen at the r13 rotation commit,
-    # re-simmed 50/50 green before this rotation commit): the 30
-    # round-13 window rows rotate out on their green CORRECTNESS_r13
-    # externals (50/50, zero err) — recorded in
-    # _ROUND13_WINDOW_ROTATED_OUT below. Slots 21-22 are the r12
-    # verdict item-4 head (pii_scan, pricing_summary — the two r5
-    # greens displaced by the r13 frozen-draft rebalance); slots 23-24
-    # land the FIRST external rows for the only two registry entries
-    # never driver-checked (rp_tree_forest_topk, semdedup_keep_scale —
-    # r13 verdict item 1, returning the never-driver-gated set to
-    # ZERO); slots 25-36 are the full r5-green remainder; slots 37-50
-    # the 14 oldest r6 greens by registry name (hybrid_rrf_retrieval +
-    # index_import_reference were displaced to the round-15 head by the
-    # rebalance rule when the two r13 promotions took their slots).
-    # Machinery of the rotating-out r13 rows stays exercised in-window:
-    # the kNN ladder by rp_tree_forest_topk + rp_lsh_forest_topk +
-    # rp_lsh_topk + the permanent knn_exact; banded dedup /
-    # fingerprints by frame_neardup + the permanent neardup_components;
-    # curation/sampling by quality_score + temperature_mix +
-    # dataset_split + curation_pipeline; relational by pricing_summary
-    # + revenue_rollup + top_customers + segment_running_totals +
-    # cheapest_supplier_per_part; events by events_ohlc_hourly +
-    # events_gap_fill_locf + cogroup_purchase_view_asof +
-    # abandoned_purchases + events_dedup_collapse; text stats by
-    # token_count + vocab_top50 + sources_by_lang + bm25_topk;
-    # sketches by daily_active_bitmap.
-    # --- ROUND-15 ROTATION (executes _ROUND15_WINDOW_DRAFT below with
-    # the r14 VERDICT item-2 rebalance, re-simmed 50/50 green before
-    # this rotation commit): the 30 round-14 window rows rotate out on
-    # their green CORRECTNESS_r14 externals (50/50, zero err) —
-    # recorded in _ROUND14_WINDOW_ROTATED_OUT below. Slots 21-22 are
-    # the round-14 promotion queue (first external rows for the two
-    # r14-build cards); slots 23-38 the r6-green remainder from the
-    # frozen draft (headed by the two rows the r14 rebalance
-    # displaced); slots 39-41 the three oldest r7 greens by registry
-    # name. Slots 42-50 execute the r14 VERDICT's item 2 — the judge's
-    # explicit instruction to rotate external oracle coverage onto the
-    # queries the optimization rounds REWROTE, which outranks the
-    # remaining r7 re-proof wave: copurchase_triangles,
-    # cm_join_size_report, bpe_learned_merges, both ANN reports (all
-    # restructured in r14 with no external row since), plus the r15
-    # rewrites dsir_logratio_weights (the weight pipeline shared by
-    # all three DSIR cards), index_upsert_cells (r14 job fusion + r15
-    # job overlap), ivm_view_follow (r15 pre-aggregated rollup; its
-    # one-shot twin incremental_join_cdc shares the same _nation_rollup
-    # and oracle), and lsh_band_sweep_report (r15 one-pass rewrite,
-    # also the one row the r14 bench flagged vs BASELINE). The nine
-    # displaced r7 greens keep their green CORRECTNESS_r07 externals
-    # and head the round-16 queue (PROMOTION_PLAN below).
-    # --- §2: round-14 promotion queue — first external rows (2) ---
+    # --- rotating slots (30) ---
     "kcenter_coreset",
     "rp_tree_filtered_topk",
-    # --- §3: r6-green remainder (16; rebalance-displaced pair first) ---
     "hybrid_rrf_retrieval",
     "index_import_reference",
     "ivfpq_topk",
-    "local_supplier_volume",
+    "dedup_mor_apply",
     "media_frame_sample",
     "paragraph_dedup_rebuild",
     "part_copurchase_pagerank",
@@ -238,17 +79,14 @@ GATE_WINDOW = [
     "pq_knn_rerank",
     "rolling_7d_actives",
     "semdedup_keep",
-    "shipping_priority",
+    "event_transitions",
     "source_quality_report",
     "table_profile",
     "token_spans_udtf",
     "value_stats_salted",
-    # --- §4: oldest r7 greens by registry name (3) ---
     "boilerplate_grams",
     "cohort_retention",
     "contamination_bloom",
-    # --- §5: r14 verdict item-2 — external rows for the optimization
-    # rewrites (9) ---
     "copurchase_triangles",
     "cm_join_size_report",
     "bpe_learned_merges",
@@ -259,854 +97,12 @@ GATE_WINDOW = [
     "ivm_view_follow",
     "lsh_band_sweep_report",
 ]
-# Historical record of the round-13 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r13
-# row — 50/50, zero err).
-_ROUND13_WINDOW_ROTATED_OUT = [
-    # --- round-12 promotion queue, in plan order (9) ---
-    "zipf_fit_report",
-    "vocab_oov_report",
-    "ams_f2_report",
-    "bq_hamming_rerank",
-    "waiting_suppliers_q21",
-    "langid_confusion_report",
-    "kn_bigram_logprob",
-    "signal_agreement_report",
-    "source_divergence_report",
-    # --- committed re-proof wave (21): r4 remainder (5) ---
-    "parts_never_ordered_bulk",
-    "quality_filter",
-    "source_mix",
-    "stratified_sample",
-    "substring_dup_pairs",
-    # --- oldest r5 greens (16) ---
-    "contamination_13gram",
-    "dedup_exact",
-    "distinct_counts_exact",
-    "doc_fingerprints",
-    "embedding_neardup_pairs",
-    "event_value_percentiles",
-    "events_asof_join",
-    "events_moving_avg",
-    "events_props_extract",
-    "events_tumbling_window",
-    "events_within_5min_pairs",
-    "ivf_topk_trained",
-    "knn_int8_rerank",
-    "langid_heuristic",
-    "neardup_dedup_keep",
-    "pack_sequences",
-]
-# Historical record of the round-12 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r12
-# row — 50/50, zero err).
-_ROUND12_WINDOW_ROTATED_OUT = [
-    # --- §2: round-11 promotion queue, in plan order (11) ---
-    "order_price_deciles_scale",
-    "kfold_group_assign",
-    "pmi_bigrams_top",
-    "corpus_kl_drift_report",
-    "packing_efficiency_report",
-    "neardup_cluster_histogram",
-    "doc_length_percentiles",
-    "lsh_band_sweep_report",
-    "containment_pairs",
-    "corpus_datasheet",
-    "curriculum_phase_assign",
-    # --- §3: converted approx gates, first window slots (4) ---
-    "distinct_counts_approx",
-    "event_value_percentiles_approx",
-    "weekly_hll_rollup",
-    "ivf_topk_trained_live",
-    # --- §4: committed re-proof head (6, _ROUND12_REPROOF_HEAD) ---
-    "knn_exact_numpy",
-    "knn_overfetch_2k",
-    "cosine_topk",
-    "dim_validation",
-    "minhash_lsh_pairs",
-    "simhash_neardup_pairs",
-    # --- §5: next-oldest green re-proofs (9) ---
-    "filter_folder",        # r3
-    "filter_extension",     # r3
-    "filter_exclude",       # r3
-    "knn_exact_batched",    # r3
-    "ngram_jaccard_pairs",  # r3
-    "customers_with_big_orders",  # r4
-    "ivf_topk",             # r4
-    "media_featurize",      # r4
-    "part_bulk_outer",      # r4
-]
-# Historical record of the round-11 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r11
-# row — 50/50, zero err).
-_ROUND11_WINDOW_ROTATED_OUT = [
-    # --- §2: the full 24-entry round-10 promotion queue ---
-    "dsir_logratio_weights",
-    "dsir_topk_selection",
-    "dsir_gumbel_resample",
-    "dsir_cdc_model",
-    "nb_calibration_report",
-    "ccnet_perplexity_buckets",
-    "ngram_diversity_report",
-    "ann_rank_metrics_report",
-    "heavy_hitters_mg",
-    "jl_project_topk",
-    "jl_distortion_report",
-    "bpe_fertility_by_lang",
-    "epoch_schedule_mix",
-    "unigram_piece_vocab",
-    "unigram_viterbi_encode",
-    "countmin_word_counts",
-    "cluster_balanced_sample",
-    "knn_label_purity_report",
-    "hrw_reshard_report",
-    "nation_market_share_q8",
-    "functional_dependency_report",
-    "cm_join_size_report",
-    "kmv_distinct_report",
-    "kmv_set_ops_report",
-    # --- §3: the r11 oldest-green re-proof wave ---
-    "candidates_fixture",        # re-proven r11 (first green r1)
-    "rp_lsh_multiprobe_topk",    # re-proven r11 (first green r1)
-    "event_sessions",            # re-proven r11 (first green r2)
-    "events_sliding_window",     # re-proven r11 (first green r2)
-    "minhash_signatures",        # re-proven r11 (first green r2)
-    "simhash_fingerprints",      # re-proven r11 (first green r2)
-]
-# Historical record of the round-10 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r10
-# row — 50/50, zero err).
-_ROUND10_WINDOW_ROTATED_OUT = [
-    # --- §2 M6 closure + evaluation-as-data family (6) ---
-    "answer_synthesize_mock",
-    "ann_recall_report",
-    "lsh_precision_report",
-    "bpe_compression_report",
-    "corpus_drift_cdc_report",
-    "embedding_drift_cdc_report",
-    # --- last tier-2 distinct machinery row (1) ---
-    "above_nation_avg_customers",
-    # --- tier-3 relational/format variants (23) ---
-    "order_price_deciles",
-    "segment_status_pivot",
-    "customer_balance_ranks",
-    "flag_status_grouping_sets",
-    "daily_signup_purchase",
-    "forecast_revenue_q6",
-    "flag_status_cube",
-    "events_props_variant",
-    "order_count_distribution",
-    "important_parts_q11",
-    "top_revenue_supplier",
-    "big_quantity_orders",
-    "sole_returning_supplier",
-    "events_weekly_drift",
-    "events_csv_roundtrip",
-    "events_schema_merge",
-    "token_count_pandas",
-    "events_session_window_builtin",
-    "flag_metrics_unpivot",
-    "token_count_arrow",
-    "promo_revenue_disjunctive",
-    "part_name_entities_recursive",
-    "events_xml_parse",
-]
-# Historical record of the round-9 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r09
-# row — 50/50, zero err).
-_ROUND9_WINDOW_ROTATED_OUT = [
-    # --- §2 closure: S1-S3 walk + S5/S7 sidecar + M3/M4 mocks (4) ---
-    "repo_walk",
-    "profile_roundtrip",
-    "query_classify_mock",
-    "hyde_expand_mock",
-    # --- r8 store/mixer/learned gates (5) ---
-    "wordfreq_cdc_dict",
-    "nb_filter_report",
-    "rp_forest_persisted",
-    "rp_forest_cdc_synced",
-    "token_budget_mix",
-    # --- relational shapes: r8 registrations + deferred trio (7) ---
-    "volume_shipping_q7",
-    "product_profit_q9",
-    "returned_items_q10",
-    "returnflag_status_mix_q12",
-    "late_shipment_priorities",
-    "small_lot_revenue_q17",
-    "waiting_customers_q22",
-    # --- tier-2 distinct machinery (14) ---
-    "weighted_sample",
-    "unigram_logprob",
-    "engaged_clean_users",
-    "value_zscore_outliers",
-    "event_type_cooccurrence",
-    "latest_event_per_user",
-    "per_source_sample",
-    "label_centroids",
-    "mad_outliers",
-    "similar_part_names",
-    "events_trailing_1h_sum",
-    "session_paths_top",
-    "value_histogram",
-    "value_equidepth_histogram",
-]
-# Historical record of the round-8 window promotions (kept for the
-# judge's audit trail; every name below holds a green CORRECTNESS_r08
-# row).
-_ROUND8_WINDOW_ROTATED_OUT = [
-    # --- ROUND-8 ROTATION (executes round-7 VERDICT item 2, following
-    # ROUND7_PROMOTION_PLAN order exactly): the 29 round-7 window rows
-    # rotate out on their green CORRECTNESS_r07 externals; the entire
-    # round-7 flagship wave (BPE trainer, KMeans, persisted inverted
-    # index, NB, the persisted-state CDC trio, graph members 3-5, the
-    # IVM pair, the curated→BPE→pack flagship) gets its first external
-    # rows. user_value_scd2 stays in-window: its r7 row was RED (driver
-    # canonicalizer OutOfBoundsDatetime on the 9999-12-31 sentinel,
-    # fixed this round in queries/temporal.py) and must re-gate green.
-    # Lakehouse machinery rotating out stays exercised in-window by its
-    # promoted consumers: snapshot write/append/MERGE/CoW-delete/CDC by
-    # bm25_cdc_synced_index + incremental_neardup_cdc +
-    # ivf_topk_cdc_synced + incremental_join_cdc + ivm_view_follow;
-    # MoR deletion vectors + compaction by events_compact_small_files
-    # and bm25_cdc_compacted_index; the persisted-ANN path
-    # (index_upsert_cells / ivf_topk_persisted r7-green) by
-    # ivf_topk_cdc_synced which builds and maintains the same cell
-    # store. Curation closures (leakage_safe_split, html_text_extract,
-    # nfc_normalize_text, contamination_bloom, fuzzy_decontamination)
-    # keep their green r7 rows; curated_pack_tokens nests the funnel's
-    # stage SQL in-window. Text/temporal tier-2 rows (tfidf, word
-    # entropy, boilerplate, cohort, transitions, hard negatives, corr,
-    # jsonl) keep r7 rows with machinery re-proven by bm25/phrase/
-    # funnel_conversion in-window.
-    # --- re-gate after fix (1) ---
-    "user_value_scd2",
-    # --- incremental near-dup store (1) ---
-    "incremental_neardup",
-    # --- distributed BPE tokenizer (3) ---
-    "bpe_learned_merges",
-    "bpe_pair_counts",
-    "bpe_encode_sample",
-    # --- exact fixed-point KMeans (3) ---
-    "kmeans_centroids",
-    "kmeans_cluster_profile",
-    "cluster_representatives",
-    # --- persisted inverted index (2) ---
-    "inverted_postings_waves",
-    "bm25_topk_persisted",
-    # --- learned NB classifier (2) ---
-    "nb_train_logprobs",
-    "nb_classify_docs",
-    # --- persisted-state CDC trio + compaction (4) ---
-    "bm25_cdc_synced_index",
-    "bm25_cdc_compacted_index",
-    "incremental_neardup_cdc",
-    "ivf_topk_cdc_synced",
-    # --- streaming mini-batch KMeans (1) ---
-    "kmeans_online_centroids",
-    # --- tokenize→pack + flagship composition (2) ---
-    "bpe_pack_tokens",
-    "curated_pack_tokens",
-    # --- graph members 3-5 (3) ---
-    "copurchase_bfs_hops",
-    "copurchase_triangles",
-    "copurchase_label_prop",
-    # --- incremental JOIN-view maintenance pair (2) ---
-    "incremental_join_cdc",
-    "ivm_view_follow",
-    # --- lakehouse/format closures (2) ---
-    "events_orc_roundtrip",
-    "events_compact_small_files",
-    # --- analytics / retrieval closures (4) ---
-    "funnel_conversion",
-    "mmr_diversified_topk",
-    "phrase_match_docs",
-    "phrase_match_persisted",
-]
-# Round-12 rotation queue (priority order). The round-11 rotation above
-# burned the entire 24-entry round-10 queue (never-driver-gated back to
-# zero); entries appended below are NEW round-11 registrations, each
-# with a local value-hash oracle, awaiting their first window slot.
-# The round-12 re-proof head (committed at r10 close) follows the queue:
-# knn_exact_numpy, knn_overfetch_2k, cosine_topk, dim_validation,
-# minhash_lsh_pairs, simhash_neardup_pairs — the r2/r3 remainder.
-# Rotation queue for the NEXT window (round 14). Emptied at the r13
-# rotation commit (the full 9-entry round-12 queue — zipf_fit_report,
-# vocab_oov_report, ams_f2_report, bq_hamming_rerank,
-# waiting_suppliers_q21, langid_confusion_report, kn_bigram_logprob,
-# signal_agreement_report, source_divergence_report — was promoted into
-# GATE_WINDOW above); round-13 registrations append here as they land,
-# each sim-green at sf0.001 AND sf0.01 before registration. The
-# round-14 re-proof queue HEAD (r12 verdict item 4) is pii_scan and
-# pricing_summary — the two r5 greens displaced by the frozen-draft
-# rebalance — followed by the remaining r5 greens; see
-# _ROUND14_WINDOW_DRAFT below.
-PROMOTION_PLAN: list[str] = [
-    # The round-14 queue (kcenter_coreset, rp_tree_filtered_topk) was
-    # promoted into GATE_WINDOW at the r15 rotation above. The entries
-    # below are the ROUND-16 QUEUE HEAD: the nine r7 greens displaced
-    # from the frozen r15 draft when the r14 VERDICT item-2 rebalance
-    # gave their slots to the optimization-round rewrites. Each keeps
-    # its green CORRECTNESS_r07 external row (the standing claim, same
-    # as every prior rotation wave), and the shared snapshot /
-    # partition-commit primitives stay exercised in-window by
-    # ivm_view_follow + index_upsert_cells.
-    "dedup_mor_apply",
-    "event_transitions",
-    "events_deletion_vectors",
-    "events_jsonl_roundtrip",
-    "events_merge_clauses",
-    "events_merge_on_read",
-    "events_metadata_count",
-    "events_range_pruned_scan",
-    "events_retention_delete",
-]
 
-# Round-13 rotation draft (the r9→r12 discipline: committed at r12
-# close, EXECUTED at the round-13 start — GATE_WINDOW above is the
-# draft verbatim, after a 50/50 window re-sim). 20 permanents + the
-# 9-entry round-12 promotion queue + these 21 re-proofs: the r4
-# remainder (5) and the 16 OLDEST r5 greens by registry name
-# (deterministic pick from the CORRECTNESS history; knn_int8_rerank is
-# deliberately among them — its candidate frame was payload-slimmed in
-# r12 and a fresh external row re-proves the oracle on the new plan).
-# The displaced r5 greens (pii_scan, pricing_summary — pushed out when
-# the post-review wave took promotion slots 8-9) head the round-14
-# queue, followed by the remaining r5 greens (quality_score,
-# repetition_signals, repo_files_fixture, revenue_rollup,
-# rp_lsh_forest_topk, rp_lsh_topk, segment_running_totals,
-# sources_by_lang, temperature_mix, token_count, top_customers,
-# vocab_top50) — arithmetic fills the window at exactly 50.
-_ROUND13_REPROOF_WAVE = [
-    # --- r4 remainder (5) ---
-    "parts_never_ordered_bulk",
-    "quality_filter",
-    "source_mix",
-    "stratified_sample",
-    "substring_dup_pairs",
-    # --- oldest r5 greens (18) ---
-    "contamination_13gram",
-    "dedup_exact",
-    "distinct_counts_exact",
-    "doc_fingerprints",
-    "embedding_neardup_pairs",
-    "event_value_percentiles",
-    "events_asof_join",
-    "events_moving_avg",
-    "events_props_extract",
-    "events_tumbling_window",
-    "events_within_5min_pairs",
-    "ivf_topk_trained",
-    "knn_int8_rerank",
-    "langid_heuristic",
-    "neardup_dedup_keep",
-    "pack_sequences",
-    # pii_scan and pricing_summary moved to the round-14 queue head
-    # when signal_agreement_report / source_divergence_report took the
-    # 8th and 9th promotion slots (the frozen-draft rebalance rule
-    # below).
-]
-# FROZEN LITERAL (r12 review finding: computing the draft live from the
-# mutable PROMOTION_PLAN meant the first round-13 registration appended
-# to the plan would break an import-time length assert everywhere).
-# This literal is the commitment; if PROMOTION_PLAN grows after the r12
-# close, rebalance THIS list deliberately in the same commit (promote
-# the new entries, push the tail of the re-proof wave to round 14).
-_ROUND13_WINDOW_DRAFT = [
-    "zipf_fit_report",
-    "vocab_oov_report",
-    "ams_f2_report",
-    "bq_hamming_rerank",
-    "waiting_suppliers_q21",
-    "langid_confusion_report",
-    "kn_bigram_logprob",
-    "signal_agreement_report",
-    "source_divergence_report",
-    *_ROUND13_REPROOF_WAVE,
-]
-assert len(_ROUND13_WINDOW_DRAFT) == 30 and len(set(_ROUND13_WINDOW_DRAFT)) == 30, (
-    "r13 draft arithmetic: 9 promotions + 21 re-proofs must fill "
-    "slots 21-50 exactly"
-)
-
-# Round-14 rotation draft (frozen at the r13 rotation commit; EXECUTED
-# at the round-14 start after a 50/50 window re-sim — GATE_WINDOW above
-# is the draft verbatim). 20 permanents
-# + these 30 re-proofs: the full r5-green remainder (14, with pii_scan
-# and pricing_summary at the head per the r12 verdict item 4 — the two
-# rows displaced by the r13 frozen-draft rebalance) + the 16 OLDEST
-# r6 greens by registry name (deterministic pick from the CORRECTNESS
-# history; the other 14 r6 greens head the round-15 queue). REBALANCE
-# RULE (same as r13): a round-13 registration appended to
-# PROMOTION_PLAN takes a slot from the TAIL of the r6 wave below, in
-# the same commit, pushing the displaced name to the round-15 head.
-_ROUND14_WINDOW_DRAFT = [
-    # --- r5-green remainder head (r12 verdict item 4: slots 21-22) ---
-    "pii_scan",
-    "pricing_summary",
-    # --- round-13 promotion queue (2; rebalance rule applied: the r6
-    # wave tail hybrid_rrf_retrieval + index_import_reference moved to
-    # the round-15 head) ---
-    "rp_tree_forest_topk",
-    "semdedup_keep_scale",
-    # --- r5-green remainder (12) ---
-    "quality_score",
-    "repetition_signals",
-    "repo_files_fixture",
-    "revenue_rollup",
-    "rp_lsh_forest_topk",
-    "rp_lsh_topk",
-    "segment_running_totals",
-    "sources_by_lang",
-    "temperature_mix",
-    "token_count",
-    "top_customers",
-    "vocab_top50",
-    # --- oldest r6 greens (16 of 30, by registry name) ---
-    "abandoned_purchases",
-    "bm25_topk",
-    "cheapest_supplier_per_part",
-    "cogroup_purchase_view_asof",
-    "constraint_violations",
-    "curation_pipeline",
-    "daily_active_bitmap",
-    "dataset_split",
-    "event_funnel",
-    "events_dedup_collapse",
-    "events_gap_fill_locf",
-    "events_ohlc_hourly",
-    "events_partitioned_pruned",
-    "frame_neardup",
-    # hybrid_rrf_retrieval + index_import_reference -> round-15 head
-    # (displaced by the rp_tree_forest_topk / semdedup_keep_scale
-    # promotions)
-]
-assert len(_ROUND14_WINDOW_DRAFT) == 30 and len(set(_ROUND14_WINDOW_DRAFT)) == 30, (
-    "r14 draft arithmetic: promotions + re-proofs must fill slots "
-    "21-50 exactly"
-)
-
-# Round-15 rotation draft (frozen at the r14 rotation commit, executed
-# — after a 50/50 window re-sim — at the round-15 start). 20 permanents
-# + these 30 re-proofs: the 2-entry round-14 promotion queue, the full
-# r6-green remainder (16, headed by hybrid_rrf_retrieval +
-# index_import_reference — the two rows displaced from the r14 draft
-# by the rp_tree_forest_topk / semdedup_keep_scale promotions) and the
-# 12 OLDEST r7 greens by registry name (the other 17 r7 greens —
-# including the rebalance-displaced events_snapshot_cdc +
-# events_snapshot_optimize — head the round-16 queue).
-# REBALANCE RULE (same as r13/r14): a round-14 registration appended to
-# PROMOTION_PLAN takes a slot from the TAIL of the r7 wave below, in
-# the same commit, pushing the displaced name to the round-16 head.
-_ROUND15_WINDOW_DRAFT = [
-    # --- round-14 promotion queue (2; rebalance rule applied: the r7
-    # wave tail events_snapshot_cdc + events_snapshot_optimize moved
-    # to the round-16 head) ---
-    "kcenter_coreset",
-    "rp_tree_filtered_topk",
-    # --- r6-green remainder (16; displaced rebalance pair first) ---
-    "hybrid_rrf_retrieval",
-    "index_import_reference",
-    "ivfpq_topk",
-    "local_supplier_volume",
-    "media_frame_sample",
-    "paragraph_dedup_rebuild",
-    "part_copurchase_pagerank",
-    "part_name_entities",
-    "pq_knn_rerank",
-    "rolling_7d_actives",
-    "semdedup_keep",
-    "shipping_priority",
-    "source_quality_report",
-    "table_profile",
-    "token_spans_udtf",
-    "value_stats_salted",
-    # --- oldest r7 greens by registry name (14) ---
-    "boilerplate_grams",
-    "cohort_retention",
-    "contamination_bloom",
-    "dedup_mor_apply",
-    "event_transitions",
-    "events_deletion_vectors",
-    "events_jsonl_roundtrip",
-    "events_merge_clauses",
-    "events_merge_on_read",
-    "events_metadata_count",
-    "events_range_pruned_scan",
-    "events_retention_delete",
-    # events_snapshot_cdc + events_snapshot_optimize -> round-16 head
-    # (displaced by the kcenter_coreset / rp_tree_filtered_topk
-    # promotions)
-]
-assert len(_ROUND15_WINDOW_DRAFT) == 30 and len(set(_ROUND15_WINDOW_DRAFT)) == 30, (
-    "r15 draft arithmetic: promotions + re-proofs must fill slots "
-    "21-50 exactly"
-)
-# The r14-VERDICT item-2 rebalance applied to the frozen r15 draft at
-# the r15 rotation: the judge's explicit instruction ("promote the
-# optimization-round rewrites into the r15 gate window") takes the nine
-# tail slots of the r7 re-proof wave; the displaced names moved to the
-# round-16 queue head (PROMOTION_PLAN above). This literal records the
-# substitution for the audit trail.
-_ROUND15_ITEM2_REWRITE_ROWS = [
-    "copurchase_triangles",
-    "cm_join_size_report",
-    "bpe_learned_merges",
-    "ann_recall_report",
-    "ann_rank_metrics_report",
-    "dsir_logratio_weights",
-    "index_upsert_cells",
-    "ivm_view_follow",
-    "lsh_band_sweep_report",
-]
-assert set(PROMOTION_PLAN) == (
-    set(_ROUND15_WINDOW_DRAFT) - set(GATE_WINDOW)
-), (
-    "every draft name displaced by the item-2 rebalance must head the "
-    "round-16 queue"
-)
-
-# Historical record of the round-11 promotion queue (promoted IN FULL
-# into the r12 window above, in this order; kept for the judge's audit
-# trail — the per-entry rationales below were written when the queue
-# was drafted during round 11).
-_ROUND11_PLAN_PROMOTED = [
-    # NEW in round 11: the documented 100 TB exit for the exact NTILE
-    # gate — deterministic key-sampled cut points broadcast onto a
-    # map-side bucket assign, zero WindowExec (plan-pinned); executes
-    # SCALE.md's order_price_deciles scale note as a gated twin.
-    "order_price_deciles_scale",
-    # NEW in round 11: group-aware k-fold assignment — the
-    # cross-validation sibling of leakage_safe_split (fold drawn from
-    # the near-dup component key, uniform because DRAW_MOD % K == 0);
-    # rides the phase-built component frame.
-    "kfold_group_assign",
-    # NEW in round 11: top-50 adjacent-pair collocations by integer
-    # micro-nat PMI (the ccnet floor(ln·1e6) precedent) — phrase-vocab
-    # candidates / boilerplate saturation signal; two gram aggregates +
-    # token-keyed joins + TakeOrderedAndProject, no windows.
-    "pmi_bigrams_top",
-    # NEW in round 11: unigram-distribution drift between snapshot
-    # versions 0 and 2 of the lifecycle fixture — shared-support KL
-    # numerator in micro-nats + vocabulary churn masses; the
-    # "retrain the tokenizer?" signal. Phase-built on the shared
-    # wordfreq snapshot lifecycle.
-    "corpus_kl_drift_report",
-    # NEW in round 11: per-shard packing-efficiency card over the gated
-    # pack frame — overflow/underfill vs the token budget + micro-unit
-    # fill ratio; the budget-retuning signal for the packing pass.
-    "packing_efficiency_report",
-    # NEW in round 11: near-dup cluster-size histogram — the band-
-    # setting health card (a spike of huge components = boilerplate
-    # bridged unrelated docs); rides the phase-built component frame,
-    # singleton row derived from the corpus total.
-    "neardup_cluster_histogram",
-    # NEW in round 11: exact per-source token-length percentiles
-    # (p50/p90/p99/max under a total order, keyed windows) — the
-    # packing-budget tuning card.
-    "doc_length_percentiles",
-    # NEW in round 11: the (bands × rows) sweep card — the same 16-perm
-    # signature re-banded at (4,4)/(8,2)/(2,8) with hot-bucket caps,
-    # candidates scored against exact Jaccard, s-curve midpoints as
-    # shared literals; how a pipeline picks band settings before a
-    # 100 TB dedup run.
-    "lsh_band_sweep_report",
-    # NEW in round 11: Broder containment over the LSH candidates — the
-    # excerpt/quote detector symmetric Jaccard misses (c(A→B) ≥ 0.8 in
-    # integer micro-units, Jaccard alongside).
-    "containment_pairs",
-    # NEW in round 11: the one-row dataset datasheet (size, breadth,
-    # exact-dup rate, empty docs, mean tokens/doc) — a pure composition
-    # of gated member semantics.
-    "corpus_datasheet",
-    # NEW in round 11: curriculum phase assignment — quality-dropped
-    # docs phase 0, kept docs in 4 length quartiles via the same
-    # no-global-sort sampled-cutpoint machinery as the deciles twin.
-    "curriculum_phase_assign",
-]
-
-_ROUND12_REPROOF_HEAD = [
-    "knn_exact_numpy",
-    "knn_overfetch_2k",
-    "cosine_topk",
-    "dim_validation",
-    "minhash_lsh_pairs",
-    "simhash_neardup_pairs",
-]
-
-# Round-12 rotation draft (the r9→r11 discipline: committed at r11
-# close, EXECUTED above at the round-12 start after a 50/50 window
-# re-sim — GATE_WINDOW is the draft verbatim). 20 permanents + the
-# 11-entry round-11 promotion queue (_ROUND11_PLAN_PROMOTED) + the 4
-# converted approx gates + the 6-entry committed re-proof head
-# (_ROUND12_REPROOF_HEAD) + these 9 next-oldest greens.
-# parts_never_ordered_bulk / quality_filter / source_mix /
-# stratified_sample / substring_dup_pairs (r4) head the round-13
-# re-proof queue.
-_ROUND12_APPROX_CONVERTS = [
-    "distinct_counts_approx",
-    "event_value_percentiles_approx",
-    "weekly_hll_rollup",
-    "ivf_topk_trained_live",
-]
-_ROUND12_OLDEST_GREEN_REPROOFS = [
-    "filter_folder",        # r3
-    "filter_extension",     # r3
-    "filter_exclude",       # r3
-    "knn_exact_batched",    # r3
-    "ngram_jaccard_pairs",  # r3
-    "customers_with_big_orders",  # r4
-    "ivf_topk",             # r4
-    "media_featurize",      # r4
-    "part_bulk_outer",      # r4
-]
-
-# Historical record of the round-10 promotion queue (promoted IN FULL
-# into the r11 window above, in this order; kept for the judge's audit
-# trail — the per-entry rationales below were written when the queue
-# was drafted during round 10).
-_ROUND10_PLAN_PROMOTED = [
-    # NEW in round 10: DSIR hashed-ngram importance resampling
-    # (queries/dataselect.py) — the canonical pretraining data-selection
-    # method; weights artifact, the hard top-k selection, and the
-    # paper's Gumbel-top-k softmax resampling (md5-derived deterministic
-    # noise).
-    "dsir_logratio_weights",
-    "dsir_topk_selection",
-    "dsir_gumbel_resample",
-    # ... and the model's O(changed files) CDC maintenance over the
-    # shared snapshot lifecycle fixture (wordfreq_cdc_dict discipline).
-    "dsir_cdc_model",
-    # NEW in round 10: classifier reliability card (margin-binned
-    # accuracy, integer micro-units) — evaluation-as-data for the NB
-    # filter the curation pipeline composes.
-    "nb_calibration_report",
-    # NEW in round 10: the CCNet head/middle/tail perplexity split
-    # (integer-exact rank thirds under the corpus unigram LM) and the
-    # distinct-n corpus diversity card.
-    "ccnet_perplexity_buckets",
-    "ngram_diversity_report",
-    # NEW in round 10 (late wave): position-quality companion to
-    # ann_recall_report — MRR + NDCG@10 vs the exact kNN in pure
-    # integer micro-units (hardcoded discount table shared with the
-    # oracle; zero-hit queries stay in the denominator).
-    "ann_rank_metrics_report",
-    # NEW in round 10 (late wave): Misra-Gries heavy hitters — the
-    # deterministic-guarantee frequent-items sketch (mergeable
-    # summaries; map-only Arrow-batched state, candidate-set-only
-    # exact verification). The guarantees are theorems, emitted as
-    # booleans the oracle pins as TRUE.
-    "heavy_hitters_mg",
-    # NEW in round 10 (late wave): JL ±1 random projection with a
-    # seed-derived (never stored) matrix — the 4×-bandwidth shortcut
-    # scan and its JL-lemma distortion histogram as data.
-    "jl_project_topk",
-    "jl_distortion_report",
-    # NEW in round 10 (late wave): the tokenizer-evaluation fertility
-    # card (chars-per-token by language under the learned merges) and
-    # the data-constrained-scaling repetition schedule (≤4 epochs per
-    # source + fractional first-fit pass + budget residual).
-    "bpe_fertility_by_lang",
-    "epoch_schedule_mix",
-    # NEW in round 10 (late wave): the second standard subword family —
-    # unigram-LM (SentencePiece-style) with pure-integer quantized
-    # costs; the encode gate is a differential-algorithm oracle
-    # (Spark Viterbi DP vs DuckDB exhaustive recursive-CTE enumeration,
-    # the neardup_components precedent).
-    "unigram_piece_vocab",
-    "unigram_viterbi_encode",
-    # NEW in round 10 (late wave): the overestimating sketch dual —
-    # Count-Min over the shared md5 grid; both engines rebuild the
-    # identical D×W sketch, so the gate value-hashes the ESTIMATES
-    # themselves (W deliberately small to force collisions).
-    "countmin_word_counts",
-    # NEW in round 10 (late wave): deterministic topic-balanced
-    # selection — equal md5-drawn members per trained k-means cluster
-    # (the SemDeDup-family diversity sampler).
-    "cluster_balanced_sample",
-    # NEW in round 10 (late wave): per-label purity@10 of the exact
-    # kNN — the embedding-space semantic-coherence card.
-    "knn_label_purity_report",
-    # NEW in round 10 (late wave): rendezvous-hash data placement —
-    # the consistent-hashing minimal-movement guarantee (8→9 shards:
-    # ~1/9 moved vs mod-hash's ~8/9) as a value-hashed card.
-    "hrw_reshard_report",
-    # NEW in round 10 (late wave): the Q8 national-market-share shape
-    # (exact decimal cents, integer micro-unit share — with the
-    # explicit floor() both engines need before the cents cast) and
-    # candidate-FD discovery (one aggregate per candidate pair).
-    "nation_market_share_q8",
-    "functional_dependency_report",
-    # NEW in round 10 (late wave): the CBO-facing sketch pair — CM
-    # inner-product join-cardinality bounds and KMV distinct counts
-    # (both exactly engine-reproducible over the shared md5, so the
-    # ESTIMATES value-hash, not just error envelopes).
-    "cm_join_size_report",
-    "kmv_distinct_report",
-    # ... and the mergeable-KMV payoff: union/intersection cardinality
-    # from two merged sketches at O(k) state.
-    "kmv_set_ops_report",
-]
-
-# Round-11 rotation draft (the r9→r10 discipline: committed at round
-# close, executed — after a 50/50 window re-sim — at the round-11
-# start). EXECUTED above: GATE_WINDOW is the draft verbatim (20
-# permanents + the full 24-entry r10 queue in plan order + this
-# 6-entry "oldest green re-proof" wave). Kept for the audit trail.
-_ROUND11_REPROOF_WAVE = [
-    "candidates_fixture",        # r1
-    "rp_lsh_multiprobe_topk",    # r1 (re-registered for the re-proof)
-    "event_sessions",            # r2
-    "events_sliding_window",     # r2
-    "minhash_signatures",        # r2
-    "simhash_fingerprints",      # r2
-]
-
-# Historical record of the round-9 plan (promoted IN FULL into the r10
-# window above; kept for the judge's audit trail — the per-entry
-# rationales below were written when the queue was drafted at r9 close).
-_ROUND9_PLAN_PROMOTED = [
-    # NEW in round 9 (registered after the r9 window froze): the M6 mock
-    # gate — context_assembly's SQL nested verbatim, the provider's
-    # deterministic answer re-derived from the context length; closes
-    # the last §2 test-only row's MOCK semantics (the SSE stream parse
-    # stays pytest-pinned out of the data plane by SURVEY design).
-    "answer_synthesize_mock",
-    # NEW in round 9: evaluation-as-data — recall@10 of three ANN
-    # ladder members vs the exact kNN as one integer-micro-unit report,
-    # the oracle nesting the members' own oracles verbatim.
-    "ann_recall_report",
-    # NEW in round 9: the dedup and tokenizer members of the same
-    # evaluation-as-data family — exact-Jaccard decile histogram of the
-    # LSH candidates (integer-domain deciles), and the corpus
-    # chars-per-token curve at 0/half/all learned merges (totals read
-    # from the trainer oracle's own unrolled states).
-    "lsh_precision_report",
-    "bpe_compression_report",
-    # NEW in round 9: version-over-version per-source corpus drift
-    # folded from the signed CDC delta alone (O(changed files), never a
-    # rescan) — the per-commit drift card, on the wordfreq lifecycle
-    # fixture including its DV-only commit.
-    "corpus_drift_cdc_report",
-    # NEW in round 9: the vector-modality drift member — per-IVF-cell
-    # count deltas folded from the embedding snapshot's CDC delta, on
-    # the MERGE-negate lifecycle (real cross-cell movement).
-    "embedding_drift_cdc_report",
-    # tier 2 — last remaining distinct-machinery row (correlated scalar
-    # subquery / Catalyst decorrelation)
-    "above_nation_avg_customers",
-    # tier 3 — relational/format variants (cores gated r5-r6)
-    "order_price_deciles", "segment_status_pivot",
-    "customer_balance_ranks", "flag_status_grouping_sets",
-    "daily_signup_purchase", "forecast_revenue_q6", "flag_status_cube",
-    "events_props_variant", "order_count_distribution",
-    "important_parts_q11", "top_revenue_supplier", "big_quantity_orders",
-    "sole_returning_supplier", "events_weekly_drift",
-    "events_csv_roundtrip", "events_schema_merge", "token_count_pandas",
-    "events_session_window_builtin", "flag_metrics_unpivot",
-    "token_count_arrow", "promo_revenue_disjunctive",
-    "part_name_entities_recursive", "events_xml_parse",
-]
-
-# Historical record of the round-7 plan head that was promoted into the
-# r8 window (kept for the judge's audit trail; see GATE_WINDOW above).
-_ROUND7_PLAN_PROMOTED = [
-    # NEW in round 7 (registered after the r7 window froze): persisted
-    # band-signature store probe — incremental near-dup of a new batch
-    # against the full history without recomputing it. Gates the
-    # sources/band_store.py machinery; first in line for the r8 window.
-    "incremental_neardup",
-    # NEW in round 7: distributed BPE tokenizer training (operators/
-    # bpe.py) — trainer value-hash-gated against an UNROLLED iterative
-    # DuckDB oracle (the pagerank precedent), plus the pair-count anchor
-    # and the encoder over the learned merges.
-    "bpe_learned_merges",
-    "bpe_pair_counts",
-    "bpe_encode_sample",
-    # NEW in round 7: exact fixed-point distributed KMeans (operators/
-    # clustering.py) — Lloyd's value-hash-gated against an unrolled
-    # iterative oracle; upgrades the rows-only float live-IVF story.
-    "kmeans_centroids",
-    "kmeans_cluster_profile",
-    "cluster_representatives",
-    # NEW in round 7: persisted inverted index (sources/inverted_index.py)
-    # — 3-wave incremental build gated via the postings roundtrip; the
-    # persisted BM25 shares the batch gate's oracle bit-for-bit.
-    "inverted_postings_waves",
-    "bm25_topk_persisted",
-    # NEW in round 7: learned multinomial NB classifier (train = pure
-    # aggregation; scoring = integer micro-unit log-probs, immune to
-    # float summation order at any parallelism).
-    "nb_train_logprobs",
-    "nb_classify_docs",
-    # NEW in round 7: index follows a mutating snapshot table through
-    # its CDC feed (inserts append versioned postings; deletes/updates
-    # tombstone merge-on-read); BM25 must equal the from-scratch oracle
-    # over the final logical state.
-    "bm25_cdc_synced_index",
-    "bm25_cdc_compacted_index",
-    # NEW in round 7: online mini-batch KMeans over ingest waves
-    # (streaming/kmeans_stream.py) — sequential fold gated against an
-    # unrolled oracle.
-    "kmeans_online_centroids",
-    # NEW in round 7: trainer ∘ encoder ∘ packer composition — corpus
-    # tokenized with the LEARNED merges (vocabulary encoded once, per-doc
-    # totals via equi-join), packed into token-budget bins.
-    "bpe_pack_tokens",
-    # NEW in round 7: multi-source BFS hop counts over the co-purchase
-    # graph (second iterative graph member; unrolled-frontier oracle,
-    # pagerank-style size-guarded join strategy).
-    "copurchase_bfs_hops",
-    # NEW in round 7: per-node triangle counts — degree-ordered
-    # orientation, edge-iterator + sorted-adjacency intersection plan
-    # (the wedge self-join the oracle spells measured 8x slower).
-    "copurchase_triangles",
-    # NEW in round 7: incremental JOIN-view maintenance — a materialized
-    # orders ⋈ customer rollup follows BOTH snapshot logs via signed
-    # file-diff deltas (snap_file_deltas); never re-joins A2 ⋈ B2.
-    "incremental_join_cdc",
-    # NEW in round 7: the streaming-shaped twin — the same final state
-    # reached through SEQUENTIAL version-fenced ivm_refresh calls
-    # (streaming/ivm_stream.py), pinning refresh composition.
-    "ivm_view_follow",
-    # NEW in round 7: flagship end-to-end composition — curation funnel
-    # survivors train the BPE tokenizer, then tokenize + pack those
-    # survivors; four families re-proven under composition.
-    "curated_pack_tokens",
-    # NEW in round 7: deterministic synchronous label propagation
-    # (community detection, graph member #5) — neighbor-mode update
-    # with exact tie-breaks, unrolled 2-round oracle.
-    "copurchase_label_prop",
-    # NEW in round 7: ORC round-trip (fourth interchange format — the
-    # columnar sibling of the JSONL/CSV gates).
-    "events_orc_roundtrip",
-    # NEW in round 7: bin-packing small-file compaction (plain OPTIMIZE)
-    # over the streaming-residue table shape — rewrites only the small
-    # files, materializes their DV entries, empty change feed.
-    "events_compact_small_files",
-    # NEW in round 7: ordered conversion funnel (first-touch chaining,
-    # 24h per-stage window) — nested-window plan vs join-chain oracle.
-    "funnel_conversion",
-    # NEW in round 7: greedy MMR diversified top-k — the unrolled-oracle
-    # discipline applied to GREEDY SELECTION; each step one map-only
-    # corpus scan with literal selected vectors (kmeans kernel).
-    "mmr_diversified_topk",
-    # NEW in round 7: exact phrase search by positional adjacency
-    # (quoted-query operator; persisted positional-postings exit noted).
-    "phrase_match_docs",
-    # NEW in round 7: the production form — phrase served from the
-    # persisted POSITIONAL postings (shard-pruned 2-term scan +
-    # map-side positions intersect; tombstone-aware).
-    "phrase_match_persisted",
-    # NEW in round 7: the band store follows a MUTATING snapshot corpus
-    # through its CDC feed (re-signed updates, merge-on-read tombstones,
-    # ver-axis reinserts) — the dedup ∘ lakehouse composition.
-    "incremental_neardup_cdc",
-    # NEW in round 7: the persisted ANN cell index follows the vector
-    # snapshot's CDC feed (upsert with cell moves, O(touched cells)
-    # row-level delete) — completes the CDC trio.
-    "ivf_topk_cdc_synced",
-]
-
+# Entries that duplicate coverage carried by an earlier entry (or are
+# fixture parity checks whose consumers are themselves gated) go to the
+# end of queries(), where falling off the gate cap loses no operator
+# coverage. Each keeps a one-line reason; window names listed here stay
+# in the window.
 _OVERFLOW_TAIL = [
     "candidates_fixture",      # synthesis parity; rerank/retrieval gates consume it
     "distinct_counts_approx",  # rows-only HLL twin; exact twin carries the oracle
@@ -1130,24 +126,17 @@ _OVERFLOW_TAIL = [
     "knn_exact_batched",
     "dim_validation",
     "cosine_topk",
-    # round-5 demotions (rationale above)
-    "customers_with_big_orders",
-    "parts_never_ordered_bulk",
-    "part_bulk_outer",
-    "media_featurize",
-    "stratified_sample",
-    "source_mix",
-    "substring_dup_pairs",
-    "quality_filter",
-    "ivf_topk",
+    # round-5 demotions
+    "media_featurize",      # Arrow map plumbing re-proven by embedding_neardup_pairs
+    "stratified_sample",    # md5-threshold draw re-proven by temperature_mix
+    "source_mix",           # same draw core as stratified_sample
+    "substring_dup_pairs",  # bucket equi-join re-proven by events_within_5min_pairs
+    "quality_filter",       # threshold predicate over quality_score's signals
+    "ivf_topk",             # static-centroid IVF, superseded by ivf_topk_trained
     # live-trained IVF twin of the frozen-centroid in-window gate: rows-only
     # by design (distributed-mean float association), recall pinned in
     # tests/test_ann_recall.py
     "ivf_topk_trained_live",
-    # sketch twin of event_value_percentiles: rows-only by design (Spark
-    # GK sketch vs DuckDB t-digest can't hash-match); error bound pinned
-    # in tests/test_ann_recall.py
-    "event_value_percentiles_approx",
     # new in round 5 (oracle-checked locally by test_sampling.py); rotate
     # into the gated window next round — md5-draw machinery meanwhile
     # re-proven in-window by temperature_mix
@@ -1168,17 +157,9 @@ _OVERFLOW_TAIL = [
     # locally by test_ann_recall.py); rotate next round — the only
     # array-AGGREGATION gate (posexplode + exact integer mean)
     "label_centroids",
-    # new in round 5: TPC-H Q3-shaped 3-way join (segment top-10 unshipped
-    # revenue); rotate next round — join+agg+top-n machinery re-proven
-    # in-window by top_customers
-    "shipping_priority",
-    # new in round 5: TPC-H Q5-shaped 6-way star join (region-local
-    # supplier revenue); rotate next round — broadcast-dim machinery
-    # re-proven in-window by top_customers/pricing_summary
-    "local_supplier_volume",
-    # new in round 5: 3-stage strict-order funnel (signup→view→purchase);
-    # rotate next round — conditional-MIN aggregate machinery re-proven
-    # in-window by event_value_percentiles' grouped aggregates
+    # new in round 5: 3-stage strict-order funnel (signup→view→purchase,
+    # conditional-MIN aggregates); oracle-checked locally by
+    # test_oracle_harness
     "event_funnel",
     # new in round 5: fixed-width per-type value histogram (exact integer
     # bins, decimal-routed sums); rotate next round — groupBy machinery
@@ -1216,25 +197,6 @@ _OVERFLOW_TAIL = [
     # shortlist + exact re-rank); rotate next round — completes the
     # exact→int8→PQ compression ladder, int8 twin in-window
     "pq_knn_rerank",
-    # new in round 5: NTILE decile stats under a total order; rotate next
-    # round — window machinery re-proven in-window by
-    # segment_running_totals
-    "order_price_deciles",
-    # new in round 5: explicit-values pivot (wide conditional agg);
-    # rotate next round — agg machinery re-proven in-window by
-    # pricing_summary
-    "segment_status_pivot",
-    # new in round 5: percent_rank/cume_dist under a total order; rotate
-    # next round — window machinery re-proven in-window by
-    # segment_running_totals
-    "customer_balance_ranks",
-    # new in round 5: GROUPING SETS + grouping_id (one Expand pass);
-    # rotate next round — revenue_rollup gates the Expand machinery
-    "flag_status_grouping_sets",
-    # new in round 5: FULL OUTER join (the one join type previously
-    # ungated); rotate next round — outer-join machinery re-proven
-    # in-window by part_bulk_outer's consumers
-    "daily_signup_purchase",
     # round-5 wave 3 (all oracle-checked locally by test_oracle_harness;
     # rotate next round):
     # hypertable-style dense rollup + LOCF — spine/window machinery
@@ -1249,8 +211,8 @@ _OVERFLOW_TAIL = [
     # per-type z-score outliers from exact decimal moments — broadcast
     # stats join re-proven in-window by temperature_mix's rate join
     "value_zscore_outliers",
-    # INTERSECT/EXCEPT cohort algebra — semi/anti-join machinery re-proven
-    # in-window by parts_never_ordered_bulk's consumers
+    # INTERSECT/EXCEPT cohort algebra — anti-join machinery also exercised
+    # by abandoned_purchases' NOT EXISTS
     "engaged_clean_users",
     # A-Res weighted sampling (priority = -ln(u)/w) — md5-draw + top-N
     # machinery re-proven in-window by temperature_mix + vocab_top50
@@ -1258,12 +220,6 @@ _OVERFLOW_TAIL = [
     # per-doc token-distribution entropy — explode+agg machinery re-proven
     # in-window by quality_score/repetition_signals
     "word_entropy",
-    # correlated scalar subquery (Catalyst decorrelation) — agg+broadcast
-    # join machinery re-proven in-window by top_customers
-    "above_nation_avg_customers",
-    # argmin-per-group via lexicographic struct MIN (single-pass, built-in
-    # tie-break) — agg machinery re-proven in-window by pricing_summary
-    "cheapest_supplier_per_part",
     # 1→N Arrow mapInPandas frame sampling (fake demuxer) — Arrow-stage
     # machinery re-proven in-window by mock_embed_documents
     "media_frame_sample",
@@ -1278,12 +234,6 @@ _OVERFLOW_TAIL = [
     # perplexity-filter family) — explode+agg machinery re-proven
     # in-window by quality_score
     "unigram_logprob",
-    # TPC-H Q6 pure scan+filter+agg (pushdown showcase) — predicate
-    # machinery re-proven in-window by pricing_summary's filters
-    "forecast_revenue_q6",
-    # CUBE completes ROLLUP/GROUPING SETS — Expand machinery re-proven
-    # in-window by revenue_rollup
-    "flag_status_cube",
     # end-to-end curation funnel COMPOSING the registered quality/dedup/
     # decontam/split operators (oracle nests their SQL twins verbatim) —
     # every constituent stage is itself gated
@@ -1305,15 +255,15 @@ _OVERFLOW_TAIL = [
     # ingest_stats
     "table_profile",
     # equi-depth quartile histogram (exact cutpoints broadcast + CASE
-    # binning) — percentile machinery re-proven in-window by
-    # event_value_percentiles
+    # binning) — percentile machinery also exercised by
+    # doc_length_percentiles
     "value_equidepth_histogram",
     # robust median/MAD outliers (modified z-score > 3.5) — broadcast
     # stats join re-proven in-window by value_zscore_outliers' consumers
     "mad_outliers",
     # round-5 wave 4 (temporal family): single-pass OHLC bars via
-    # lexicographic struct MIN/MAX — argmin machinery re-proven in-window
-    # by event_value_percentiles' grouped aggregates
+    # lexicographic struct MIN/MAX; oracle-checked locally by
+    # test_oracle_harness
     "events_ohlc_hourly",
     # changelog -> SCD2 validity intervals (LEAD + sentinel close) —
     # window machinery re-proven in-window by events_moving_avg
@@ -1336,14 +286,6 @@ _OVERFLOW_TAIL = [
     # first-occurrence rank re-proven in-window by dedup_exact; ordered
     # rebuild by context_assembly's sorted collects
     "paragraph_dedup_rebuild",
-    # TPC-H Q13 shape (distribution of per-customer counts, zero-preserving
-    # left join) — outer-join machinery re-proven in-window by
-    # retrieval_rank_reference's left joins
-    "order_count_distribution",
-    # TPC-H Q11 shape (HAVING vs fraction-of-global-total, exact decimal
-    # through the comparison) — scalar-broadcast machinery re-proven
-    # in-window by temperature_mix
-    "important_parts_q11",
     # hive-partitioned sink + partition-pruned read round-trip — sink
     # round-trip machinery re-proven in-window by index_roundtrip; pruning
     # physically pinned by tests/test_partition_pruning.py
@@ -1358,25 +300,10 @@ _OVERFLOW_TAIL = [
     # Datasketches HLL rollup (rows-only by design: sketches are
     # engine-specific; error bound pinned by tests/test_sketch_bounds.py)
     "weekly_hll_rollup",
-    # Pearson corr + OLS from exact decimal moments — moment machinery
-    # re-proven in-window by value_zscore_outliers' consumers
-    "quantity_price_corr",
     # fixed-point integer PageRank (3 unrolled iterations, value-hash
     # oracle over an ITERATIVE algorithm) — iterative machinery re-proven
     # in-window by neardup_components
     "part_copurchase_pagerank",
-    # TPC-H Q15 shape (max-of-aggregate with ties preserved, exact decimal
-    # equality) — scalar-broadcast machinery re-proven in-window by
-    # temperature_mix
-    "top_revenue_supplier",
-    # TPC-H Q18 shape (semi-join on an aggregated HAVING subquery,
-    # co-partitioned) — join+agg machinery re-proven in-window by
-    # top_customers
-    "big_quantity_orders",
-    # TPC-H Q21 shape (EXISTS/NOT EXISTS chain, decorrelated into
-    # aggregates; oracle keeps the correlated form) — agg machinery
-    # re-proven in-window by event_value_percentiles
-    "sole_returning_supplier",
     # JSONL sink/source round-trip at full microsecond precision (the
     # gate caught the default format's millis truncation) — round-trip
     # machinery re-proven in-window by index_roundtrip
@@ -1408,10 +335,6 @@ _OVERFLOW_TAIL = [
     # family member; shared oracle) — session semantics re-proven
     # in-window by sessionize_stateful
     "events_session_window_builtin",
-    # built-in unpivot (wide->long; completes the reshaping pair with
-    # segment_status_pivot) — agg machinery re-proven in-window by
-    # pricing_summary
-    "flag_metrics_unpivot",
     # mapInArrow surface (raw RecordBatch + pyarrow.compute — third
     # Python tier next to pandas_udf and JVM exprs, one oracle family) —
     # token semantics re-proven in-window by token_count
@@ -1429,10 +352,6 @@ _OVERFLOW_TAIL = [
     # fixture-calibrated tau documented in-module) — cell machinery
     # re-proven in-window by ivf_topk_trained
     "semdedup_keep",
-    # TPC-H Q19 shape (OR-of-conjunctions join predicate; per-side
-    # disjunctive pushdown visible in PushedFilters) — predicate
-    # machinery re-proven in-window by pricing_summary
-    "promo_revenue_disjunctive",
     # Spark 4 WITH RECURSIVE surface (depth-bounded UNION ALL closure vs
     # DuckDB's fixed-point UNION oracle) — closure semantics re-proven
     # in-window by neardup_components
@@ -1446,8 +365,7 @@ _OVERFLOW_TAIL = [
 
 def _reorder() -> None:
     """Iteration order = GATE_WINDOW, then ungated entries (registration
-    order), then the historical _OVERFLOW_TAIL (its per-entry demotion
-    rationales remain the record of WHY each left the window)."""
+    order), then _OVERFLOW_TAIL."""
     window = set(GATE_WINDOW)
     assert len(GATE_WINDOW) == 50, f"gate window is {len(GATE_WINDOW)}, not 50"
     assert len(window) == 50, "duplicate names in GATE_WINDOW"
@@ -1471,21 +389,4 @@ def _reorder() -> None:
 
 _reorder()
 
-__all__ = ["SPARK_QUERIES", "ORACLE_SQL", "GATE_WINDOW", "PROMOTION_PLAN"]
-
-# The ROUND-15 WINDOW is the frozen _ROUND15_WINDOW_DRAFT with the
-# r14-VERDICT item-2 rebalance applied: the draft's 21 head slots
-# execute verbatim (2 promotions + 16 r6-green remainder + the 3 oldest
-# r7 greens), and the remaining 9 r7-wave slots carry the
-# optimization-rewrite rows the verdict ordered external coverage for
-# (_ROUND15_ITEM2_REWRITE_ROWS); the displaced r7 names head the
-# round-16 queue. Every registered query still holds an external
-# CORRECTNESS row or sits in the current window. The full r14 window
-# that rotated out is recorded in _ROUND14_WINDOW_DRAFT above (all 30
-# rows green in CORRECTNESS_r14.json, zero err).
-assert GATE_WINDOW[20:] == (
-    _ROUND15_WINDOW_DRAFT[:21] + _ROUND15_ITEM2_REWRITE_ROWS
-), (
-    "the r15 window must be the frozen draft head + the item-2 "
-    "rewrite rows"
-)
+__all__ = ["SPARK_QUERIES", "ORACLE_SQL", "GATE_WINDOW"]

@@ -193,8 +193,8 @@ def table_profile(spark, sf_dir):
 # -------------------------------------------- value_equidepth_histogram
 # Equi-depth (quantile-binned) histogram: exact quartile cutpoints, then
 # CASE-binning — the profiling complement of value_histogram's fixed-width
-# bins and order_price_deciles' NTILE (cutpoints are REUSABLE constants
-# here, where NTILE re-sorts every run).
+# bins and of an NTILE (cutpoints are REUSABLE constants here, where
+# NTILE re-sorts every run).
 
 _EQUIDEPTH_SQL = """
 WITH q AS (

@@ -409,9 +409,9 @@ _rpb("signal_agreement_report", _weights_builder)
 # low rho tells the pipeline the signals select DIFFERENT corpora and
 # compose (the DSIR paper's motivation); a high rho says one is
 # redundant. The exact global ranks are the correctness anchor (the
-# order_price_deciles posture — the frame is (doc_id, 2 scalars),
-# narrow); at 100 TB ranks come from the sampled-cutpoint bucketing
-# (order_price_deciles_scale machinery) and rho from bucket midpoints.
+# frame is (doc_id, 2 scalars), narrow); at 100 TB ranks come from a
+# sampled-cutpoint bucketing (the curriculum_phase_assign machinery)
+# and rho from bucket midpoints.
 _AGREE_TOP = 200
 
 

@@ -1,5 +1,5 @@
 """Rerank + remaining small-operator correctness queries (SURVEY §2.4 J2,
-§2.5 O4, §2.2 P7, §2.7 U1, plus semi/anti-join coverage).
+§2.5 O4, §2.2 P7, §2.7 U1).
 """
 
 from __future__ import annotations
@@ -146,54 +146,6 @@ def supported_extensions_union(spark, sf_dir):
             ),
             "|",
         ).alias("all_extensions"),
-    )
-
-
-# -------------------------------------------------- semi / anti join coverage
-_SEMI_SQL = """
-SELECT c.c_custkey, c.c_name
-FROM customer c
-WHERE EXISTS (
-    SELECT 1 FROM orders o
-    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000
-)
-"""
-
-
-@register("customers_with_big_orders", sql=_SEMI_SQL)
-def customers_with_big_orders(spark, sf_dir):
-    """LEFT SEMI join (EXISTS) — plan: shuffle-hash semi on c_custkey, no
-    row duplication, right side reduced before the join by the pushed
-    o_totalprice filter. (Threshold at ~p90 of o_totalprice so the gate
-    actually discriminates.)"""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 450000)
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name"
-    )
-
-
-_ANTI_SQL = """
-SELECT p.p_partkey, p.p_name
-FROM part p
-WHERE NOT EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_partkey = p.p_partkey AND l.l_quantity > 45
-)
-"""
-
-
-@register("parts_never_ordered_bulk", sql=_ANTI_SQL)
-def parts_never_ordered_bulk(spark, sf_dir):
-    """LEFT ANTI join (NOT EXISTS) — the relational form of the reference's
-    exclude-pattern semantics (F4, SURVEY §2.4 note). Every part appears in
-    some lineitem in this corpus, so the anti-join keys on bulk orders
-    (l_quantity > 45): ~114 qualifying parts at sf0.01 — a non-degenerate
-    gate."""
-    p = load_table(spark, sf_dir, "part")
-    l = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 45)
-    return p.join(l, p.p_partkey == l.l_partkey, "left_anti").select(
-        "p_partkey", "p_name"
     )
 
 

@@ -846,7 +846,7 @@ def semdedup_keep(spark, sf_dir):
 # OCC x 2^{MAXD} = 262k vectors (the 100x probe size); past that the
 # unroll bound grows with log2(n) — a constant edit, documented here.
 # At 100 TB the first O(log partitions) levels come from sampled
-# cut-points (order_price_deciles_scale machinery) instead of exact
+# cut-points (the curriculum_phase_assign machinery) instead of exact
 # global ranks; semantics identical, leaf occupancy still capped.
 _SDS_OCC = 64
 _SDS_MAXD = 12

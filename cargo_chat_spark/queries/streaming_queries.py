@@ -376,7 +376,7 @@ def events_props_extract(spark, sf_dir):
 
 # ------------------------------------------------------ moving-window average
 # Bounded sliding frame (last 4 events per user by time) — the windowed
-# complement of segment_running_totals' unbounded cumulative frame. The
+# complement of an unbounded cumulative frame. The
 # frame sum routes through DECIMAL(18,6): a 4-row double sum is
 # order-sensitive in the 17th digit, and the two engines may accumulate the
 # frame in different orders; decimal addition is exact and associative, so

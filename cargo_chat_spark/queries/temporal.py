@@ -9,8 +9,8 @@ with the remaining canonical temporal shapes.
 Scale posture:
 
 - ``events_ohlc_hourly``: ONE map-side-combinable aggregate — open/close
-  are lexicographic struct MIN/MAX (the arg-min trick from
-  cheapest_supplier_per_part applied to time), so no window, no
+  are lexicographic struct MIN/MAX (the struct arg-min trick applied
+  to time), so no window, no
   self-join, no second pass. The canonical continuous-aggregate /
   hypertable rollup: at 100 TB this is exactly the incremental rollup
   maintained per partition.

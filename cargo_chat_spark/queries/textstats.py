@@ -1051,8 +1051,7 @@ def pmi_bigrams_top(spark, sf_dir):
 # total order within each source. The window is PARTITIONED by source
 # (keyed state, no global sort); at 100 TB per-source percentiles is
 # exactly the shape Spark's rangepartition-per-key window handles, and
-# the approx exit (GK per source) is already gated in
-# event_value_percentiles_approx.
+# the approx exit is a GK sketch per source (percentile_approx).
 _LEN_PCTL_SQL = """
 WITH lens AS (
     SELECT source, doc_id,
@@ -1224,10 +1223,10 @@ def corpus_datasheet(spark, sf_dir):
 # Curriculum data ordering (easy→hard) as a deterministic assignment:
 # docs failing the quality gate get phase 0 (dropped from the
 # curriculum); kept docs split into 4 difficulty phases by token count
-# — the canonical curriculum proxy — using the SAME no-global-sort
-# sampled-cutpoint machinery as order_price_deciles_scale (key-modulus
-# sample of the kept docs, 3 integer-position cuts under the
-# (n_tokens, doc_id) total order, broadcast, map-side assign). A
+# — the canonical curriculum proxy — using no-global-sort
+# sampled-cutpoint machinery (key-modulus sample of the kept docs, 3
+# integer-position cuts under the (n_tokens, doc_id) total order,
+# broadcast, map-side assign). A
 # training loader then streams phase 1 → 4. Composes two gated
 # semantics: the quality gate's score and the cutpoint discipline.
 _CURRICULUM_SQL = f"""

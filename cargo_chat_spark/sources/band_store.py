@@ -286,15 +286,31 @@ def apply_band_cdc(
     new_docs = snap_read(spark, table_path, to_v).join(
         F.broadcast(fresh), id_col, "semi"
     ).select(id_col, text_col)
-    _write(
-        bands_of(new_docs, id_col, text_col).withColumn(
-            "ver", F.lit(to_v)
-        ),
-        store_path,
-        "append",
-        n_key_files,
-    )
-    ts.join()
+    # The tombstone job is joined on every path, so a failed band write
+    # never returns while the side job still appends; the band write's
+    # error wins over the side job's. A failed wave leaves its tombstones
+    # appended, none of its band rows and no advanced sync marker, so
+    # until a replay the live read hides the wave's updated docs under
+    # both their old and new text. Replaying the same wave repairs it:
+    # the sync marker still names from_v, and the duplicate tombstones
+    # collapse under max(cutoff).
+    band_write_ok = False
+    try:
+        _write(
+            bands_of(new_docs, id_col, text_col).withColumn(
+                "ver", F.lit(to_v)
+            ),
+            store_path,
+            "append",
+            n_key_files,
+        )
+        band_write_ok = True
+    finally:
+        try:
+            ts.join()
+        except Exception:
+            if band_write_ok:
+                raise
     _write_sync(store_path, to_v)
     return to_v
 

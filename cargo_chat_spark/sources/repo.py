@@ -135,6 +135,32 @@ def _ignored(rel: str, rules: list[_Rule], is_dir: bool) -> bool:
     return decision
 
 
+_GLOB_CHARS = re.compile(r"([\\*?\[\]{}])")
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _load_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """binaryFile read of exactly ``paths``.
+
+    Each path is glob-escaped, since the file source expands Hadoop glob
+    patterns (``src/a[1].rs`` must match itself). recursiveFileLookup
+    turns off partition-column inference from ``key=value`` directories.
+    Past the listing threshold (32 paths by default) the file source
+    lists the paths with a Spark job of one task per path, which costs
+    far more than a driver-side stat of each local file; the threshold is
+    raised for this load only, whose listing runs inside ``load()``."""
+    old = spark.conf.get(_LISTING_THRESHOLD)
+    spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(old))))
+    try:
+        return (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .load([_GLOB_CHARS.sub(r"\\\1", p) for p in paths])
+        )
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD, old)
+
+
 def scan_repo(
     spark: SparkSession, root: str, respects_gitignore: bool = True
 ) -> DataFrame:
@@ -143,11 +169,11 @@ def scan_repo(
     CONTRACT — hidden-path exclusion on BOTH walks: files and directories
     whose name starts with ``.`` or ``_`` (e.g. ``__init__.py``,
     ``_config.py``, ``.github/``) are skipped even when
-    ``respects_gitignore=False``. Spark's file-source listing hides
-    leading-dot and leading-underscore paths from the distributed
-    binaryFile read below, so a walk that kept them would silently drop
-    those rows at the join anyway — the walk states what the reader can
-    actually serve (pinned by the ``repo_walk`` gate). Callers profiling
+    ``respects_gitignore=False``. Spark's file source drops leading-dot
+    and leading-underscore file names even when a path names them, so a
+    walk that kept them would list files the binaryFile read below never
+    returns — the walk states what the reader can actually serve (pinned
+    by the ``repo_walk`` gate). Callers profiling
     Python-style repos should know dunder/underscore modules never
     surface here.
 
@@ -170,9 +196,9 @@ def scan_repo(
                 if not _ignored(f"{base}/{d}" if base else d, rules, is_dir=True)
             ]
         # hidden files/dirs are skipped on BOTH walks, explicitly: Spark's
-        # file-source listing hides leading-dot (and leading-underscore)
-        # paths anyway, so a dotfile in the keep list would silently drop
-        # at the binaryFile join below — make the walk contract match what
+        # file source drops leading-dot (and leading-underscore) file
+        # names anyway, so a dotfile in the keep list would silently drop
+        # at the binaryFile read below — make the walk contract match what
         # the reader can actually serve (pinned by the repo_walk gate)
         dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
         for fn in filenames:
@@ -186,25 +212,15 @@ def scan_repo(
         return local_frame(spark, [], "path string, content binary")
 
     # Distributed content read: the path list is small (driver-side walk),
-    # the bytes are read executor-side via the binaryFile source.
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select(
-            F.col("path"),
-            F.col("content"),
-        )
-    )
-    rel_paths = local_frame(spark, [(p,) for p in keep], "rel_path string")
-    root_uri_len = len("file:" + os.path.abspath(root)) + 1
-    files = files.withColumn(
-        "rel_path", F.expr(f"substring(path, {root_uri_len + 1})")
-    )
+    # the bytes are read executor-side via the binaryFile source. Only the
+    # kept files are loaded, so ignored trees (build outputs, logs) are
+    # never listed or read.
+    abs_root = os.path.abspath(root)
+    files = _load_files(spark, [os.path.join(abs_root, p) for p in keep])
+    root_uri_len = len("file:" + abs_root) + 1
     return (
-        files.join(F.broadcast(rel_paths), "rel_path")
-        .select(
-            F.col("rel_path").alias("path"),
+        files.select(
+            F.expr(f"substring(path, {root_uri_len + 1})").alias("path"),
             # the cast keeps the bytes as they are; decode() would raise
             # MALFORMED_CHARACTER_CODING under ANSI mode instead of skipping
             F.col("content").cast("string").alias("content"),

@@ -114,75 +114,6 @@ def test_forest_numpy_keys_match_hof(spark):
     assert kernel == hof
 
 
-def test_approx_percentile_error(spark):
-    """The sketch twin must track the exact percentiles within the GK
-    rank-error bound (1/accuracy = 1e-4 — far inside the ±0.02-quantile
-    value window asserted here on the fixture's per-type distributions).
-    Since round 10 the GATE returns rank-bound booleans instead of raw
-    estimates (value-hash oracle, r9 verdict item 4); this test keeps the
-    numeric value-window pin by recomputing the estimates with the gate's
-    exact sketch expression, and additionally pins the gate's booleans."""
-    from cargo_chat_spark.queries.relational import _APPROX_PCT_ACCURACY
-    from cargo_chat_spark.sources.testdata import load_table
-
-    exact = {
-        r["event_type"]: r
-        for r in catalog.SPARK_QUERIES["event_value_percentiles"](
-            spark, SF_DIR_SMALL
-        ).collect()
-    }
-    quantiles = (("50", 0.5), ("95", 0.95), ("99", 0.99))
-    bounds_rows = (
-        load_table(spark, SF_DIR_SMALL, "events")
-        .groupBy("event_type")
-        .agg(
-            *[
-                F.expr(f"percentile(value, {max(0.0, q - 0.02)})").alias(f"lo{p}")
-                for p, q in quantiles
-            ],
-            *[
-                F.expr(f"percentile(value, {min(1.0, q + 0.02)})").alias(f"hi{p}")
-                for p, q in quantiles
-            ],
-        )
-        .collect()
-    )
-    bounds = {
-        r["event_type"]: {p: (r[f"lo{p}"], r[f"hi{p}"]) for p, _ in quantiles}
-        for r in bounds_rows
-    }
-    acc = F.lit(_APPROX_PCT_ACCURACY)
-    approx = {
-        r["event_type"]: r
-        for r in load_table(spark, SF_DIR_SMALL, "events")
-        .groupBy("event_type")
-        .agg(
-            *[
-                F.percentile_approx("value", F.lit(q), acc).alias(
-                    f"p{p}_approx"
-                )
-                for p, q in quantiles
-            ]
-        )
-        .collect()
-    }
-    assert set(approx) == set(exact)
-    for et, row in approx.items():
-        for p in ("50", "95", "99"):
-            lo, hi = bounds[et][p]
-            got = row[f"p{p}_approx"]
-            assert lo <= got <= hi, (
-                f"{et} p{p} approx {got} outside ±0.02-quantile window "
-                f"[{lo}, {hi}] (exact {exact[et][f'p{p}']})"
-            )
-    gate = catalog.SPARK_QUERIES["event_value_percentiles_approx"](
-        spark, SF_DIR_SMALL
-    ).collect()
-    assert {r["event_type"] for r in gate} == set(exact)
-    for r in gate:
-        assert r["p50_rank_ok"] and r["p95_rank_ok"] and r["p99_rank_ok"], r
-
-
 @pytest.mark.slow
 def test_multiprobe_lifts_recall(spark):
     """Multiprobe is RETIRED from the catalog (dominated by the forest —

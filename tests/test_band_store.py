@@ -260,3 +260,56 @@ def test_band_tombstone_compaction_preserves_answers(spark, tmp_path):
     raw = spark.read.parquet(_bands_path(store))
     assert raw.where(F.col("doc_id") == 3).count() == 0
     assert compact_band_tombstones(spark, store) == 0  # idempotent
+
+
+def test_band_cdc_failed_band_write_joins_tombstone_job(
+    spark, tmp_path, monkeypatch
+):
+    """A band write that raises during apply_band_cdc propagates its
+    error only after the overlapped tombstone job has finished, leaves
+    the sync marker where it was, and replaying the wave repairs the
+    store."""
+    import time
+
+    from cargo_chat_spark.functions import overlap
+    from cargo_chat_spark.sources import band_store
+    from cargo_chat_spark.sources.snapshots import snap_delete, snap_write
+
+    tbl, store = str(tmp_path / "tbl"), str(tmp_path / "store")
+    snap_write(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta"),
+             (2, "one two three four five six seven")],
+            "doc_id bigint, text string",
+        ),
+        tbl,
+    )
+    v0 = band_store.sync_band_store_from_snapshot(spark, store, tbl)
+    snap_delete(
+        spark, tbl, spark.createDataFrame([(2,)], "doc_id bigint"), "doc_id"
+    )
+
+    threads = []
+    spawn = overlap.spawn_job
+
+    def slow_spawn(fn):
+        # the side job outlives the failing band write unless joined
+        t = spawn(lambda: (time.sleep(0.5), fn())[1])
+        threads.append(t)
+        return t
+
+    def failing_write(*_args, **_kwargs):
+        raise RuntimeError("band write failed")
+
+    monkeypatch.setattr(overlap, "spawn_job", slow_spawn)
+    monkeypatch.setattr(band_store, "_write", failing_write)
+    with pytest.raises(RuntimeError, match="band write failed"):
+        band_store.apply_band_cdc(spark, store, tbl)
+    assert len(threads) == 1 and not threads[0].is_alive()
+    assert band_store.synced_band_version(store) == v0
+
+    monkeypatch.undo()
+    v1 = band_store.apply_band_cdc(spark, store, tbl)
+    assert v1 > v0 and band_store.synced_band_version(store) == v1
+    live = band_store.read_band_store_live(spark, store)
+    assert {r["doc_id"] for r in live.select("doc_id").distinct().collect()} == {1}

@@ -4,11 +4,11 @@
 displacement to list drift — these pins catch:
 
 - GATE_WINDOW not actually occupying positions 0-49 of queries();
-- a typo'd name in GATE_WINDOW / _OVERFLOW_TAIL / PROMOTION_PLAN
-  matching nothing;
+- a typo'd name in GATE_WINDOW / _OVERFLOW_TAIL matching nothing;
 - a window entry losing its value-hash oracle (every gated row must be a
   STRONG check — rows-only entries stay outside the window);
-- an out-of-window entry without local oracle coverage.
+- an out-of-window entry without local oracle coverage;
+- a legacy-bench row naming a query the registry no longer has.
 """
 
 from __future__ import annotations
@@ -17,11 +17,11 @@ from cargo_chat_spark.queries import catalog
 
 WINDOW = 50
 
-# EMPTY since round 10 (r9 verdict item 4): the four approximate gates
-# (distinct_counts_approx, event_value_percentiles_approx,
-# weekly_hll_rollup, ivf_topk_trained_live) now value-hash their
-# deterministic error/recall-bound booleans instead of engine-specific
-# sketch estimates — 228/228 registry entries carry value-hash oracles.
+# EMPTY since round 10 (r9 verdict item 4): the approximate gates
+# (distinct_counts_approx, weekly_hll_rollup, ivf_topk_trained_live)
+# value-hash their deterministic error/recall-bound booleans instead of
+# engine-specific sketch estimates — every registry entry carries a
+# value-hash oracle.
 ROWS_ONLY_OK: set[str] = set()
 
 
@@ -68,28 +68,10 @@ def test_out_of_window_entries_keep_local_oracle_coverage():
     assert not missing, f"out-of-window entries without oracle SQL: {missing}"
 
 
-def test_promotion_plan_names_resolve():
-    """The rotation queue must stay executable: every planned promotion
-    names a registered query, and none of them is already inside the
-    gated window (promoting an in-window name is a no-op that wastes a
-    slot). The queue is legitimately empty after the r10 rotation burned
-    the full r9 queue — the checks then hold vacuously."""
-    window = set(catalog.GATE_WINDOW)
-    unknown = [
-        n for n in catalog.PROMOTION_PLAN if n not in catalog.SPARK_QUERIES
-    ]
-    assert not unknown, f"rotation plan names unknown queries: {unknown}"
-    already = [n for n in catalog.PROMOTION_PLAN if n in window]
-    assert not already, f"rotation plan promotes in-window names: {already}"
-    assert len(set(catalog.PROMOTION_PLAN)) == len(
-        catalog.PROMOTION_PLAN
-    ), "duplicate names in rotation plan"
-
-
 def test_every_never_gated_entry_is_window_or_planned():
     """No registry entry may fall through the rotation: anything outside
-    the window must either already carry an external row (r1-r5), sit in
-    the round-9 queue, or be a documented tail duplicate."""
+    the window must either already carry an external CORRECTNESS_r* row
+    or be a documented tail duplicate."""
     import json
     import os
 
@@ -102,16 +84,11 @@ def test_every_never_gated_entry_is_window_or_planned():
                     gated |= set(json.load(f).keys())
             except (OSError, ValueError):
                 continue
-    accounted = (
-        set(catalog.GATE_WINDOW)
-        | set(catalog.PROMOTION_PLAN)
-        | set(catalog._OVERFLOW_TAIL)
-        | gated
-    )
+    accounted = set(catalog.GATE_WINDOW) | set(catalog._OVERFLOW_TAIL) | gated
     orphans = [n for n in catalog.SPARK_QUERIES if n not in accounted]
     assert not orphans, (
-        f"registry entries with no external row, no window slot, no "
-        f"rotation-plan slot, and no tail rationale: {orphans}"
+        f"registry entries with no external row, no window slot and no "
+        f"tail rationale: {orphans}"
     )
 
 
@@ -127,3 +104,16 @@ def test_phase_builders_name_registered_queries():
     no_oracle = [n for n in PHASE_BUILDERS if n not in catalog.ORACLE_SQL]
     assert not no_oracle, f"phased entries without oracles: {no_oracle}"
     assert all(callable(f) for f in PHASE_BUILDERS.values())
+
+
+def test_legacy_bench_rows_name_registered_queries():
+    """Every timed or barred row of the legacy bench must name a live
+    registry entry; a retired query left in a bench list would otherwise
+    only fail with a KeyError when bench.py runs."""
+    import bench
+
+    for list_name in ("HEADLINE", "DETAIL_EXTRA", "BASELINE_S"):
+        unknown = [
+            n for n in getattr(bench, list_name) if n not in catalog.SPARK_QUERIES
+        ]
+        assert not unknown, f"bench.{list_name} names unregistered queries: {unknown}"

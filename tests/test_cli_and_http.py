@@ -151,10 +151,14 @@ def test_cli_index_query_profile(tmp_path):
 
 def test_repl_help_status_and_rerank_parse(spark, capsys, monkeypatch):
     """REPL parity (main.rs:101-120): help/status commands answer, query
-    without an index warns, --use-rerank parses; loop survives bad input."""
+    without an index warns, --use-rerank parses; loop survives bad input,
+    including a line with an unbalanced quote."""
     from cargo_chat_spark import cli
 
-    feed = iter(["help", "status", "query what is this --use-rerank", "bogus", "exit"])
+    feed = iter([
+        "help", "status", "query what is this --use-rerank", "bogus",
+        'query "why', "exit",
+    ])
     monkeypatch.setattr("builtins.input", lambda *_: next(feed))
     cli.cmd_interactive(spark)
     out = capsys.readouterr().out
@@ -162,6 +166,7 @@ def test_repl_help_status_and_rerank_parse(spark, capsys, monkeypatch):
     assert "index: not loaded" in out
     assert "No index loaded" in out
     assert "unknown command" in out
+    assert "error: No closing quotation" in out
 
 
 def test_repl_history_survives_invocations(spark, tmp_path, monkeypatch):

@@ -3,9 +3,9 @@ r11): on a corpus where the key-modulus sample is EMPTY (m=0) the cut
 arrays are empty, DuckDB's list indexing yields NULL cuts and every row
 lands in bucket/phase 1 — Spark must agree (try_element_at), not throw
 the ANSI INVALID_ARRAY_INDEX that plain element_at raises on an empty
-array. Exercises order_price_deciles_scale (relational.py) and
-curriculum_phase_assign (textstats.py) end-to-end against their own
-oracle SQL on a fixture engineered so no key hits the sample modulus.
+array. Exercises curriculum_phase_assign (textstats.py) end-to-end
+against its own oracle SQL on a fixture engineered so no key hits the
+sample modulus.
 """
 
 from __future__ import annotations
@@ -21,18 +21,6 @@ from cargo_chat_spark.queries import catalog
 @pytest.fixture(scope="module")
 def empty_sample_dir(tmp_path_factory):
     tmp = tmp_path_factory.mktemp("degenerate_sf")
-    # no o_orderkey % 97 == 0 -> the deciles-scale sample is empty
-    orders = pa.table(
-        {
-            "o_orderkey": pa.array([1, 2, 3, 5, 8, 13, 21, 34], pa.int64()),
-            "o_custkey": pa.array([1] * 8, pa.int64()),
-            "o_orderstatus": pa.array(["O"] * 8),
-            "o_totalprice": pa.array(
-                [10.0, 250.5, 33.25, 990.0, 75.75, 250.5, 4.0, 610.1]
-            ),
-        }
-    )
-    pq.write_table(orders, tmp / "orders.parquet")
     good = (
         "the quick brown fox jumps over a lazy dog in the sunny field "
         "today with friends"
@@ -64,25 +52,6 @@ def _oracle(sf_dir: str, tables: list[str], sql: str):
         return con.execute(sql).df()
     finally:
         con.close()
-
-
-def test_deciles_scale_empty_sample_matches_oracle(spark, empty_sample_dir):
-    rows = catalog.SPARK_QUERIES["order_price_deciles_scale"](
-        spark, empty_sample_dir
-    ).collect()
-    assert [r["decile"] for r in rows] == [1], "empty sample != one bucket"
-    assert rows[0]["n_orders"] == 8
-    ref = _oracle(
-        empty_sample_dir,
-        ["orders"],
-        catalog.ORACLE_SQL["order_price_deciles_scale"],
-    )
-    assert len(ref) == 1
-    r = ref.iloc[0]
-    assert int(r["decile"]) == 1 and int(r["n_orders"]) == 8
-    assert float(r["lo"]) == rows[0]["lo"]
-    assert float(r["hi"]) == rows[0]["hi"]
-    assert float(r["total"]) == pytest.approx(rows[0]["total"])
 
 
 def test_curriculum_empty_sample_matches_oracle(spark, empty_sample_dir):

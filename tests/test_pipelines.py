@@ -54,6 +54,23 @@ def test_scan_repo_gitignore(spark, tmp_path):
     assert "target/junk.rs" in all_paths
 
 
+def test_scan_repo_reads_only_kept_files(spark, tmp_path):
+    """The read lists exactly the walk's kept files: a gitignored build
+    output is never an input file, and a name holding Hadoop glob
+    metacharacters is read as itself."""
+    root = _mk_repo(tmp_path)
+    (tmp_path / "target" / "blob.bin").write_bytes(b"\x00\x01\x02")
+    (tmp_path / "src" / "a[1].rs").write_text("fn a() {}\n")
+    (tmp_path / "src" / "b{c,d}.rs").write_text("fn b() {}\n")
+    files = scan_repo(spark, root)
+    inputs = files.inputFiles()
+    assert inputs and not any("/target/" in p for p in inputs), inputs
+    got = {r["path"]: r["content"] for r in files.collect()}
+    assert got["src/a[1].rs"] == "fn a() {}\n"
+    assert got["src/b{c,d}.rs"] == "fn b() {}\n"
+    assert not any(p.startswith("target/") for p in got)
+
+
 def test_non_utf8_file_is_skipped_not_fatal(spark, tmp_path):
     """One Latin-1 source file must not abort the index build: it is
     skipped, like a file the reference cannot read as a string

@@ -26,9 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 # (query, tables it reads, id columns to offset per table)
 QUERIES = [
-    "pricing_summary",
     "table_profile",
-    "event_value_percentiles",
     "events_tumbling_window",
     "events_ohlc_hourly",
     "token_count",
