@@ -30,7 +30,7 @@ from cargo_chat_spark.session import get_spark  # noqa: E402
 # BENCH_DETAIL.json sidecar.
 HEADLINE = [
     # --- vector search / ANN compression ladder (6) ---
-    "knn_exact",             # flagship J1: broadcast-kNN, map-side top-k prune
+    "knn_exact",             # flagship J1: NumPy k-NN kernel, map-side top-k prune
     # r9 swap (r8 verdict item 3): the forest headline is the PERSISTED
     # store probe — the production steady state (the batch form's decade
     # exponent 0.78 was the key recompute, its own documented exit). The
@@ -298,7 +298,7 @@ _LEGACY_BARS = {
     "events_session_window_builtin": 0.7, "events_trailing_1h_sum": 1.19, "events_weekly_drift": 0.6,
     "events_within_5min_pairs": 0.82,
     "hard_negatives_topk": 2.56,
-    "ivf_topk": 1.5, "knn_exact_numpy": 2.4,
+    "ivf_topk": 1.5,
     "mad_outliers": 0.95, "mock_embed_documents": 0.28, "ngram_jaccard_pairs": 4.3,
     "part_name_entities": 1.17,
     "rolling_7d_actives": 0.89, "rp_lsh_topk": 2.5,

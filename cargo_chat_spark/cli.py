@@ -175,6 +175,8 @@ def cmd_interactive(spark) -> None:
 
 
 def _interactive_loop(spark, index_df, usage, read_index) -> None:
+    from cargo_chat_spark.plans.retrieval import release_resident
+
     while True:
         try:
             line = input("> ").strip()
@@ -191,9 +193,13 @@ def _interactive_loop(spark, index_df, usage, read_index) -> None:
             elif cmd == "index" and len(args) == 2:
                 cmd_index(spark, args[0], args[1])
             elif cmd == "load-index" and len(args) == 1:
-                index_df, meta = read_index(spark, args[0])
-                index_df = index_df.persist()  # amortized across queries
-                print(f"Loaded {index_df.count()} chunks (dim {meta['dim']})")
+                loaded, meta = read_index(spark, args[0])
+                loaded = loaded.persist()  # amortized across queries
+                print(f"Loaded {loaded.count()} chunks (dim {meta['dim']})")
+                if index_df is not None:
+                    release_resident(index_df)
+                    index_df.unpersist()
+                index_df = loaded
             elif cmd == "query" and args:
                 if index_df is None:
                     print("No index loaded — use load-index <dir>")

@@ -21,11 +21,10 @@ Semantics are exactly the reference's retain() closures:
 A NULL or empty array means "filter disabled" (the reference wraps each in
 ``if let Some(..) if !empty``).
 
-Scale note: these are pure predicates over already-partitioned data — they
-fuse into the same whole-stage-codegen span as the kNN distance projection,
-so at 100 TB they cost a scan, never a shuffle. In "improved mode"
-(plans.retrieval) they are applied BEFORE the kNN so Catalyst pushes them
-into the parquet scan.
+Scale note: these are pure predicates over already-partitioned data, so
+at 100 TB they cost a scan, never a shuffle. In reference mode they run on
+the k-NN's top-2k rows; in "improved mode" (plans.retrieval) they run
+BEFORE the k-NN, over the index scan.
 """
 
 from __future__ import annotations

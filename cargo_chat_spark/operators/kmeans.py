@@ -305,7 +305,7 @@ def assign_cells(
     Still one projection + one explode, no join or shuffle: the top-n
     cells come from sorting the k-length (distance, cell) struct array,
     ties to the lower cell id."""
-    # Arrow-batched NumPy kernel (the knn_exact_numpy pattern): the HOF
+    # Arrow-batched NumPy kernel (the knn_join kernel's pattern): the HOF
     # zip_with/array_sort form is interpreted per element by Catalyst —
     # measured 2-4 s for 2k rows × 32 cells × 64 dims at sf0.1, i.e. the
     # bulk of the trained-IVF query. The kernel accumulates (a_i - c_i)²

@@ -6,52 +6,115 @@ reference uses an approximate RP-tree forest; the checkable contract is the
 exact top-k with a total order (distance, corpus_id) — SURVEY §2.11 requires
 the explicit tie-break because Spark sorts are not stable across partitions.
 
-Spark-first physical strategy
------------------------------
-``corpus.join(broadcast(queries))`` + distance column expression +
-``row_number() <= k`` window:
+One distance + top-k function, :func:`topk_block`, serves every caller:
 
-- The query side is tiny (per-request vectors) → **broadcast**, so the
-  distance computation is map-side over corpus partitions, no shuffle of the
-  corpus, and scales linearly with corpus size / executor count.
-- The rank filter is recognized by Catalyst's **WindowGroupLimit** physical
-  optimization (Spark ≥3.5): each task pre-prunes to its local top-k per
-  query BEFORE the window shuffle, so shuffle volume is O(|Q| · k ·
-  num_partitions), not O(|Q| · |C|). This is the same partial-top-k trick
-  the survey's §4 "scale path" calls for, obtained declaratively.
-- At 100 TB the corpus stays partitioned on disk; nothing here collects to
-  the driver.
+- :func:`knn_join` runs it as a ``mapInPandas`` block kernel over the
+  corpus. The query side is collected once, when the plan is built, and
+  ships with the task. Each Arrow batch of the corpus yields only its own
+  top-k rows per query, with only those rows' kept columns, so the
+  corpus never shuffles. A ``row_number() <= k`` window merges the
+  per-batch lists; Catalyst plans it with a partial WindowGroupLimit
+  below the window's shuffle, so that shuffle carries
+  O(|Q| · k · batches) rows, not O(|Q| · |C|).
+- ``plans.retrieval.retrieve`` calls it in the driver over a cached index
+  small enough to hold there.
+
+Distances are a float64 left fold over the dims starting at 0.0, the order
+of the ``zip_with``/``aggregate`` column form in ``functions/vectors.py``
+and of the DuckDB oracles' ``list_sum``, so all three agree bit for bit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from cargo_chat_spark.functions import vectors
+# queries per distance matrix: a kernel task holds at most
+# QUERY_BLOCK × (Arrow batch rows) distances at a time
+QUERY_BLOCK = 256
 
 
-def _distance(metric: str, query_vec: str, corpus_vec: str, dim) -> Column:
-    """The ``metric`` distance between the two vector columns; raises when
-    their lengths differ. Unchecked, ``zip_with`` pads the shorter vector
-    with NULLs, every distance is NULL, and NULLs sort first, so a provider
-    whose embedding dim differs from the index's would silently rank
-    arbitrary rows."""
-    if isinstance(dim, int):
-        # one SQL string, one py4j round trip — the Column-loop form costs
-        # hundreds of driver round trips per plan build (see vectors.py)
-        sql = vectors.DISTANCES_FIXED_SQL[metric](
-            f"`{query_vec}`", f"`{corpus_vec}`", dim
-        )
-        distance = F.expr(sql)
-    else:
-        distance = vectors.DISTANCES[metric](F.col(query_vec), F.col(corpus_vec))
-    q_dim, c_dim = F.size(query_vec), F.size(corpus_vec)
-    mismatch = F.raise_error(F.concat(
-        F.lit("query vector has dim "), q_dim.cast("string"),
-        F.lit(" but the corpus vectors have dim "), c_dim.cast("string"),
-    ))
-    return F.when(q_dim != c_dim, mismatch).otherwise(distance)
+def _fold(Q: np.ndarray, E: np.ndarray, term) -> np.ndarray:
+    """``0.0 + term(q_1, e_1) + term(q_2, e_2) + ...`` for every (query,
+    corpus) pair, accumulated left to right over the dims."""
+    acc = np.zeros((len(Q), len(E)))
+    tmp = np.empty_like(acc)
+    for q, e in zip(Q.T, np.ascontiguousarray(E.T)):
+        term(q[:, None], e[None, :], tmp)
+        acc += tmp
+    return acc
+
+
+def _sq_diff(q, e, out):
+    np.subtract(q, e, out=out)
+    np.multiply(out, out, out=out)
+
+
+METRICS = {
+    "euclidean": lambda Q, E: np.sqrt(_fold(Q, E, _sq_diff)),
+    # over pre-normalized vectors (``vectors.with_l2_normalized``)
+    "dot_normed": lambda Q, E: 1.0 - _fold(Q, E, np.multiply),
+}
+
+
+def vector_matrix(vectors, ids, side: str) -> np.ndarray:
+    """The (n, dim) float64 matrix of a sequence of vectors. Raises on a
+    NULL vector or one whose length differs from the first's, naming its
+    id: ranked as a NULL distance, such a row would sort first."""
+    lens = np.fromiter((-1 if v is None else len(v) for v in vectors),
+                       np.int64, len(vectors))
+    if not len(lens):
+        return np.empty((0, 0))
+    bad = np.flatnonzero((lens != lens[0]) | (lens < 0))
+    if len(bad):
+        i = bad[0]
+        if lens[i] < 0:
+            raise ValueError(f"{side} vector {ids[i]} is NULL")
+        raise ValueError(f"{side} vector {ids[i]} has dim {lens[i]} "
+                         f"but {side} vector {ids[0]} has dim {lens[0]}")
+    return np.array(list(vectors), dtype=np.float64).reshape(len(lens), lens[0])
+
+
+def topk_block(Q, E, ids, m: int, metric: str = "euclidean", mask=None):
+    """The ``m`` nearest corpus rows of each query, by (distance, id).
+
+    ``Q`` is a (queries, dim) and ``E`` a (corpus, dim) float64 matrix,
+    ``ids`` the corpus ids. ``mask``, a boolean array broadcastable to
+    (queries, corpus), drops the pairs where it is False before ranking.
+    Returns ``(query_row, corpus_row, distance)`` arrays sorted by query
+    row, then distance, then id; each query keeps min(m, its candidates)
+    rows. NaN distances rank last, as in Spark.
+    """
+    if len(Q) == 0 or len(E) == 0 or m <= 0:
+        return np.empty(0, np.intp), np.empty(0, np.intp), np.empty(0)
+    if Q.shape[1] != E.shape[1]:
+        raise ValueError(f"query vector has dim {Q.shape[1]} but the corpus "
+                         f"vectors have dim {E.shape[1]}")
+    D = METRICS[metric](Q, E)
+    cand = np.ones(D.shape, bool) if mask is None else np.broadcast_to(mask, D.shape)
+    if m < D.shape[1]:
+        # each query's m-th smallest distance: everything not above it
+        # stays a candidate, so ties at the cut reach the id tie-break
+        ranked = D if mask is None else np.where(cand, D, np.inf)
+        kth = np.partition(ranked, m - 1, axis=1)[:, m - 1]
+        cand = cand & ~(D > kth[:, None])
+    qi, ci = np.nonzero(cand)
+    d = D[qi, ci]
+    order = np.lexsort((ids[ci], d, qi))
+    qi, ci, d = qi[order], ci[order], d[order]
+    keep = np.arange(len(qi)) - np.searchsorted(qi, qi) < m
+    return qi[keep], ci[keep], d[keep]
+
+
+def _unequal(corpus_vals, query_vals) -> np.ndarray:
+    """(queries, corpus) mask of ``corpus <> query`` under SQL semantics:
+    a NULL on either side drops the pair."""
+    c_ok, q_ok = ~pd.isna(corpus_vals), ~pd.isna(query_vals)
+    return ((corpus_vals[None, :] != query_vals[:, None])
+            & c_ok[None, :] & q_ok[:, None])
 
 
 def knn_join(
@@ -65,54 +128,64 @@ def knn_join(
     corpus_vec: str = "embedding",
     metric: str = "euclidean",
     keep_corpus_cols: list[str] | None = None,
-    dim: int | str | None = None,
-    candidate_filter=None,
+    exclude: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Top-k neighbors per query, ascending ``(distance, corpus_id)``.
 
-    ``candidate_filter``: optional Column predicate over the joined
-    (corpus x query) row, applied BEFORE ranking — i.e. true filtered
-    vector search (top-k among rows satisfying the predicate), not
-    post-filtering that can return < k rows. The predicate may reference
-    both corpus and query columns (e.g. metadata scoping, or hard-negative
-    mining's ``corpus.label != query.label``). It stays a codegen'd
-    predicate on the map side, so the broadcast/no-corpus-shuffle plan
-    shape is unchanged.
+    Returns columns: query_id, neighbor_id, distance, plus any
+    ``keep_corpus_cols`` (J3 metadata resolution folded into the same
+    pass — no positional parallel arrays, unlike ann.rs:263-268), and a
+    1-based rank. ``metric`` is a key of :data:`METRICS`.
 
-    Returns columns: query_id, neighbor_id, distance, rank (1-based)
-    plus any ``keep_corpus_cols`` (J3 metadata resolution folded into the
-    same join — no positional parallel arrays, unlike ann.rs:263-268).
-    Executing the plan raises if a query vector and a corpus vector differ
-    in length; the error names both dims.
+    Building the plan collects the query side (one job): it is the
+    per-request side, and it ships with every kernel task. Executing the
+    plan raises if a query vector and the corpus vectors differ in length
+    (the error names both dims), or on a NULL or ragged corpus vector.
 
-    ``dim``: pass the vector dimension (or ``"auto"`` to sniff it from the
-    corpus with one scalar job, like the reference's load-time dim sniff,
-    ann.rs:140-146) to use the unrolled fixed-dim distance — whole-stage
-    codegen'd straight-line Java instead of the interpreted HOF lambda,
-    ~25% faster at sf0.1 with bit-identical accumulation order. None keeps
-    the dim-agnostic HOF form (works on any frame, incl. streaming).
+    ``exclude=(corpus_col, query_col)`` ranks only the corpus rows whose
+    ``corpus_col`` differs from the query's ``query_col``, before the
+    top-k (filtered search: k survivors whenever k exist). A NULL on
+    either side drops the row, as ``corpus_col <> query_col`` does in SQL.
     """
-    if dim == "auto":
-        dim = vectors.infer_dim(corpus, corpus_vec)
-    distance = _distance(metric, query_vec, corpus_vec, dim)
-    keep = keep_corpus_cols or []
+    keep = list(keep_corpus_cols or [])
+    rows = queries.select(
+        query_id, query_vec, *([exclude[1]] if exclude else [])
+    ).collect()
+    qids = np.array([r[0] for r in rows])
+    Q = vector_matrix([r[1] for r in rows], qids, "query")
+    q_vals = np.array([r[2] for r in rows], dtype=object) if exclude else None
 
-    joined = corpus.crossJoin(F.broadcast(queries))  # corpus never shuffles
-    if candidate_filter is not None:
-        joined = joined.where(candidate_filter)
-    scored = (
-        joined
-        .select(
-            F.col(query_id).alias("query_id"),
-            F.col(corpus_id).alias("neighbor_id"),
-            distance.alias("distance"),
-            *[F.col(c) for c in keep],
-        )
-    )
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0 or len(Q) == 0:
+                continue
+            ids = pdf[corpus_id].to_numpy()
+            E = vector_matrix(pdf[corpus_vec].to_numpy(), ids, "corpus")
+            c_vals = pdf[exclude[0]].to_numpy(dtype=object) if exclude else None
+            for lo in range(0, len(Q), QUERY_BLOCK):
+                hi = lo + QUERY_BLOCK
+                mask = None if exclude is None else _unequal(c_vals, q_vals[lo:hi])
+                qi, ci, d = topk_block(Q[lo:hi], E, ids, k, metric, mask)
+                yield pd.DataFrame({
+                    "query_id": qids[lo:hi][qi], "neighbor_id": ids[ci],
+                    "distance": d,
+                    **{c: pdf[c].to_numpy()[ci] for c in keep},
+                })
+
+    schema = StructType([
+        StructField("query_id", queries.schema[query_id].dataType),
+        StructField("neighbor_id", corpus.schema[corpus_id].dataType),
+        StructField("distance", DoubleType()),
+        *[corpus.schema[c] for c in keep],
+    ])
     w = Window.partitionBy("query_id").orderBy(
         F.asc("distance"), F.asc("neighbor_id")
     )
+    scanned = corpus.select(*dict.fromkeys(
+        [corpus_id, corpus_vec, *keep, *([exclude[0]] if exclude else [])]
+    ))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scanned.mapInPandas(kernel, schema)
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )

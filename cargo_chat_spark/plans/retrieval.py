@@ -16,15 +16,25 @@ from __future__ import annotations
 
 from dataclasses import asdict
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StructField, StructType,
+)
 
 from cargo_chat_spark.functions.localframe import local_frame
 from cargo_chat_spark.models.provider import Classification, ModelProvider
 from cargo_chat_spark.operators import filters, ranking
 from cargo_chat_spark.operators.context import assemble_prompt
-from cargo_chat_spark.operators.knn import knn_join
+from cargo_chat_spark.operators.knn import knn_join, topk_block, vector_matrix
+
+KEEP_COLS = ["file", "code", "language", "extension"]
+
+# The driver-resident copy of one cached index: the DataFrame it was
+# filled from, and its ids, vector matrix and kept columns (only the
+# DataFrame when that index is too large to hold).
+_resident: dict = {}
 
 
 def _classification_df(
@@ -44,6 +54,66 @@ def _classification_df(
         "target_extensions array<string>, exclude_patterns array<string>, k int"
     )
     return local_frame(spark, [row], schema)
+
+
+def release_resident(index: DataFrame) -> None:
+    """Drop the driver-resident copy of ``index``, if the slot holds it."""
+    if _resident.get("index") is index:
+        _resident.clear()
+
+
+def _resident_index(spark: SparkSession, index: DataFrame) -> dict | None:
+    """The driver copy of ``index`` if retrieve() serves it from the
+    driver: the index is cached and its plan's size estimate is within
+    ``spark.sql.autoBroadcastJoinThreshold``. The first call for an index
+    fills the single slot with one Arrow collect."""
+    if not index.is_cached:
+        return None
+    if _resident.get("index") is not index:
+        _resident.clear()
+        size = index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if 0 <= int(size) <= limit:
+            pdf = index.select("chunk_id", "embedding", *KEEP_COLS).toPandas()
+            ids = pdf["chunk_id"].to_numpy()
+            _resident.update(
+                ids=ids,
+                matrix=vector_matrix(pdf["embedding"].to_numpy(), ids, "corpus"),
+                meta=pdf[KEEP_COLS],
+                schema=StructType([
+                    StructField("query_id", LongType()),
+                    StructField("neighbor_id", index.schema["chunk_id"].dataType),
+                    StructField("distance", DoubleType()),
+                    *[index.schema[c] for c in KEEP_COLS],
+                    StructField("rank", IntegerType()),
+                ]),
+            )
+        _resident["index"] = index
+    return _resident if "ids" in _resident else None
+
+
+def _resident_hits(
+    spark: SparkSession, res: dict, qvec, m: int, in_scope: DataFrame | None
+) -> DataFrame:
+    """knn_join's output for one question, computed in the driver over
+    the resident index; ``in_scope`` limits the candidates to its
+    ``chunk_id``s (one job)."""
+    mask = None
+    if in_scope is not None:
+        in_ids = [r[0] for r in in_scope.select("chunk_id").collect()]
+        mask = np.isin(res["ids"], in_ids)
+    _, ci, dist = topk_block(
+        vector_matrix([qvec], [0], "query"), res["matrix"], res["ids"], m,
+        mask=mask,
+    )
+    meta = res["meta"].iloc[ci]
+    rows = [
+        (0, int(i), float(d), *kept, rank)
+        for rank, (i, d, kept) in enumerate(
+            zip(res["ids"][ci], dist, meta.itertuples(index=False)), 1
+        )
+    ]
+    return local_frame(spark, rows, res["schema"])
 
 
 def _rerank_order(ranked: DataFrame) -> DataFrame:
@@ -69,6 +139,14 @@ def retrieve(
     exactly once: its rows are collected, and both the results and the
     prompt are built from them.
 
+    The k-NN runs in the driver when ``index`` is cached and its plan's
+    size estimate is at most ``spark.sql.autoBroadcastJoinThreshold``
+    (the REPL's loaded index): the first such call keeps one copy of the
+    index's vectors and kept columns in the driver, and each question's
+    top-2k rows enter the rest of the plan as a local frame. Otherwise
+    ``knn_join`` scans the index. Both call ``knn.topk_block``, so they
+    rank identically.
+
     Returns a dict:
 
     - ``classification``, ``hypothetical``: the provider's outputs;
@@ -89,26 +167,30 @@ def retrieve(
     # (hyde.rs:500, SURVEY §2.11)
     qvec = provider.embed_batch([hypo])[0]
 
-    queries = local_frame(
-        spark, [(0, qvec)], "query_id bigint, query_vec array<double>"
-    )
     cls_df = F.broadcast(_classification_df(spark, cls, 0, k))
 
-    corpus = index.withColumnRenamed("chunk_id", "vec_id")
+    # improved mode: predicate pushdown, the scope filters run BEFORE the
+    # distance scan. The 2k over-fetch is kept — the intent doc-caps in
+    # reference_rank depend on the retrieved set and still run afterwards,
+    # so fetching exactly k could under-fill; the candidate set here is a
+    # strict superset of reference mode's (any filtered row in the global
+    # top-2k is also in the filtered top-2k).
+    in_scope = None
     if mode == "improved":
-        # predicate pushdown: filter the corpus BEFORE the distance scan.
-        # The 2k over-fetch is kept — the intent doc-caps in reference_rank
-        # depend on the retrieved set and still run afterwards, so fetching
-        # exactly k could under-fill; the candidate set here is a strict
-        # superset of reference mode's (any filtered row in the global
-        # top-2k is also in the filtered top-2k).
-        corpus = corpus.crossJoin(cls_df).where(filters.scope_match()).select(
-            corpus.columns
+        in_scope = index.crossJoin(cls_df).where(filters.scope_match())
+    res = _resident_index(spark, index)
+    if res is not None:
+        hits = _resident_hits(spark, res, qvec, 2 * k, in_scope)
+    else:
+        queries = local_frame(
+            spark, [(0, qvec)], "query_id bigint, query_vec array<double>"
         )
-    hits = knn_join(
-        queries, corpus, 2 * k,  # O2 over-fetch (hyde.rs:500)
-        keep_corpus_cols=["file", "code", "language", "extension"],
-    )
+        corpus = index if in_scope is None else in_scope.select(index.columns)
+        hits = knn_join(
+            queries, corpus.withColumnRenamed("chunk_id", "vec_id"),
+            2 * k,  # O2 over-fetch (hyde.rs:500)
+            keep_corpus_cols=KEEP_COLS,
+        )
     joined = hits.join(cls_df, "query_id")
     if mode != "improved":
         joined = joined.where(filters.scope_match())

@@ -106,7 +106,6 @@ GATE_WINDOW = [
 _OVERFLOW_TAIL = [
     "candidates_fixture",      # synthesis parity; rerank/retrieval gates consume it
     "distinct_counts_approx",  # rows-only HLL twin; exact twin carries the oracle
-    "knn_exact_numpy",         # round-3 demotion: J1 re-proven by knn_exact
     "knn_overfetch_2k",        # O2 re-proven inside retrieval_rank_reference
     "minhash_signatures",      # consumed by minhash_lsh_pairs
     "simhash_fingerprints",    # consumed by simhash_neardup_pairs
@@ -114,16 +113,14 @@ _OVERFLOW_TAIL = [
     "events_sliding_window",   # windowing gated by events_tumbling_window
     # round-4 demotions (F2-F4 re-proven by retrieval_rank_reference; LSH/
     # ngram/simhash pairs green r1-r3 with banded-join machinery re-proven
-    # by neardup_components; batched kNN shares knn_exact's oracle; P7
-    # enforced inside retrieval; cosine kernel re-proven by rp_lsh_topk's
-    # exact re-rank)
+    # by neardup_components; P7 enforced inside retrieval; cosine kernel
+    # re-proven by rp_lsh_topk's exact re-rank)
     "filter_folder",
     "filter_extension",
     "filter_exclude",
     "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
     "simhash_neardup_pairs",
-    "knn_exact_batched",
     "dim_validation",
     "cosine_topk",
     # round-5 demotions
@@ -271,8 +268,8 @@ _OVERFLOW_TAIL = [
     # per-(user,day) ordered event paths, top-20 — sorted-collect
     # machinery re-proven in-window by context_assembly's ordered lists
     "session_paths_top",
-    # filtered vector search via knn_join's candidate_filter (hard-negative
-    # mining for contrastive training) — broadcast-kNN machinery re-proven
+    # filtered vector search via knn_join's exclude (hard-negative
+    # mining for contrastive training) — k-NN kernel re-proven
     # in-window by knn_exact
     "hard_negatives_topk",
     # round-5 wave 4 (entity-resolution family): blocked Levenshtein

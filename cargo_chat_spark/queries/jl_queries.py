@@ -84,14 +84,14 @@ def _projected(spark, sf_dir):
 @register("jl_project_topk", sql=_JL_TOPK_SQL)
 def jl_project_topk(spark, sf_dir):
     """Exact top-10 per query in the 16-dim JL space (4× less scan
-    bandwidth than the 64-dim exact kNN). Same plan as knn_exact —
-    broadcast query side, map-side WindowGroupLimit prune — over the
-    map-side projected frames."""
+    bandwidth than the 64-dim exact kNN). Same plan as knn_exact — the
+    k-NN kernel over the corpus, map-side WindowGroupLimit prune — over
+    the map-side projected frames."""
     proj = _projected(spark, sf_dir)
     q = proj.where((F.col("vec_id") % 100) == 0).select(
         F.col("vec_id").alias("query_id"), F.col("p").alias("query_vec")
     )
-    return knn_join(q, proj, k=10, corpus_vec="p", dim=JL_OUT)
+    return knn_join(q, proj, k=10, corpus_vec="p")
 
 
 _JL_DISTORT_SQL = f"""

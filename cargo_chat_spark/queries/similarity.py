@@ -83,7 +83,7 @@ def cosine_topk(spark, sf_dir):
     q = normed.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return knn_join(q, normed, k=10, metric="dot_normed", dim=dim)
+    return knn_join(q, normed, k=10, metric="dot_normed")
 
 
 # ---------------------------------------------------- most-similar pairs
@@ -641,11 +641,9 @@ def mock_embed_documents(spark, sf_dir):
 # vectors with a DIFFERENT label — the "hard negatives" a contrastive /
 # triplet objective needs. This is FILTERED vector search (the predicate
 # participates in candidate generation, so k survivors are guaranteed),
-# exercised through knn_join's candidate_filter: the label predicate is a
-# codegen'd map-side filter on the broadcast-join row, corpus still never
-# shuffles. At 100 TB the same plan serves metadata-scoped retrieval
-# (tenant / language / license filters) — the vector-DB feature the exact
-# kNN family was missing.
+# exercised through knn_join's exclude: the label inequality drops pairs
+# inside the k-NN kernel before its top-k, and the corpus still never
+# shuffles.
 _HARD_NEG_SQL = """
 WITH normed AS (
     SELECT vec_id, label,
@@ -700,9 +698,8 @@ def hard_negatives_topk(spark, sf_dir):
         normed,
         k=5,
         metric="dot_normed",
-        dim=dim,
         keep_corpus_cols=["label"],
-        candidate_filter=F.col("label") != F.col("query_label"),
+        exclude=("label", "query_label"),
     )
 
 
@@ -811,7 +808,7 @@ def semdedup_keep(spark, sf_dir):
     # measured 3x slower (2.9 s vs 0.9 s on the pair stage at sf0.1);
     # both forms are the same left fold from 0.0, so the oracle hash is
     # unaffected.
-    sim = vectors.DISTANCES["dot_normed"](F.col("ne_a"), F.col("ne_b"))
+    sim = vectors.dot_normed_distance(F.col("ne_a"), F.col("ne_b"))
     # dot_normed distance = 1 - dot; dup iff dot >= tau  <=>  dist <= 1-tau
     dups = (
         a.join(b, (F.col("cid") == F.col("cid_b")) & (F.col("id_a") < F.col("id_b")))
@@ -1072,7 +1069,7 @@ def semdedup_keep_scale(spark, sf_dir):
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("ne_b"),
     )
-    sim = vectors.DISTANCES["dot_normed"](F.col("ne_a"), F.col("ne_b"))
+    sim = vectors.dot_normed_distance(F.col("ne_a"), F.col("ne_b"))
     dups = (
         a.join(
             b,

@@ -197,3 +197,49 @@ def test_repl_history_survives_invocations(spark, tmp_path, monkeypatch):
     assert "help" in loaded and "status" in loaded, (
         f"history not reloaded across invocations: {loaded}"
     )
+
+
+def test_repl_load_index_releases_the_previous_index(spark, tmp_path, monkeypatch):
+    """A second ``load-index`` unpersists the first index and drops its
+    driver-resident copy."""
+    from cargo_chat_spark import cli
+    from cargo_chat_spark.functions.localframe import local_frame
+    from cargo_chat_spark.models.mock import MockProvider
+    from cargo_chat_spark.plans import retrieval
+    from cargo_chat_spark.sources import index_io
+
+    mock = MockProvider(cli.MOCK_DIM)
+    rows = [(i, f"src/m{i}.rs", f"fn parse_{i}() {{}}", "Rust", "rs",
+             mock.embed_one(f"fn parse_{i}")) for i in range(6)]
+    index_dir = str(tmp_path / "idx")
+    index_io.write_index(local_frame(
+        spark, rows, "chunk_id bigint, file string, code string, language string, "
+        "extension string, embedding array<double>"), index_dir, cli.MOCK_DIM)
+    loaded = []
+
+    def read_index(spark, path):
+        df, meta = index_io.read_index(spark, path)
+        loaded.append(df)
+        return df, meta
+
+    served = []
+
+    def commands():
+        yield f"load-index {index_dir}"
+        yield "query how does parse work"
+        served.append(retrieval._resident.get("index") is loaded[0])
+        yield f"load-index {index_dir}"
+        yield "exit"
+
+    monkeypatch.delenv("OPENAI_API_KEY", raising=False)
+    feed = commands()
+    monkeypatch.setattr("builtins.input", lambda *_: next(feed))
+    cli._interactive_loop(spark, None, "usage", read_index)
+    first, second = loaded
+    try:
+        assert served == [True], "the query did not serve the index from the driver"
+        assert first.is_cached is False
+        assert second.is_cached is True
+        assert retrieval._resident.get("index") is not first
+    finally:
+        second.unpersist()

@@ -21,7 +21,6 @@ CORE = {
     "cargo_chat_spark.functions.language",
     "cargo_chat_spark.functions.localframe",
     "cargo_chat_spark.functions.paths",
-    "cargo_chat_spark.functions.vectors",
     "cargo_chat_spark.models.mock",
     "cargo_chat_spark.models.openai_http",
     "cargo_chat_spark.models.provider",

@@ -19,24 +19,53 @@ def _plan(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, node) per line of a plan string; a node's subtree is the
+    run of following lines deeper than it."""
+    nodes = []
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        nodes.append((len(line) - len(node), node))
+    return nodes
+
+
+def _knn_kernel(plan: str):
+    """The nodes above (root first) and below the one k-NN kernel."""
+    nodes = _tree(plan)
+    at = [i for i, (_, n) in enumerate(nodes) if n.startswith("MapInPandas")]
+    assert len(at) == 1, f"expected exactly one MapInPandas k-NN kernel:\n{plan}"
+    depth = nodes[at[0]][0]
+    below = []
+    for d, n in nodes[at[0] + 1:]:
+        if d <= depth:
+            break
+        below.append(n)
+    above = []
+    for d, n in reversed(nodes[:at[0]]):
+        if d < depth:
+            above.append(n)
+            depth = d
+    return above[::-1], below
+
+
 def test_knn_map_side_topk_prune(spark):
-    plan = _plan(spark, "knn_exact")
-    assert "WindowGroupLimit" in plan and "Partial" in plan, (
+    above, _ = _knn_kernel(_plan(spark, "knn_exact"))
+    assert any(n.startswith("WindowGroupLimit") and n.endswith("Partial")
+               for n in above), (
         "kNN lost the map-side top-k prune — shuffle is O(|Q|x|C|) again"
     )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, (
-        "query side no longer broadcasts"
-    )
 
 
-def test_distance_stays_jvm_side(spark):
-    # Higher-order functions (zip_with/aggregate) are JVM-interpreted, not
-    # whole-stage-codegen'd — the invariant that matters is that no Python
-    # UDF boundary (Arrow/pickle round trip) crept into the hot path.
+def test_knn_kernel_reads_the_corpus_unshuffled(spark):
+    """The distance + top-k kernel is one Arrow-batched Python stage
+    reading the corpus where it lies: no shuffle below it, and no
+    row-at-a-time Python UDF anywhere."""
     plan = _plan(spark, "knn_exact")
-    assert "EvalPython" not in plan and "PythonUDF" not in plan, (
-        "Python UDF in the kNN hot path"
+    _, below = _knn_kernel(plan)
+    assert not any(n.startswith("Exchange") for n in below), (
+        f"the corpus shuffles before the k-NN kernel:\n{plan}"
     )
+    assert "BatchEvalPython" not in plan
 
 
 def test_embedding_neardup_is_distributed(spark):
@@ -53,135 +82,6 @@ def test_embedding_neardup_is_distributed(spark):
     assert "Exchange hashpartitioning(ga" in plan, (
         "corpus no longer shuffles to block-pair tiles"
     )
-
-
-def test_knn_batched_never_collects(spark, monkeypatch):
-    """VERDICT r1 item 5: the large-|Q| kNN path must not collect the query
-    side. count() (a scalar) is the only permitted action during plan
-    construction; any DataFrame.collect call fails the test."""
-    from pyspark.sql import DataFrame
-
-    def _no_collect(self):
-        raise AssertionError("knn_exact_batched collected a DataFrame")
-
-    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_batched
-    from cargo_chat_spark.sources.testdata import load_table
-
-    monkeypatch.setattr(DataFrame, "collect", _no_collect)
-    emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    # batch_size=2 forces multiple blocks even on the sf0.001 query set
-    df = knn_join_batched(_query_vectors(spark, SF_DIR_SMALL), emb, k=10, batch_size=2)
-    monkeypatch.undo()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # every block still gets the map-side top-k prune and a bounded broadcast
-    assert "WindowGroupLimit" in plan
-    assert "Union" in plan, "batched path should union per-block top-k results"
-    # and the per-block result matches the unbatched contract
-    base = catalog.SPARK_QUERIES["knn_exact"](spark, SF_DIR_SMALL)
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in df.select("query_id", "neighbor_id", "rank").collect()
-    )
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in base.select("query_id", "neighbor_id", "rank").collect()
-    )
-    assert got == want
-
-
-def test_knn_numpy_large_q_never_collects_full_side(spark, monkeypatch):
-    """VERDICT r10 item 2: knn_join_numpy's driver-collect is LIMIT-capped —
-    a query set above max_collect_queries must route to the no-collect
-    batched form, and no collect during plan construction may ever return
-    more than the cap+1 probe rows."""
-    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_numpy
-    from cargo_chat_spark.sources.testdata import load_table
-
-    cap = 3
-    seen: list[int] = []
-    emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    q = _query_vectors(spark, SF_DIR_SMALL)  # 5 queries at sf0.001 > cap
-    # patch the CONCRETE DataFrame class (Spark 4's classic session
-    # subclasses pyspark.sql.DataFrame and overrides collect)
-    cls = type(q)
-    orig = cls.collect
-
-    def _counting(self):
-        rows = orig(self)
-        seen.append(len(rows))
-        assert len(rows) <= cap + 1, (
-            f"knn_join_numpy collected {len(rows)} rows — the full query "
-            "side reached the driver despite exceeding the cap"
-        )
-        return rows
-
-    monkeypatch.setattr(cls, "collect", _counting)
-    df = knn_join_numpy(q, emb, k=10, max_collect_queries=cap)
-    monkeypatch.undo()
-    assert seen, "the bounded probe collect should have run"
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the fallback is the batched broadcast plan, not the Arrow kernel
-    assert "MapInPandas" not in plan, "large |Q| stayed on the collect path"
-    assert "WindowGroupLimit" in plan
-    # and the fallback result matches the unbatched exact contract
-    base = catalog.SPARK_QUERIES["knn_exact"](spark, SF_DIR_SMALL)
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in df.select("query_id", "neighbor_id", "rank").collect()
-    )
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in base.select("query_id", "neighbor_id", "rank").collect()
-    )
-    assert got == want
-
-
-def test_knn_batched_plan_growth_capped_above_union_ceiling(spark):
-    """VERDICT r11 item 2: above max_union_blocks the batched kNN must not
-    chain one broadcast-join branch per block (at |Q| = 10M the default
-    batch size is ~2,400 union branches in ONE logical plan — driver
-    analysis cost dominates). The over-cap plan is the shuffled
-    (block × corpus-partition) form: exactly one CartesianProduct node,
-    zero Unions, plan size O(1) in |Q| — with the same map-side
-    WindowGroupLimit prune and the same exact result."""
-    from cargo_chat_spark.queries.vector_search import _query_vectors, knn_join_batched
-    from cargo_chat_spark.sources.testdata import load_table
-
-    emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    q = _query_vectors(spark, SF_DIR_SMALL)  # 5 queries
-    def _one_join_no_union(plan: str) -> None:
-        assert "Union" not in plan, "over-cap path still unions per-block plans"
-        # exactly ONE join node, and it must be CartesianProduct: the
-        # SHUFFLE_REPLICATE_NL hint pins it so statistics underestimation
-        # can never re-broadcast an over-cap query side (r12 review).
-        assert plan.count("CartesianProduct") == 1, plan
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            "over-cap query side broadcast despite the replicate-NL hint"
-        )
-        assert "WindowGroupLimit" in plan, "shuffled path lost the top-k prune"
-
-    df = knn_join_batched(q, emb, k=10, batch_size=2, max_union_blocks=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    _one_join_no_union(plan)
-    # plan size stays flat as |Q| grows: many more blocks, same node count
-    q2 = emb.select(
-        emb.vec_id.alias("query_id"), emb.embedding.alias("query_vec")
-    )  # 500 queries -> 250 blocks at batch_size=2
-    df2 = knn_join_batched(q2, emb, k=3, batch_size=2, max_union_blocks=2)
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    _one_join_no_union(plan2)
-    assert len(plan2) < 4 * len(plan), "plan text scales with block count"
-    # unchanged exact contract on the over-cap path
-    base = catalog.SPARK_QUERIES["knn_exact"](spark, SF_DIR_SMALL)
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in df.select("query_id", "neighbor_id", "rank").collect()
-    )
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in base.select("query_id", "neighbor_id", "rank").collect()
-    )
-    assert got == want
 
 
 def test_bq_hamming_stays_jvm_side_and_prunes(spark):

@@ -20,6 +20,7 @@ from cargo_chat_spark.operators import filters
 from cargo_chat_spark.operators.context import assemble_prompt
 from cargo_chat_spark.operators.knn import knn_join
 from cargo_chat_spark.operators.ranking import reference_rank
+from cargo_chat_spark.plans import retrieval
 from cargo_chat_spark.plans.retrieval import retrieve
 
 DIM = 64
@@ -177,3 +178,15 @@ def test_query_dim_mismatch_raises(spark, index):
     loudly, not rank rows by NULL distances."""
     with pytest.raises(Exception, match=r"dim 65 but the corpus vectors have dim 64"):
         retrieve(spark, index, "how does the parser work", 5, RecordingProvider(DIM + 1))
+
+
+@pytest.mark.parametrize("mode", ["reference", "improved"])
+def test_driver_resident_path_matches_the_spark_path(spark, index, mode):
+    """The cached index is served from the driver; a derived, uncached
+    frame over the same rows takes knn_join. Both rank identically."""
+    query, provider = "how does the rust parser work", RecordingProvider()
+    resident = retrieve(spark, index, query, 5, provider, mode=mode)
+    assert retrieval._resident.get("index") is index
+    scanned = retrieve(spark, index.select("*"), query, 5, provider, mode=mode)
+    assert (resident["results"].orderBy("rank").collect()
+            == scanned["results"].orderBy("rank").collect())
