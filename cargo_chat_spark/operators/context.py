@@ -1,22 +1,32 @@
 """P6 context assembly, reference-exact format (SURVEY §2.2 P6).
 
-Reproduces the prompt construction of /root/reference/src/hyde.rs:645-740
-character-for-character:
+One formatter, :func:`format_prompt`, builds the prompt of hyde.rs:645-740
+character for character from a question's ranked rows: ``retrieve()``
+calls it on the rows it collected, and :func:`assemble_prompt` runs it
+per ``query_id`` group of a DataFrame (the ``context_assembly`` gate).
 
 - snippet block per candidate (idx+1 header, cleaned path, ".ext" suffix,
-  " [LANG]" uppercased, %.3f distance, **Chunk ID** = the 0-based
+  " [LANG]" uppercased, 3-decimal distance, **Chunk ID** = the 0-based
   enumerate rank — the §2.11 quirk, NOT a corpus id)
 - fence language = candidate language, defaulting to "rust" (the
   reference's unwrap_or("rust"), quirk preserved)
 - intent-conditioned instruction (hyde.rs:688-694)
 - system context from the repo profile description, else the generic line
 - fixed investigative response template (hyde.rs:696-719)
+
+Rust's ``trim()`` strips exactly Unicode ``White_Space`` (``str.strip()``
+also strips U+001C-U+001F; the JVM's regex ``\\s`` only ASCII), and its
+``{:.3}`` rounds the exact binary value, as Python's ``'%.3f'`` does
+(Java's rounds the shortest decimal half-up: 0.0625 -> 0.063, not 0.062).
 """
 
 from __future__ import annotations
 
+import math
+import re
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 INTENT_INSTRUCTIONS = {
     "how_it_works": "Focus on tracing the execution flow and explaining the algorithmic approach. Show how data moves through the system and what makes each component work internally.",
@@ -54,45 +64,53 @@ OUTPUT_TEMPLATE = """===== RESPONSE TEMPLATE =====
 
 =============================""".replace("{SP2}", "  ")
 
+# Rust's char::is_whitespace: the Unicode White_Space property
+RUST_WHITESPACE = "".join(
+    map(chr, [9, 10, 11, 12, 13, 32, 0x85, 0xA0, 0x1680, *range(0x2000, 0x200B),
+              0x2028, 0x2029, 0x202F, 0x205F, 0x3000])
+)
 
-def snippet_block(
-    rank: Column, file: Column, code: Column, language: Column, extension: Column,
-    distance: Column, chunk_index: Column | None = None,
-) -> Column:
-    """One "## Code Reference N" block (hyde.rs:648-685); ``rank`` is the
-    1-based output rank (idx+1). **Chunk ID** prints ``chunk_index`` — the
-    0-based enumerate position HydeResult.index carries from the RAW k*2
-    similarity output, assigned BEFORE filtering/rerank (hyde.rs:1227-1231)
-    — so after filters drop candidates the printed ids are non-contiguous,
-    exactly like the reference. Falls back to rank-1 (contiguous) only when
-    no index column is supplied."""
-    clean = F.regexp_replace(file, r"^(\./)+", "")
-    ext_info = F.when(extension.isNotNull(), F.concat(F.lit("."), extension)).otherwise("")
-    lang_info = F.when(
-        language.isNotNull(), F.concat(F.lit(" ["), F.upper(language), F.lit("]"))
-    ).otherwise("")
-    fence = F.coalesce(language, F.lit("rust"))
-    cid = (rank - 1) if chunk_index is None else chunk_index
-    return F.concat(
-        F.lit("## Code Reference "), rank.cast("string"), F.lit(" - "),
-        clean, ext_info, lang_info, F.lit("\n"),
-        F.lit("**Location:** "), clean, F.lit("\n"),
-        F.lit("**Relevance Score:** "), F.format_string("%.3f", distance),
-        F.lit(" (lower = more relevant)\n"),
-        F.lit("**Chunk ID:** "), cid.cast("string"), F.lit("\n\n"),
-        F.lit("```"), fence, F.lit("\n"),
-        # Rust str::trim strips ALL whitespace; Spark's trim() only strips
-        # spaces — regexp matches the reference exactly
-        F.regexp_replace(code, r"^\s+|\s+$", ""), F.lit("```\n"),
+
+def format_prompt(
+    question: str, intent: str | None, rows, repo_description: str | None = None
+) -> str:
+    """The user prompt (hyde.rs:722-740) for ``rows`` in rank order: mappings
+    with ``rank, file, code, language, extension, distance`` and an optional
+    ``chunk_index``, one "## Code Reference N" block each (hyde.rs:648-685).
+
+    **Chunk ID** prints ``chunk_index``, the 0-based position in the RAW
+    k*2 similarity output, assigned BEFORE filtering/rerank
+    (hyde.rs:1227-1231), so filtered results print non-contiguous ids, like
+    the reference; without it, it prints rank-1."""
+    blocks = []
+    for r in rows:
+        clean = re.sub(r"^(\./)+", "", r["file"])
+        ext_info = f".{r['extension']}" if r["extension"] is not None else ""
+        lang = r["language"]
+        lang_info = f" [{lang.upper()}]" if lang is not None else ""
+        cid = r.get("chunk_index")
+        # Rust prints NaN as NaN and infinities as inf, -inf
+        dist = "NaN" if math.isnan(r["distance"]) else "%.3f" % r["distance"]
+        blocks.append(
+            f"## Code Reference {r['rank']} - {clean}{ext_info}{lang_info}\n"
+            f"**Location:** {clean}\n"
+            f"**Relevance Score:** {dist} (lower = more relevant)\n"
+            f"**Chunk ID:** {r['rank'] - 1 if cid is None else int(cid)}\n\n"
+            f"```{lang if lang is not None else 'rust'}\n"
+            f"{r['code'].strip(RUST_WHITESPACE)}```\n"
+        )
+    system_context = (
+        f"You are analyzing {repo_description}"
+        if repo_description
+        else "You are analyzing a software repository"
     )
-
-
-def intent_instruction(intent: Column) -> Column:
-    result = None
-    for k, v in INTENT_INSTRUCTIONS.items():
-        clause = (intent == k, F.lit(v))
-        result = F.when(*clause) if result is None else result.when(*clause)
-    return result.otherwise(F.lit(DEFAULT_INSTRUCTION))
+    return (
+        f"# User Query\n{question}\n\n"
+        f"# Analysis Task\n{INTENT_INSTRUCTIONS.get(intent, DEFAULT_INSTRUCTION)}\n\n"
+        f"# System Context\n{system_context}\n\n"
+        f"# Available Code References\n" + "\n\n".join(blocks)
+        + "\n\n" + OUTPUT_TEMPLATE
+    )
 
 
 def assemble_prompt(
@@ -101,39 +119,24 @@ def assemble_prompt(
     repo_description: str | None = None,
 ) -> DataFrame:
     """ranked (query_id, rank, file, code, language, extension, distance,
-    intent, + query_text col, optionally chunk_index) → one user_prompt row
-    per query (hyde.rs:722-740 layout). When ``chunk_index`` is present it
-    is printed as Chunk ID (the reference's pre-filter enumerate index)."""
-    system_context = (
-        f"You are analyzing {repo_description}"
-        if repo_description
-        else "You are analyzing a software repository"
-    )
-    block = snippet_block(
-        F.col("rank"), F.col("file"), F.col("code"),
-        F.col("language"), F.col("extension"), F.col("distance"),
-        chunk_index=(
-            F.col("chunk_index") if "chunk_index" in ranked.columns else None
-        ),
-    )
-    return (
-        ranked.withColumn("_block", block)
-        .groupBy("query_id")
-        .agg(
-            F.concat(
-                F.lit("# User Query\n"), F.first(query_text),
-                F.lit("\n\n# Analysis Task\n"),
-                F.first(intent_instruction(F.col("intent"))),
-                F.lit("\n\n# System Context\n"), F.lit(system_context),
-                F.lit("\n\n# Available Code References\n"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("rank", "_block"))),
-                        lambda x: x["_block"],
-                    ),
-                    "\n\n",
-                ),
-                F.lit("\n\n"), F.lit(OUTPUT_TEMPLATE),
-            ).alias("user_prompt")
+    intent, optionally chunk_index) → one ``(query_id, user_prompt)`` row
+    per query: :func:`format_prompt` over each ``query_id`` group, in rank
+    order, with the group's first ``query_text`` as the question."""
+    cols = ["rank", "file", "code", "language", "extension", "distance"]
+    if "chunk_index" in ranked.columns:
+        cols.append("chunk_index")
+
+    def prompt(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("rank")
+        text = format_prompt(
+            pdf["_query_text"].iloc[0], pdf["intent"].iloc[0],
+            pdf[cols].to_dict("records"), repo_description,
         )
+        return pd.DataFrame({"query_id": [pdf["query_id"].iloc[0]], "user_prompt": [text]})
+
+    key_type = ranked.schema["query_id"].dataType.simpleString()
+    return (
+        ranked.select("query_id", query_text.alias("_query_text"), "intent", *cols)
+        .groupBy("query_id")
+        .applyInPandas(prompt, f"query_id {key_type}, user_prompt string")
     )

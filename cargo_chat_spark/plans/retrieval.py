@@ -14,10 +14,11 @@ Two modes:
 
 from __future__ import annotations
 
+import math
 from dataclasses import asdict
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StructField, StructType,
@@ -26,7 +27,7 @@ from pyspark.sql.types import (
 from cargo_chat_spark.functions.localframe import local_frame
 from cargo_chat_spark.models.provider import Classification, ModelProvider
 from cargo_chat_spark.operators import filters, ranking
-from cargo_chat_spark.operators.context import assemble_prompt
+from cargo_chat_spark.operators.context import format_prompt
 from cargo_chat_spark.operators.knn import knn_join, topk_block, vector_matrix
 
 KEEP_COLS = ["file", "code", "language", "extension"]
@@ -116,14 +117,6 @@ def _resident_hits(
     return local_frame(spark, rows, res["schema"])
 
 
-def _rerank_order(ranked: DataFrame) -> DataFrame:
-    """Re-rank by descending rerank score, chunk_id breaking ties (M5/J2/O4)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rerank_score"), F.asc("chunk_id")
-    )
-    return ranked.withColumn("rank", F.row_number().over(w))
-
-
 def retrieve(
     spark: SparkSession,
     index: DataFrame,
@@ -136,8 +129,9 @@ def retrieve(
     """Full retrieve() (hyde.rs:468-576) under a pluggable provider.
 
     The question's ranked plan (k-NN → filters → ``reference_rank``) runs
-    exactly once: its rows are collected, and both the results and the
-    prompt are built from them.
+    exactly once: its rows are collected, and the rerank order, the
+    results and the prompt (``context.format_prompt``) are built from them
+    in the driver, with no further Spark job.
 
     The k-NN runs in the driver when ``index`` is cached and its plan's
     size estimate is at most ``spark.sql.autoBroadcastJoinThreshold``
@@ -157,9 +151,11 @@ def retrieve(
     - ``answer``: the provider's token iterator over the prompt.
 
     Rerank (SURVEY M5, hyde.rs:530-542) scores the collected rows with one
-    in-process provider call and re-orders them by (score desc, chunk_id).
-    There are at most 2k of them, and the reference scores each pair on
-    its own (rerank.rs:7-19), so where the scoring runs cannot change it.
+    in-process provider call and sorts them by (score desc, chunk_id),
+    renumbering ``rank`` from 1. There are at most 2k of them, and the
+    reference scores each pair on its own (rerank.rs:7-19), so where the
+    scoring runs cannot change it. A provider that returns a score count
+    other than the row count, or a NaN score, raises ``ValueError``.
     """
     cls = provider.classify_query(query)  # M3 (driver-side: one tiny call)
     hypo = provider.hyde_document(query, cls.intent, 1000)  # M4
@@ -208,26 +204,28 @@ def retrieve(
     ranked = ranking.reference_rank(candidates)
 
     schema = ranked.schema
-    rows = ranked.collect()  # the one execution of the question's plan
+    # the one execution of the question's plan, in rank order
+    rows = sorted((r.asDict() for r in ranked.collect()), key=lambda r: r["rank"])
     if use_rerank:
         schema = StructType([*schema.fields, StructField("rerank_score", DoubleType())])
         scores = provider.rerank_scores(query, [r["code"] for r in rows])
-        rows = [(*r, s) for r, s in zip(rows, scores)]
-    # at most 2k rows in one partition: the rerank window, the prompt's
-    # groupBy and a caller's orderBy then need no shuffle
-    results = local_frame(spark, rows, schema).coalesce(1)
-    if use_rerank:
-        results = _rerank_order(results)
+        # a short list would drop rows; a NaN has no place in the order
+        name = f"{type(provider).__name__}.rerank_scores"
+        if len(scores) != len(rows):
+            raise ValueError(f"{name} returned {len(scores)} scores for {len(rows)} rows")
+        if any(map(math.isnan, scores)):
+            raise ValueError(f"{name} returned a NaN score")
+        for r, s in zip(rows, scores):
+            r["rerank_score"] = float(s)
+        rows.sort(key=lambda r: (-r["rerank_score"], r["chunk_id"]))
+        for rank, r in enumerate(rows, 1):
+            r["rank"] = rank
+    # at most 2k rows in one partition: a caller's orderBy needs no shuffle
+    results = local_frame(spark, [tuple(r.values()) for r in rows], schema).coalesce(1)
 
     # P6 context assembly — reference-exact prompt format (hyde.rs:645-740)
     # over the same rows; no rows leaves the bare question as the prompt
-    prompt = (
-        assemble_prompt(
-            results.withColumn("query_text", F.lit(query)), F.col("query_text")
-        ).first()["user_prompt"]
-        if rows
-        else query
-    )
+    prompt = format_prompt(query, cls.intent, rows) if rows else query
     answer = provider.synthesize_answer(prompt)  # M6
 
     return {

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from cargo_chat_spark import caching
 from cargo_chat_spark.functions import hashing, vectors
 from cargo_chat_spark.queries.registry import register
 from cargo_chat_spark.sources.testdata import load_table, parquet_rows
@@ -886,25 +887,20 @@ def _rpt_leaves(spark, sf_dir, depth: int | None = None):
     return df.select("vec_id", "t", "node")
 
 
-@register("rp_tree_forest_topk", sql=_RPT_SQL)
-def rp_tree_forest_topk(spark, sf_dir):
-    """{N_TREES_RPT} recursive median-split random-projection trees (the
-    literal ann.rs:254 / `vector`-crate structure), depth {DEPTH_RPT}:
-    candidates = union of the query's leaf across trees (a (t, leaf)
-    equi-join on the balanced leaf frame from :func:`_rpt_leaves`),
-    exact re-rank top-10. Depth is the occupancy lever — it grows with
-    log2(corpus/leaf_target) at scale; measured recall@10 vs exact:
-    0.92 sf0.001 / 0.86 sf0.01."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # the leaf frame (mapInPandas projection + DEPTH rank-window levels)
-    # feeds BOTH sides of the candidate self-join — materialize it once
-    # (guide §5; captured plan before: 4 MapInPandas / 8 parquet scans,
-    # the whole chain executed twice)
-    leaves = _rpt_leaves(spark, sf_dir).localCheckpoint(eager=True)
+def _rpt_candidates(spark, sf_dir):
+    """(query_id, neighbor_id): the vectors that share a leaf with a query
+    (``vec_id % 100 == 0``) in some tree. The leaf frame (mapInPandas
+    projection + DEPTH rank-window levels) feeds BOTH sides of this
+    self-join, so it is persisted once per session and fixture and shared
+    by both RP-tree entries (captured plan unmaterialized: 4 MapInPandas /
+    8 parquet scans). The persist is lazy: building a plan runs no job."""
+    leaves = caching.memo_persist(
+        spark, ("rpt_leaves", sf_dir), lambda: _rpt_leaves(spark, sf_dir)
+    )
     qleaves = leaves.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "t", "node"
     )
-    cand = (
+    return (
         qleaves.join(
             leaves.select(F.col("vec_id").alias("neighbor_id"), "t", "node"),
             ["t", "node"],
@@ -912,6 +908,19 @@ def rp_tree_forest_topk(spark, sf_dir):
         .select("query_id", "neighbor_id")
         .distinct()
     )
+
+
+@register("rp_tree_forest_topk", sql=_RPT_SQL)
+def rp_tree_forest_topk(spark, sf_dir):
+    """{N_TREES_RPT} recursive median-split random-projection trees (the
+    literal ann.rs:254 / `vector`-crate structure), depth {DEPTH_RPT}:
+    candidates = union of the query's leaf across trees (a (t, leaf)
+    equi-join on the balanced leaf frame, :func:`_rpt_candidates`),
+    exact re-rank top-10. Depth is the occupancy lever — it grows with
+    log2(corpus/leaf_target) at scale; measured recall@10 vs exact:
+    0.92 sf0.001 / 0.86 sf0.01."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cand = _rpt_candidates(spark, sf_dir)
     qvecs = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -1008,19 +1017,7 @@ def rp_tree_filtered_topk(spark, sf_dir):
     label-mismatch filter -> truncate k. Reference: hyde.rs:500-519
     (over-fetch + post-filter), ann.rs:254 (the forest)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # materialized once for the self-join, as in rp_tree_forest_topk
-    leaves = _rpt_leaves(spark, sf_dir).localCheckpoint(eager=True)
-    qleaves = leaves.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "t", "node"
-    )
-    cand = (
-        qleaves.join(
-            leaves.select(F.col("vec_id").alias("neighbor_id"), "t", "node"),
-            ["t", "node"],
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    cand = _rpt_candidates(spark, sf_dir)
     qvecs = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),

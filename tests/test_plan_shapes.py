@@ -157,6 +157,33 @@ def test_rp_tree_candidates_are_equijoin(spark):
     )
 
 
+def test_rp_tree_plans_build_without_jobs(spark):
+    """Both RP-tree entries share one lazily persisted leaf frame: building
+    their plans, twice each, runs no job over the data (an eager
+    checkpoint ran the whole leaf pipeline on every build). The only jobs
+    allowed are the parquet schema reads of ``load_table``."""
+    import time
+
+    from cargo_chat_spark import caching
+
+    caching.invalidate(("rpt_leaves", SF_DIR_SMALL))
+    sc, group = spark.sparkContext, "rp-tree-plan-build"
+    sc.setJobGroup(group, group)
+    try:
+        for name in ["rp_tree_forest_topk", "rp_tree_filtered_topk"] * 2:
+            catalog.SPARK_QUERIES[name](spark, SF_DIR_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(1.0)  # let the listener bus deliver every job it saw
+    st = sc.statusTracker()
+    stages = [
+        st.getStageInfo(sid).name
+        for job in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(job).stageIds
+    ]
+    assert all(name.startswith("parquet at ") for name in stages), stages
+
+
 def test_int8_shortlist_prunes_map_side(spark):
     """The quantized candidate pass must keep knn_exact's posture: the
     corpus never shuffles — since r13 the integer shortlist comes from a

@@ -10,6 +10,8 @@ empty result.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -190,3 +192,62 @@ def test_driver_resident_path_matches_the_spark_path(spark, index, mode):
     scanned = retrieve(spark, index.select("*"), query, 5, provider, mode=mode)
     assert (resident["results"].orderBy("rank").collect()
             == scanned["results"].orderBy("rank").collect())
+
+
+class ScoreProvider(RecordingProvider):
+    """The recording mock with a rewritten rerank score list."""
+
+    def __init__(self, rewrite):
+        super().__init__()
+        self.rewrite = rewrite
+
+    def rerank_scores(self, query, docs):
+        return self.rewrite(super().rerank_scores(query, docs))
+
+
+@pytest.mark.parametrize("rewrite, message", [
+    (lambda s: s[:-1], r"ScoreProvider\.rerank_scores returned \d+ scores for \d+ rows"),
+    (lambda s: [float("nan"), *s[1:]], r"ScoreProvider\.rerank_scores returned a NaN score"),
+], ids=["short", "nan"])
+def test_bad_rerank_scores_raise(spark, index, rewrite, message):
+    """A short score list would silently drop results, and a NaN score
+    has no place in the descending order."""
+    with pytest.raises(ValueError, match=message):
+        retrieve(spark, index, "how does the rust parser work", 5,
+                 ScoreProvider(rewrite), use_rerank=True)
+
+
+def _jobs_of(spark, group, call):
+    """Spark jobs ``call()`` runs under job group ``group``, read once the
+    listener bus has delivered them (two reads 0.2 s apart agree)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = None
+    for _ in range(25):
+        now = len(sc.statusTracker().getJobIdsForGroup(group))
+        if now == last:
+            break
+        last = now
+        time.sleep(0.2)
+    return now
+
+
+@pytest.mark.parametrize("rerank", [False, True])
+def test_driver_resident_question_job_count(spark, index, rerank):
+    """A reference-mode question over the driver-resident index runs only
+    the collect of its ranked rows: 3 jobs, as adaptive execution runs its
+    query stages. The rerank order and the prompt are built in the driver
+    and add none (a prompt built in Spark made it 4)."""
+    query, provider = "how does the rust parser work", RecordingProvider()
+    retrieve(spark, index, query, 5, provider)  # fills the resident slot
+    assert retrieval._resident.get("index") is index
+
+    def ask():
+        out = retrieve(spark, index, query, 5, provider, use_rerank=rerank)
+        list(out["answer"])
+
+    assert _jobs_of(spark, f"retrieve-jobs-{rerank}", ask) == 3
