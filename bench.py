@@ -132,7 +132,6 @@ DETAIL_EXTRA = [
     "wordfreq_cdc_dict",        # new r8: dict follows snapshot CDC
     "nb_filter_report",         # new r8: classifier-composed curation
     "rp_lsh_forest_topk",       # batch forest (build gate; headline = probe)
-    "token_budget_mix",         # new r8: per-source token-budget mixing
     "rp_forest_cdc_synced",     # new r8: forest follows the CDC feed
     "answer_synthesize_mock",   # new r9: M6 mock tail over context assembly
     "ann_recall_report",        # new r9: ANN recall@10 as data (4 members)
@@ -152,7 +151,6 @@ DETAIL_EXTRA = [
     "jl_project_topk",          # new r10: JL-projected 16-dim top-k
     "jl_distortion_report",     # new r10: JL lemma histogram card
     "bpe_fertility_by_lang",    # new r10: chars/token by language
-    "epoch_schedule_mix",       # new r10: ≤4-epoch repetition schedule
     "unigram_piece_vocab",      # new r10: unigram piece table + costs
     "unigram_viterbi_encode",   # new r10: integer-cost Viterbi encode
     "countmin_word_counts",     # new r10: Count-Min exactly-hashed grid
@@ -166,7 +164,6 @@ DETAIL_EXTRA = [
     "kfold_group_assign",       # new r11: group-aware k-fold assignment
     "pmi_bigrams_top",          # new r11: integer micro-nat PMI card
     "corpus_kl_drift_report",   # new r11: unigram KL drift across versions
-    "packing_efficiency_report",  # new r11: bin fill/overflow/underfill card
     "neardup_cluster_histogram",  # new r11: cluster-size health card
     "doc_length_percentiles",   # new r11: exact per-source length pctls
     "lsh_band_sweep_report",    # new r11: (b x r) precision sweep card
@@ -239,7 +236,7 @@ _R12_CONSOLIDATED_BARS = {
     "curation_pipeline": 2.77, "curriculum_phase_assign": 1.25, "dedup_exact": 0.39,
     "dedup_mor_apply": 1.54, "doc_length_percentiles": 1.24, "dsir_cdc_model": 1.95,
     "dsir_gumbel_resample": 3.43, "dsir_logratio_weights": 3.77, "dsir_topk_selection": 3.8,
-    "embedding_drift_cdc_report": 4.2, "epoch_schedule_mix": 0.6, "events_asof_join": 0.77,
+    "embedding_drift_cdc_report": 4.2, "events_asof_join": 0.77,
     "events_compact_small_files": 3.03, "events_deletion_vectors": 3.07, "events_gap_fill_locf": 0.86,
     "events_merge_on_read": 3.86, "events_metadata_count": 1.72, "events_ohlc_hourly": 0.75,
     "events_orc_roundtrip": 1.23, "events_range_pruned_scan": 1.79, "events_retention_delete": 1.84,
@@ -261,7 +258,7 @@ _R12_CONSOLIDATED_BARS = {
     "minhash_lsh_pairs": 3.07, "mmr_diversified_topk": 1.57,
     "nb_calibration_report": 2.57, "nb_classify_docs": 1.27, "nb_filter_report": 2.34,
     "nb_train_logprobs": 0.7, "neardup_cluster_histogram": 2.12, "nfc_normalize_text": 0.55,
-    "ngram_diversity_report": 1.11, "packing_efficiency_report": 0.72,
+    "ngram_diversity_report": 1.11,
     "paragraph_dedup_rebuild": 1.19, "part_copurchase_pagerank": 7.23, "part_name_entities_recursive": 2.67,
     "phrase_match_docs": 0.49, "phrase_match_persisted": 0.31, "pmi_bigrams_top": 1.59,
     "pq_knn_rerank": 2.27,
@@ -269,7 +266,7 @@ _R12_CONSOLIDATED_BARS = {
     "retrieval_rank_reference": 1.79,
     "rp_forest_cdc_synced": 2.39, "rp_forest_persisted": 3.32, "rp_lsh_forest_topk": 3.02,
     "semdedup_keep": 4.56,
-    "table_profile": 1.96, "token_budget_mix": 0.32,
+    "table_profile": 1.96,
     "unigram_piece_vocab": 0.57, "unigram_viterbi_encode": 0.9, "vocab_oov_report": 0.71,
     "wordfreq_cdc_dict": 0.73, "zipf_fit_report": 0.5,
 }
@@ -304,11 +301,11 @@ _LEGACY_BARS = {
     "rolling_7d_actives": 0.89, "rp_lsh_topk": 2.5,
     "session_paths_top": 0.89, "simhash_fingerprints": 1.9,
     "similar_part_names": 0.48, "source_quality_report": 0.98,
-    "temperature_mix": 0.76, "tfidf_top_terms": 1.66, "token_count": 0.31,
+    "tfidf_top_terms": 1.66, "token_count": 0.31,
     "token_count_arrow": 0.38, "token_count_pandas": 0.29, "token_spans_udtf": 0.74,
     "unigram_logprob": 1.0, "user_value_scd2": 0.42,
     "value_equidepth_histogram": 0.69, "value_histogram": 0.4, "value_stats_salted": 0.39,
-    "value_zscore_outliers": 0.72, "weekly_hll_rollup": 0.52, "weighted_sample": 0.29,
+    "value_zscore_outliers": 0.72, "weekly_hll_rollup": 0.52,
     "word_entropy": 1.12,
 }
 

@@ -71,9 +71,7 @@ _FINAL_RANK = """row_number() OVER (
     PARTITION BY query_id ORDER BY distance, _sel_rank)"""
 
 
-def reference_rank(
-    candidates: DataFrame, k_col: str = "k", final_sort: bool = True
-) -> DataFrame:
+def reference_rank(candidates: DataFrame, final_sort: bool = True) -> DataFrame:
     """Input: candidate rows already joined with their query's
     classification columns (query_id, chunk_id, file, extension, language,
     distance, wants_code, confidence, intent, q_language, k).
@@ -106,7 +104,7 @@ def reference_rank(
         )
         .where(_INCLUDED)
         .selectExpr("*", f"{_SEL_RANK} AS _sel_rank")
-        .where(f"_sel_rank <= `{k_col}`")
+        .where("_sel_rank <= k")
     )
     rank = _FINAL_RANK if final_sort else "_sel_rank"
     return selected.selectExpr(*out_cols, f"{rank} AS rank")

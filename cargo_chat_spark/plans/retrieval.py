@@ -38,23 +38,21 @@ KEEP_COLS = ["file", "code", "language", "extension"]
 _resident: dict = {}
 
 
-def _classification_df(
-    spark: SparkSession, cls: Classification, query_id: int, k: int
-) -> DataFrame:
-    # a tuple row: local_frame sends a dict row down the parallelize()
-    # path, which plans as Scan ExistingRDD and runs a Python-worker job
-    # every time the plan executes
-    row = (
-        query_id, cls.language, cls.intent, cls.wants_code,
-        float(cls.confidence), cls.target_folders, cls.target_extensions,
-        cls.exclude_patterns, k,
-    )
-    schema = (
-        "query_id bigint, q_language string, intent string, wants_code boolean, "
-        "confidence double, target_folders array<string>, "
-        "target_extensions array<string>, exclude_patterns array<string>, k int"
-    )
-    return local_frame(spark, [row], schema)
+def _classification_cols(cls: Classification, k: int) -> dict:
+    """The question's classification as typed literal columns. A None
+    scope stays a NULL array, so the filters treat it, like an empty one,
+    as "no filter"."""
+    typed = {
+        "q_language": (cls.language, "string"),
+        "intent": (cls.intent, "string"),
+        "wants_code": (cls.wants_code, "boolean"),
+        "confidence": (float(cls.confidence), "double"),
+        "target_folders": (cls.target_folders, "array<string>"),
+        "target_extensions": (cls.target_extensions, "array<string>"),
+        "exclude_patterns": (cls.exclude_patterns, "array<string>"),
+        "k": (k, "int"),
+    }
+    return {name: F.lit(value).cast(dtype) for name, (value, dtype) in typed.items()}
 
 
 def release_resident(index: DataFrame) -> None:
@@ -97,8 +95,9 @@ def _resident_hits(
     spark: SparkSession, res: dict, qvec, m: int, in_scope: DataFrame | None
 ) -> DataFrame:
     """knn_join's output for one question, computed in the driver over
-    the resident index; ``in_scope`` limits the candidates to its
-    ``chunk_id``s (one job)."""
+    the resident index, as one partition so the ranking windows need no
+    exchange; ``in_scope`` limits the candidates to its ``chunk_id``s
+    (one job)."""
     mask = None
     if in_scope is not None:
         in_ids = [r[0] for r in in_scope.select("chunk_id").collect()]
@@ -114,7 +113,7 @@ def _resident_hits(
             zip(res["ids"][ci], dist, meta.itertuples(index=False)), 1
         )
     ]
-    return local_frame(spark, rows, res["schema"])
+    return local_frame(spark, rows, res["schema"]).coalesce(1)
 
 
 def retrieve(
@@ -163,7 +162,7 @@ def retrieve(
     # (hyde.rs:500, SURVEY §2.11)
     qvec = provider.embed_batch([hypo])[0]
 
-    cls_df = F.broadcast(_classification_df(spark, cls, 0, k))
+    cls_cols = _classification_cols(cls, k)
 
     # improved mode: predicate pushdown, the scope filters run BEFORE the
     # distance scan. The 2k over-fetch is kept — the intent doc-caps in
@@ -173,7 +172,7 @@ def retrieve(
     # top-2k is also in the filtered top-2k).
     in_scope = None
     if mode == "improved":
-        in_scope = index.crossJoin(cls_df).where(filters.scope_match())
+        in_scope = index.withColumns(cls_cols).where(filters.scope_match())
     res = _resident_index(spark, index)
     if res is not None:
         hits = _resident_hits(spark, res, qvec, 2 * k, in_scope)
@@ -187,7 +186,7 @@ def retrieve(
             2 * k,  # O2 over-fetch (hyde.rs:500)
             keep_corpus_cols=KEEP_COLS,
         )
-    joined = hits.join(cls_df, "query_id")
+    joined = hits.withColumns(cls_cols)
     if mode != "improved":
         joined = joined.where(filters.scope_match())
     # chunk_index is the reference's HydeResult.index: the 0-based

@@ -1,12 +1,13 @@
 """Shared deterministic-draw primitives (Spark + DuckDB twins).
 
-Membership decisions at 100 TB (sampling rates, train/val/test splits)
-must be PURE FUNCTIONS of the row key — reproducible across engines,
-runs, repartitionings, and incremental appends — so both the sampling
-queries and the dedup-aware split build on the same md5-low-32-bits draw
-in [0, 10000). Kept in a leaf module so ``queries.dedup`` can reuse it
-without importing ``queries.sampling`` (which would reorder registry
-registration between the two modules).
+Membership decisions at 100 TB (train/val/test splits, k-fold
+assignment) must be PURE FUNCTIONS of the row key — reproducible across
+engines, runs, repartitionings, and incremental appends — so the
+curation funnel's per-doc split and the dedup-aware group splits build
+on the same md5-low-32-bits draw in [0, 10000). Kept in a leaf module so
+``queries.curation`` and ``queries.dedup`` share it without importing
+each other (which would reorder registry registration between the two
+modules).
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 
 DRAW_MOD = 10_000
 
-# 98/1/1 split boundaries shared by dataset_split and leakage_safe_split
+# 98/1/1 split boundaries shared by curation_pipeline and leakage_safe_split
 SPLIT_VAL_LO = 9_800   # draw < 9800 -> train
 SPLIT_TEST_LO = 9_900  # 9800 <= draw < 9900 -> val; >= 9900 -> test
 

@@ -31,6 +31,7 @@ dedup/ANN families extend its retrieval surface.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.caching import register_memo as memo_register
@@ -197,14 +198,52 @@ def bpe_encode_sample(spark, sf_dir):
 # -------------------------------------------- tokenize → pack composition
 # The end-to-end training-data story: token counts come from the LEARNED
 # tokenizer (not the whitespace heuristic), then documents pack into
-# token-budget bins with the shared per-shard running-sum window
-# (queries/sampling.py::pack_by_budget). The corpus is encoded via its
+# token-budget bins with the per-shard running-sum window
+# (pack_by_budget below). The corpus is encoded via its
 # VOCABULARY: the dict frame is encoded once (|unique words| Arrow rows,
 # never |corpus tokens|), and per-doc totals come from an equi-join of the
 # exploded doc words against the (word, n_tokens) map — broadcast here;
 # at a 10^9-word web vocabulary the same plan falls back to a shuffle-hash
 # join on `word` (both sides hash-partitioned, no plan change needed).
 _BPE_PACK_BUDGET = 1024
+_N_SHARDS = 32
+
+
+def pack_by_budget(toks, budget: int):
+    """Pack a (doc_id, shard, n_tokens) frame into token-budget bins.
+
+    Running sum per shard, bin = floor(preceding_total / budget): a doc
+    overflows into the next bin exactly when the budget would be
+    crossed, matching a streaming packer fed in id order. One shuffle on
+    shard, per-shard linear window — no global sort, scales with shards.
+    Shared by bpe_pack_tokens and curated_pack_tokens."""
+    w = (
+        Window.partitionBy("shard")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    packed = toks.withColumn(
+        "bin_idx",
+        F.floor(
+            (F.sum("n_tokens").over(w) - F.col("n_tokens")) / budget
+        ).cast("bigint"),
+    )
+    return (
+        # pack_id = shard << 40 | bin: collision needs 2**40 bins in one
+        # shard (~1.1e15 tokens at budget 1024) — beyond any single-corpus
+        # scale
+        packed.groupBy(
+            (F.shiftleft(F.col("shard").cast("bigint"), 40) + F.col("bin_idx"))
+            .cast("bigint")
+            .alias("pack_id")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        )
+    )
 
 
 def _pack_tail_sql(corpus: str) -> str:
@@ -233,7 +272,8 @@ toks AS (
 packed AS (
   SELECT shard, doc_id, n_tokens,
     -- floor() explicitly: DuckDB CAST(DOUBLE AS BIGINT) rounds while
-    -- Spark's cast truncates (same note as sampling.py::_PACK_SQL)
+    -- Spark's cast truncates, so without it the engines split packs at
+    -- different boundaries
     CAST(floor((SUM(n_tokens) OVER (
         PARTITION BY shard ORDER BY doc_id
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
@@ -255,8 +295,6 @@ _BPE_PACK_SQL = _unrolled_chain(N_MERGES) + _pack_tail_sql("documents")
 
 def _pack_learned(docs, wf, merges):
     """docs (doc_id, text) + a tokenizer learned from ``wf`` → packs."""
-    from cargo_chat_spark.queries.sampling import _N_SHARDS, pack_by_budget
-
     vocab = encode_words(wf.select("word"), merges).select(
         "word", F.size("tokens").cast("bigint").alias("wt")
     )

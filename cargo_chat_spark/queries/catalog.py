@@ -25,7 +25,6 @@ from cargo_chat_spark.queries import rerank  # noqa: F401
 from cargo_chat_spark.queries import multimodal_queries  # noqa: F401
 from cargo_chat_spark.queries import profiling  # noqa: F401
 from cargo_chat_spark.queries import retrieval  # noqa: F401
-from cargo_chat_spark.queries import sampling  # noqa: F401
 from cargo_chat_spark.queries import similarity  # noqa: F401
 from cargo_chat_spark.queries import sketch_queries  # noqa: F401
 from cargo_chat_spark.queries import storage  # noqa: F401
@@ -110,11 +109,13 @@ _OVERFLOW_TAIL = [
     "minhash_signatures",      # consumed by minhash_lsh_pairs
     "simhash_fingerprints",    # consumed by simhash_neardup_pairs
     "event_sessions",          # batch twin of sessionize_stateful
-    "events_sliding_window",   # windowing gated by events_tumbling_window
+    # windowing green in events_tumbling_window's CORRECTNESS_r13 row
+    "events_sliding_window",
     # round-4 demotions (F2-F4 re-proven by retrieval_rank_reference; LSH/
     # ngram/simhash pairs green r1-r3 with banded-join machinery re-proven
-    # by neardup_components; P7 enforced inside retrieval; cosine kernel
-    # re-proven by rp_lsh_topk's exact re-rank)
+    # by neardup_components; P7 enforced inside retrieval; the cosine
+    # kernel is knn.topk_block's dot_normed metric, pinned by
+    # tests/test_knn_kernel.py)
     "filter_folder",
     "filter_extension",
     "filter_exclude",
@@ -124,32 +125,24 @@ _OVERFLOW_TAIL = [
     "dim_validation",
     "cosine_topk",
     # round-5 demotions
-    "media_featurize",      # Arrow map plumbing re-proven by embedding_neardup_pairs
-    "stratified_sample",    # md5-threshold draw re-proven by temperature_mix
-    "source_mix",           # same draw core as stratified_sample
-    "substring_dup_pairs",  # bucket equi-join re-proven by events_within_5min_pairs
+    "media_featurize",      # Arrow map plumbing re-proven in-window by mock_embed_documents
+    # bucket equi-join green in events_within_5min_pairs' CORRECTNESS_r13 row
+    "substring_dup_pairs",
     "quality_filter",       # threshold predicate over quality_score's signals
     "ivf_topk",             # static-centroid IVF, superseded by ivf_topk_trained
-    # live-trained IVF twin of the frozen-centroid in-window gate: rows-only
-    # by design (distributed-mean float association), recall pinned in
-    # tests/test_ann_recall.py
+    # live-trained IVF twin of the frozen-centroid gate ivf_topk_trained
+    # (CORRECTNESS_r13 row): rows-only by design (distributed-mean float
+    # association), recall pinned in tests/test_ann_recall.py
     "ivf_topk_trained_live",
-    # new in round 5 (oracle-checked locally by test_sampling.py); rotate
-    # into the gated window next round — md5-draw machinery meanwhile
-    # re-proven in-window by temperature_mix
-    "dataset_split",
     # new in round 5: batch twin of streaming/dedup_stream.py (oracle-
     # checked locally by test_stream_dedup.py); rotate next round —
-    # hash-groupBy collapse machinery re-proven in-window by dedup_exact
+    # hash-groupBy collapse machinery green in dedup_exact's
+    # CORRECTNESS_r13 row
     "events_dedup_collapse",
     # new in round 5: CDC latest-per-key snapshot (oracle-checked locally
     # by test_stream_dedup.py); rotate next round — rank-1 WindowGroupLimit
     # machinery re-proven in-window by knn_exact
     "latest_event_per_user",
-    # new in round 5: fixed-size per-group sample (oracle-checked locally
-    # by test_sampling.py); rotate next round — md5-draw + rank-N
-    # machinery re-proven in-window by temperature_mix + knn_exact
-    "per_source_sample",
     # new in round 5: exact fixed-point embedding pooling (oracle-checked
     # locally by test_ann_recall.py); rotate next round — the only
     # array-AGGREGATION gate (posexplode + exact integer mean)
@@ -160,15 +153,17 @@ _OVERFLOW_TAIL = [
     "event_funnel",
     # new in round 5: fixed-width per-type value histogram (exact integer
     # bins, decimal-routed sums); rotate next round — groupBy machinery
-    # re-proven in-window by events_tumbling_window
+    # green in events_tumbling_window's CORRECTNESS_r13 row
     "value_histogram",
     # new in round 5: per-doc top-3 TF-IDF terms (rank on rounded score —
-    # libm-divergence-proof); rotate next round — explode+agg+rank
-    # machinery re-proven in-window by vocab_top50 and knn_exact
+    # libm-divergence-proof); rotate next round — explode+agg machinery
+    # green in vocab_top50's CORRECTNESS_r14 row, rank windows re-proven
+    # in-window by knn_exact
     "tfidf_top_terms",
     # new in round 5: corpus-internal heavy-hitter 5-grams (boilerplate
     # detection, per-doc distinct before shuffle); rotate next round —
-    # gram-explode machinery re-proven in-window by contamination_13gram
+    # gram-explode machinery green in contamination_13gram's
+    # CORRECTNESS_r13 row
     "boilerplate_grams",
     # new in round 5: exact decontamination behind a broadcast Bloom
     # prefilter (same oracle as contamination_13gram — FN-free bloom +
@@ -180,10 +175,11 @@ _OVERFLOW_TAIL = [
     "fuzzy_decontamination",
     # new in round 5: event-type transition matrix (lag window + agg);
     # rotate next round — ordered-window machinery re-proven in-window by
-    # sessionize_stateful/events_moving_avg
+    # sessionize_stateful
     "event_transitions",
     # new in round 5: weekly cohort retention matrix; rotate next round —
-    # user-keyed join+agg machinery re-proven in-window by events_asof_join
+    # user-keyed join+agg machinery green in events_asof_join's
+    # CORRECTNESS_r13 row
     "cohort_retention",
     # new in round 5: salted two-phase hot-key aggregate behind the gate
     # (decimal-routed so the rewrite is value-invisible); rotate next
@@ -192,44 +188,45 @@ _OVERFLOW_TAIL = [
     # new in round 5: product-quantized kNN (32× compression, frozen
     # sub-codebooks from the trained IVF centroids, asymmetric-distance
     # shortlist + exact re-rank); rotate next round — completes the
-    # exact→int8→PQ compression ladder, int8 twin in-window
+    # exact→int8→PQ compression ladder, int8 twin green in
+    # knn_int8_rerank's CORRECTNESS_r13 row
     "pq_knn_rerank",
     # round-5 wave 3 (all oracle-checked locally by test_oracle_harness;
     # rotate next round):
     # hypertable-style dense rollup + LOCF — spine/window machinery
-    # re-proven in-window by events_moving_avg's ordered frames
+    # green in events_moving_avg's CORRECTNESS_r13 row
     "events_gap_fill_locf",
     # trailing-7d distinct actives via explode (no range self-join) —
-    # distinct-agg machinery re-proven in-window by events_tumbling_window
+    # distinct-agg machinery green in events_tumbling_window's
+    # CORRECTNESS_r13 row
     "rolling_7d_actives",
     # market-basket type co-occurrence — bounded self-join; equi-join+agg
-    # machinery re-proven in-window by events_asof_join
+    # machinery green in events_asof_join's CORRECTNESS_r13 row
     "event_type_cooccurrence",
-    # per-type z-score outliers from exact decimal moments — broadcast
-    # stats join re-proven in-window by temperature_mix's rate join
+    # per-type z-score outliers from exact decimal moments — green in
+    # its own CORRECTNESS_r09 row; the broadcast stats join is pinned by
+    # tests/test_plan_shapes.py::test_zscore_broadcasts_moments
     "value_zscore_outliers",
     # INTERSECT/EXCEPT cohort algebra — anti-join machinery also exercised
     # by abandoned_purchases' NOT EXISTS
     "engaged_clean_users",
-    # A-Res weighted sampling (priority = -ln(u)/w) — md5-draw + top-N
-    # machinery re-proven in-window by temperature_mix + vocab_top50
-    "weighted_sample",
-    # per-doc token-distribution entropy — explode+agg machinery re-proven
-    # in-window by quality_score/repetition_signals
+    # per-doc token-distribution entropy — explode+agg machinery green
+    # in the CORRECTNESS_r14 rows of quality_score and repetition_signals
     "word_entropy",
     # 1→N Arrow mapInPandas frame sampling (fake demuxer) — Arrow-stage
     # machinery re-proven in-window by mock_embed_documents
     "media_frame_sample",
     # Okapi BM25 lexical ranking (integer tf/df/dl, scalar-broadcast
-    # stats) — explode+agg machinery re-proven in-window by vocab_top50
+    # stats) — explode+agg machinery green in vocab_top50's
+    # CORRECTNESS_r14 row
     "bm25_topk",
     # reciprocal-rank fusion of BM25 + token-Jaccard top-100s — rank
     # window + FULL OUTER machinery re-proven in-window by knn_exact's
     # rank windows
     "hybrid_rrf_retrieval",
     # corpus-unigram-LM bits-per-token (the no-model member of the
-    # perplexity-filter family) — explode+agg machinery re-proven
-    # in-window by quality_score
+    # perplexity-filter family) — explode+agg machinery green in
+    # quality_score's CORRECTNESS_r14 row
     "unigram_logprob",
     # end-to-end curation funnel COMPOSING the registered quality/dedup/
     # decontam/split operators (oracle nests their SQL twins verbatim) —
@@ -241,10 +238,10 @@ _OVERFLOW_TAIL = [
     "cogroup_purchase_view_asof",
     # Python UDTF via SQL LATERAL (1→N row generator with char offsets)
     # — gates the Spark 4 UDTF surface; explode covers the offset-free
-    # case in-window (contamination_13gram et al.)
+    # case (contamination_13gram's CORRECTNESS_r13 row et al.)
     "token_spans_udtf",
     # Spark 4 VARIANT parse-once extraction — JSON-path machinery
-    # re-proven in-window by events_props_extract
+    # green in events_props_extract's CORRECTNESS_r13 row
     "events_props_variant",
     # round-5 wave 4 (data-quality profiling family; oracle-checked
     # locally by test_oracle_harness): single-pass long-format column
@@ -255,15 +252,15 @@ _OVERFLOW_TAIL = [
     # binning) — percentile machinery also exercised by
     # doc_length_percentiles
     "value_equidepth_histogram",
-    # robust median/MAD outliers (modified z-score > 3.5) — broadcast
-    # stats join re-proven in-window by value_zscore_outliers' consumers
+    # robust median/MAD outliers (modified z-score > 3.5) — the same
+    # broadcast stats join as value_zscore_outliers (CORRECTNESS_r09 row)
     "mad_outliers",
     # round-5 wave 4 (temporal family): single-pass OHLC bars via
     # lexicographic struct MIN/MAX; oracle-checked locally by
     # test_oracle_harness
     "events_ohlc_hourly",
     # changelog -> SCD2 validity intervals (LEAD + sentinel close) —
-    # window machinery re-proven in-window by events_moving_avg
+    # window machinery green in events_moving_avg's CORRECTNESS_r13 row
     "user_value_scd2",
     # per-(user,day) ordered event paths, top-20 — sorted-collect
     # machinery re-proven in-window by context_assembly's ordered lists
@@ -280,19 +277,19 @@ _OVERFLOW_TAIL = [
     # pointer-jump machinery re-proven in-window by neardup_components
     "part_name_entities",
     # C4/Dolma paragraph-level dedup with order-preserving doc rebuild —
-    # first-occurrence rank re-proven in-window by dedup_exact; ordered
-    # rebuild by context_assembly's sorted collects
+    # first-occurrence rank green in dedup_exact's CORRECTNESS_r13 row;
+    # ordered rebuild re-proven in-window by context_assembly's prompt
     "paragraph_dedup_rebuild",
     # hive-partitioned sink + partition-pruned read round-trip — sink
     # round-trip machinery re-proven in-window by index_roundtrip; pruning
     # physically pinned by tests/test_partition_pruning.py
     "events_partitioned_pruned",
     # time-interval RANGE window frame (trailing 1h over event time) —
-    # window machinery re-proven in-window by events_moving_avg
+    # window machinery green in events_moving_avg's CORRECTNESS_r13 row
     "events_trailing_1h_sum",
     # Spark 4 bitmap aggregates vs a COUNT(DISTINCT) oracle — exact
-    # re-aggregatable distinct; distinct machinery re-proven in-window by
-    # distinct_counts_exact
+    # re-aggregatable distinct; distinct machinery green in
+    # distinct_counts_exact's CORRECTNESS_r13 row
     "daily_active_bitmap",
     # Datasketches HLL rollup (rows-only by design: sketches are
     # engine-specific; error bound pinned by tests/test_sketch_bounds.py)
@@ -321,12 +318,13 @@ _OVERFLOW_TAIL = [
     "events_schema_merge",
     # scalar Arrow pandas_udf surface (Series->Series token counts; every
     # other Python stage is mapInPandas/applyInPandas) — token semantics
-    # re-proven in-window by token_count
+    # green in token_count's CORRECTNESS_r14 row
     "token_count_pandas",
     # FAISS-IVFPQ-shaped composition of the gated IVF + PQ artifacts
     # (assign -> encode -> probe -> ADC shortlist -> exact re-rank, one
     # end-to-end value-hash oracle; recall 0.72 pinned >= 0.6) — stage
-    # machinery re-proven in-window by ivf_topk_trained + knn_int8_rerank
+    # machinery green in the CORRECTNESS_r13 rows of ivf_topk_trained and
+    # knn_int8_rerank
     "ivfpq_topk",
     # built-in session_window aggregate (declarative sessionizer, third
     # family member; shared oracle) — session semantics re-proven
@@ -334,28 +332,29 @@ _OVERFLOW_TAIL = [
     "events_session_window_builtin",
     # mapInArrow surface (raw RecordBatch + pyarrow.compute — third
     # Python tier next to pandas_udf and JVM exprs, one oracle family) —
-    # token semantics re-proven in-window by token_count
+    # token semantics green in token_count's CORRECTNESS_r14 row
     "token_count_arrow",
     # batch twin of the left-outer stream-stream interval join (anti
     # range join over tol-binned candidates; oracle keeps the correlated
-    # NOT EXISTS) — bin machinery re-proven in-window by
-    # events_within_5min_pairs
+    # NOT EXISTS) — bin machinery green in events_within_5min_pairs'
+    # CORRECTNESS_r13 row
     "abandoned_purchases",
     # per-source curation report card (composes quality_score +
     # dedup_exact keep rule + token counts; oracle nests the quality twin
-    # verbatim) — stage machinery gated individually in-window
+    # verbatim) — its stages are green in the CORRECTNESS_r14 row of
+    # quality_score and the CORRECTNESS_r13 row of dedup_exact
     "source_quality_report",
     # SemDeDup (cluster-pruned embedding dedup, greedy-by-id keep rule;
     # fixture-calibrated tau documented in-module) — cell machinery
-    # re-proven in-window by ivf_topk_trained
+    # green in ivf_topk_trained's CORRECTNESS_r13 row
     "semdedup_keep",
     # Spark 4 WITH RECURSIVE surface (depth-bounded UNION ALL closure vs
     # DuckDB's fixed-point UNION oracle) — closure semantics re-proven
     # in-window by neardup_components
     "part_name_entities_recursive",
     # Spark 4 from_xml surface (fourth interchange format, integer-exact
-    # render->parse) — format machinery re-proven in-window by
-    # events_props_extract
+    # render->parse) — format machinery green in events_props_extract's
+    # CORRECTNESS_r13 row
     "events_xml_parse",
 ]
 

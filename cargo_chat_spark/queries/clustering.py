@@ -282,9 +282,10 @@ def kmeans_online_centroids(spark, sf_dir):
 # ------------------------------------------- cluster-balanced sampling
 # Semantic-diversity selection (the SemDeDup/SSL-prototypes companion):
 # instead of keeping the corpus' natural cluster mix, draw an EQUAL
-# number of members per k-means cluster with the shared md5-threshold
-# discipline (queries/sampling.py) — the deterministic form of
-# "balance the topic distribution before training". Plan: the final
+# number of members per k-means cluster, ranked by a per-key hash draw
+# (h32; membership is a function of the key, as in queries/_draws.py) —
+# the deterministic form of "balance the topic distribution before
+# training". Plan: the final
 # assignment frame + one hash projection + a per-cluster
 # WindowGroupLimit top-M; no extra shuffle beyond the window's
 # cluster partitioning. All integer/hash — value-hashes directly.

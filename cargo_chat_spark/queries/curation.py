@@ -32,6 +32,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.caching import memo_persist
+from cargo_chat_spark.queries._draws import (
+    SPLIT_TEST_LO,
+    SPLIT_VAL_LO,
+    draw,
+    draw_sql,
+)
 from cargo_chat_spark.queries.registry import register
 from cargo_chat_spark.sources.testdata import load_table, load_table_spread
 
@@ -659,16 +665,42 @@ def ccnet_perplexity_buckets(spark, sf_dir):
 # ---------------------------------------------- end-to-end curation funnel
 # The flagship composition: quality filter -> exact dedup -> benchmark
 # decontamination -> train/val/test split, reported as a per-(stage, lang)
-# attrition funnel. Each stage IS the registered operator (the callables
-# compose; the oracle nests each stage's SQL twin verbatim as a CTE), so
-# this entry certifies that the engine's building blocks snap together the
-# way a real pipeline uses them — and the funnel row counts are exactly
-# what a data-curation run reports to its operators. Scale: semi/anti
-# joins on doc_id after each stage's own (already scale-shaped) plan; the
-# funnel aggregates are trivial.
+# attrition funnel. The first three stages ARE the registered operators
+# (the callables compose; the oracle nests each stage's SQL twin verbatim
+# as a CTE), so this entry certifies that the engine's building blocks
+# snap together the way a real pipeline uses them — and the funnel row
+# counts are exactly what a data-curation run reports to its operators.
+# Scale: semi/anti joins on doc_id after each stage's own (already
+# scale-shaped) plan; the funnel aggregates are trivial.
+#
+# The split is holdout membership as a PURE FUNCTION of the document key:
+# the bucket of md5(doc_id)'s draw against the 98/1/1 boundaries, so the
+# Spark side labels the survivors in place (no join). Splits are
+# disjoint and complete by construction, stable under repartitioning,
+# reruns and appends (a doc never migrates between splits, so eval never
+# contaminates train across dataset versions), and the assignment needs
+# no shuffle, no global sort and no stored membership table.
+_SPLIT_SQL = f"""
+SELECT doc_id, lang, source,
+    CASE WHEN {draw_sql('doc_id')} < {SPLIT_VAL_LO} THEN 'train'
+         WHEN {draw_sql('doc_id')} < {SPLIT_TEST_LO} THEN 'val'
+         ELSE 'test' END AS split
+FROM documents
+"""
+
+
+def _split(doc_id):
+    """Spark twin of ``_SPLIT_SQL``'s label."""
+    d = draw(doc_id)
+    return (
+        F.when(d < SPLIT_VAL_LO, "train")
+        .when(d < SPLIT_TEST_LO, "val")
+        .otherwise("test")
+    )
+
+
 def _pipeline_sql() -> str:
     from cargo_chat_spark.queries.dedup import _EXACT_SQL
-    from cargo_chat_spark.queries.sampling import _SPLIT_SQL
     from cargo_chat_spark.queries.textstats import _QFILTER_SQL
 
     return f"""
@@ -701,7 +733,6 @@ SELECT * FROM funnel
 def curation_pipeline(spark, sf_dir):
     """Quality -> dedup -> decontam -> split attrition funnel (see note)."""
     from cargo_chat_spark.queries.dedup import dedup_exact
-    from cargo_chat_spark.queries.sampling import dataset_split
     from cargo_chat_spark.queries.textstats import quality_filter
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -718,7 +749,6 @@ def curation_pipeline(spark, sf_dir):
     s3 = s2.where(F.col("doc_id") % _EVAL_MOD != 0).join(
         contaminated, "doc_id", "left_anti"
     )
-    splits = dataset_split(spark, sf_dir).select("doc_id", "split")
 
     def counts(df, stage_col):
         return df.groupBy(stage_col.alias("stage"), "lang").agg(
@@ -731,10 +761,7 @@ def curation_pipeline(spark, sf_dir):
         .unionByName(counts(s2, F.lit("dedup")))
         .unionByName(counts(s3, F.lit("decontam")))
         .unionByName(
-            counts(
-                s3.join(splits, "doc_id"),
-                F.concat(F.lit("final_"), F.col("split")),
-            )
+            counts(s3, F.concat(F.lit("final_"), _split(F.col("doc_id"))))
         )
     )
 

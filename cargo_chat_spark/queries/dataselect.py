@@ -219,8 +219,8 @@ def dsir_topk_selection(spark, sf_dir):
     """The selection itself: top-200 documents by DSIR weight
     (rounded-weight DESC, doc_id tie-break — identical in both engines
     so equal-text duplicates rank deterministically). Global top-k via
-    window-rank over the weight frame; at scale the same frame feeds
-    weighted sampling (queries/sampling.py) instead of a hard cutoff."""
+    window-rank over the weight frame; dsir_gumbel_resample below
+    samples from the same frame instead of cutting it."""
     from cargo_chat_spark.operators.ranking import global_topk_ranked
 
     w = _doc_weights_memo(spark, sf_dir)

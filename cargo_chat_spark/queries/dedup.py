@@ -680,14 +680,14 @@ def paragraph_dedup_rebuild(spark, sf_dir):
 # ------------------------------------------- leakage-safe train/val/test
 # The known eval-contamination failure mode (Lee et al., "Deduplicating
 # Training Data Makes Language Models Better"): a near-duplicate of a test
-# document sitting in train. A per-document hash split (dataset_split)
-# cannot prevent it — the twins draw independently. The fix is GROUP-AWARE
+# document sitting in train. A per-document hash split (the one in
+# curation_pipeline) cannot prevent it — the twins draw independently. The fix is GROUP-AWARE
 # assignment: split on the near-dup CLUSTER id, so an entire component
 # lands in one split and a test doc's near-twin can never be trained on.
 # Spark side: the component frame (only docs appearing in near-dup pairs —
 # tiny next to the corpus) broadcast-left-joins onto the scan; singletons
 # fall back to their own id. Draw, boundaries, and md5 semantics are the
-# exact dataset_split primitives (queries/_draws.py), so split proportions
+# per-document split's primitives (queries/_draws.py), so split proportions
 # and append-stability carry over unchanged.
 _LEAKAGE_SPLIT_SQL = f"""
 WITH RECURSIVE {_BANDS_CTE},

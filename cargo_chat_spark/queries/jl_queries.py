@@ -17,9 +17,9 @@ Two value-hash gates over operators/jl_projection.py:
 Scale shape: projection is a map-side expression (no shuffle, no
 stored matrix, no broadcast); top-k is the knn_join plan (corpus never
 shuffles, WindowGroupLimit partial top-k); the distortion report is
-|Q|×|C| only because the evaluation gate grades every pair — the
-production card samples pairs with the md5-threshold draw
-(queries/sampling.py) at O(sample) cost.
+|Q|×|C| only because the evaluation gate grades every pair — a
+production card would sample pairs with the md5 draw
+(queries/_draws.py) at O(sample) cost.
 """
 
 from __future__ import annotations

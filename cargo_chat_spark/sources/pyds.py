@@ -17,7 +17,7 @@ the engine would use for any such connector:
   PushedFilters),
 - deterministic generation (md5-counter; same rows every run, any
   partitioning) so tests can value-check results, mirroring the md5-draw
-  discipline used by the sampling family.
+  discipline of ``queries/_draws.py``.
 
 `tests/test_python_datasource.py` pins determinism, partition-count
 scaling, pushdown row reduction, and parity between the pushed and

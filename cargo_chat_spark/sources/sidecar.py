@@ -10,9 +10,8 @@ Every persisted fence/state sidecar distinguishes three cases:
 - readable → the parsed payload (or one required field of it).
 
 Callers that deliberately DEFAULT on unreadable state (ivm_stream —
-its state is a pure cache of a recomputable rollup) or raise a
-different exception type (mix_ingest's ValueError contract) document
-that divergence at their site instead of using this helper.
+its state is a pure cache of a recomputable rollup) document that
+divergence at their site instead of using this helper.
 """
 
 from __future__ import annotations

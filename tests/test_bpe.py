@@ -153,10 +153,10 @@ def test_bpe_pack_tokens_matches_python_reference(spark):
     corpus must equal the distributed bpe_pack_tokens gate exactly."""
     from cargo_chat_spark.queries.bpe_queries import (
         _BPE_PACK_BUDGET,
+        _N_SHARDS,
         N_MERGES,
         bpe_pack_tokens,
     )
-    from cargo_chat_spark.queries.sampling import _N_SHARDS
 
     docs = sorted(
         (r["doc_id"], r["text"])
@@ -204,7 +204,7 @@ def test_pack_by_budget_bin_boundary(spark):
     """A doc whose PRECEDING total has crossed the budget starts a new
     bin; the doc that crosses it mid-way stays in the bin it started
     (first-fit streaming semantics)."""
-    from cargo_chat_spark.queries.sampling import pack_by_budget
+    from cargo_chat_spark.queries.bpe_queries import pack_by_budget
 
     toks = spark.createDataFrame(
         [(1, 0, 1000), (2, 0, 1000), (3, 0, 1000), (4, 1, 5000)],

@@ -8,10 +8,15 @@ displacement to list drift — these pins catch:
 - a window entry losing its value-hash oracle (every gated row must be a
   STRONG check — rows-only entries stay outside the window);
 - an out-of-window entry without local oracle coverage;
-- a legacy-bench row naming a query the registry no longer has.
+- a legacy-bench row naming a query the registry no longer has;
+- a tail reason claiming an entry is covered "in-window by" a query that
+  holds no window slot.
 """
 
 from __future__ import annotations
+
+import inspect
+import re
 
 from cargo_chat_spark.queries import catalog
 
@@ -117,3 +122,38 @@ def test_legacy_bench_rows_name_registered_queries():
             n for n in getattr(bench, list_name) if n not in catalog.SPARK_QUERIES
         ]
         assert not unknown, f"bench.{list_name} names unregistered queries: {unknown}"
+
+
+def _comment_blocks(source: str) -> list[str]:
+    """The text of each run of consecutive ``#`` comment lines, and of
+    each trailing comment, joined into one line per run."""
+    blocks, run = [], []
+    for line in source.splitlines():
+        code, hash_, text = line.partition("#")
+        if hash_ and not code.strip():
+            run.append(text.strip())
+            continue
+        if run:
+            blocks.append(" ".join(run))
+            run = []
+        if hash_:
+            blocks.append(text.strip())
+    if run:
+        blocks.append(" ".join(run))
+    return blocks
+
+
+def test_tail_reasons_cite_window_entries():
+    """A reason that says an entry is re-proven "in-window by X" is only
+    true while X holds a GATE_WINDOW slot; anything else must cite what
+    actually covers it (X's CORRECTNESS_r* row, or a test)."""
+    window = set(catalog.GATE_WINDOW)
+    cited = []
+    for block in _comment_blocks(inspect.getsource(catalog)):
+        for m in re.finditer(r"in-window by (.*)", block):
+            # the claim runs to the end of its clause
+            clause = re.split(r"[;:()]| — |\.(?:\s|$)", m.group(1))[0]
+            cited += re.findall(r"[a-z0-9]+(?:_[a-z0-9]+)+", clause)
+    assert cited, "no in-window citations parsed"
+    outside = sorted({n for n in cited if n not in window})
+    assert not outside, f"tail reasons cite non-window entries as in-window: {outside}"

@@ -57,8 +57,8 @@ def test_containment_dominates_jaccard_and_covers_lsh_near_dups(spark):
 
 def test_datasheet_members_agree_with_gated_sources(spark):
     """Every datasheet number must re-derive from the member semantics
-    it composes: the EMPTY-AWARE token spec shared with pack_sequences
-    and doc_length_percentiles (empty docs count 0 — token_count's raw
+    it composes: the EMPTY-AWARE token spec shared with
+    doc_length_percentiles (empty docs count 0 — token_count's raw
     split yields 1 for them, which is why n_empty_docs exists), and
     dedup_exact's canonical dup key."""
     from cargo_chat_spark.sources.testdata import load_table
@@ -170,34 +170,6 @@ def test_pmi_micro_matches_python_reference(spark):
             - math.floor(math.log(r["c_y"] / nu) * 1_000_000)
         )
         assert r["pmi_micro"] == want, r
-
-
-def test_packing_efficiency_reconciles_with_pack_frame(spark):
-    """Per-shard totals must re-derive from the gated pack frame."""
-    packs = SPARK_QUERIES["pack_sequences"](spark, SF_DIR_SMALL)
-    eff = {
-        r["shard"]: r
-        for r in SPARK_QUERIES["packing_efficiency_report"](
-            spark, SF_DIR_SMALL
-        ).collect()
-    }
-    agg = packs.select(
-        F.expr(f"CAST(pack_id DIV {1 << 40} AS BIGINT)").alias("shard"),
-        "n_docs",
-        "total_tokens",
-    ).groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_packs"),
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("total_tokens").alias("t"),
-    )
-    for r in agg.collect():
-        e = eff[r["shard"]]
-        assert e["n_packs"] == r["n_packs"]
-        assert e["n_docs"] == r["n_docs"]
-        assert e["total_tokens"] == r["t"]
-        assert e["fill_micro"] == (1_000_000 * r["t"]) // (
-            r["n_packs"] * 2048
-        )
 
 
 @pytest.mark.slow

@@ -236,18 +236,24 @@ def _jobs_of(spark, group, call):
     return now
 
 
-@pytest.mark.parametrize("rerank", [False, True])
-def test_driver_resident_question_job_count(spark, index, rerank):
-    """A reference-mode question over the driver-resident index runs only
-    the collect of its ranked rows: 3 jobs, as adaptive execution runs its
-    query stages. The rerank order and the prompt are built in the driver
-    and add none (a prompt built in Spark made it 4)."""
+@pytest.mark.parametrize("mode, rerank, jobs", [
+    pytest.param("reference", False, 1, id="False"),
+    pytest.param("reference", True, 1, id="True"),
+    pytest.param("improved", False, 2, id="improved"),
+])
+def test_driver_resident_question_job_count(spark, index, mode, rerank, jobs):
+    """A reference-mode question over the driver-resident index runs one
+    job, the collect of its ranked rows: the hits are one partition and
+    the classification is literal columns, so no shuffle or broadcast
+    splits it into adaptive query stages. Improved mode adds the one
+    collect of its in-scope ids. The rerank order and the prompt are
+    built in the driver and add none."""
     query, provider = "how does the rust parser work", RecordingProvider()
     retrieve(spark, index, query, 5, provider)  # fills the resident slot
     assert retrieval._resident.get("index") is index
 
     def ask():
-        out = retrieve(spark, index, query, 5, provider, use_rerank=rerank)
+        out = retrieve(spark, index, query, 5, provider, use_rerank=rerank, mode=mode)
         list(out["answer"])
 
-    assert _jobs_of(spark, f"retrieve-jobs-{rerank}", ask) == 3
+    assert _jobs_of(spark, f"retrieve-jobs-{mode}-{rerank}", ask) == jobs

@@ -116,19 +116,6 @@ def test_missing_defaults_unreadable_raises(setup, tmp_path):
         reader()
 
 
-def test_mix_state_unreadable_raises(tmp_path):
-    from cargo_chat_spark.streaming import mix_ingest as M
-
-    p = tmp_path / "mix"
-    assert M.read_mix_state(str(p))["max_ingested_batch"] == -1
-    sidecar = M._state_path(str(p))
-    import pathlib
-
-    pathlib.Path(sidecar).mkdir(parents=True)
-    with pytest.raises(ValueError, match="unreadable"):
-        M.read_mix_state(str(p))
-
-
 def test_ivm_state_defaults_by_design(tmp_path):
     """ivm state is recomputable — corrupt sidecars self-heal via full
     rebuild, so the reader DEFAULTS (documented exception)."""
