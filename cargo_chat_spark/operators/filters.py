@@ -1,8 +1,12 @@
 """Classification-driven candidate filters (SURVEY §2.3 F2-F5, F8).
 
-The scope filters F2-F4 are implemented twice, deliberately adjacent so
-they cannot drift: a Spark Column expression and a DuckDB SQL emitter used
-by the oracle queries. The ranking predicates (F5, F8 and the O5 language
+The scope filters F2-F4 have three forms, deliberately adjacent so they
+cannot drift: a Spark Column expression, a DuckDB SQL emitter used by the
+oracle queries, and :func:`scope_keep`, one row in plain Python, which
+``plans.retrieval.retrieve`` runs in the driver over a question's hits.
+``tests/test_driver_ranking.py`` checks the Python form against the
+Column form on every row of a few hundred random questions. The ranking
+predicates (F5, F8 and the O5 language
 match) are one SQL text emitter each, shared by both engines: Spark runs
 the text through ``selectExpr`` in ``ranking.reference_rank`` (one driver
 round trip per plan pass instead of hundreds of Column calls) and the
@@ -142,6 +146,38 @@ def scope_match() -> Column:
         & extension_match(F.col("extension"), file, F.col("target_extensions"))
         & exclude_match(file, F.col("exclude_patterns"))
     )
+
+
+def _exists(items, pred):
+    """SQL ``exists``: TRUE if ``pred`` holds for an element, else NULL
+    (None) if an element is NULL, else FALSE."""
+    hits = [None if x is None else pred(x) for x in items]
+    return True if True in hits else (None if None in hits else False)
+
+
+def scope_keep(file: str, ext: str | None, folders, exts, excludes) -> bool:
+    """``scope_match()`` of one row in plain Python: ``file`` and ``ext``
+    are the candidate's, the rest the classification's three scopes.
+    A NULL scope element matches nothing, and where no element matches
+    it leaves the predicate NULL, which drops the row, as in Spark."""
+
+    def folder(f):
+        return (f"/{f}/" in file or file.startswith(f + "/")
+                or (f"/{f}" in file and file.endswith("/" + f.split("/")[-1])))
+
+    def extension(t):
+        t = t.lstrip(".")
+        return ext.lstrip(".") == t if ext is not None else file.endswith("." + t)
+
+    low = file.lower()
+
+    def excluded(p):
+        # exclude_match's plain contains, which its other clauses imply
+        return p.lower() in low
+
+    return ((not folders or _exists(folders, folder) is True)
+            and (not exts or _exists(exts, extension) is True)
+            and (not excludes or _exists(excludes, excluded) is False))
 
 
 # ---------------------------------------------------------- F5 code vs doc

@@ -186,6 +186,9 @@ def knn_join(
     ))
     return (
         scanned.mapInPandas(kernel, schema)
+        # Arrow reads a pandas NaN as NULL, which would rank first; a
+        # NULL distance here can only be a NaN one
+        .withColumn("distance", F.coalesce("distance", F.lit(float("nan"))))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )

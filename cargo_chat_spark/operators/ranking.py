@@ -20,6 +20,16 @@ The reference relies on stable Vec sorts for tie order; Spark sorts are not
 stable across partitions, so every ordering adds the chunk_id tie-break
 (SURVEY §2.11) — this makes results totally ordered and oracle-hashable.
 
+Three adjacent forms: ``reference_rank`` (SQL text for Spark), the same
+F5/F8/O5 predicates embedded in the DuckDB oracles, and :func:`rank_rows`,
+the ranking of one question's rows in plain Python, which
+``plans.retrieval.retrieve`` runs in the driver (so a question over the
+driver-resident index needs no Spark job); ``reference_rank`` ranks many
+questions at once, in perfbench's bulk pass and the catalog. ``tests/test_driver_ranking.py`` checks
+``rank_rows`` against ``reference_rank`` over a few hundred random
+questions, and ``tests/test_reference_scenarios.py`` runs the
+reference's scenarios through both.
+
 Physical shape: every pass is one ``selectExpr``/``where`` over SQL
 text (the F5/F8/O5 predicates come from the shared emitters in
 ``operators.filters``, the same text the DuckDB oracle embeds), so
@@ -33,9 +43,14 @@ no UDFs; scales with executors × candidates.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cargo_chat_spark.functions.language import (
+    DOC_EXTENSIONS, DOC_EXTENSIONS_SIMPLE, EXT_TO_LANGUAGE,
+)
 from cargo_chat_spark.operators import filters
 
 # tier: branch A puts code first; branch B puts docs first only when NOT
@@ -108,6 +123,57 @@ def reference_rank(candidates: DataFrame, final_sort: bool = True) -> DataFrame:
     )
     rank = _FINAL_RANK if final_sort else "_sel_rank"
     return selected.selectExpr(*out_cols, f"{rank} AS rank")
+
+
+def _dist(d: float) -> tuple:
+    """A distance's place in Spark SQL's ascending order: NaN after
+    every number, and equal to NaN."""
+    return (True, 0.0) if math.isnan(d) else (False, d)
+
+
+def rank_rows(rows: list[dict]) -> list[dict]:
+    """``reference_rank`` (``final_sort=True``) of ONE question's
+    candidate rows, in the driver.
+
+    ``rows`` are dicts with ``reference_rank``'s input columns, the
+    classification repeated on each. Returns the surviving rows in final
+    order, each with its 1-based ``rank`` appended. The steps are the
+    SQL passes above, under Spark SQL's semantics where Python's differ:
+    a NaN distance sorts after every number, and a NaN confidence is
+    above every threshold (``NaN > 0.7`` is true).
+    """
+    if not rows:
+        return []
+    c = rows[0]
+    wants, conf, q_lang = c["wants_code"], c["confidence"], c["q_language"]
+    branch_a = wants and (math.isnan(conf) or conf > 0.7)  # F8
+    keyed = []  # (_tier, _langkey, distance, chunk_id, _is_code, row)
+    for r in rows:
+        ext, path = r["extension"], r["file"].lower()
+        is_code = (ext not in DOC_EXTENSIONS) if ext is not None else (  # F5
+            not path.endswith((".md", ".txt"))
+            and not any(m in path for m in filters._PATH_DOC_MARKERS))
+        if branch_a:
+            tier = 0 if is_code else 1
+        else:
+            tier = 0 if not wants and ext in DOC_EXTENSIONS_SIMPLE else 1
+        names = (r["language"], EXT_TO_LANGUAGE.get(ext.lower()) if ext is not None else None)
+        lmatch = q_lang is not None and any(  # O5
+            n is not None and n.lower() == q_lang.lower() for n in names)
+        langkey = 0 if branch_a and is_code and lmatch else 1
+        keyed.append((tier, langkey, _dist(r["distance"]), r["chunk_id"], is_code, r))
+    if branch_a:  # the doc caps, by (distance, chunk_id) among the docs
+        if math.isnan(conf) or conf > 0.8:
+            limit = 0
+        elif c["intent"] == "how_it_works":
+            limit = 0 if sum(t[4] for t in keyed) >= 3 else 1  # _code_count
+        else:
+            limit = 1 if c["intent"] == "explanation" else 0
+        docs = sorted((t for t in keyed if not t[4]), key=lambda t: t[2:4])
+        keyed = [t for t in keyed if t[4]] + docs[:limit]
+    selected = sorted(keyed, key=lambda t: t[:4])[:max(c["k"], 0)]
+    final = sorted(range(len(selected)), key=lambda i: (selected[i][2], i))
+    return [{**selected[i][5], "rank": rank} for rank, i in enumerate(final, 1)]
 
 
 def global_topk_ranked(

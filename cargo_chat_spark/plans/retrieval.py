@@ -1,4 +1,6 @@
-"""The ``query`` entry point as a Spark pipeline (SURVEY §3.2).
+"""The ``query`` entry point: the k-NN in Spark, or over a small cached
+index in the driver, and the rest of the lifecycle in the driver (see
+``retrieve``).
 
 Reference lifecycle (hyde.rs:468-576): classify → HyDE → embed+search(k*2)
 → classification filters → truncate(k) → (rerank | distance sort) →
@@ -21,7 +23,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StructField, StructType,
+    BooleanType, DoubleType, IntegerType, LongType, StringType, StructField,
+    StructType,
 )
 
 from cargo_chat_spark.functions.localframe import local_frame
@@ -38,21 +41,12 @@ KEEP_COLS = ["file", "code", "language", "extension"]
 _resident: dict = {}
 
 
-def _classification_cols(cls: Classification, k: int) -> dict:
-    """The question's classification as typed literal columns. A None
-    scope stays a NULL array, so the filters treat it, like an empty one,
-    as "no filter"."""
-    typed = {
-        "q_language": (cls.language, "string"),
-        "intent": (cls.intent, "string"),
-        "wants_code": (cls.wants_code, "boolean"),
-        "confidence": (float(cls.confidence), "double"),
-        "target_folders": (cls.target_folders, "array<string>"),
-        "target_extensions": (cls.target_extensions, "array<string>"),
-        "exclude_patterns": (cls.exclude_patterns, "array<string>"),
-        "k": (k, "int"),
-    }
-    return {name: F.lit(value).cast(dtype) for name, (value, dtype) in typed.items()}
+_SCOPES = ("target_folders", "target_extensions", "exclude_patterns")
+
+
+def _scopes(cls: Classification) -> tuple:
+    """The question's F2-F4 scopes, in ``_SCOPES`` order."""
+    return tuple(getattr(cls, name) for name in _SCOPES)
 
 
 def release_resident(index: DataFrame) -> None:
@@ -78,42 +72,86 @@ def _resident_index(spark: SparkSession, index: DataFrame) -> dict | None:
             _resident.update(
                 ids=ids,
                 matrix=vector_matrix(pdf["embedding"].to_numpy(), ids, "corpus"),
-                meta=pdf[KEEP_COLS],
-                schema=StructType([
-                    StructField("query_id", LongType()),
-                    StructField("neighbor_id", index.schema["chunk_id"].dataType),
-                    StructField("distance", DoubleType()),
-                    *[index.schema[c] for c in KEEP_COLS],
-                    StructField("rank", IntegerType()),
-                ]),
+                meta=list(pdf[KEEP_COLS].itertuples(index=False, name=None)),
             )
         _resident["index"] = index
     return _resident if "ids" in _resident else None
 
 
-def _resident_hits(
-    spark: SparkSession, res: dict, qvec, m: int, in_scope: DataFrame | None
-) -> DataFrame:
-    """knn_join's output for one question, computed in the driver over
-    the resident index, as one partition so the ranking windows need no
-    exchange; ``in_scope`` limits the candidates to its ``chunk_id``s
-    (one job)."""
-    mask = None
-    if in_scope is not None:
-        in_ids = [r[0] for r in in_scope.select("chunk_id").collect()]
-        mask = np.isin(res["ids"], in_ids)
-    _, ci, dist = topk_block(
-        vector_matrix([qvec], [0], "query"), res["matrix"], res["ids"], m,
-        mask=mask,
-    )
-    meta = res["meta"].iloc[ci]
-    rows = [
-        (0, int(i), float(d), *kept, rank)
-        for rank, (i, d, kept) in enumerate(
-            zip(res["ids"][ci], dist, meta.itertuples(index=False)), 1
+def _top_hits(spark: SparkSession, index: DataFrame, qvec, cls: Classification,
+              k: int, mode: str) -> list[tuple]:
+    """The question's top-2k neighbours (O2 over-fetch, hyde.rs:500),
+    nearest first, as ``(chunk_id, file, code, language, extension,
+    distance)``: from ``topk_block`` over the resident index, else from
+    one collect of ``knn_join``. In improved mode the scopes limit the
+    corpus BEFORE the k-NN (predicate pushdown)."""
+    scopes = _scopes(cls)
+    # the 2k over-fetch is kept in improved mode too: the intent doc caps
+    # depend on the retrieved set and still run afterwards, so fetching
+    # exactly k could under-fill; its candidates are a strict superset of
+    # reference mode's (any kept row in the global top-2k is also in the
+    # kept top-2k)
+    pushdown = mode == "improved" and any(scopes)
+    res = _resident_index(spark, index)
+    if res is not None:
+        meta = res["meta"]
+        mask = None
+        if pushdown:
+            mask = np.fromiter(
+                (filters.scope_keep(file, ext, *scopes) for file, _, _, ext in meta),
+                bool, len(meta),
+            )
+        _, ci, dist = topk_block(
+            vector_matrix([qvec], [0], "query"), res["matrix"], res["ids"], 2 * k, mask=mask,
         )
+        return [(int(res["ids"][i]), *meta[i], float(d)) for i, d in zip(ci, dist)]
+    corpus = index
+    if pushdown:
+        lits = {n: F.lit(v).cast("array<string>") for n, v in zip(_SCOPES, scopes)}
+        corpus = index.withColumns(lits).where(filters.scope_match()).select(index.columns)
+    queries = local_frame(spark, [(0, qvec)], "query_id bigint, query_vec array<double>")
+    hits = knn_join(
+        queries, corpus.withColumnRenamed("chunk_id", "vec_id"), 2 * k,
+        keep_corpus_cols=KEEP_COLS,
+    ).select("rank", "neighbor_id", *KEEP_COLS, "distance").collect()
+    return [tuple(r)[1:] for r in sorted(hits, key=lambda r: r["rank"])]
+
+
+def _candidates(hits: list[tuple], cls: Classification, k: int, mode: str) -> list[dict]:
+    """``reference_rank``'s input rows for this question: the scope-kept
+    hits (all of them in improved mode, which filtered before the k-NN),
+    with the classification on each row."""
+    scopes = _scopes(cls)
+    cls_vals = {"q_language": cls.language, "intent": cls.intent,
+                "wants_code": cls.wants_code, "confidence": float(cls.confidence), "k": k}
+    # chunk_index is the reference's HydeResult.index: the 0-based
+    # enumerate position over the RAW top-2k, BEFORE filtering/rerank
+    # (hyde.rs:1227-1231). P6 prints it as Chunk ID, so when filters drop
+    # candidates the printed ids are non-contiguous, like the reference.
+    return [
+        {"query_id": 0, "chunk_id": cid, **dict(zip(KEEP_COLS, kept)),
+         "distance": d, "chunk_index": pos, **cls_vals}
+        for pos, (cid, *kept, d) in enumerate(hits)
+        if mode == "improved" or filters.scope_keep(kept[0], kept[3], *scopes)
     ]
-    return local_frame(spark, rows, res["schema"]).coalesce(1)
+
+
+def _results_schema(index: DataFrame) -> StructType:
+    """The schema of ``results`` before rerank: ``rank_rows``' columns,
+    typed as ``reference_rank`` types them over the same candidates."""
+    return StructType([
+        StructField("query_id", LongType()),
+        StructField("chunk_id", index.schema["chunk_id"].dataType),
+        *[index.schema[c] for c in KEEP_COLS],
+        StructField("distance", DoubleType()),
+        StructField("chunk_index", IntegerType()),
+        StructField("q_language", StringType()),
+        StructField("intent", StringType()),
+        StructField("wants_code", BooleanType()),
+        StructField("confidence", DoubleType()),
+        StructField("k", IntegerType()),
+        StructField("rank", IntegerType()),
+    ])
 
 
 def retrieve(
@@ -127,26 +165,35 @@ def retrieve(
 ) -> dict:
     """Full retrieve() (hyde.rs:468-576) under a pluggable provider.
 
-    The question's ranked plan (k-NN → filters → ``reference_rank``) runs
-    exactly once: its rows are collected, and the rerank order, the
-    results and the prompt (``context.format_prompt``) are built from them
-    in the driver, with no further Spark job.
+    What runs where: only the k-NN differs by index.
 
-    The k-NN runs in the driver when ``index`` is cached and its plan's
-    size estimate is at most ``spark.sql.autoBroadcastJoinThreshold``
-    (the REPL's loaded index): the first such call keeps one copy of the
-    index's vectors and kept columns in the driver, and each question's
-    top-2k rows enter the rest of the plan as a local frame. Otherwise
-    ``knn_join`` scans the index. Both call ``knn.topk_block``, so they
-    rank identically.
+    - ``index`` cached, and its plan's size estimate at most
+      ``spark.sql.autoBroadcastJoinThreshold`` (the REPL's loaded index):
+      the question runs in the driver and runs no Spark job. The first
+      such call keeps one copy of the index's ids, vectors and kept
+      columns; each question runs ``knn.topk_block`` over it.
+    - Otherwise (an uncached or large index; ``cli query``'s one-shot
+      path): one collect of ``knn_join``'s top-2k, which calls the same
+      ``knn.topk_block`` in its Spark tasks.
+
+    In improved mode the scopes limit the corpus before the k-NN: the
+    ``topk_block`` mask from ``filters.scope_keep`` over the resident
+    rows, or ``filters.scope_match`` before ``knn_join``'s scan. Then, in
+    the driver on both paths, reference mode drops the out-of-scope hits
+    (``filters.scope_keep``), ``ranking.rank_rows`` ranks the rest, and
+    the rerank order, the results and the prompt
+    (``context.format_prompt``) are built from the ranked rows.
+    ``tests/test_driver_ranking.py`` holds the Python scope filter and
+    ranking to the Spark forms ``scope_match`` and ``reference_rank``.
 
     Returns a dict:
 
     - ``classification``, ``hypothetical``: the provider's outputs;
-    - ``results``: a driver-local DataFrame (an Arrow ``LocalTableScan``)
-      over the collected rows, one per result, with a 1-based ``rank``
-      (plus ``rerank_score`` under rerank). Collecting or ordering it runs
-      no job over the index;
+    - ``results``: a one-partition driver-local DataFrame (an Arrow
+      ``LocalTableScan``) over the ranked rows, one per result, with a
+      1-based ``rank`` (plus ``rerank_score`` under rerank); the same
+      schema and rows on both paths. Collecting or ordering it runs no
+      job over the index;
     - ``answer``: the provider's token iterator over the prompt.
 
     Rerank (SURVEY M5, hyde.rs:530-542) scores the collected rows with one
@@ -162,49 +209,9 @@ def retrieve(
     # (hyde.rs:500, SURVEY §2.11)
     qvec = provider.embed_batch([hypo])[0]
 
-    cls_cols = _classification_cols(cls, k)
-
-    # improved mode: predicate pushdown, the scope filters run BEFORE the
-    # distance scan. The 2k over-fetch is kept — the intent doc-caps in
-    # reference_rank depend on the retrieved set and still run afterwards,
-    # so fetching exactly k could under-fill; the candidate set here is a
-    # strict superset of reference mode's (any filtered row in the global
-    # top-2k is also in the filtered top-2k).
-    in_scope = None
-    if mode == "improved":
-        in_scope = index.withColumns(cls_cols).where(filters.scope_match())
-    res = _resident_index(spark, index)
-    if res is not None:
-        hits = _resident_hits(spark, res, qvec, 2 * k, in_scope)
-    else:
-        queries = local_frame(
-            spark, [(0, qvec)], "query_id bigint, query_vec array<double>"
-        )
-        corpus = index if in_scope is None else in_scope.select(index.columns)
-        hits = knn_join(
-            queries, corpus.withColumnRenamed("chunk_id", "vec_id"),
-            2 * k,  # O2 over-fetch (hyde.rs:500)
-            keep_corpus_cols=KEEP_COLS,
-        )
-    joined = hits.withColumns(cls_cols)
-    if mode != "improved":
-        joined = joined.where(filters.scope_match())
-    # chunk_index is the reference's HydeResult.index: the 0-based
-    # enumerate position over the RAW k*2 similarity output, BEFORE
-    # filtering/rerank (hyde.rs:1227-1231), i.e. knn_join's rank - 1. P6
-    # prints it as Chunk ID, so when filters drop candidates the printed
-    # ids are non-contiguous, like the reference.
-    candidates = joined.selectExpr(
-        "query_id", "neighbor_id AS chunk_id",
-        "file", "code", "language", "extension", "distance",
-        "rank - 1 AS chunk_index",
-        "q_language", "intent", "wants_code", "confidence", "k",
-    )
-    ranked = ranking.reference_rank(candidates)
-
-    schema = ranked.schema
-    # the one execution of the question's plan, in rank order
-    rows = sorted((r.asDict() for r in ranked.collect()), key=lambda r: r["rank"])
+    hits = _top_hits(spark, index, qvec, cls, k, mode)
+    rows = ranking.rank_rows(_candidates(hits, cls, k, mode))
+    schema = _results_schema(index)
     if use_rerank:
         schema = StructType([*schema.fields, StructField("rerank_score", DoubleType())])
         scores = provider.rerank_scores(query, [r["code"] for r in rows])

@@ -100,8 +100,8 @@ GATE_WINDOW = [
 # Entries that duplicate coverage carried by an earlier entry (or are
 # fixture parity checks whose consumers are themselves gated) go to the
 # end of queries(), where falling off the gate cap loses no operator
-# coverage. Each keeps a one-line reason; window names listed here stay
-# in the window.
+# coverage. Each keeps a one-line reason. No name is in both lists: a
+# window entry's tail reason would describe where it does not sit.
 _OVERFLOW_TAIL = [
     "candidates_fixture",      # synthesis parity; rerank/retrieval gates consume it
     "distinct_counts_approx",  # rows-only HLL twin; exact twin carries the oracle
@@ -160,46 +160,15 @@ _OVERFLOW_TAIL = [
     # green in vocab_top50's CORRECTNESS_r14 row, rank windows re-proven
     # in-window by knn_exact
     "tfidf_top_terms",
-    # new in round 5: corpus-internal heavy-hitter 5-grams (boilerplate
-    # detection, per-doc distinct before shuffle); rotate next round —
-    # gram-explode machinery green in contamination_13gram's
-    # CORRECTNESS_r13 row
-    "boilerplate_grams",
-    # new in round 5: exact decontamination behind a broadcast Bloom
-    # prefilter (same oracle as contamination_13gram — FN-free bloom +
-    # exact verify); rotate next round
-    "contamination_bloom",
     # new in round 5: MinHash-LSH eval↔corpus fuzzy decontamination;
     # rotate next round — band machinery re-proven in-window by
     # neardup_components
     "fuzzy_decontamination",
-    # new in round 5: event-type transition matrix (lag window + agg);
-    # rotate next round — ordered-window machinery re-proven in-window by
-    # sessionize_stateful
-    "event_transitions",
-    # new in round 5: weekly cohort retention matrix; rotate next round —
-    # user-keyed join+agg machinery green in events_asof_join's
-    # CORRECTNESS_r13 row
-    "cohort_retention",
-    # new in round 5: salted two-phase hot-key aggregate behind the gate
-    # (decimal-routed so the rewrite is value-invisible); rotate next
-    # round — converts operators/skew.py from test-only to oracle-gated
-    "value_stats_salted",
-    # new in round 5: product-quantized kNN (32× compression, frozen
-    # sub-codebooks from the trained IVF centroids, asymmetric-distance
-    # shortlist + exact re-rank); rotate next round — completes the
-    # exact→int8→PQ compression ladder, int8 twin green in
-    # knn_int8_rerank's CORRECTNESS_r13 row
-    "pq_knn_rerank",
     # round-5 wave 3 (all oracle-checked locally by test_oracle_harness;
     # rotate next round):
     # hypertable-style dense rollup + LOCF — spine/window machinery
     # green in events_moving_avg's CORRECTNESS_r13 row
     "events_gap_fill_locf",
-    # trailing-7d distinct actives via explode (no range self-join) —
-    # distinct-agg machinery green in events_tumbling_window's
-    # CORRECTNESS_r13 row
-    "rolling_7d_actives",
     # market-basket type co-occurrence — bounded self-join; equi-join+agg
     # machinery green in events_asof_join's CORRECTNESS_r13 row
     "event_type_cooccurrence",
@@ -213,17 +182,10 @@ _OVERFLOW_TAIL = [
     # per-doc token-distribution entropy — explode+agg machinery green
     # in the CORRECTNESS_r14 rows of quality_score and repetition_signals
     "word_entropy",
-    # 1→N Arrow mapInPandas frame sampling (fake demuxer) — Arrow-stage
-    # machinery re-proven in-window by mock_embed_documents
-    "media_frame_sample",
     # Okapi BM25 lexical ranking (integer tf/df/dl, scalar-broadcast
     # stats) — explode+agg machinery green in vocab_top50's
     # CORRECTNESS_r14 row
     "bm25_topk",
-    # reciprocal-rank fusion of BM25 + token-Jaccard top-100s — rank
-    # window + FULL OUTER machinery re-proven in-window by knn_exact's
-    # rank windows
-    "hybrid_rrf_retrieval",
     # corpus-unigram-LM bits-per-token (the no-model member of the
     # perplexity-filter family) — explode+agg machinery green in
     # quality_score's CORRECTNESS_r14 row
@@ -236,18 +198,11 @@ _OVERFLOW_TAIL = [
     # cogrouped-Arrow surface; the RELATIONAL as-of (events_asof_join)
     # remains the preferred form for this semantics
     "cogroup_purchase_view_asof",
-    # Python UDTF via SQL LATERAL (1→N row generator with char offsets)
-    # — gates the Spark 4 UDTF surface; explode covers the offset-free
-    # case (contamination_13gram's CORRECTNESS_r13 row et al.)
-    "token_spans_udtf",
     # Spark 4 VARIANT parse-once extraction — JSON-path machinery
     # green in events_props_extract's CORRECTNESS_r13 row
     "events_props_variant",
     # round-5 wave 4 (data-quality profiling family; oracle-checked
-    # locally by test_oracle_harness): single-pass long-format column
-    # profile — single-row agg machinery re-proven in-window by
-    # ingest_stats
-    "table_profile",
+    # locally by test_oracle_harness):
     # equi-depth quartile histogram (exact cutpoints broadcast + CASE
     # binning) — percentile machinery also exercised by
     # doc_length_percentiles
@@ -273,13 +228,6 @@ _OVERFLOW_TAIL = [
     # candidate pairs over the distinct-name dim — equi-join blocking
     # re-proven in-window by neardup_components' band joins
     "similar_part_names",
-    # canonical entity ids via connected components over the pair graph —
-    # pointer-jump machinery re-proven in-window by neardup_components
-    "part_name_entities",
-    # C4/Dolma paragraph-level dedup with order-preserving doc rebuild —
-    # first-occurrence rank green in dedup_exact's CORRECTNESS_r13 row;
-    # ordered rebuild re-proven in-window by context_assembly's prompt
-    "paragraph_dedup_rebuild",
     # hive-partitioned sink + partition-pruned read round-trip — sink
     # round-trip machinery re-proven in-window by index_roundtrip; pruning
     # physically pinned by tests/test_partition_pruning.py
@@ -294,10 +242,6 @@ _OVERFLOW_TAIL = [
     # Datasketches HLL rollup (rows-only by design: sketches are
     # engine-specific; error bound pinned by tests/test_sketch_bounds.py)
     "weekly_hll_rollup",
-    # fixed-point integer PageRank (3 unrolled iterations, value-hash
-    # oracle over an ITERATIVE algorithm) — iterative machinery re-proven
-    # in-window by neardup_components
-    "part_copurchase_pagerank",
     # JSONL sink/source round-trip at full microsecond precision (the
     # gate caught the default format's millis truncation) — round-trip
     # machinery re-proven in-window by index_roundtrip
@@ -320,12 +264,6 @@ _OVERFLOW_TAIL = [
     # other Python stage is mapInPandas/applyInPandas) — token semantics
     # green in token_count's CORRECTNESS_r14 row
     "token_count_pandas",
-    # FAISS-IVFPQ-shaped composition of the gated IVF + PQ artifacts
-    # (assign -> encode -> probe -> ADC shortlist -> exact re-rank, one
-    # end-to-end value-hash oracle; recall 0.72 pinned >= 0.6) — stage
-    # machinery green in the CORRECTNESS_r13 rows of ivf_topk_trained and
-    # knn_int8_rerank
-    "ivfpq_topk",
     # built-in session_window aggregate (declarative sessionizer, third
     # family member; shared oracle) — session semantics re-proven
     # in-window by sessionize_stateful
@@ -339,15 +277,6 @@ _OVERFLOW_TAIL = [
     # NOT EXISTS) — bin machinery green in events_within_5min_pairs'
     # CORRECTNESS_r13 row
     "abandoned_purchases",
-    # per-source curation report card (composes quality_score +
-    # dedup_exact keep rule + token counts; oracle nests the quality twin
-    # verbatim) — its stages are green in the CORRECTNESS_r14 row of
-    # quality_score and the CORRECTNESS_r13 row of dedup_exact
-    "source_quality_report",
-    # SemDeDup (cluster-pruned embedding dedup, greedy-by-id keep rule;
-    # fixture-calibrated tau documented in-module) — cell machinery
-    # green in ivf_topk_trained's CORRECTNESS_r13 row
-    "semdedup_keep",
     # Spark 4 WITH RECURSIVE surface (depth-bounded UNION ALL closure vs
     # DuckDB's fixed-point UNION oracle) — closure semantics re-proven
     # in-window by neardup_components

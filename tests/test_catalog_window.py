@@ -10,7 +10,8 @@ displacement to list drift — these pins catch:
 - an out-of-window entry without local oracle coverage;
 - a legacy-bench row naming a query the registry no longer has;
 - a tail reason claiming an entry is covered "in-window by" a query that
-  holds no window slot.
+  holds no window slot;
+- a window entry also listed in the tail.
 """
 
 from __future__ import annotations
@@ -56,6 +57,13 @@ def test_gate_window_entries_all_have_value_hash_oracles():
 def test_tail_names_all_resolve():
     unknown = [n for n in catalog._OVERFLOW_TAIL if n not in catalog.SPARK_QUERIES]
     assert not unknown, f"_OVERFLOW_TAIL names match no registered query: {unknown}"
+
+
+def test_tail_and_window_are_disjoint():
+    """_reorder() keeps a window name in the window, so listing it in the
+    tail only gives it a demotion reason that does not apply."""
+    both = sorted(set(catalog._OVERFLOW_TAIL) & set(catalog.GATE_WINDOW))
+    assert not both, f"names in both _OVERFLOW_TAIL and GATE_WINDOW: {both}"
 
 
 def test_out_of_window_entries_keep_local_oracle_coverage():

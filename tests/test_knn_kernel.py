@@ -162,6 +162,19 @@ def test_m_larger_than_corpus_and_empty_inputs(spark):
     assert knn_join(no_queries, corpus, 10).collect() == []
 
 
+def test_nan_distance_ranks_last(spark):
+    """A NaN vector component makes that row's distance NaN; the Spark
+    plan keeps it NaN (not the NULL Arrow reads it as) and ranks it last,
+    as the driver kernel does."""
+    rows = [(i, "a", [float(i), math.nan if i == 1 else 0.0]) for i in range(4)]
+    corpus = spark.createDataFrame(rows, CORPUS_DDL).repartition(2)
+    queries = [(0, "a", [0.0, 0.0])]
+    q = local_frame(spark, queries, QUERY_DDL)
+    got = _spark_rows(knn_join(q, corpus, 4))
+    assert [r[2] for r in got] == [0, 2, 3, 1] and math.isnan(got[-1][3])
+    assert repr(got) == repr(_driver_rows(queries, rows, 4))
+
+
 @pytest.mark.parametrize("bad, message", [
     (None, "corpus vector 2 is NULL"),
     ([1.0], "corpus vector 2 has dim 1 but corpus vector 0 has dim 2"),

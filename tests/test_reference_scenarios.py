@@ -52,16 +52,39 @@ def _classification(spark, language, intent, wants_code, confidence,
     return spark.createDataFrame([row], _CLS_SCHEMA)
 
 
-def _rank(spark, cand_rows, cls_kwargs):
+def _selection(spark, cand_rows, cls_kwargs):
     c = _candidates(spark, cand_rows)
     cls = _classification(spark, **cls_kwargs)
     joined = c.join(F.broadcast(cls), "query_id")
     joined = joined.where(filters.scope_match())
-    # final_sort=False: these scenarios are the reference's unit tests of
+    # final_sort=False: the reference's unit tests of
     # apply_llm_based_filtering itself (hyde.rs:1451-1549) — the SELECTION
     # order, before retrieve()'s final distance re-sort (hyde.rs:545-552)
     out = ranking.reference_rank(joined, final_sort=False)
     return [r["file"] for r in out.orderBy("rank").collect()]
+
+
+def _ranked(spark, cand_rows, cls_kwargs) -> dict[str, list[str]]:
+    """The files in retrieve()'s final order, from each ranker: Spark's
+    ``scope_match`` + ``reference_rank``, and the driver's ``scope_keep``
+    + ``rank_rows`` that ``retrieve()`` runs. The reference's unit tests
+    assert the selection order (``_selection``); each scenario checks it
+    in Spark, and checks this final order from both rankers."""
+    cls_df = _classification(spark, **cls_kwargs)
+    cls = cls_df.first().asDict()
+    joined = _candidates(spark, cand_rows).join(F.broadcast(cls_df), "query_id")
+    out = ranking.reference_rank(joined.where(filters.scope_match()))
+    spark_files = [r["file"] for r in out.orderBy("rank").collect()]
+    rows = [
+        {"chunk_id": i, "file": f, "code": c, "extension": e,
+         "language": lang, "distance": d, **cls}
+        for i, (f, c, e, lang, d) in enumerate(cand_rows)
+    ]
+    kept = [r for r in rows if filters.scope_keep(
+        r["file"], r["extension"], cls["target_folders"],
+        cls["target_extensions"], cls["exclude_patterns"])]
+    return {"spark": spark_files,
+            "driver": [r["file"] for r in ranking.rank_rows(kept)]}
 
 
 def test_retrieve_final_order_is_distance_sorted(spark):
@@ -72,13 +95,10 @@ def test_retrieve_final_order_is_distance_sorted(spark):
         ("src/hyde.rs", "fn hyde_impl() {}", "rs", "rust", 0.3),
         ("src/app.js", "function app() {}", "js", "javascript", 0.1),
     ]
-    c = _candidates(spark, rows)
-    cls = _classification(spark, language="rust", intent="implementation",
-                          wants_code=True, confidence=0.9)
-    joined = c.join(F.broadcast(cls), "query_id")
-    out = ranking.reference_rank(joined)  # final_sort defaults True
-    files = [r["file"] for r in out.orderBy("rank").collect()]
-    assert files == ["src/app.js", "src/main.py", "src/hyde.rs"]
+    for ranker, files in _ranked(spark, rows, dict(
+            language="rust", intent="implementation", wants_code=True,
+            confidence=0.9)).items():
+        assert files == ["src/app.js", "src/main.py", "src/hyde.rs"], ranker
 
 
 def test_final_resort_is_stable_on_distance_ties(spark):
@@ -90,12 +110,10 @@ def test_final_resort_is_stable_on_distance_ties(spark):
         ("src/main.py", "def main():", "py", "python", 0.2),   # chunk_id 0
         ("src/hyde.rs", "fn hyde_impl() {}", "rs", "rust", 0.2),  # chunk_id 1
     ]
-    c = _candidates(spark, rows)
-    cls = _classification(spark, language="rust", intent="implementation",
-                          wants_code=True, confidence=0.9)
-    out = ranking.reference_rank(c.join(F.broadcast(cls), "query_id"))
-    files = [r["file"] for r in out.orderBy("rank").collect()]
-    assert files == ["src/hyde.rs", "src/main.py"]
+    for ranker, files in _ranked(spark, rows, dict(
+            language="rust", intent="implementation", wants_code=True,
+            confidence=0.9)).items():
+        assert files == ["src/hyde.rs", "src/main.py"], ranker
 
 
 # --------------------------- hyde.rs:1451-1489 (code over docs, high conf)
@@ -106,11 +124,14 @@ def test_prioritizes_code_over_docs_when_wants_code_high_confidence(spark):
         ("docs/guide.md", "## Guide", "md", None, 0.2),
         ("src/main.rs", "fn main() {}", "rs", "rust", 0.4),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.8))
     # production: implementation intent drops ALL docs (hyde.rs:1135-1141);
     # the reference's TestHyde copy kept them — production wins (§2.11)
+    cls = dict(language="rust", intent="implementation", wants_code=True,
+               confidence=0.8)
+    files = _selection(spark, rows, cls)
     assert files == ["src/hyde.rs", "src/main.rs"]
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert files == ["src/hyde.rs", "src/main.rs"], ranker
 
 
 # ------------------------------- hyde.rs:1491-1526 (language priority)
@@ -120,8 +141,11 @@ def test_language_specific_prioritization(spark):
         ("src/hyde.rs", "fn hyde_impl() {}", "rs", "rust", 0.3),
         ("src/app.js", "function app() {}", "js", "javascript", 0.1),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.9))
+    # the selection order, Spark only: the driver ranking returns only
+    # the final order, which test_retrieve_final_order_is_distance_sorted
+    # checks for both rankers over these rows
+    files = _selection(spark, rows, dict(language="rust", intent="implementation",
+                                         wants_code=True, confidence=0.9))
     # Rust first despite higher distance; others by distance
     assert files == ["src/hyde.rs", "src/app.js", "src/main.py"]
 
@@ -132,9 +156,15 @@ def test_low_confidence_preserves_distance_order(spark):
         ("README.md", "# Documentation", "md", None, 0.1),
         ("src/hyde.rs", "fn hyde_impl() {}", "rs", "rust", 0.3),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.5))
+    cls = dict(language="rust", intent="implementation", wants_code=True,
+               confidence=0.5)
+    files = _selection(spark, rows, cls)
     assert files == ["README.md", "src/hyde.rs"]
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert files == ["README.md", "src/hyde.rs"], ranker
+    # at k=1 the selection decides which row survives the final sort
+    for ranker, files in _ranked(spark, rows, {**cls, "k": 1}).items():
+        assert files == ["README.md"], ranker
 
 
 # ----------------------------------- hyde.rs:1551-1589 (folder filter)
@@ -145,10 +175,12 @@ def test_folder_filtering(spark):
         ("docs/guide.md", "# Guide", "md", None, 0.3),
         ("lib/utils.rs", "pub fn util() {}", "rs", "rust", 0.4),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.8,
-                                    folders=["src", "lib"]))
+    cls = dict(language="rust", intent="implementation", wants_code=True,
+               confidence=0.8, folders=["src", "lib"])
+    files = _selection(spark, rows, cls)
     assert set(files) == {"src/main.rs", "lib/utils.rs"}
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert set(files) == {"src/main.rs", "lib/utils.rs"}, ranker
 
 
 # -------------------------------- hyde.rs:1591-1620 (extension filter)
@@ -159,10 +191,12 @@ def test_extension_filtering(spark):
         ("script.js", "function main() {}", "js", "javascript", 0.3),
         ("README.md", "# README", "md", None, 0.4),
     ]
-    files = _rank(spark, rows, dict(language=None, intent="implementation",
-                                    wants_code=True, confidence=0.8,
-                                    exts=["rs", "py"]))
+    cls = dict(language=None, intent="implementation", wants_code=True,
+               confidence=0.8, exts=["rs", "py"])
+    files = _selection(spark, rows, cls)
     assert set(files) == {"main.rs", "app.py"}
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert set(files) == {"main.rs", "app.py"}, ranker
 
 
 # ------------------------------- hyde.rs:1622-1656 (exclude patterns)
@@ -173,10 +207,12 @@ def test_exclude_patterns_filtering(spark):
         ("target/debug/main", "binary", None, None, 0.3),
         ("docs/README.md", "# README", "md", None, 0.4),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.8,
-                                    excludes=["test", "target", "docs"]))
+    cls = dict(language="rust", intent="implementation", wants_code=True,
+               confidence=0.8, excludes=["test", "target", "docs"])
+    files = _selection(spark, rows, cls)
     assert files == ["src/main.rs"]
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert files == ["src/main.rs"], ranker
 
 
 # ---------------------- hyde.rs:1658-1695 (combined folder + extension)
@@ -187,10 +223,12 @@ def test_combined_folder_extension_filtering(spark):
         ("tests/test.rs", "#[test] fn test() {}", "rs", "rust", 0.3),
         ("lib/utils.js", "function util() {}", "js", "javascript", 0.4),
     ]
-    files = _rank(spark, rows, dict(language="rust", intent="implementation",
-                                    wants_code=True, confidence=0.8,
-                                    folders=["src"], exts=["rs"]))
+    cls = dict(language="rust", intent="implementation", wants_code=True,
+               confidence=0.8, folders=["src"], exts=["rs"])
+    files = _selection(spark, rows, cls)
     assert files == ["src/main.rs"]
+    for ranker, files in _ranked(spark, rows, cls).items():
+        assert files == ["src/main.rs"], ranker
 
 
 # ------------------------------ repo.rs:492-514 (human_list rendering)

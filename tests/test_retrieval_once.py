@@ -10,6 +10,7 @@ empty result.
 
 from __future__ import annotations
 
+import math
 import time
 
 import pytest
@@ -180,6 +181,7 @@ def test_query_dim_mismatch_raises(spark, index):
     loudly, not rank rows by NULL distances."""
     with pytest.raises(Exception, match=r"dim 65 but the corpus vectors have dim 64"):
         retrieve(spark, index, "how does the parser work", 5, RecordingProvider(DIM + 1))
+    assert retrieval._resident.get("index") is index, "raised off the resident path"
 
 
 @pytest.mark.parametrize("mode", ["reference", "improved"])
@@ -192,6 +194,45 @@ def test_driver_resident_path_matches_the_spark_path(spark, index, mode):
     scanned = retrieve(spark, index.select("*"), query, 5, provider, mode=mode)
     assert (resident["results"].orderBy("rank").collect()
             == scanned["results"].orderBy("rank").collect())
+    assert ([(f.name, f.dataType) for f in resident["results"].schema]
+            == [(f.name, f.dataType) for f in scanned["results"].schema])
+
+
+def test_resident_nan_distance_matches_the_spark_path(spark):
+    """A NaN component in one index embedding makes its distance NaN.
+    Both paths rank that row last and print its distance as ``NaN``."""
+    mock = MockProvider(DIM)
+    rows = []
+    for i in range(6):
+        code = f"fn item_{i}() {{ parse(token_{i}); }}"
+        emb = mock.embed_one(code)
+        if i == 2:
+            emb[7] = float("nan")
+        rows.append((i, f"src/mod_{i}.rs", code, "Rust", "rs", emb))
+    df = spark.createDataFrame(
+        rows,
+        "chunk_id bigint, file string, code string, language string, "
+        "extension string, embedding array<double>",
+    ).persist()
+    df.count()
+    try:
+        query = "how does the rust parser work"
+        got = {}
+        for name, frame in (("resident", df), ("scanned", df.select("*"))):
+            provider = RecordingProvider()
+            out = retrieve(spark, frame, query, 10, provider)
+            list(out["answer"])
+            got[name] = (out["results"].orderBy("rank").collect(), provider.prompts)
+            if name == "resident":
+                assert retrieval._resident.get("index") is df
+        # repr: NaN != NaN, but both print alike
+        assert repr(got["resident"]) == repr(got["scanned"])
+        ranked, prompts = got["resident"]
+        assert len(ranked) == 6 and ranked[-1]["chunk_id"] == 2
+        assert math.isnan(ranked[-1]["distance"])
+        assert "NaN" in prompts[0]
+    finally:
+        df.unpersist()
 
 
 class ScoreProvider(RecordingProvider):
@@ -237,17 +278,15 @@ def _jobs_of(spark, group, call):
 
 
 @pytest.mark.parametrize("mode, rerank, jobs", [
-    pytest.param("reference", False, 1, id="False"),
-    pytest.param("reference", True, 1, id="True"),
-    pytest.param("improved", False, 2, id="improved"),
+    pytest.param("reference", False, 0, id="False"),
+    pytest.param("reference", True, 0, id="True"),
+    pytest.param("improved", False, 0, id="improved"),
 ])
 def test_driver_resident_question_job_count(spark, index, mode, rerank, jobs):
-    """A reference-mode question over the driver-resident index runs one
-    job, the collect of its ranked rows: the hits are one partition and
-    the classification is literal columns, so no shuffle or broadcast
-    splits it into adaptive query stages. Improved mode adds the one
-    collect of its in-scope ids. The rerank order and the prompt are
-    built in the driver and add none."""
+    """A question over the driver-resident index runs no Spark job: the
+    k-NN, the scope filter (before the k-NN in improved mode), the
+    ranking, the rerank order and the prompt all run in the driver, and
+    ``results`` is a local frame that nothing has collected yet."""
     query, provider = "how does the rust parser work", RecordingProvider()
     retrieve(spark, index, query, 5, provider)  # fills the resident slot
     assert retrieval._resident.get("index") is index
