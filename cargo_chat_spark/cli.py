@@ -51,8 +51,10 @@ def cmd_index(spark, repo_dir: str, index_dir: str) -> None:
 
     t0 = time.perf_counter()
     files = scan_repo(spark, repo_dir)
-    index = build_index(files, MockProvider, MOCK_DIM, index_dir=index_dir)
-    n = index.count()
+    build_index(files, MockProvider, MOCK_DIM, index_dir=index_dir)
+    # count the rows written: index.count() would re-run scan, chunk and
+    # embed on the lazy plan, embedding every chunk a second time
+    n = spark.read.parquet(os.path.join(index_dir, "index")).count()
     # Total wall-clock print mirrors main.rs:379
     print(f"Indexed {n} chunks from {repo_dir} -> {index_dir} "
           f"in {time.perf_counter() - t0:.2f}s")

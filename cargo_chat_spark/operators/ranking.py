@@ -45,8 +45,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from cargo_chat_spark.functions.language import (
     DOC_EXTENSIONS, DOC_EXTENSIONS_SIMPLE, EXT_TO_LANGUAGE,
@@ -175,29 +174,3 @@ def rank_rows(rows: list[dict]) -> list[dict]:
     final = sorted(range(len(selected)), key=lambda i: (selected[i][2], i))
     return [{**selected[i][5], "rank": rank} for rank, i in enumerate(final, 1)]
 
-
-def global_topk_ranked(
-    df: DataFrame,
-    order: list[Column],
-    k: int,
-    rank_col: str,
-    cast: str = "int",
-) -> DataFrame:
-    """``row_number() OVER (ORDER BY <order>) <= k`` without a
-    corpus-wide single-partition sort.
-
-    Every global-top-k consumer previously ran the rank window over the
-    FULL frame — Spark 4.1 does not insert a WindowGroupLimit for an
-    empty partition spec, so at scale all rows move to one partition
-    (the bench-tail "No Partition Defined for Window" warnings,
-    optimization guide §2.1). ``orderBy(...).limit(k)`` instead plans as
-    TakeOrderedAndProject — a map-side per-partition top-k plus an
-    O(partitions x k) driver merge — and the rank window then runs over
-    exactly k rows. Output-identical to the window-then-filter form
-    BECAUSE the callers' orderings are total (explicit id tie-break):
-    the global top-k set and the ranks within it are the same rows in
-    the same order.
-    """
-    top = df.orderBy(*order).limit(k)
-    w = Window.orderBy(*order)
-    return top.withColumn(rank_col, F.row_number().over(w).cast(cast))

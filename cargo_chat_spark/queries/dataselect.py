@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from cargo_chat_spark.functions import hashing
 from cargo_chat_spark.operators import dedup as D
+from cargo_chat_spark.queries._topk import global_topk_ranked
 from cargo_chat_spark.queries.registry import register
 from cargo_chat_spark.sources.testdata import load_table, load_table_spread
 
@@ -221,8 +222,6 @@ def dsir_topk_selection(spark, sf_dir):
     so equal-text duplicates rank deterministically). Global top-k via
     window-rank over the weight frame; dsir_gumbel_resample below
     samples from the same frame instead of cutting it."""
-    from cargo_chat_spark.operators.ranking import global_topk_ranked
-
     w = _doc_weights_memo(spark, sf_dir)
     # TakeOrderedAndProject + k-row rank window (global_topk_ranked):
     # no corpus-wide single-partition sort, same rows and ranks
@@ -280,8 +279,6 @@ def dsir_gumbel_resample(spark, sf_dir):
     skey = F.round(
         F.col("weight") / RESAMPLE_T + (-F.log(-F.log(u))), 4
     ).alias("skey")
-    from cargo_chat_spark.operators.ranking import global_topk_ranked
-
     return global_topk_ranked(
         w.select("doc_id", "lang", "source", skey),
         [F.desc("skey"), F.asc("doc_id")], TOP_K, "rank",

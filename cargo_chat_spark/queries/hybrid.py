@@ -27,7 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.operators import dedup as D
-from cargo_chat_spark.operators.ranking import global_topk_ranked
+from cargo_chat_spark.queries._topk import global_topk_ranked
 from cargo_chat_spark.queries.registry import register
 from cargo_chat_spark.sources.testdata import load_table
 
@@ -126,7 +126,7 @@ def bm25_topk(spark, sf_dir):
     """Okapi BM25 top-20 for the fixed query (see module docstring)."""
     scored = _bm25_scored(spark, sf_dir)
     # global top-k via TakeOrderedAndProject + k-row rank window (see
-    # operators/ranking.global_topk_ranked): output-identical, no
+    # queries/_topk.global_topk_ranked): output-identical, no
     # corpus-wide single-partition sort
     return global_topk_ranked(
         scored, [F.desc("bm25"), F.col("doc_id")], _TOPK, "rank"

@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 
 
 def write_index(df: DataFrame, index_dir: str, dim: int) -> None:
-    """S6: persist the index table + sidecar metadata. Repartitions by
-    chunk_id range so downstream kNN scans parallelize evenly."""
+    """S6: persist the index table + sidecar metadata. A plain overwrite
+    of ``<index_dir>/index`` with no repartition, so the parquet files
+    follow ``df``'s partitioning; the dim goes to ``index_meta.json``."""
     df.write.mode("overwrite").parquet(os.path.join(index_dir, "index"))
     meta = {"dim": dim, "format": "parquet", "version": 1}
     with open(os.path.join(index_dir, "index_meta.json"), "w") as fh:

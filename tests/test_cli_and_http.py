@@ -149,6 +149,36 @@ def test_cli_index_query_profile(tmp_path):
     assert "Cargo.toml" in prof["build_files"]
 
 
+def test_cli_index_embeds_each_chunk_once(spark, tmp_path, capsys, monkeypatch):
+    """``cli index`` takes its printed count from the written index, so
+    the embed stage runs once: embedded rows equal the chunk count."""
+    from cargo_chat_spark import cli
+    from cargo_chat_spark.models import mock
+
+    repo = tmp_path / "repo"
+    (repo / "src").mkdir(parents=True)
+    (repo / "src" / "main.rs").write_text("fn main() { let x = 1; }\n" * 120)
+    (repo / "src" / "lib.rs").write_text("pub fn parse() {}\n" * 80)
+    (repo / "README.md").write_text("# Demo\nDemo repo.\n")
+    log = tmp_path / "embedded_rows.txt"
+
+    class CountingProvider(mock.MockProvider):
+        # embed_batch runs in Python worker processes: count through a file
+        def embed_batch(self, texts):
+            with open(log, "a") as fh:
+                fh.write(f"{len(texts)}\n")
+            return super().embed_batch(texts)
+
+    monkeypatch.setattr(mock, "MockProvider", CountingProvider)
+    index_dir = tmp_path / "idx"
+    cli.cmd_index(spark, str(repo), str(index_dir))
+    printed = int(capsys.readouterr().out.split()[1])  # "Indexed <n> chunks ..."
+    chunks = spark.read.parquet(str(index_dir / "index")).count()
+    embedded = sum(int(n) for n in log.read_text().split())
+    assert printed == chunks > 3
+    assert embedded == chunks, f"{embedded} rows embedded for {chunks} chunks"
+
+
 def test_repl_help_status_and_rerank_parse(spark, capsys, monkeypatch):
     """REPL parity (main.rs:101-120): help/status commands answer, query
     without an index warns, --use-rerank parses; loop survives bad input,

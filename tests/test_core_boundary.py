@@ -82,3 +82,18 @@ def test_core_import_closure():
     assert closure == CORE, (
         f"added: {sorted(closure - CORE)}, gone: {sorted(CORE - closure)}"
     )
+
+
+def test_only_local_frame_calls_create_dataframe():
+    """Driver rows become a DataFrame one way: ``functions/localframe.py``
+    is the only engine module that calls ``createDataFrame``."""
+    one_path = ROOT / PKG / "functions" / "localframe.py"
+    callers = sorted(
+        str(f.relative_to(ROOT))
+        for f in (ROOT / PKG).rglob("*.py")
+        if f != one_path and any(
+            isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+            for node in ast.walk(ast.parse(f.read_text()))
+        )
+    )
+    assert not callers, f"createDataFrame outside local_frame: {callers}"

@@ -198,9 +198,10 @@ def test_driver_resident_path_matches_the_spark_path(spark, index, mode):
             == [(f.name, f.dataType) for f in scanned["results"].schema])
 
 
-def test_resident_nan_distance_matches_the_spark_path(spark):
-    """A NaN component in one index embedding makes its distance NaN.
-    Both paths rank that row last and print its distance as ``NaN``."""
+@pytest.fixture
+def nan_index(spark):
+    """Six cached rows; a NaN component in chunk 2's embedding makes its
+    distance NaN."""
     mock = MockProvider(DIM)
     rows = []
     for i in range(6):
@@ -215,24 +216,39 @@ def test_resident_nan_distance_matches_the_spark_path(spark):
         "extension string, embedding array<double>",
     ).persist()
     df.count()
-    try:
-        query = "how does the rust parser work"
-        got = {}
-        for name, frame in (("resident", df), ("scanned", df.select("*"))):
-            provider = RecordingProvider()
-            out = retrieve(spark, frame, query, 10, provider)
-            list(out["answer"])
-            got[name] = (out["results"].orderBy("rank").collect(), provider.prompts)
-            if name == "resident":
-                assert retrieval._resident.get("index") is df
-        # repr: NaN != NaN, but both print alike
-        assert repr(got["resident"]) == repr(got["scanned"])
-        ranked, prompts = got["resident"]
-        assert len(ranked) == 6 and ranked[-1]["chunk_id"] == 2
-        assert math.isnan(ranked[-1]["distance"])
-        assert "NaN" in prompts[0]
-    finally:
-        df.unpersist()
+    yield df
+    df.unpersist()
+
+
+def test_resident_nan_distance_matches_the_spark_path(spark, nan_index):
+    """Both paths rank the NaN-distance row last and print its distance
+    as ``NaN``."""
+    query = "how does the rust parser work"
+    got = {}
+    for name, frame in (("resident", nan_index), ("scanned", nan_index.select("*"))):
+        provider = RecordingProvider()
+        out = retrieve(spark, frame, query, 10, provider)
+        list(out["answer"])
+        got[name] = (out["results"].orderBy("rank").collect(), provider.prompts)
+        if name == "resident":
+            assert retrieval._resident.get("index") is nan_index
+    # repr: NaN != NaN, but both print alike
+    assert repr(got["resident"]) == repr(got["scanned"])
+    ranked, prompts = got["resident"]
+    assert len(ranked) == 6 and ranked[-1]["chunk_id"] == 2
+    assert math.isnan(ranked[-1]["distance"])
+    assert "NaN" in prompts[0]
+
+
+def test_nan_distance_results_plan_as_a_local_table_scan(spark, nan_index):
+    """A NaN in the ranked rows does not move ``results`` off the Arrow
+    table onto a Python RDD."""
+    out = retrieve(spark, nan_index, "how does the rust parser work", 10,
+                   RecordingProvider())
+    assert retrieval._resident.get("index") is nan_index
+    plan = out["results"]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert math.isnan(out["results"].orderBy("rank").collect()[-1]["distance"])
 
 
 class ScoreProvider(RecordingProvider):
