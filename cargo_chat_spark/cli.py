@@ -197,7 +197,12 @@ def _interactive_loop(spark, index_df, usage, read_index) -> None:
             elif cmd == "load-index" and len(args) == 1:
                 loaded, meta = read_index(spark, args[0])
                 loaded = loaded.persist()  # amortized across queries
-                print(f"Loaded {loaded.count()} chunks (dim {meta['dim']})")
+                try:
+                    n = loaded.count()  # fills the cache; raises on a wrong-dim vector
+                except Exception:
+                    loaded.unpersist()  # the previous index stays loaded
+                    raise
+                print(f"Loaded {n} chunks (dim {meta['dim']})")
                 if index_df is not None:
                     release_resident(index_df)
                     index_df.unpersist()

@@ -15,20 +15,32 @@ input takes the same path:
 - the transport: one ``pyarrow.Table`` against ``to_arrow_schema(schema)``,
   handed to ``createDataFrame``, which plans it as a ``LocalTableScan``.
   Arrow keeps a NaN double as NaN, and empty input is an empty table.
+
+A DDL-string schema is parsed (a py4j round trip) once per distinct
+string: call sites pass constants.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import _create_converter, _make_type_verifier, _parse_datatype_string
+from pyspark.sql.types import (
+    StructType, _create_converter, _make_type_verifier, _parse_datatype_string,
+)
+
+
+@lru_cache(maxsize=256)
+def _parse_ddl(ddl: str) -> StructType:
+    return _parse_datatype_string(ddl)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` as one Arrow table: ``rows``
     are tuples, Rows or dicts, ``schema`` a DDL string or a StructType."""
-    st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    st = _parse_ddl(schema) if isinstance(schema, str) else schema
     verify, convert = _make_type_verifier(st), _create_converter(st)
     internal = []
     for row in rows:

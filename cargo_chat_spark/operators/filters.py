@@ -1,11 +1,16 @@
 """Classification-driven candidate filters (SURVEY §2.3 F2-F5, F8).
 
 The scope filters F2-F4 have three forms, deliberately adjacent so they
-cannot drift: a Spark Column expression, a DuckDB SQL emitter used by the
-oracle queries, and :func:`scope_keep`, one row in plain Python, which
-``plans.retrieval.retrieve`` runs in the driver over a question's hits.
-``tests/test_driver_ranking.py`` checks the Python form against the
-Column form on every row of a few hundred random questions. The ranking
+cannot drift: Spark SQL text (``_folder_spark`` & co.), which the Column
+forms ``folder_match``, ``extension_match``, ``exclude_match`` and
+``scope_match`` parse with one ``F.expr`` each; a DuckDB SQL emitter
+used by the oracle queries; and :func:`scope_keep`, one row in plain
+Python, which ``plans.retrieval.retrieve`` runs in the driver over a
+question's hits. All three keep SQL ``exists``'s three-valued result: a
+NULL scope element matches nothing, and where no element matches it
+leaves the predicate NULL. ``tests/test_driver_ranking.py`` checks the
+Python form against the Spark form, and the DuckDB form against the
+Python form, on every row of a few hundred random questions. The ranking
 predicates (F5, F8 and the O5 language
 match) are one SQL text emitter each, shared by both engines: Spark runs
 the text through ``selectExpr`` in ``ranking.reference_rank`` (one driver
@@ -33,6 +38,8 @@ BEFORE the k-NN, over the index scan.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,110 +49,127 @@ from cargo_chat_spark.functions.language import (
     detect_language_sql_case,
 )
 
+# a plain name never starts with "_", the prefix of the Spark SQL lambda
+# variables below, so a lambda never shadows a column it reads
+_PLAIN_NAME = re.compile(r"[A-Za-z][A-Za-z0-9_]*")
 
-def _disabled(arr: Column) -> Column:
-    return arr.isNull() | (F.size(arr) == 0)
+
+def _name(col: Column) -> str:
+    """The SQL name of a plain column reference such as ``F.col("file")``
+    (one py4j call); ``TypeError`` for anything else."""
+    name = col._jc.toString() if isinstance(col, Column) else None
+    if name is None or not _PLAIN_NAME.fullmatch(name):
+        raise TypeError(f"expected a plain column name, got {col!r}")
+    return name
+
+
+def _exists_duckdb(items: str, var: str, pred: str) -> str:
+    """SQL ``exists(items, var -> pred)`` over a non-NULL DuckDB list:
+    TRUE if ``pred`` holds for an element, else NULL if it is NULL for
+    one, else FALSE (DuckDB's ``list_filter`` drops a NULL verdict)."""
+    return f"""(CASE
+        WHEN len(list_filter({items}, {var} -> {pred})) > 0 THEN TRUE
+        WHEN len(list_filter({items}, {var} -> ({pred}) IS NULL)) > 0 THEN NULL
+        ELSE FALSE END)"""
 
 
 # ---------------------------------------------------------------- F2 folder
-def folder_match(file: Column, folders: Column) -> Column:
+def _folder_spark(file: str, folders: str) -> str:
     """∃ folder f: file contains "/f/" OR file startswith "f/" OR
     (file contains "/f" AND file endswith "/" + last-segment(f))."""
+    return f"""({folders} IS NULL OR size({folders}) = 0 OR exists({folders}, _f ->
+        contains({file}, concat('/', _f, '/'))
+        OR startswith({file}, concat(_f, '/'))
+        OR (contains({file}, concat('/', _f))
+            AND endswith({file}, concat('/', element_at(split(_f, '/'), -1))))))"""
 
-    def one(f: Column) -> Column:
-        last_seg = F.element_at(F.split(f, "/"), -1)
-        return (
-            file.contains(F.concat(F.lit("/"), f, F.lit("/")))
-            | file.startswith(F.concat(f, F.lit("/")))
-            | (
-                file.contains(F.concat(F.lit("/"), f))
-                & file.endswith(F.concat(F.lit("/"), last_seg))
-            )
-        )
 
-    return _disabled(folders) | F.exists(folders, one)
+def folder_match(file: Column, folders: Column) -> Column:
+    """F2 over two plain column references, e.g. ``F.col("file")``."""
+    return F.expr(_folder_spark(_name(file), _name(folders)))
 
 
 def folder_match_sql(file: str, folders: str) -> str:
-    return f"""(
-        {folders} IS NULL OR len({folders}) = 0 OR
-        len(list_filter({folders}, f ->
+    match = f"""
             contains({file}, '/' || f || '/')
             OR starts_with({file}, f || '/')
             OR (contains({file}, '/' || f)
-                AND ends_with({file}, '/' || list_extract(string_split(f, '/'), len(string_split(f, '/')))))
-        )) > 0
+                AND ends_with({file}, '/' || list_extract(string_split(f, '/'), len(string_split(f, '/')))))"""
+    return f"""(
+        {folders} IS NULL OR len({folders}) = 0 OR
+        {_exists_duckdb(folders, "f", match)}
     )"""
 
 
 # ------------------------------------------------------------- F3 extension
-def extension_match(ext: Column, file: Column, targets: Column) -> Column:
+def _extension_spark(ext: str, file: str, targets: str) -> str:
     """Dot-normalized equality on extension; path-suffix fallback when the
     extension column is NULL."""
+    return f"""({targets} IS NULL OR size({targets}) = 0 OR CASE WHEN {ext} IS NOT NULL
+        THEN exists({targets}, _t ->
+            regexp_replace({ext}, '^[.]+', '') = regexp_replace(_t, '^[.]+', ''))
+        ELSE exists({targets}, _t ->
+            endswith({file}, concat('.', regexp_replace(_t, '^[.]+', ''))))
+        END)"""
 
-    def norm(t: Column) -> Column:
-        return F.regexp_replace(t, r"^\.+", "")
 
-    by_ext = F.exists(targets, lambda t: norm(ext) == norm(t))
-    by_path = F.exists(targets, lambda t: file.endswith(F.concat(F.lit("."), norm(t))))
-    return _disabled(targets) | F.when(ext.isNotNull(), by_ext).otherwise(by_path)
+def extension_match(ext: Column, file: Column, targets: Column) -> Column:
+    """F3 over three plain column references."""
+    return F.expr(_extension_spark(_name(ext), _name(file), _name(targets)))
 
 
 def extension_match_sql(ext: str, file: str, targets: str) -> str:
+    by_ext = f"regexp_replace({ext}, '^\\.+', '') = regexp_replace(t, '^\\.+', '')"
+    by_path = f"ends_with({file}, '.' || regexp_replace(t, '^\\.+', ''))"
     return f"""(
         {targets} IS NULL OR len({targets}) = 0 OR
         CASE WHEN {ext} IS NOT NULL
-             THEN len(list_filter({targets}, t ->
-                  regexp_replace({ext}, '^\\.+', '') = regexp_replace(t, '^\\.+', ''))) > 0
-             ELSE len(list_filter({targets}, t ->
-                  ends_with({file}, '.' || regexp_replace(t, '^\\.+', '')))) > 0
+             THEN {_exists_duckdb(targets, "t", by_ext)}
+             ELSE {_exists_duckdb(targets, "t", by_path)}
         END
     )"""
 
 
 # -------------------------------------------------------------- F4 exclude
-def exclude_match(file: Column, patterns: Column) -> Column:
+def _exclude_spark(file: str, patterns: str) -> str:
     """TRUE when the row should be KEPT (no pattern matches). Patterns are
     lowercased; path lowercased. NB: the first clause (plain contains)
     subsumes the others — preserved verbatim from the reference."""
-    file_lower = F.lower(file)
+    return f"""({patterns} IS NULL OR size({patterns}) = 0 OR NOT exists({patterns}, _p ->
+        contains(lower({file}), lower(_p))
+        OR contains(lower({file}), concat('/', lower(_p), '/'))
+        OR startswith(lower({file}), concat(lower(_p), '/'))
+        OR endswith(lower({file}), concat('/', lower(_p)))))"""
 
-    def one(p: Column) -> Column:
-        pl = F.lower(p)
-        return (
-            file_lower.contains(pl)
-            | file_lower.contains(F.concat(F.lit("/"), pl, F.lit("/")))
-            | file_lower.startswith(F.concat(pl, F.lit("/")))
-            | file_lower.endswith(F.concat(F.lit("/"), pl))
-        )
 
-    return _disabled(patterns) | ~F.exists(patterns, one)
+def exclude_match(file: Column, patterns: Column) -> Column:
+    """F4 over two plain column references."""
+    return F.expr(_exclude_spark(_name(file), _name(patterns)))
 
 
 def exclude_match_sql(file: str, patterns: str) -> str:
-    return f"""(
-        {patterns} IS NULL OR len({patterns}) = 0 OR
-        len(list_filter({patterns}, p ->
+    match = f"""
             contains(lower({file}), lower(p))
             OR contains(lower({file}), '/' || lower(p) || '/')
             OR starts_with(lower({file}), lower(p) || '/')
-            OR ends_with(lower({file}), '/' || lower(p))
-        )) = 0
+            OR ends_with(lower({file}), '/' || lower(p))"""
+    return f"""(
+        {patterns} IS NULL OR len({patterns}) = 0 OR
+        NOT {_exists_duckdb(patterns, "p", match)}
     )"""
 
 
 # ------------------------------------------------------------ F2-F4 scope
 def scope_match() -> Column:
-    """F2 ∧ F3 ∧ F4 over the standard column names: ``file`` and
-    ``extension`` from the candidate, ``target_folders``,
+    """F2 ∧ F3 ∧ F4 over the standard column names, as one parse:
+    ``file`` and ``extension`` from the candidate, ``target_folders``,
     ``target_extensions`` and ``exclude_patterns`` from the
     classification."""
-    file = F.col("file")
-    return (
-        folder_match(file, F.col("target_folders"))
-        & extension_match(F.col("extension"), file, F.col("target_extensions"))
-        & exclude_match(file, F.col("exclude_patterns"))
-    )
+    return F.expr(" AND ".join([
+        _folder_spark("file", "target_folders"),
+        _extension_spark("extension", "file", "target_extensions"),
+        _exclude_spark("file", "exclude_patterns"),
+    ]))
 
 
 def _exists(items, pred):

@@ -20,12 +20,7 @@ from cargo_chat_spark.functions.localframe import local_frame
 # job overlap shared with the snapshot-lifecycle operators (r15):
 # functions/overlap.spawn_job — same contract (join() re-raises)
 from cargo_chat_spark.functions.overlap import spawn_job as _spawn_job
-from cargo_chat_spark.sources.index_io import read_index, write_index
-
-INDEX_SCHEMA = (
-    "chunk_id bigint, file string, code string, language string, "
-    "extension string, embedding array<double>"
-)
+from cargo_chat_spark.sources.index_io import INDEX_SCHEMA, read_index, write_index
 
 
 def _assign_cells(df: DataFrame, centroids: DataFrame) -> DataFrame:

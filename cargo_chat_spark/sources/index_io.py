@@ -9,6 +9,10 @@ explicit chunk_id key (columnar float arrays, predicate pushdown, partition
 pruning) + a JSON sidecar with table metadata (dim, count) standing in for
 the DynamicAnn dim dispatch (ann.rs:92-113 → just metadata here).
 
+Opening an index runs no Spark job: ``read_index`` reads with the fixed
+``INDEX_SCHEMA`` (no schema-inference job), and its dim check is a
+projection of the scan, not a count over the index (see ``read_index``).
+
 This module holds what the index build and the query read and write. The
 catalog's index maintenance (cell-partitioned layout, Bloom sidecars,
 upsert/compact/delete, ANN CDC sync, reference ``index.bin`` import) lives
@@ -21,13 +25,32 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DoubleType, LongType, StringType, StructField, StructType,
+)
+
+# The one index table layout: written by ``write_index``, read back by
+# ``read_index`` with no inference.
+INDEX_SCHEMA = StructType([
+    StructField("chunk_id", LongType()),
+    *[StructField(c, StringType()) for c in ("file", "code", "language", "extension")],
+    StructField("embedding", ArrayType(DoubleType())),
+])
 
 
 def write_index(df: DataFrame, index_dir: str, dim: int) -> None:
     """S6: persist the index table + sidecar metadata. A plain overwrite
     of ``<index_dir>/index`` with no repartition, so the parquet files
-    follow ``df``'s partitioning; the dim goes to ``index_meta.json``."""
+    follow ``df``'s partitioning; the dim goes to ``index_meta.json``.
+
+    Raises ``ValueError`` when ``df``'s column names, order or types are
+    not ``INDEX_SCHEMA``'s (nullability aside), so every index written
+    here reads back exactly under that schema."""
+    got = df.schema.simpleString()  # simpleString carries no nullability
+    if got != INDEX_SCHEMA.simpleString():
+        raise ValueError(
+            f"index frame is {got}, expected {INDEX_SCHEMA.simpleString()}"
+        )
     df.write.mode("overwrite").parquet(os.path.join(index_dir, "index"))
     meta = {"dim": dim, "format": "parquet", "version": 1}
     with open(os.path.join(index_dir, "index_meta.json"), "w") as fh:
@@ -35,16 +58,28 @@ def write_index(df: DataFrame, index_dir: str, dim: int) -> None:
 
 
 def read_index(spark: SparkSession, index_dir: str) -> tuple[DataFrame, dict]:
-    """S4: load index + metadata; validates stored dim like the reference's
-    load-time dim sniffing (ann.rs:128-161) but from metadata, with a
-    cheap runtime assert query on size(embedding)."""
+    """S4: load index + metadata, running no Spark job.
+
+    The reference checks every vector's dim when it loads its index
+    (ann.rs:128-161). Here the stored dim comes from ``index_meta.json``
+    and the check is part of the scan: the ``embedding`` column is
+    projected through ``raise_error('index contains vectors with dim !=
+    <dim>')`` for a row of another size, so every row any plan reads is
+    checked, on every read, at no extra job. A NULL embedding passes (its
+    size is NULL), and ``knn_join`` rejects it. The error is Spark's
+    ``USER_RAISED_EXCEPTION`` and comes when a plan first reads the
+    embeddings: the ``knn_join`` scan, the driver-resident fill of
+    ``plans.retrieval``, or the first action on a persisted index (which
+    materializes every column)."""
     with open(os.path.join(index_dir, "index_meta.json")) as fh:
         meta = json.load(fh)
-    df = spark.read.parquet(os.path.join(index_dir, "index"))
-    bad = df.where(F.size("embedding") != meta["dim"]).limit(1).count()
-    if bad:
-        raise ValueError(f"index contains vectors with dim != {meta['dim']}")
-    return df, meta
+    dim = int(meta["dim"])
+    df = spark.read.schema(INDEX_SCHEMA).parquet(os.path.join(index_dir, "index"))
+    checked = (
+        f"CASE WHEN size(embedding) <> {dim} THEN raise_error("
+        f"'index contains vectors with dim != {dim}') ELSE embedding END AS embedding"
+    )
+    return df.selectExpr(*INDEX_SCHEMA.fieldNames()[:-1], checked), meta
 
 
 def write_profile(profile_row: dict, index_dir: str) -> None:

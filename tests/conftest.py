@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import time
+
 import duckdb
 import pytest
 
@@ -37,3 +39,23 @@ def duck_small():
     con = make_duckdb(SF_DIR_SMALL)
     yield con
     con.close()
+
+
+def jobs_of(spark, group, call) -> list[int]:
+    """The ids of the Spark jobs ``call()`` runs under job group ``group``,
+    read once the listener bus has delivered them (two reads 0.2 s apart
+    agree)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = None
+    for _ in range(25):
+        now = list(sc.statusTracker().getJobIdsForGroup(group))
+        if now == last:
+            break
+        last = now
+        time.sleep(0.2)
+    return now

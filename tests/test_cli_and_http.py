@@ -4,6 +4,7 @@ HTTP-provider tests with an injected fake transport (no network)."""
 from __future__ import annotations
 
 import json
+import re
 import subprocess
 import sys
 
@@ -229,22 +230,29 @@ def test_repl_history_survives_invocations(spark, tmp_path, monkeypatch):
     )
 
 
-def test_repl_load_index_releases_the_previous_index(spark, tmp_path, monkeypatch):
-    """A second ``load-index`` unpersists the first index and drops its
-    driver-resident copy."""
+def _write_mock_index(spark, index_dir: str, dim: int) -> str:
+    """Six chunks embedded by the REPL's mock provider, written with
+    ``dim`` as the index's stored dim."""
     from cargo_chat_spark import cli
     from cargo_chat_spark.functions.localframe import local_frame
     from cargo_chat_spark.models.mock import MockProvider
-    from cargo_chat_spark.plans import retrieval
     from cargo_chat_spark.sources import index_io
 
     mock = MockProvider(cli.MOCK_DIM)
     rows = [(i, f"src/m{i}.rs", f"fn parse_{i}() {{}}", "Rust", "rs",
              mock.embed_one(f"fn parse_{i}")) for i in range(6)]
-    index_dir = str(tmp_path / "idx")
-    index_io.write_index(local_frame(
-        spark, rows, "chunk_id bigint, file string, code string, language string, "
-        "extension string, embedding array<double>"), index_dir, cli.MOCK_DIM)
+    index_io.write_index(local_frame(spark, rows, index_io.INDEX_SCHEMA), index_dir, dim)
+    return index_dir
+
+
+def test_repl_load_index_releases_the_previous_index(spark, tmp_path, monkeypatch):
+    """A second ``load-index`` unpersists the first index and drops its
+    driver-resident copy."""
+    from cargo_chat_spark import cli
+    from cargo_chat_spark.plans import retrieval
+    from cargo_chat_spark.sources import index_io
+
+    index_dir = _write_mock_index(spark, str(tmp_path / "idx"), cli.MOCK_DIM)
     loaded = []
 
     def read_index(spark, path):
@@ -273,3 +281,45 @@ def test_repl_load_index_releases_the_previous_index(spark, tmp_path, monkeypatc
         assert retrieval._resident.get("index") is not first
     finally:
         second.unpersist()
+
+
+def test_repl_failed_load_index_keeps_the_previous_index(spark, tmp_path, monkeypatch,
+                                                         capsys):
+    """A ``load-index`` of an index whose vectors do not have its stored
+    dim prints the error, leaves no cached frame behind, and the index
+    loaded before it still answers."""
+    from cargo_chat_spark import cli
+    from cargo_chat_spark.plans import retrieval
+    from cargo_chat_spark.sources import index_io
+
+    good = _write_mock_index(spark, str(tmp_path / "good"), cli.MOCK_DIM)
+    bad = _write_mock_index(spark, str(tmp_path / "bad"), 64)
+    loaded, served = [], []
+
+    def read_index(spark, path):
+        df, meta = index_io.read_index(spark, path)
+        loaded.append(df)
+        return df, meta
+
+    def commands():
+        yield f"load-index {good}"
+        yield f"load-index {bad}"
+        yield "query how does parse work"
+        served.append(retrieval._resident.get("index") is loaded[0])
+        yield "exit"
+
+    monkeypatch.delenv("OPENAI_API_KEY", raising=False)
+    feed = commands()
+    monkeypatch.setattr("builtins.input", lambda *_: next(feed))
+    cli._interactive_loop(spark, None, "usage", read_index)
+    first, failed = loaded
+    try:
+        out = capsys.readouterr().out
+        assert re.search(r"^error: .*dim != 64", out, re.M), out
+        assert served == [True], "the query was not served by the first index"
+        assert "1. src/m" in out
+        assert failed.is_cached is False
+        assert first.is_cached is True
+    finally:
+        retrieval.release_resident(first)
+        first.unpersist()

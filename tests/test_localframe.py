@@ -137,3 +137,22 @@ def test_mistyped_float_in_int_column_is_not_truncated(spark):
     else:
         got = local_frame(spark, rows, "a bigint, s string").collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in ref]
+
+
+def test_ddl_schema_is_parsed_once(spark, monkeypatch):
+    """A second call with the same DDL string reuses its parse (a py4j
+    round trip) instead of parsing it again."""
+    from cargo_chat_spark.functions import localframe
+
+    parses, real = [], localframe._parse_datatype_string
+
+    def parse(ddl):
+        parses.append(ddl)
+        return real(ddl)
+
+    monkeypatch.setattr(localframe, "_parse_datatype_string", parse)
+    localframe._parse_ddl.cache_clear()
+    ddl = "a bigint, b string"
+    for rows in ([(1, "x")], [(2, "y"), (3, None)]):
+        assert local_frame(spark, rows, ddl).collect() == [tuple(r) for r in rows]
+    assert parses == [ddl]

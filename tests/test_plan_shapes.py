@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from cargo_chat_spark.queries import catalog
-from tests.conftest import SF_DIR_SMALL
+from tests.conftest import SF_DIR_SMALL, jobs_of
 
 
 def _plan(spark, name: str) -> str:
@@ -162,23 +162,18 @@ def test_rp_tree_plans_build_without_jobs(spark):
     their plans, twice each, runs no job over the data (an eager
     checkpoint ran the whole leaf pipeline on every build). The only jobs
     allowed are the parquet schema reads of ``load_table``."""
-    import time
-
     from cargo_chat_spark import caching
 
     caching.invalidate(("rpt_leaves", SF_DIR_SMALL))
-    sc, group = spark.sparkContext, "rp-tree-plan-build"
-    sc.setJobGroup(group, group)
-    try:
+
+    def build():
         for name in ["rp_tree_forest_topk", "rp_tree_filtered_topk"] * 2:
             catalog.SPARK_QUERIES[name](spark, SF_DIR_SMALL)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(1.0)  # let the listener bus deliver every job it saw
-    st = sc.statusTracker()
+
+    st = spark.sparkContext.statusTracker()
     stages = [
         st.getStageInfo(sid).name
-        for job in st.getJobIdsForGroup(group)
+        for job in jobs_of(spark, "rp-tree-plan-build", build)
         for sid in st.getJobInfo(job).stageIds
     ]
     assert all(name.startswith("parquet at ") for name in stages), stages

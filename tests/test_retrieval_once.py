@@ -11,7 +11,6 @@ empty result.
 from __future__ import annotations
 
 import math
-import time
 
 import pytest
 from pyspark.sql import Window
@@ -25,6 +24,7 @@ from cargo_chat_spark.operators.knn import knn_join
 from cargo_chat_spark.operators.ranking import reference_rank
 from cargo_chat_spark.plans import retrieval
 from cargo_chat_spark.plans.retrieval import retrieve
+from tests.conftest import jobs_of
 
 DIM = 64
 KEEP = ["file", "code", "language", "extension"]
@@ -274,25 +274,6 @@ def test_bad_rerank_scores_raise(spark, index, rewrite, message):
                  ScoreProvider(rewrite), use_rerank=True)
 
 
-def _jobs_of(spark, group, call):
-    """Spark jobs ``call()`` runs under job group ``group``, read once the
-    listener bus has delivered them (two reads 0.2 s apart agree)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    last = None
-    for _ in range(25):
-        now = len(sc.statusTracker().getJobIdsForGroup(group))
-        if now == last:
-            break
-        last = now
-        time.sleep(0.2)
-    return now
-
-
 @pytest.mark.parametrize("mode, rerank, jobs", [
     pytest.param("reference", False, 0, id="False"),
     pytest.param("reference", True, 0, id="True"),
@@ -311,4 +292,4 @@ def test_driver_resident_question_job_count(spark, index, mode, rerank, jobs):
         out = retrieve(spark, index, query, 5, provider, use_rerank=rerank, mode=mode)
         list(out["answer"])
 
-    assert _jobs_of(spark, f"retrieve-jobs-{mode}-{rerank}", ask) == jobs
+    assert len(jobs_of(spark, f"retrieve-jobs-{mode}-{rerank}", ask)) == jobs
