@@ -47,14 +47,16 @@ def _spark():
 def cmd_index(spark, repo_dir: str, index_dir: str) -> None:
     from cargo_chat_spark.models.mock import MockProvider
     from cargo_chat_spark.plans.indexing import build_index
+    from cargo_chat_spark.sources.index_io import read_index
     from cargo_chat_spark.sources.repo import scan_repo
 
     t0 = time.perf_counter()
     files = scan_repo(spark, repo_dir)
     build_index(files, MockProvider, MOCK_DIM, index_dir=index_dir)
-    # count the rows written: index.count() would re-run scan, chunk and
-    # embed on the lazy plan, embedding every chunk a second time
-    n = spark.read.parquet(os.path.join(index_dir, "index")).count()
+    # count the rows written, read back as the query reads them: index.count()
+    # would re-run scan, chunk and embed on the lazy plan, embedding every
+    # chunk a second time
+    n = read_index(spark, index_dir)[0].count()
     # Total wall-clock print mirrors main.rs:379
     print(f"Indexed {n} chunks from {repo_dir} -> {index_dir} "
           f"in {time.perf_counter() - t0:.2f}s")

@@ -35,6 +35,7 @@ CORE = {
     "cargo_chat_spark.session",
     "cargo_chat_spark.sources.index_io",
     "cargo_chat_spark.sources.repo",
+    "cargo_chat_spark.worker_daemon",
 }
 
 
