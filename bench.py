@@ -108,8 +108,6 @@ DETAIL_EXTRA = [
     "cluster_representatives",  # new r7: per-cluster top-5 medoids
     "inverted_postings_waves",  # new r7: 3-wave inverted-index build
     "bm25_topk_persisted",      # new r7: BM25 from the persisted index
-    "nb_train_logprobs",        # new r7: NB model (pure aggregation)
-    "nb_classify_docs",         # new r7: integer-exact NB argmax
     "bm25_cdc_synced_index",    # new r7: CDC-following index lifecycle
     "bm25_cdc_compacted_index",  # new r7: tombstone compaction + query
     "kmeans_online_centroids",  # new r7: mini-batch fold over 3 waves
@@ -130,7 +128,6 @@ DETAIL_EXTRA = [
     "ivf_topk_cdc_synced",      # new r7: ANN index follows CDC feed
     "repo_walk",                # new r8: S1-S3 walk gate (fixture tree)
     "wordfreq_cdc_dict",        # new r8: dict follows snapshot CDC
-    "nb_filter_report",         # new r8: classifier-composed curation
     "rp_lsh_forest_topk",       # batch forest (build gate; headline = probe)
     "rp_forest_cdc_synced",     # new r8: forest follows the CDC feed
     "answer_synthesize_mock",   # new r9: M6 mock tail over context assembly
@@ -143,7 +140,6 @@ DETAIL_EXTRA = [
     "dsir_topk_selection",      # new r10: hard top-k selection
     "dsir_gumbel_resample",     # new r10: Gumbel-top-k softmax resample
     "dsir_cdc_model",           # new r10: CDC-folded DSIR bag models
-    "nb_calibration_report",    # new r10: margin-binned NB reliability
     "ccnet_perplexity_buckets",  # new r10: head/middle/tail LM split
     "ngram_diversity_report",   # new r10: distinct-n corpus card
     "ann_rank_metrics_report",  # new r10: MRR/NDCG@10 vs exact kNN
@@ -256,8 +252,7 @@ _R12_CONSOLIDATED_BARS = {
     "leakage_safe_split": 0.26,
     "lsh_band_sweep_report": 2.09, "lsh_precision_report": 3.09, "media_frame_sample": 0.49,
     "minhash_lsh_pairs": 3.07, "mmr_diversified_topk": 1.57,
-    "nb_calibration_report": 2.57, "nb_classify_docs": 1.27, "nb_filter_report": 2.34,
-    "nb_train_logprobs": 0.7, "neardup_cluster_histogram": 2.12, "nfc_normalize_text": 0.55,
+    "neardup_cluster_histogram": 2.12, "nfc_normalize_text": 0.55,
     "ngram_diversity_report": 1.11,
     "paragraph_dedup_rebuild": 1.19, "part_copurchase_pagerank": 7.23, "part_name_entities_recursive": 2.67,
     "phrase_match_docs": 0.49, "phrase_match_persisted": 0.31, "pmi_bigrams_top": 1.59,

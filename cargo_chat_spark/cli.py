@@ -178,6 +178,27 @@ def cmd_interactive(spark) -> None:
         _save_history(history)  # every exit path persists, main.rs:741-744
 
 
+def _parse_query_args(args: list[str]) -> tuple[str, int, bool] | None:
+    """``<question...> [-k K] [--use-rerank]`` as (question, k, rerank),
+    or None when K is missing, not a non-negative integer (the
+    reference's ``usize``), or the question is empty."""
+    words, k, rerank = [], 5, False
+    it = iter(args)
+    for a in it:
+        if a == "-k":
+            v = next(it, "")
+            if not v.isdecimal():
+                return None
+            k = int(v)
+        elif a == "--use-rerank":
+            rerank = True
+        else:
+            words.append(a)
+    if not words:
+        return None
+    return " ".join(words), k, rerank
+
+
 def _interactive_loop(spark, index_df, usage, read_index) -> None:
     from cargo_chat_spark.plans.retrieval import release_resident
 
@@ -209,19 +230,16 @@ def _interactive_loop(spark, index_df, usage, read_index) -> None:
                     release_resident(index_df)
                     index_df.unpersist()
                 index_df = loaded
-            elif cmd == "query" and args:
+            elif cmd == "query":
                 if index_df is None:
                     print("No index loaded — use load-index <dir>")
                     continue
-                k = 5
-                if "-k" in args:
-                    i = args.index("-k")
-                    k = int(args[i + 1])
-                    args = args[:i] + args[i + 2:]
-                rerank = "--use-rerank" in args
-                if rerank:
-                    args = [a for a in args if a != "--use-rerank"]
-                cmd_query(spark, index_df, " ".join(args), k, rerank=rerank)
+                parsed = _parse_query_args(args)
+                if parsed is None:
+                    print(usage)
+                    continue
+                question, k, rerank = parsed
+                cmd_query(spark, index_df, question, k, rerank=rerank)
             elif cmd == "help":
                 print(usage)  # ReplSubCmd::Help, main.rs:110-113
             elif cmd == "status":

@@ -10,7 +10,6 @@ from cargo_chat_spark.queries import analytics  # noqa: F401
 from cargo_chat_spark.queries import ann_lsh  # noqa: F401
 from cargo_chat_spark.queries import bpe_queries  # noqa: F401
 from cargo_chat_spark.queries import clustering  # noqa: F401
-from cargo_chat_spark.queries import nb_classifier  # noqa: F401
 from cargo_chat_spark.queries import curation  # noqa: F401
 from cargo_chat_spark.queries import dataprofile  # noqa: F401
 from cargo_chat_spark.queries import dataselect  # noqa: F401

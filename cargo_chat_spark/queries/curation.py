@@ -549,8 +549,8 @@ def unigram_logprob(spark, sf_dir):
 # The CCNet policy (Wenzek et al. 2020): score every document by LM
 # perplexity, split each LANGUAGE into head/middle/tail tertiles, keep
 # head+middle for pretraining. Here the LM is the corpus's own unigram
-# model (the unigram_logprob gate's formulation made integer-exact via
-# the NB gates' micro-unit precedent: per-token floor(log2(c/n)*1e6)
+# model (the unigram_logprob gate's formulation made integer-exact in
+# micro-units: per-token floor(log2(c/n)*1e6)
 # BIGINT, per-doc integer division by token count), tertile cutoffs are
 # exact integer rank-thirds of the scores PER LANGUAGE (row_number
 # order by (score, doc_id)), and the

@@ -1470,8 +1470,8 @@ def vocab_oov_report(spark, sf_dir):
 # Evaluation-as-data for the language-ID heuristic (P2 family): the
 # fixture's true `lang` column crossed with langid_heuristic's
 # prediction — confusion cells with per-true-language totals and the
-# integer micro-unit cell rate. The ann_recall/nb_calibration
-# discipline applied to langid: the card an operator consumes to decide
+# integer micro-unit cell rate. The ann_recall_report discipline
+# applied to langid: the card an operator consumes to decide
 # marker-set changes. Two keyed aggregates + one broadcast join.
 _LANGID_CONF_SQL = f"""
 WITH pred AS ({_langid_sql()}),

@@ -132,7 +132,7 @@ QUALIFY "rank" <= 10
 
 
 @register("knn_int8_rerank", sql=_KNN_INT8_SQL)
-def knn_int8_rerank(spark, sf_dir, *, max_collect_queries: int = 4096):
+def knn_int8_rerank(spark, sf_dir):
     """Quantize → integer-distance shortlist ({_QUANT_CAND}/query) → exact
     re-rank top-10. The global scale is a bounded driver scalar (like the
     k-means centroids); quantized vectors would be the stored form at scale
@@ -141,16 +141,18 @@ def knn_int8_rerank(spark, sf_dir, *, max_collect_queries: int = 4096):
 
     Physical strategy (r13 rework — the r12 keys-only rework was
     scale-right but paid 5 corpus scans + a per-pair JVM lambda at
-    fixture scale): ONE aggregate pass collects gscale AND the bounded
-    query set (LIMIT-capped by count at {max_collect_queries}; past the
-    cap the all-JVM broadcast form below takes over), then ONE
-    mapInPandas pass quantizes each Arrow batch in NumPy and emits the
-    local integer top-{_QUANT_CAND} per query via an exact float64 GEMM
+    fixture scale): ONE aggregate pass computes gscale and one collect
+    brings the query set (every 100th vector: 5-20 rows on the
+    fixtures) to the driver, then ONE mapInPandas pass quantizes each
+    Arrow batch in NumPy and emits the local integer top-{_QUANT_CAND}
+    per query via an exact float64 GEMM
     (|q|^2+|c|^2-2qc; every intermediate < 2^53, so bit-exact vs the
     oracle's BIGINT arithmetic). The shuffle then carries only
     O(partitions x |Q| x {_QUANT_CAND}) key rows; floats re-attach by
     broadcasting the pruned shortlist back onto one corpus scan (the
     r12 payload-slimming rule kept — the corpus itself never shuffles).
+    There is no bounded form for a query set too large for the driver:
+    as with ``knn_join``, such a set is blocked by the caller.
     """
     import numpy as np
     import pandas as pd
@@ -163,13 +165,7 @@ def knn_int8_rerank(spark, sf_dir, *, max_collect_queries: int = 4096):
         lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
     )
     is_q = F.col("vec_id") % 100 == 0
-    head = emb.agg(
-        F.max(absmax).alias("gmax"),
-        F.count(F.when(is_q, 1)).alias("nq"),
-    ).first()
-    gscale = float(head["gmax"]) / 127.0
-    if head["nq"] > max_collect_queries:
-        return _knn_int8_rerank_jvm(spark, emb, gscale)
+    gscale = float(emb.agg(F.max(absmax)).first()[0]) / 127.0
     qrows = (
         emb.where(is_q)
         .select(F.col("vec_id").alias("query_id"), "embedding")
@@ -217,65 +213,6 @@ def knn_int8_rerank(spark, sf_dir, *, max_collect_queries: int = 4096):
     qvecs = local_frame(spark, 
         [(int(r["query_id"]), r["embedding"]) for r in qrows],
         "query_id bigint, qvec array<float>",
-    )
-    rescored = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            vectors.euclidean(F.col("qvec"), F.col("embedding")).alias(
-                "distance"
-            ),
-        )
-    )
-    w_r = Window.partitionBy("query_id").orderBy("distance", "neighbor_id")
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_r))
-        .where(F.col("rank") <= 10)
-    )
-
-
-def _knn_int8_rerank_jvm(spark, emb, gscale):
-    """Over-cap fallback: the r12 all-JVM broadcast form (no driver
-    collect of the query set). Same oracle, same result order."""
-    from pyspark.sql import Window
-
-    quant = emb.select(
-        "vec_id",
-        "embedding",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") / F.lit(gscale) + F.lit(0.5)).cast(
-                "bigint"
-            ),
-        ).alias("q"),
-    )
-    qq = quant.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-    )
-    qdist = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
-    cand = quant.drop("embedding").crossJoin(F.broadcast(qq)).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        qdist.alias("qdist"),
-    )
-    w_q = Window.partitionBy("query_id").orderBy("qdist", "neighbor_id")
-    shortlist = (
-        cand.withColumn("qr", F.row_number().over(w_q))
-        .where(F.col("qr") <= _QUANT_CAND)
-        .select("query_id", "neighbor_id")
-    )
-    from cargo_chat_spark.functions import vectors
-
-    qvecs = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     rescored = (
         emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")

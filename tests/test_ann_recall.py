@@ -283,28 +283,6 @@ def test_rank_metrics_report_pins(spark):
         assert rows[m]["n_hits"] == recall[m], m
 
 
-def test_int8_overcap_fallback_matches_numpy_path(spark):
-    """The r13 int8 rework has two physical forms under one oracle: the
-    NumPy single-pass GEMM (bounded query collect) and the all-JVM
-    broadcast form past the collect cap. Force the fallback by setting
-    the cap below |Q| and pin row-for-row equality — the cap must change
-    the plan, never the answer."""
-    from cargo_chat_spark.queries.vector_search import knn_int8_rerank
-
-    main = knn_int8_rerank(spark, SF_DIR_SMALL).orderBy(
-        "query_id", "rank"
-    ).collect()
-    fb = knn_int8_rerank(
-        spark, SF_DIR_SMALL, max_collect_queries=0
-    ).orderBy("query_id", "rank").collect()
-    assert len(main) == len(fb) and len(main) > 0
-    for a, b in zip(main, fb):
-        assert (a["query_id"], a["neighbor_id"], a["rank"]) == (
-            b["query_id"], b["neighbor_id"], b["rank"]
-        )
-        assert abs(a["distance"] - b["distance"]) < 1e-12
-
-
 def test_rp_tree_forest_recall(spark):
     """The literal reference structure (16 median-split RP trees,
     ann.rs:254): depth 3 must clear the LSH-forest's 0.8 recall bar

@@ -200,6 +200,40 @@ def test_repl_help_status_and_rerank_parse(spark, capsys, monkeypatch):
     assert "error: No closing quotation" in out
 
 
+@pytest.mark.parametrize("line, asked", [
+    ("query", None),
+    ("query foo -k", None),
+    ("query foo -k abc", None),
+    ("query foo -k -1", None),
+    ("query -k 3", None),
+    ("query --use-rerank", None),
+    ("query -k 3 --use-rerank", None),
+    ("query foo -k --use-rerank", None),
+    ("query what is this", ("what is this", 5, False)),
+    ("query foo -k 3 bar --use-rerank", ("foo bar", 3, True)),
+])
+def test_repl_query_parse(line, asked, capsys, monkeypatch):
+    """A REPL ``query`` whose -k is missing, not an integer or negative,
+    or whose question is empty prints the usage line and asks nothing;
+    a well-formed one reaches ``cmd_query`` with its question, k and
+    rerank flag."""
+    from cargo_chat_spark import cli
+
+    calls = []
+    monkeypatch.setattr(
+        cli, "cmd_query",
+        lambda spark, index_df, question, k, rerank: calls.append((question, k, rerank)),
+    )
+    feed = iter([line, "exit"])
+    monkeypatch.setattr("builtins.input", lambda *_: next(feed))
+    cli._interactive_loop(None, object(), "USAGE LINE", None)
+    out = capsys.readouterr().out
+    if asked is None:
+        assert calls == [] and out == "USAGE LINE\n", (calls, out)
+    else:
+        assert calls == [asked] and out == "", (calls, out)
+
+
 def test_repl_history_survives_invocations(spark, tmp_path, monkeypatch):
     """History file parity (main.rs:578-601, 611, 741-744): commands typed
     in one REPL session are reloaded into readline in the next."""
