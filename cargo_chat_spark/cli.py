@@ -178,18 +178,26 @@ def cmd_interactive(spark) -> None:
         _save_history(history)  # every exit path persists, main.rs:741-744
 
 
+def _k_arg(v: str) -> int:
+    """K of a query, the one-shot ``-k`` and the REPL's alike: a
+    non-negative integer, like the reference's ``usize``."""
+    if not v.isdecimal():
+        raise argparse.ArgumentTypeError(f"K must be a non-negative integer, got {v!r}")
+    return int(v)
+
+
 def _parse_query_args(args: list[str]) -> tuple[str, int, bool] | None:
     """``<question...> [-k K] [--use-rerank]`` as (question, k, rerank),
-    or None when K is missing, not a non-negative integer (the
-    reference's ``usize``), or the question is empty."""
+    or None when K is missing or not a ``_k_arg``, or the question is
+    empty."""
     words, k, rerank = [], 5, False
     it = iter(args)
     for a in it:
         if a == "-k":
-            v = next(it, "")
-            if not v.isdecimal():
+            try:
+                k = _k_arg(next(it, ""))
+            except argparse.ArgumentTypeError:
                 return None
-            k = int(v)
         elif a == "--use-rerank":
             rerank = True
         else:
@@ -262,7 +270,7 @@ def main(argv: list[str] | None = None) -> int:
     p_query = sub.add_parser("query")
     p_query.add_argument("index_dir")
     p_query.add_argument("question")
-    p_query.add_argument("-k", type=int, default=5)
+    p_query.add_argument("-k", type=_k_arg, default=5)
     p_query.add_argument("--rerank", action="store_true")
     p_profile = sub.add_parser("profile")
     p_profile.add_argument("repo_dir")

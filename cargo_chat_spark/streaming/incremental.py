@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.plans.indexing import build_index
+from cargo_chat_spark.sources.index_io import INDEX_COMPRESSION
 
 
 def windowed_event_counts(
@@ -75,7 +76,8 @@ def incremental_index_stream(
             "path", F.concat(F.lit(f"drop/{batch_id}/doc_"), F.monotonically_increasing_id().cast("string"), F.lit(".md"))
         ).withColumn("extension", F.lit("md"))
         index = build_index(files, provider_factory, dim)
-        index.write.mode("append").parquet(f"{index_dir}/index")
+        index.write.parquet(f"{index_dir}/index", mode="append",
+                            compression=INDEX_COMPRESSION)
 
     return (
         stream.writeStream.foreachBatch(process_batch)

@@ -234,6 +234,37 @@ def test_repl_query_parse(line, asked, capsys, monkeypatch):
         assert calls == [asked] and out == "", (calls, out)
 
 
+@pytest.mark.parametrize("k, asked", [("-1", None), ("3", 3)])
+def test_one_shot_query_k_parse(k, asked, capsys, monkeypatch):
+    """The one-shot ``query`` takes -k by the REPL's rule: a negative K is
+    argparse's usage error, before any Spark session or index is opened;
+    a non-negative one reaches ``cmd_query``."""
+    from cargo_chat_spark import cli
+    from cargo_chat_spark.sources import index_io
+
+    class NoSpark:
+        def stop(self):
+            pass
+
+    calls = []
+    monkeypatch.setattr(cli, "_spark", NoSpark)
+    monkeypatch.setattr(index_io, "read_index", lambda spark, index_dir: ("index", {}))
+    monkeypatch.setattr(
+        cli, "cmd_query",
+        lambda spark, index_df, question, k, rerank: calls.append((question, k)),
+    )
+    argv = ["query", "idx", "what is this", "-k", k]
+    if asked is None:
+        with pytest.raises(SystemExit) as exit_:
+            cli.main(argv)
+        assert exit_.value.code == 2
+        assert "K must be a non-negative integer" in capsys.readouterr().err
+        assert calls == []
+    else:
+        assert cli.main(argv) == 0
+        assert calls == [("what is this", asked)]
+
+
 def test_repl_history_survives_invocations(spark, tmp_path, monkeypatch):
     """History file parity (main.rs:578-601, 611, 741-744): commands typed
     in one REPL session are reloaded into readline in the next."""

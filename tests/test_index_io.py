@@ -1,9 +1,15 @@
 """Opening an index (``sources/index_io.py``): ``read_index`` runs no Spark
 job, its dim check runs inside whatever plan first reads the embeddings,
-and ``write_index`` writes only frames of ``INDEX_SCHEMA``."""
+and ``write_index`` writes only frames of ``INDEX_SCHEMA``, zstd-compressed
+(checked from the parquet footers, not through Spark)."""
 
 from __future__ import annotations
 
+import json
+from functools import partial
+from pathlib import Path
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -13,6 +19,7 @@ from cargo_chat_spark.models.mock import MockProvider
 from cargo_chat_spark.plans import retrieval
 from cargo_chat_spark.plans.retrieval import retrieve
 from cargo_chat_spark.sources.index_io import INDEX_SCHEMA, read_index, write_index
+from cargo_chat_spark.streaming.incremental import incremental_index_stream
 from tests.conftest import jobs_of
 
 DIM = 64
@@ -28,6 +35,15 @@ def _rows(n: int = 6, short: tuple = ()) -> list[tuple]:
 def _write(spark, path, rows) -> str:
     write_index(local_frame(spark, rows, INDEX_SCHEMA), str(path), DIM)
     return str(path)
+
+
+def _codecs(index_dir) -> set[str]:
+    """The codec of every column chunk of ``<index_dir>/index``'s files."""
+    files = sorted(Path(index_dir, "index").glob("*.parquet"))
+    assert files
+    return {md.row_group(g).column(c).compression
+            for md in (pq.ParquetFile(f).metadata for f in files)
+            for g in range(md.num_row_groups) for c in range(md.num_columns)}
 
 
 def test_read_index_runs_no_job_and_reads_back_exactly(spark, tmp_path):
@@ -97,3 +113,34 @@ def test_write_index_takes_only_index_schema_frames(spark, tmp_path):
     strict = StructType([StructField("chunk_id", LongType(), False), *INDEX_SCHEMA[1:]])
     write_index(local_frame(spark, rows, strict), str(tmp_path / "strict"), DIM)
     assert read_index(spark, str(tmp_path / "strict"))[0].count() == 2
+
+
+def test_write_index_writes_every_column_chunk_zstd(spark, tmp_path):
+    index_dir = _write(spark, tmp_path / "idx", _rows())
+    assert _codecs(index_dir) == {"ZSTD"}
+
+
+def test_snappy_index_still_reads_back(spark, tmp_path):
+    """An index written before the codec changed: snappy parquet plus
+    ``index_meta.json`` opens through ``read_index`` with identical rows."""
+    rows = _rows()
+    index_dir = tmp_path / "snappy"
+    local_frame(spark, rows, INDEX_SCHEMA).write.parquet(
+        str(index_dir / "index"), compression="snappy")
+    (index_dir / "index_meta.json").write_text(
+        json.dumps({"dim": DIM, "format": "parquet", "version": 1}))
+    assert _codecs(index_dir) == {"SNAPPY"}
+    index, meta = read_index(spark, str(index_dir))
+    assert meta["dim"] == DIM
+    assert sorted(tuple(r) for r in index.collect()) == rows
+
+
+def test_incremental_stream_appends_zstd(spark, tmp_path):
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "a.txt").write_text("zstd streamed document " * 40)
+    index_dir = tmp_path / "stream_index"
+    q = incremental_index_stream(spark, str(drop), str(index_dir), str(tmp_path / "ckpt"),
+                                 partial(MockProvider, DIM), DIM).start()
+    assert q.awaitTermination(120)
+    assert _codecs(index_dir) == {"ZSTD"}
