@@ -17,11 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IMAGE_SCHEMA = (
-    "media_id bigint, payload binary, media_type string, "
-    "meta struct<width:int, height:int, codec:string>"
-)
-
 FEATURE_SCHEMA = "media_id bigint, feature array<double>, decode_ok boolean"
 
 

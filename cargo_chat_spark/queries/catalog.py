@@ -133,8 +133,8 @@ _OVERFLOW_TAIL = [
     # (CORRECTNESS_r13 row): rows-only by design (distributed-mean float
     # association), recall pinned in tests/test_ann_recall.py
     "ivf_topk_trained_live",
-    # new in round 5: batch twin of streaming/dedup_stream.py (oracle-
-    # checked locally by test_stream_dedup.py); rotate next round —
+    # new in round 5: event-dedup collapse (oracle-checked locally by
+    # test_stream_dedup.py); rotate next round —
     # hash-groupBy collapse machinery green in dedup_exact's
     # CORRECTNESS_r13 row
     "events_dedup_collapse",

@@ -17,16 +17,6 @@ from cargo_chat_spark.queries.registry import register
 from cargo_chat_spark.sources.testdata import load_table, parquet_rows
 from cargo_chat_spark.functions.localframe import local_frame
 
-_DOT = """
-    list_sum(list_transform(generate_series(1, len(a.embedding)),
-        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-"""
-_NORM_A = """
-    sqrt(list_sum(list_transform(generate_series(1, len(a.embedding)),
-        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-"""
-_NORM_B = _NORM_A.replace("a.embedding", "b.embedding")
-
 # --------------------------------------------------------- cosine top-k
 # Cosine via hoisted L2 normalization in BOTH engines: each vector is
 # normalized once per ROW, pair distance is then a single dot fold

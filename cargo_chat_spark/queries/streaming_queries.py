@@ -421,7 +421,7 @@ def events_moving_avg(spark, sf_dir):
 
 
 # ------------------------------------------------------- event dedup collapse
-# Batch twin of streaming/dedup_stream.py (the at-least-once repair stage):
+# The at-least-once repair stage of a streaming ingest, in batch form:
 # collapse events identical in (user_id, event_type, ts) to one kept row
 # (min event_id — "first delivery wins") with the duplicate count. On the
 # fixture the corpus may be duplicate-free — the oracle then pins that the
@@ -823,11 +823,10 @@ def events_session_window_builtin(spark, sf_dir):
 
 
 # -------------------------------------------- abandonment (anti range join)
-# Batch twin of the LEFT-OUTER stream-stream interval join
-# (streaming/interval_join.py, how="left_outer"): purchases with NO view
-# by the same user within the following 5 minutes. Spark side expresses
-# the NOT EXISTS as a left_anti join over the same (user, tol-bin)
-# bucketed candidates as within_tolerance_pairs — the probe stays an
+# The LEFT-OUTER interval join's unmatched side, in batch form: purchases
+# with NO view by the same user within the following 5 minutes. Spark side
+# expresses the NOT EXISTS as a left_anti join over the same (user,
+# tol-bin) bucketed candidates as within_tolerance_pairs — the probe stays an
 # equi-join on (user_id, bin) with the forward-bin union, never a
 # per-user cross product; the oracle keeps the correlated NOT EXISTS
 # form, so the two formulations prove each other.

@@ -20,7 +20,9 @@ from cargo_chat_spark.functions.localframe import local_frame
 # job overlap shared with the snapshot-lifecycle operators (r15):
 # functions/overlap.spawn_job — same contract (join() re-raises)
 from cargo_chat_spark.functions.overlap import spawn_job as _spawn_job
-from cargo_chat_spark.sources.index_io import INDEX_SCHEMA, read_index, write_index
+from cargo_chat_spark.sources.index_io import (
+    INDEX_SCHEMA, read_index, write_index, write_index_meta,
+)
 
 
 def _assign_cells(df: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -57,18 +59,10 @@ def write_index_partitioned(
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         os.path.join(index_dir, "index")
     )
-    meta = {
-        "dim": dim,
-        "format": "parquet",
-        "version": 1,
-        "partitioned_by": "cell_id",
-        "centroids": [
-            [r["cell_id"], [float(x) for x in r["cvec"]]]
-            for r in centroids.orderBy("cell_id").collect()  # k rows, bounded
-        ],
-    }
-    with open(os.path.join(index_dir, "index_meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
+    write_index_meta(index_dir, dim, partitioned_by="cell_id", centroids=[
+        [r["cell_id"], [float(x) for x in r["cvec"]]]
+        for r in centroids.orderBy("cell_id").collect()  # k rows, bounded
+    ])
     # chunk→cell Bloom manifest (see below): built once here, kept fresh
     # incrementally by upsert_index_cells
     _refresh_cell_blooms(df.sparkSession, index_dir)
@@ -245,8 +239,8 @@ def _bloom_candidate_cells(spark: SparkSession, blooms, upd_ids: DataFrame) -> D
 def upsert_index_cells(spark: SparkSession, index_dir: str, updates: DataFrame) -> None:
     """Incremental maintenance of the cell-partitioned index: new/changed
     vectors land WITHOUT rewriting the table — only the touched cells'
-    partitions rewrite (dynamic partition overwrite, the same idempotent
-    primitive as streaming/upsert_sink).
+    partitions rewrite (dynamic partition overwrite, an idempotent
+    primitive).
 
     Upsert-by-chunk_id semantics: an updated vector REPLACES its old row
     even when the new embedding assigns to a DIFFERENT cell, so touched =
@@ -264,8 +258,7 @@ def upsert_index_cells(spark: SparkSession, index_dir: str, updates: DataFrame) 
 
     Contract (enforced): ``updates`` must carry ONE row per chunk_id —
     the assignment window would otherwise silently keep an arbitrary
-    winner among duplicates (callers collapse first; see
-    streaming/index_stream.py's per-batch dedup).
+    winner among duplicates (callers collapse first).
     """
     with open(os.path.join(index_dir, "index_meta.json")) as fh:
         meta = json.load(fh)
@@ -421,10 +414,9 @@ def compact_index_cells(
     manifest (same ids), so only the file layout changes.
     ``cell_ids=None`` considers every cell. Returns the cells rewritten.
 
-    Like streaming/upsert_sink.compact_rollup this is an offline
-    maintenance pass (single-writer); unlike it, no watermark is needed —
-    the upsert's replace-by-chunk_id semantics are layout-independent, so
-    replays remain correct across a compaction.
+    This is an offline maintenance pass (single-writer) that needs no
+    watermark: the upsert's replace-by-chunk_id semantics are
+    layout-independent, so replays remain correct across a compaction.
     """
     data_dir = os.path.join(index_dir, "index")
     by_cell: dict[int, int] = {}

@@ -69,9 +69,26 @@ def write_index(df: DataFrame, index_dir: str, dim: int) -> None:
         )
     df.write.parquet(os.path.join(index_dir, "index"), mode="overwrite",
                      compression=INDEX_COMPRESSION)
-    meta = {"dim": dim, "format": "parquet", "version": 1}
-    with open(os.path.join(index_dir, "index_meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
+    write_index_meta(index_dir, dim)
+
+
+def write_index_meta(index_dir: str, dim: int, *, append: bool = False,
+                     **extra) -> None:
+    """Write ``<index_dir>/index_meta.json``, the sidecar ``read_index``
+    takes the dim from, plus ``extra``'s fields (``sources/index_cells.py``
+    records its cell layout). An append (``streaming/incremental.py``)
+    keeps a sidecar of the same dim, and raises ``ValueError`` on one of
+    another dim, whose rows would fail ``read_index``'s dim check."""
+    path = os.path.join(index_dir, "index_meta.json")
+    if append and os.path.isfile(path):
+        with open(path) as fh:
+            have = int(json.load(fh)["dim"])
+        if have != dim:
+            raise ValueError(f"{path} records dim {have}; cannot append dim-{dim} vectors")
+        return
+    os.makedirs(index_dir, exist_ok=True)
+    with open(path, "w") as fh:
+        json.dump({"dim": dim, "format": "parquet", "version": 1, **extra}, fh, indent=2)
 
 
 def read_index(spark: SparkSession, index_dir: str) -> tuple[DataFrame, dict]:

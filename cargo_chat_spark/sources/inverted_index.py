@@ -49,7 +49,7 @@ def _postings_path(path: str) -> str:
 
 def _stats_path(path: str) -> str:
     # next to (not inside) the postings dir — an overwrite of the store
-    # can never truncate it (the dedup_ingest fence precedent)
+    # can never truncate it
     return path.rstrip("/") + _STATS_SUFFIX
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.plans.indexing import build_index
-from cargo_chat_spark.sources.index_io import INDEX_COMPRESSION
+from cargo_chat_spark.sources.index_io import INDEX_COMPRESSION, write_index_meta
 
 
 def windowed_event_counts(
@@ -59,7 +59,9 @@ def incremental_index_stream(
     dim: int,
 ):
     """readStream(text files) → chunk+embed (same batch pipeline) →
-    append to the parquet index, one atomic transaction per micro-batch."""
+    append to the parquet index, one atomic transaction per micro-batch.
+    Each batch first writes (or checks) ``index_meta.json``, so the index
+    the stream builds opens through ``read_index``."""
     stream = (
         spark.readStream.format("text")
         .option("wholetext", "true")
@@ -76,6 +78,7 @@ def incremental_index_stream(
             "path", F.concat(F.lit(f"drop/{batch_id}/doc_"), F.monotonically_increasing_id().cast("string"), F.lit(".md"))
         ).withColumn("extension", F.lit("md"))
         index = build_index(files, provider_factory, dim)
+        write_index_meta(index_dir, dim, append=True)
         index.write.parquet(f"{index_dir}/index", mode="append",
                             compression=INDEX_COMPRESSION)
 

@@ -70,8 +70,8 @@ def read_ivm_state(view_path: str) -> dict | None:
         with open(_state_path(view_path)) as fh:
             return json.load(fh)
     except (OSError, ValueError):
-        # Defaulting is SAFE here, unlike the ingest/model fences (see
-        # heavy_hitters/kmeans/dedup_ingest): the IVM state is a pure
+        # Defaulting is SAFE here, unlike the model fence (see
+        # kmeans_stream): the IVM state is a pure
         # cache of the full base-join rollup at (a_version, b_version) —
         # a None answer makes ivm_refresh recompute it from the snapshot
         # log (correct, just not incremental) and overwrite the bad

@@ -9,7 +9,6 @@ from cargo_chat_spark.session import get_spark
 from cargo_chat_spark.sources.testdata import TABLES
 
 SF_DIR_SMALL = "/root/testdata/sf0.001"
-SF_DIR_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")

@@ -4,7 +4,8 @@ The core is what the two dataflows (index build, query), the CLI and the
 benchmark's workloads run. Its static import closure, function-level
 imports included, must be exactly ``CORE``: adding a module to the core is
 a deliberate edit of this list, and nothing from the catalog (``queries/``)
-or the streaming extensions (``streaming/``) may be pulled in.
+or the streaming extensions (``streaming/``) may be pulled in. Beyond the
+core, every engine module must be imported by some entry point.
 """
 
 from __future__ import annotations
@@ -59,11 +60,9 @@ def _imports(path: Path) -> set[str]:
     return {m for m in found if m.split(".")[0] == PKG and _module_file(m)}
 
 
-def _core_closure() -> set[str]:
-    todo = [
-        f"{PKG}.cli", f"{PKG}.plans.indexing", f"{PKG}.plans.retrieval",
-        *_imports(ROOT / "perfbench" / "workloads.py"),
-    ]
+def _closure(todo: list[str]) -> set[str]:
+    """``todo`` and every ``cargo_chat_spark`` module it imports, at any
+    depth."""
     seen: set[str] = set()
     while todo:
         name = todo.pop()
@@ -71,6 +70,13 @@ def _core_closure() -> set[str]:
             seen.add(name)
             todo.extend(_imports(_module_file(name)))
     return seen
+
+
+def _core_closure() -> set[str]:
+    return _closure([
+        f"{PKG}.cli", f"{PKG}.plans.indexing", f"{PKG}.plans.retrieval",
+        *_imports(ROOT / "perfbench" / "workloads.py"),
+    ])
 
 
 def test_core_import_closure():
@@ -83,6 +89,30 @@ def test_core_import_closure():
     assert closure == CORE, (
         f"added: {sorted(closure - CORE)}, gone: {sorted(CORE - closure)}"
     )
+
+
+# Engine modules no entry point imports, on purpose. ``models.local_st`` is
+# the reference's sentence-transformers embedding path (SURVEY §2.8); no
+# entry point selects it because it needs model weights the repo does not ship.
+UNREACHED = {f"{PKG}.models.local_st"}
+
+
+def test_every_engine_module_is_reachable():
+    """Every engine module is imported, at some depth, by an entry point:
+    the CLI, ``python -m cargo_chat_spark``, the query catalog, the legacy
+    bench, the Spark entry or a perfbench script. A module only its own
+    tests import is dead code."""
+    roots = [f"{PKG}.cli", f"{PKG}.__main__", f"{PKG}.queries.catalog"]
+    for f in [ROOT / "bench.py", ROOT / "__spark_entry__.py",
+              *sorted((ROOT / "perfbench").glob("*.py"))]:
+        roots.extend(_imports(f))
+    reached = _closure(roots)
+    modules = {
+        ".".join(f.relative_to(ROOT).with_suffix("").parts)
+        for f in (ROOT / PKG).rglob("*.py") if f.name != "__init__.py"
+    }
+    unreached = sorted(modules - reached - UNREACHED)
+    assert not unreached, f"no entry point imports: {unreached}"
 
 
 def test_only_local_frame_calls_create_dataframe():

@@ -4,8 +4,8 @@ snapshot lifecycles — append waves, MERGE re-texts, CoW deletes,
 merge-on-read (DV) deletes — the base model at v0 plus ONE signed-delta
 fold over snap_file_deltas(v0 → vN) must equal a from-scratch model
 over the final corpus, for every prefix of the op sequence. This is the
-associativity/DV-visibility guard the wordfreq follower has via the
-snapshots model tests, applied to the (b, sc, tc) feature-count pair."""
+associativity/DV-visibility guard the snapshots model tests give the
+snapshot log, applied to the (b, sc, tc) feature-count pair."""
 
 from __future__ import annotations
 

@@ -5,9 +5,11 @@ level."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.models.mock import MockProvider
@@ -235,6 +237,10 @@ def test_incremental_index_stream(spark, tmp_path):
     idx = spark.read.parquet(f"{index_dir}/index")
     assert idx.count() >= 2
     assert idx.where(F.size("embedding") != DIM).count() == 0
+    # the stream alone built this index, and it opens like a batch-built one
+    opened, meta = read_index(spark, index_dir)
+    assert meta["dim"] == DIM
+    assert len(opened.select("embedding").collect()) == idx.count()
     # exactly-once: availableNow re-run with same checkpoint adds nothing
     n = idx.count()
     q2 = incremental_index_stream(
@@ -242,6 +248,24 @@ def test_incremental_index_stream(spark, tmp_path):
     ).start()
     q2.awaitTermination(120)
     assert spark.read.parquet(f"{index_dir}/index").count() == n
+
+
+def test_incremental_index_stream_refuses_another_dim(spark, tmp_path):
+    """An index whose sidecar records another dim gets no vectors appended:
+    ``read_index`` would reject them."""
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "a.txt").write_text("hello streaming world " * 30)
+    index_dir = tmp_path / "stream_index"
+    index_dir.mkdir()
+    (index_dir / "index_meta.json").write_text(json.dumps({"dim": 2 * DIM}))
+    q = incremental_index_stream(
+        spark, str(drop), str(index_dir), str(tmp_path / "ckpt"), MockProvider, DIM
+    ).start()
+    with pytest.raises(StreamingQueryException, match=f"records dim {2 * DIM}"):
+        q.awaitTermination(120)
+    assert not (index_dir / "index").exists()
+    assert json.loads((index_dir / "index_meta.json").read_text()) == {"dim": 2 * DIM}
 
 
 def test_streaming_window_matches_batch(spark):

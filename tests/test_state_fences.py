@@ -48,27 +48,6 @@ def kmeans_state(tmp_path):
 
 
 @_case
-def dedup_ingest_fence(tmp_path):
-    from cargo_chat_spark.streaming import dedup_ingest as M
-
-    p = tmp_path / "store"
-    assert M.read_ingest_fence(str(p)) == -1
-    return M._fence_path(str(p)), lambda: M.read_ingest_fence(str(p))
-
-
-@_case
-def compaction_watermark(tmp_path):
-    from cargo_chat_spark.streaming import upsert_sink as M
-
-    p = tmp_path / "rollup"
-    assert M.read_compaction_watermark(str(p)) == -1
-    return (
-        M._watermark_path(str(p)),
-        lambda: M.read_compaction_watermark(str(p)),
-    )
-
-
-@_case
 def index_stats(tmp_path):
     from cargo_chat_spark.sources import inverted_index as M
 
@@ -130,24 +109,9 @@ def test_ivm_state_defaults_by_design(tmp_path):
 
 
 def test_readers_still_parse_good_state(tmp_path):
-    from cargo_chat_spark.streaming import dedup_ingest, upsert_sink
     from cargo_chat_spark.sources import band_store, index_cells
 
     for mod_path, payload, reader, want in [
-        (
-            dedup_ingest._fence_path(str(tmp_path / "a")),
-            {"max_ingested_batch": 7},
-            lambda: dedup_ingest.read_ingest_fence(str(tmp_path / "a")),
-            7,
-        ),
-        (
-            upsert_sink._watermark_path(str(tmp_path / "b")),
-            {"max_compacted_batch": 3},
-            lambda: upsert_sink.read_compaction_watermark(
-                str(tmp_path / "b")
-            ),
-            3,
-        ),
         (
             band_store._sync_path(str(tmp_path / "c")),
             {"synced_version": 2},

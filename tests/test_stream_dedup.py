@@ -1,70 +1,14 @@
-"""Streaming dedup (streaming/dedup_stream.py): re-deliveries within the
-watermark horizon are dropped exactly once across batches (state via the
-checkpoint), and the batch twin oracle-matches DuckDB."""
+"""The event-dedup catalog entries (``events_dedup_collapse``,
+``latest_event_per_user``) match their DuckDB oracles."""
 
 from __future__ import annotations
-
-from datetime import datetime as dt
 
 import duckdb
 import pandas as pd
 import pytest
 
-from cargo_chat_spark.queries.registry import ORACLE_SQL, SPARK_QUERIES
-from cargo_chat_spark.streaming.dedup_stream import dedup_stream
+from cargo_chat_spark.queries.catalog import ORACLE_SQL, SPARK_QUERIES
 from tests.conftest import SF_DIR_SMALL
-
-
-@pytest.mark.slow
-def test_stream_dedup_drops_redeliveries_across_batches(spark, tmp_path):
-    src = tmp_path / "dd_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "dd_ckpt")
-    sink_dir = str(tmp_path / "dd_sink")
-
-    def write_batch(rows):
-        rows = [(i, dt.fromisoformat(ts), u, "e", 1.0) for i, ts, u in rows]
-        spark.createDataFrame(
-            rows,
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double",
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-    # batch 1: event 1 delivered TWICE in-batch, event 2 once
-    write_batch([
-        (1, "2026-01-01 00:00:00", 1),
-        (1, "2026-01-01 00:00:00", 1),
-        (2, "2026-01-01 00:01:00", 1),
-    ])
-    schema = spark.read.parquet(str(src)).schema
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        out = dedup_stream(stream, watermark="30 minutes")
-        q = (
-            out.writeStream.foreachBatch(
-                lambda b, _id: b.write.mode("append").parquet(sink_dir)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    # batch 2: event 1 re-delivered ACROSS batches (within horizon — state
-    # must remember it), plus a genuinely new event
-    write_batch([
-        (1, "2026-01-01 00:00:00", 1),
-        (3, "2026-01-01 00:02:00", 1),
-    ])
-    run_once()
-
-    got = sorted(
-        r["event_id"] for r in spark.read.parquet(sink_dir).collect()
-    )
-    assert got == [1, 2, 3], f"expected each event once, got {got}"
 
 
 @pytest.mark.parametrize(
