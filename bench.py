@@ -78,27 +78,14 @@ DETAIL_EXTRA = [
     "rp_tree_forest_topk",      # new r13: literal median-split RP-tree forest
     "semdedup_keep_scale",      # new r13: occupancy-capped SemDeDup ramp
     "part_name_entities_recursive",
-    "events_xml_parse",
     "index_import_reference",   # new r6: reference index.bin import parity
     "frame_neardup",            # new r6: media demux ∘ exact dedup
     "index_upsert_cells",       # new r6: incremental IVF cell upsert
-    "events_range_pruned_scan",  # new r6: min/max-manifest data skipping
     "ivf_topk_persisted",       # new r6: ANN over the persisted index
-    "events_zorder_pruned_scan",  # new r6: 2-D z-order data skipping
-    "events_merge_on_read",     # new r6: tombstone deletes + compaction
     "leakage_safe_split",       # new r6: group-aware train/val/test split
-    "events_time_travel",       # new r6: snapshot versioning / time travel
-    "events_snapshot_cdc",      # new r6: MERGE INTO + change feed (CDC)
-    "incremental_rollup_cdc",   # new r6: O(changed files) rollup refresh
     "dedup_mor_apply",          # new r6: dedup drops landed as MOR deletes
     "html_text_extract",        # new r6: WET-style HTML strip + ratio gate
     "nfc_normalize_text",       # new r6: unicode NFC via Arrow pandas_udf
-    "events_snapshot_optimize",  # new r6: OPTIMIZE ZORDER + manifest stats
-    "events_metadata_count",    # new r6: metadata-only COUNT(*) from log
-    "events_snapshot_restore",  # new r6: RESTORE as metadata-only commit
-    "events_snapshot_schema_evolution",  # new r6: schema in the manifest
-    "events_retention_delete",  # new r6: stats-resolved file-level delete
-    "events_deletion_vectors",  # new r6: row-level MOR via position sidecars
     "incremental_neardup",      # new r7: persisted band-store probe
     "bpe_pair_counts",          # new r7: BPE iteration-0 pair counts
     "bpe_learned_merges",       # new r7: distributed BPE trainer (6 merges)
@@ -118,8 +105,6 @@ DETAIL_EXTRA = [
     "ivm_view_follow",          # new r7: sequential-refresh IVM twin
     "curated_pack_tokens",      # new r7: funnel -> BPE -> pack flagship
     "copurchase_label_prop",    # new r7: deterministic LPA communities
-    "events_orc_roundtrip",     # new r7: columnar interchange roundtrip
-    "events_compact_small_files",  # new r7: binpack OPTIMIZE lifecycle
     "funnel_conversion",        # new r7: ordered funnel, 1-shuffle plan
     "mmr_diversified_topk",     # new r7: greedy MMR, K map-only scans
     "phrase_match_docs",        # new r7: positional phrase adjacency
@@ -233,16 +218,12 @@ _R12_CONSOLIDATED_BARS = {
     "dedup_mor_apply": 1.54, "doc_length_percentiles": 1.24, "dsir_cdc_model": 1.95,
     "dsir_gumbel_resample": 3.43, "dsir_logratio_weights": 3.77, "dsir_topk_selection": 3.8,
     "embedding_drift_cdc_report": 4.2, "events_asof_join": 0.77,
-    "events_compact_small_files": 3.03, "events_deletion_vectors": 3.07, "events_gap_fill_locf": 0.86,
-    "events_merge_on_read": 3.86, "events_metadata_count": 1.72, "events_ohlc_hourly": 0.75,
-    "events_orc_roundtrip": 1.23, "events_range_pruned_scan": 1.79, "events_retention_delete": 1.84,
-    "events_snapshot_cdc": 3.93, "events_snapshot_optimize": 2.39, "events_snapshot_restore": 1.52,
-    "events_snapshot_schema_evolution": 1.76, "events_time_travel": 2.39, "events_tumbling_window": 0.55,
-    "events_xml_parse": 1.02, "events_zorder_pruned_scan": 2.29, "frame_neardup": 0.9,
+    "events_gap_fill_locf": 0.86, "events_ohlc_hourly": 0.75,
+    "events_tumbling_window": 0.55, "frame_neardup": 0.9,
     "functional_dependency_report": 3.06, "funnel_conversion": 0.91, "fuzzy_decontamination": 0.65,
     "heavy_hitters_mg": 0.96, "hrw_reshard_report": 0.76, "html_text_extract": 0.53,
     "hybrid_rrf_retrieval": 1.63, "incremental_join_cdc": 1.28, "incremental_neardup": 1.25,
-    "incremental_neardup_cdc": 6.42, "incremental_rollup_cdc": 0.66, "index_import_reference": 1.9,
+    "incremental_neardup_cdc": 6.42, "index_import_reference": 1.9,
     "index_upsert_cells": 11.58, "inverted_postings_waves": 4.17, "ivf_topk_cdc_synced": 1.72,
     "ivf_topk_persisted": 2.15, "ivf_topk_trained": 1.75, "ivfpq_topk": 3.02,
     "ivm_view_follow": 10.71, "jl_distortion_report": 3.15, "jl_project_topk": 1.78,
@@ -285,8 +266,7 @@ _LEGACY_BARS = {
     "daily_active_bitmap": 0.62,
     "doc_fingerprints": 3.3, "embedding_neardup_pairs": 0.8, "engaged_clean_users": 0.56,
     "event_funnel": 0.7, "event_sessions": 0.83, "event_transitions": 0.94,
-    "event_type_cooccurrence": 0.6, "events_csv_roundtrip": 0.92,
-    "events_jsonl_roundtrip": 0.79, "events_partitioned_pruned": 1.27, "events_schema_merge": 0.84,
+    "event_type_cooccurrence": 0.6,
     "events_session_window_builtin": 0.7, "events_trailing_1h_sum": 1.19, "events_weekly_drift": 0.6,
     "events_within_5min_pairs": 0.82,
     "hard_negatives_topk": 2.56,

@@ -35,6 +35,46 @@ _CLASSIFY_SCHEMA = {
 }
 
 
+_SCOPE_FIELDS = ("target_folders", "target_extensions", "exclude_patterns")
+
+
+def _parse_classification(d) -> Classification:
+    """The classification JSON as a ``Classification``, checked against
+    ``_CLASSIFY_SCHEMA`` the way the reference's typed parse checks it: a
+    field of the wrong JSON type raises ``ValueError`` naming the field,
+    instead of reaching ranking (a ``null`` or ``"false"`` ``wants_code``
+    would rank the question wrongly)."""
+    if not isinstance(d, dict):
+        raise ValueError(f"classification must be a JSON object, got {d!r}")
+
+    def check(field: str, ok: bool, want: str) -> None:
+        if not ok:
+            raise ValueError(
+                f"classification field {field!r} must be {want}, "
+                f"got {d.get(field)!r}"
+            )
+
+    conf = d.get("confidence")
+    check("wants_code", isinstance(d.get("wants_code"), bool), "a boolean")
+    check("confidence", isinstance(conf, (int, float))
+          and not isinstance(conf, bool), "a number")
+    check("intent", isinstance(d.get("intent"), str), "a string")
+    check("language", d.get("language") is None
+          or isinstance(d["language"], str), "null or a string")
+    for field in _SCOPE_FIELDS:
+        v = d.get(field)
+        check(field, v is None or (isinstance(v, list)
+                                   and all(isinstance(x, str) for x in v)),
+              "null or an array of strings")
+    return Classification(
+        language=d.get("language"),
+        intent=d["intent"],
+        wants_code=d["wants_code"],
+        confidence=float(conf),
+        **{field: d.get(field) for field in _SCOPE_FIELDS},
+    )
+
+
 class OpenAIHttpProvider(MockProvider):
     """Chat-completion-backed classify/HyDE/answer; inherits deterministic
     embed/rerank from the mock (swap in real endpoints as available)."""
@@ -93,16 +133,7 @@ class OpenAIHttpProvider(MockProvider):
                 "json_schema": {"name": "query_classification", "schema": _CLASSIFY_SCHEMA},
             },
         )
-        d = json.loads(content)
-        return Classification(
-            language=d.get("language"),
-            intent=d["intent"],
-            wants_code=d["wants_code"],
-            confidence=float(d["confidence"]),
-            target_folders=d.get("target_folders"),
-            target_extensions=d.get("target_extensions"),
-            exclude_patterns=d.get("exclude_patterns"),
-        )
+        return _parse_classification(json.loads(content))
 
     # M4 (hyde.rs:317-347; temp 0.2 / max 1024 per hyde.rs:597-598)
     def hyde_document(self, query: str, intent: str, max_chars: int = 1000) -> str:

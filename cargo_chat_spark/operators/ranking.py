@@ -35,10 +35,10 @@ text (the F5/F8/O5 predicates come from the shared emitters in
 ``operators.filters``, the same text the DuckDB oracle embeds), so
 building the plan costs tens of driver round trips; the same logic built
 from Column expressions costs over a thousand, paid on every interactive
-question. All windows partition by query_id, so
-Catalyst plans ONE shuffle on query_id shared by the four windows
-(code count, doc rank, selection rank, final rank). No driver-side loops,
-no UDFs; scales with executors × candidates.
+question. Both windows partition by query_id, so Catalyst plans ONE
+shuffle on query_id shared by the two Window operators: the selection
+rank with the code count beside it, then the final rank. No driver-side
+loops, no UDFs; scales with executors × candidates.
 """
 
 from __future__ import annotations
@@ -60,20 +60,27 @@ _TIER = """CASE WHEN _branch_a THEN CASE WHEN _is_code THEN 0 ELSE 1 END
     ELSE CASE WHEN NOT wants_code AND _is_doc_simple THEN 0 ELSE 1 END END"""
 _LANGKEY = """CASE WHEN _branch_a AND _is_code AND q_language IS NOT NULL
     AND _lmatch THEN 0 ELSE 1 END"""
-_CODE_COUNT = """SUM(CASE WHEN _branch_a AND _is_code THEN 1 ELSE 0 END)
-    OVER (PARTITION BY query_id)"""
-_DOC_RANK = """row_number() OVER (
-    PARTITION BY query_id, _is_code ORDER BY distance, chunk_id)"""
+# One window spec carries the selection rank and the query's branch-A
+# code count (a SUM over the whole partition), so both come from ONE
+# Window operator.
+_SEL_SPEC = "PARTITION BY query_id ORDER BY _tier, _langkey, distance, chunk_id"
+_SELECT_COLS = (
+    f"row_number() OVER ({_SEL_SPEC}) AS _sel_rank",
+    f"""SUM(CASE WHEN _branch_a AND _is_code THEN 1 ELSE 0 END) OVER ({_SEL_SPEC}
+    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS _code_count""",
+)
 # doc caps: a branch-A doc survives while its distance rank among the
-# query's docs is within the intent's limit (table above)
-_INCLUDED = """NOT _branch_a OR _is_code OR _doc_rank <=
+# query's docs is within the intent's limit (table above). In branch A
+# every code row sorts before every doc and docs all have _langkey 1, so
+# a doc's rank among the docs is _sel_rank - _code_count, and the rows a
+# cap drops all sort after every row it keeps, so dropping them leaves
+# the kept rows' _sel_rank unchanged.
+_INCLUDED = """NOT _branch_a OR _is_code OR _sel_rank - _code_count <=
     CASE WHEN confidence > 0.8 THEN 0
          WHEN intent = 'how_it_works' THEN CASE WHEN _code_count >= 3 THEN 0 ELSE 1 END
          WHEN intent IN ('implementation', 'debugging') THEN 0
          WHEN intent = 'explanation' THEN 1
          ELSE 0 END"""
-_SEL_RANK = """row_number() OVER (
-    PARTITION BY query_id ORDER BY _tier, _langkey, distance, chunk_id)"""
 # The tiered order only decides WHICH rows survive truncate(k); the
 # reference then re-sorts the truncated results purely by ascending
 # distance (hyde.rs:545-552, non-rerank path). That Vec sort is STABLE: on
@@ -93,6 +100,12 @@ def reference_rank(candidates: DataFrame, final_sort: bool = True) -> DataFrame:
     Output: rows surviving filtering + doc caps + truncate(k), with a
     1-based ``rank`` encoding the reference's output order.
 
+    ``wants_code`` and ``confidence`` must be non-NULL, as the
+    reference's ``bool`` and ``f32`` are (the HTTP provider rejects a
+    classification without them). A NULL in either is outside the
+    domain: this SQL and :func:`rank_rows` would keep different
+    candidates (``rank_rows`` raises on a NULL confidence).
+
     ``final_sort=True`` models the full retrieve(): after truncate(k) the
     reference re-sorts the survivors purely by ascending distance
     (hyde.rs:545-552, non-rerank path) — the tier order only chooses WHICH
@@ -109,16 +122,9 @@ def reference_rank(candidates: DataFrame, final_sort: bool = True) -> DataFrame:
         f"{filters.lang_match_sql('language', 'extension', 'q_language')} AS _lmatch",
     )
     selected = (
-        flagged.selectExpr(
-            "*",
-            f"{_TIER} AS _tier",
-            f"{_LANGKEY} AS _langkey",
-            f"{_CODE_COUNT} AS _code_count",
-            f"{_DOC_RANK} AS _doc_rank",
-        )
-        .where(_INCLUDED)
-        .selectExpr("*", f"{_SEL_RANK} AS _sel_rank")
-        .where("_sel_rank <= k")
+        flagged.selectExpr("*", f"{_TIER} AS _tier", f"{_LANGKEY} AS _langkey")
+        .selectExpr("*", *_SELECT_COLS)
+        .where(f"_sel_rank <= k AND ({_INCLUDED})")
     )
     rank = _FINAL_RANK if final_sort else "_sel_rank"
     return selected.selectExpr(*out_cols, f"{rank} AS rank")

@@ -227,10 +227,6 @@ _OVERFLOW_TAIL = [
     # candidate pairs over the distinct-name dim — equi-join blocking
     # re-proven in-window by neardup_components' band joins
     "similar_part_names",
-    # hive-partitioned sink + partition-pruned read round-trip — sink
-    # round-trip machinery re-proven in-window by index_roundtrip; pruning
-    # physically pinned by tests/test_partition_pruning.py
-    "events_partitioned_pruned",
     # time-interval RANGE window frame (trailing 1h over event time) —
     # window machinery green in events_moving_avg's CORRECTNESS_r13 row
     "events_trailing_1h_sum",
@@ -241,10 +237,6 @@ _OVERFLOW_TAIL = [
     # Datasketches HLL rollup (rows-only by design: sketches are
     # engine-specific; error bound pinned by tests/test_sketch_bounds.py)
     "weekly_hll_rollup",
-    # JSONL sink/source round-trip at full microsecond precision (the
-    # gate caught the default format's millis truncation) — round-trip
-    # machinery re-proven in-window by index_roundtrip
-    "events_jsonl_roundtrip",
     # dbt-test-style bulk constraint audit (FK orphans, uniqueness,
     # domain, non-null) — anti-join machinery re-proven in-window by
     # retrieval_rank_reference
@@ -252,13 +244,6 @@ _OVERFLOW_TAIL = [
     # week-1 vs week-4 data-diff per type (volume/value/user drift) —
     # conditional-agg machinery re-proven in-window by ingest_stats
     "events_weekly_drift",
-    # CSV sink/source round-trip (third interchange format) — round-trip
-    # machinery re-proven in-window by index_roundtrip
-    "events_csv_roundtrip",
-    # additive schema evolution under mergeSchema (old generation lacks
-    # props; reads as NULL) — round-trip machinery re-proven in-window by
-    # index_roundtrip
-    "events_schema_merge",
     # scalar Arrow pandas_udf surface (Series->Series token counts; every
     # other Python stage is mapInPandas/applyInPandas) — token semantics
     # green in token_count's CORRECTNESS_r14 row
@@ -280,10 +265,6 @@ _OVERFLOW_TAIL = [
     # DuckDB's fixed-point UNION oracle) — closure semantics re-proven
     # in-window by neardup_components
     "part_name_entities_recursive",
-    # Spark 4 from_xml surface (fourth interchange format, integer-exact
-    # render->parse) — format machinery green in events_props_extract's
-    # CORRECTNESS_r13 row
-    "events_xml_parse",
 ]
 
 

@@ -349,8 +349,7 @@ def compact_band_tombstones(spark: SparkSession, path: str) -> int:
     """Materialize the tombstones: rewrite ONLY the dirty band files
     (those holding a tombstoned generation), then clear the folded
     tombstone files — the band-store analog of inverted_index.
-    compact_index_tombstones / snapshots.snap_compact_dv. O(dirty
-    files); clean files untouched byte-for-byte. Returns the number of
+    compact_index_tombstones. O(dirty files); clean files untouched byte-for-byte. Returns the number of
     files rewritten. Single-writer maintenance op (same caveat as the
     lexical compaction: run it from the CDC applier's scheduler slot).
 

@@ -411,8 +411,7 @@ def _complete_compaction_swap(path: str, journal: dict) -> None:
 def compact_index_tombstones(spark: SparkSession, path: str) -> int:
     """Materialize the tombstones: rewrite ONLY the dirty postings files
     (those holding a tombstoned generation), then clear the folded
-    tombstone files — the index analog of snapshots.snap_compact_dv.
-    O(dirty files); clean files are untouched byte-for-byte. Returns the
+    tombstone files. O(dirty files); clean files are untouched byte-for-byte. Returns the
     number of files rewritten.
 
     Single-writer maintenance op (run it from the same scheduler slot as

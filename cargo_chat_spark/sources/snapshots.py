@@ -1,13 +1,11 @@
 """Snapshot-versioned parquet table: time travel, CoW deletes, vacuum.
 
-The remaining lakehouse primitive after data skipping
-(``sorted_layout``), compaction (``index_cells``/``deletes``) and
-merge-on-read deletes (``deletes``): SNAPSHOT ISOLATION. A 100 TB
-training corpus needs reproducible reads ("train on exactly the corpus
-as of snapshot 12"), safe concurrent readers while a writer lands a new
-version, and auditable deletes — all of which Iceberg/Delta implement
-as an immutable-data-files + versioned-manifest log. Same mechanism
-here on plain parquet:
+The lakehouse primitive beside merge-on-read deletes (``deletes``):
+SNAPSHOT ISOLATION. A 100 TB training corpus needs reproducible reads
+("train on exactly the corpus as of snapshot 12"), safe concurrent
+readers while a writer lands a new version, and auditable deletes — all
+of which Iceberg/Delta implement as an immutable-data-files +
+versioned-manifest log. Same mechanism here on plain parquet:
 
 - Data files are IMMUTABLE and accumulate in the table directory; a
   snapshot is a JSON manifest (``_snapshots/v{N}.json``) listing the
@@ -18,17 +16,17 @@ here on plain parquet:
 - ``snap_append`` writes only the new rows' files; the new manifest is
   prev ∪ new (O(appended data), nothing rewritten).
 - ``snap_delete`` is COPY-ON-WRITE at file granularity: only the files
-  containing deleted keys are rewritten (same bounded
-  ``input_file_name`` discovery as ``deletes.compact_deletes``); every
-  unaffected file is SHARED between the old and new manifest, so a
-  delete costs O(affected files) and historical versions stay readable.
+  containing deleted keys are rewritten (one bounded column-pruned scan
+  of the key column finds them); every unaffected file is SHARED between
+  the old and new manifest, so a delete costs O(affected files) and
+  historical versions stay readable.
 - ``expire_snapshots`` (vacuum) drops old manifests and deletes only the
   files no retained manifest references — bounded metadata work, the
   one moment storage is actually reclaimed.
 
 Pinned by ``tests/test_snapshots.py`` (immutability of historical reads,
 file sharing across versions, vacuum reachability) and value-checked
-end-to-end by the ``events_time_travel`` gate.
+end-to-end by the ``incremental_join_cdc`` and ``ivm_view_follow`` gates.
 """
 
 from __future__ import annotations
@@ -114,45 +112,13 @@ def _write_new_files(df: DataFrame, path: str, version: int) -> list[str]:
 
 def _footer_rows(root: str, names: list[str]) -> dict[str, int]:
     """Per-file row counts from the parquet FOOTERS (metadata pages only
-    — no data is read). The Delta/Iceberg trick that makes
-    ``SELECT COUNT(*)`` a metadata-only query."""
+    — no data is read)."""
     import pyarrow.parquet as pq
 
     return {
         n: pq.ParquetFile(os.path.join(root, n)).metadata.num_rows
         for n in names
     }
-
-
-def _rows_map(path: str, version_files: list[str], new: list[str]) -> dict:
-    """Row counts for a manifest: footer-read the NEW files, carry the
-    previous manifest's counts for every shared (immutable) file."""
-    carried: dict[str, int] = {}
-    vs = versions(path)
-    if vs:
-        carried = manifest(path).get("rows", {})
-    root = _local(path)
-    out = {f: carried[f] for f in version_files if f in carried}
-    missing = [f for f in version_files if f not in out]
-    out.update(_footer_rows(root, missing))
-    return out
-
-
-def snap_count(path: str, version: int | None = None) -> int:
-    """METADATA-ONLY row count of a snapshot: sum the manifest's
-    per-file counts — zero data files are opened, no Spark job runs.
-    At 100 TB this is the difference between an instant answer and a
-    full scan; every commit path records the counts (new files from
-    parquet footers, shared files carried forward)."""
-    m = manifest(path, version)
-    rows = m.get("rows")
-    if rows is None or set(rows) != set(m["files"]):
-        raise ValueError(
-            f"manifest v{m['version']} lacks complete row stats"
-        )
-    # physical rows minus the deletion vector's positions (exact: the
-    # vector is deduplicated and restricted to referenced files)
-    return sum(rows.values()) - m.get("dv_rows", 0)
 
 
 class SchemaEvolutionError(ValueError):
@@ -218,19 +184,6 @@ def _commit(
     (e.g. the streaming batch-id fence) into the same atomic write, so
     metadata can never lag its version."""
     os.makedirs(_snap_dir(path), exist_ok=True)
-    rows = _rows_map(path, sorted(files), [])
-    # per-file column stats stay valid forever (files are immutable):
-    # carry them across every commit so an OPTIMIZE's skipping power
-    # survives later appends/deletes instead of dying with its version
-    carried_stats: dict = {}
-    vs = versions(path)
-    if vs:
-        prev_stats = manifest(path).get("stats", {})
-        carried_stats = {f: prev_stats[f] for f in files if f in prev_stats}
-    if extra and "stats" in extra:
-        extra = {**extra, "stats": {**carried_stats, **extra["stats"]}}
-    elif carried_stats:
-        extra = {**(extra or {}), "stats": carried_stats}
     # per-writer staging name: racing writers must not collide on the
     # staging file either, only at the link (the commit point). pid
     # alone is NOT writer-unique — concurrent THREADS of one driver
@@ -250,7 +203,6 @@ def _commit(
             {
                 "version": version,
                 "files": sorted(files),
-                "rows": rows,
                 **(extra or {}),
             },
             fh, indent=1,
@@ -353,77 +305,6 @@ def snap_delete(
     return v
 
 
-def snap_delete_where(
-    spark: SparkSession, path: str, col: str, cutoff
-) -> int:
-    """Retention delete — ``DELETE WHERE col < cutoff`` resolved at FILE
-    granularity through per-file min/max stats: a file whose max is
-    below the cutoff is DROPPED from the manifest outright (metadata
-    only — never opened, never rewritten; this is how expiring a month
-    of data from a 100 TB time-clustered table costs seconds), a file
-    whose min is at or past the cutoff is KEPT untouched, and only the
-    straddling boundary files are rewritten with the row-level filter.
-    Files without recorded stats get a one-pass column-pruned min/max
-    probe (cheap: one column, footer-adjacent) and classify the same
-    way. The dropped files stay on disk for time travel until
-    ``expire_snapshots`` reclaims them."""
-    from pyspark.sql import functions as F
-
-    from cargo_chat_spark.sources.sorted_layout import _serialize
-
-    prev = manifest(path)
-    v = prev["version"] + 1
-    root = _local(path)
-    stats = prev.get("stats", {})
-    cut = _serialize(cutoff)
-
-    bounds: dict[str, tuple] = {}
-    unstatted = []
-    for f in prev["files"]:
-        st = stats.get(f, {})
-        if col in st:
-            bounds[f] = (st[col][0], st[col][1])
-        else:
-            unstatted.append(f)
-    if unstatted:
-        probed = (
-            spark.read.parquet(
-                *(os.path.join(root, f) for f in unstatted)
-            )
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
-            .collect()  # bounded: one row per probed file
-        )
-        for r in probed:
-            bounds[os.path.basename(_local(r["file"]))] = (
-                _serialize(r["lo"]), _serialize(r["hi"]),
-            )
-
-    kept, straddling = [], []
-    for f in prev["files"]:
-        lo, hi = bounds[f]
-        if hi < cut:
-            continue  # dropped whole — metadata only
-        if lo >= cut:
-            kept.append(f)
-        else:
-            straddling.append(f)
-
-    new: list[str] = []
-    if straddling:
-        # boundary files read through the deletion vector: the rewrite
-        # materializes prior row-level deletes instead of resurrecting
-        survivors = _read_files_with_dv(
-            spark, path, prev, sorted(straddling)
-        ).where(F.col(col) >= F.lit(cutoff))
-        new = _write_new_files(survivors, path, v)
-    extra = _dv_restrict(spark, path, prev, kept, v)
-    if "schema" in prev:
-        extra["schema"] = prev["schema"]
-    _commit(path, v, kept + new, extra=extra or None)
-    return v
-
-
 # --------------------------------------------------- deletion vectors
 # Delta deletion vectors / Iceberg position deletes: a row-level
 # merge-on-read delete records the exact (file, row_index) positions of
@@ -432,10 +313,10 @@ def snap_delete_where(
 # regardless of how many 1 GB files they live in, where copy-on-write
 # pays a rewrite of every file containing one matched row. Readers
 # anti-join the positions (parquet's _metadata.row_index is stable per
-# file); compaction later materializes the vector by rewriting only the
-# dirty files. Each commit stores the COMPLETE vector state (positions
-# are (string, long) pairs — O(deleted rows) bytes), so restriction
-# after a CoW rewrite and exact metadata counts stay trivial.
+# file); a later CoW rewrite of a file materializes its positions. Each
+# commit stores the COMPLETE vector state (positions are (string, long)
+# pairs — O(deleted rows) bytes), so restriction after a CoW rewrite
+# stays trivial.
 
 _DV_DIR = "_dv"
 _DV_SCHEMA = "file string, row_index bigint"
@@ -528,11 +409,10 @@ def _affected_files_visible(
     spark: SparkSession, path: str, m: dict, keys: DataFrame, key_col: str
 ) -> set[str]:
     """Basenames of the manifest's files containing a VISIBLE matched
-    key — the DV-aware twin of ``deletes.affected_files`` (whose
-    ``input_file_name`` cannot survive the DV anti-join's multi-source
-    plan): one column-pruned scan carrying ``_metadata.file_path``,
-    the version's deletion vector applied, broadcast semi-join, one
-    collected row per affected FILE."""
+    key (``input_file_name`` cannot survive the DV anti-join's
+    multi-source plan): one column-pruned scan carrying
+    ``_metadata.file_path``, the version's deletion vector applied,
+    broadcast semi-join, one collected row per affected FILE."""
     from pyspark.sql import functions as F
 
     if not m["files"]:  # empty table: nothing can match
@@ -629,140 +509,12 @@ def snap_delete_rows(
     return v
 
 
-def snap_compact_dv(spark: SparkSession, path: str) -> int:
-    """Materialize the deletion vector: rewrite ONLY the dirty files
-    (those holding deleted positions), reading them through the DV, and
-    commit a vector-free manifest. O(dirty files), layout-only for the
-    logical content — the change feed across it is empty."""
-    prev = manifest(path)
-    pos = _dv_positions(spark, path, prev)
-    if pos is None:
-        return prev["version"]
-    v = prev["version"] + 1
-    dirty_set = {
-        r["file"] for r in pos.select("file").distinct().collect()
-    }  # bounded: one row per dirty file
-    dirty = sorted(dirty_set & set(prev["files"]))
-    kept = [f for f in prev["files"] if f not in dirty_set]
-    new = _write_new_files(
-        _read_files_with_dv(spark, path, prev, dirty), path, v
-    )
-    extra = {"schema": prev["schema"]} if "schema" in prev else None
-    _commit(path, v, kept + new, extra=extra)
-    return v
-
-
-def snap_compact_files(
-    spark: SparkSession,
-    path: str,
-    small_bytes: int = 1 << 20,
-    target_bytes: int = 1 << 27,
-) -> int:
-    """Delta's plain ``OPTIMIZE`` (bin-packing) as a snapshot commit:
-    rewrite ONLY the files smaller than ``small_bytes`` — the residue a
-    streaming sink's per-batch commits accumulate — grouped first-fit in
-    name order into bins of ~``target_bytes``, one output file per bin.
-    Large files survive BYTE-IDENTICAL (never read, never rewritten), so
-    the cost is O(small files), not O(table). Rewritten files read
-    through the deletion vector (their pending deletes materialize);
-    untouched files keep their vector entries (``_dv_restrict``).
-    Layout-only: the logical row set is unchanged, so ``snap_changes``
-    across the commit is empty. Fewer than two small files is a no-op
-    (no version committed)."""
-    prev = manifest(path)
-    root = _local(path)
-    sizes = {
-        f: os.path.getsize(os.path.join(root, f)) for f in prev["files"]
-    }
-    small = [f for f in prev["files"] if sizes[f] < small_bytes]
-    if len(small) < 2:
-        return prev["version"]
-    v = prev["version"] + 1
-    small_set = set(small)
-    kept = [f for f in prev["files"] if f not in small_set]
-    bins: list[list[str]] = []
-    cur: list[str] = []
-    cur_sz = 0
-    for f in sorted(small):
-        if cur and cur_sz + sizes[f] > target_bytes:
-            bins.append(cur)
-            cur, cur_sz = [], 0
-        cur.append(f)
-        cur_sz += sizes[f]
-    if cur:
-        bins.append(cur)
-    new: list[str] = []
-    for bin_files in bins:
-        df = _read_files_with_dv(spark, path, prev, bin_files).coalesce(1)
-        new += _write_new_files(df, path, v)
-    extra = _dv_restrict(spark, path, prev, kept, v)
-    if "schema" in prev:
-        extra["schema"] = prev["schema"]
-    _commit(path, v, kept + new, extra=extra)
-    return v
-
-
-# --------------------------------------------------- named refs (tags)
-# Iceberg-style TAGS: a name pinned to a version. The semantic content
-# is retention — expire_snapshots RETAINS every tagged version (and its
-# files), so a tag is a durable anchor ("the v3 we trained run-42 on")
-# that survives vacuum until explicitly dropped.
-
-_TAGS_FILE = "_tags.json"
-
-
-def _tags_path(path: str) -> str:
-    return os.path.join(_snap_dir(path), _TAGS_FILE)
-
-
-def list_tags(path: str) -> dict[str, int]:
-    try:
-        with open(_tags_path(path)) as fh:
-            return {k: int(v) for k, v in json.load(fh).items()}
-    except (OSError, ValueError):
-        return {}
-
-
-def _write_tags(path: str, tags: dict[str, int]) -> None:
-    tmp = _tags_path(path) + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(tags, fh)
-    os.replace(tmp, _tags_path(path))
-
-
-def snap_tag(path: str, name: str, version: int | None = None) -> int:
-    """Pin ``name`` to ``version`` (latest by default). Re-tagging an
-    existing name moves it. The version must exist."""
-    v = int(manifest(path)["version"]) if version is None else int(version)
-    if v not in versions(path):
-        raise ValueError(f"cannot tag non-existent version {v}")
-    tags = list_tags(path)
-    tags[name] = v
-    _write_tags(path, tags)
-    return v
-
-
-def snap_drop_tag(path: str, name: str) -> None:
-    tags = list_tags(path)
-    if name in tags:
-        del tags[name]
-        _write_tags(path, tags)
-
-
-def snap_read_tag(spark: SparkSession, path: str, name: str) -> DataFrame:
-    tags = list_tags(path)
-    if name not in tags:
-        raise ValueError(f"unknown tag {name!r} (have {sorted(tags)})")
-    return snap_read(spark, path, tags[name])
-
-
 def expire_snapshots(
     path: str, keep_last: int = 1, orphan_cold_seconds: float = 3600.0
 ) -> list[str]:
     """Vacuum: drop all but the last ``keep_last`` manifests and delete
-    the data files no retained manifest references — EXCEPT tagged
-    versions, which are retained with their files until the tag is
-    dropped (Iceberg ref semantics). Returns the deleted basenames.
+    the data files no retained manifest references. Returns the deleted
+    basenames.
     ``keep_last < 1`` is a defensive no-op (expiring every manifest
     would leave an unreadable table, never what a vacuum means).
 
@@ -777,7 +529,6 @@ def expire_snapshots(
     to this clock."""
     vs = versions(path)
     retained = set(vs[-keep_last:]) if keep_last > 0 else set(vs)
-    retained |= {v for v in list_tags(path).values() if v in set(vs)}
     reachable: set[str] = set()
     reachable_dv: set[str] = set()
     for v in retained:
@@ -860,50 +611,16 @@ def expire_snapshots(
     return sorted(removed)
 
 
-def snap_restore(path: str, version: int) -> int:
-    """Delta's ``RESTORE TABLE ... VERSION AS OF`` as a snapshot commit:
-    the new manifest's file list IS the target version's file list — a
-    pure METADATA operation (one JSON rename), zero data copied no
-    matter how large the table, because data files are immutable and
-    shared across manifests. History is preserved (the rolled-back
-    versions stay readable; restore is itself undoable by another
-    restore), and the carried ``rows``/``stats`` metadata keeps
-    metadata-only counts and stats-pruned reads working on the restored
-    version. Fails loudly if vacuum already reclaimed any of the target
-    version's files (the one way a restore target can die)."""
-    src = manifest(path, version)
-    root = _local(path)
-    needed = list(src["files"]) + [
-        os.path.join(_DV_DIR, f) for f in src.get("dv", [])
-    ]
-    missing = [
-        f for f in needed if not os.path.isfile(os.path.join(root, f))
-    ]
-    if missing:
-        raise FileNotFoundError(
-            f"cannot restore to v{version}: files vacuumed {missing}"
-        )
-    v = versions(path)[-1] + 1
-    extra: dict = {"restored_from": version}
-    for carried in ("stats", "schema", "dv", "dv_rows"):
-        if carried in src:
-            extra[carried] = src[carried]
-    _commit(path, v, list(src["files"]), extra=extra)
-    return v
-
-
-def _require_unique_keys(
-    df: DataFrame, key_col: str, op: str, visible_keys=None
-) -> None:
+def _require_unique_keys(df: DataFrame, key_col: str, visible_keys) -> None:
     """Delta MERGE raises when a target row matches MULTIPLE source rows;
     without this guard the left join silently fans matched rows out and
     whole-row upserts insert both duplicates (same contract as
     ``index_cells.upsert_index_cells``).
 
     Exact Delta semantics (round-7 ADVICE): duplicate source keys that
-    match NO target row are legal — each row inserts (both entry points'
-    insert paths naturally do this). Only duplicates that match a
-    visible target row raise. ``visible_keys`` is a lazy thunk returning
+    match NO target row are legal — each row inserts (the insert path
+    naturally does this). Only duplicates that match a visible target
+    row raise. ``visible_keys`` is a lazy thunk returning
     the visible target key frame; it is invoked ONLY when the source
     actually carries duplicates (one map-side-combined aggregate over
     the BATCH, short-circuited by limit(1), decides that), so the
@@ -918,10 +635,9 @@ def _require_unique_keys(
     )
     if not dups.limit(1).count():
         return
-    vk = visible_keys() if visible_keys is not None else None
-    if vk is None or dups.join(vk, on=key_col, how="semi").limit(1).count():
+    if dups.join(visible_keys(), on=key_col, how="semi").limit(1).count():
         raise ValueError(
-            f"{op}: source carries duplicate {key_col!r} keys matching a "
+            f"snap_merge: source carries duplicate {key_col!r} keys matching a "
             "target row — MERGE semantics forbid multiple source matches "
             "per target row; collapse duplicates before merging"
         )
@@ -962,7 +678,7 @@ def snap_merge(
 
     guard = spawn_job(
         lambda: _require_unique_keys(
-            updates, key_col, "snap_merge",
+            updates, key_col,
             visible_keys=lambda: _read_files_with_dv(
                 spark, path, prev, prev["files"]
             ).select(key_col),
@@ -990,119 +706,6 @@ def snap_merge(
     return v
 
 
-def snap_merge_into(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    key_col: str,
-    *,
-    matched_update: dict[str, str] | None = None,
-    matched_delete: str | None = None,
-    insert_unmatched: bool = True,
-) -> int:
-    """Full conditional MERGE INTO (Delta/SQL:2003 semantics), CoW at
-    file granularity:
-
-    - WHEN MATCHED AND ``matched_delete`` THEN DELETE (evaluated first,
-      like Delta's clause ordering when the delete condition is given);
-    - WHEN MATCHED THEN UPDATE SET ``matched_update`` — a {column: SQL
-      expression} map evaluated over the aliased pair (``t`` = target
-      row, ``s`` = source row), unlisted columns keep ``t``'s value;
-    - WHEN NOT MATCHED THEN INSERT the source row (``insert_unmatched``).
-
-    Cost model identical to :func:`snap_merge`: only files containing a
-    VISIBLE matched key are rewritten (their unmatched rows survive
-    verbatim, pending deletion-vector rows are materialized out),
-    inserts land as new files, everything else is shared with the
-    previous manifest. The key-only anti-scan for unmatched detection is
-    column-pruned — at 100 TB it reads one column, not the table."""
-    from pyspark.sql import functions as F
-
-    prev = manifest(path)
-    v = prev["version"] + 1
-    merged = _merge_schema(prev.get("schema"), source.schema)
-    table_cols = [f["name"] for f in merged["fields"]]
-    missing = [c for c in table_cols if c not in source.columns]
-    if missing:
-        raise SchemaEvolutionError(
-            f"MERGE source lacks table columns {missing}"
-        )
-    bad = [c for c in (matched_update or {}) if c not in table_cols]
-    if bad:
-        raise ValueError(f"UPDATE SET targets unknown columns {bad}")
-    # overlapped exactly like snap_merge: guard ‖ discovery, join before
-    # any write (guide §2.6)
-    from cargo_chat_spark.functions.overlap import spawn_job
-
-    guard = spawn_job(
-        lambda: _require_unique_keys(
-            source, key_col, "snap_merge_into",
-            visible_keys=lambda: _read_files_with_dv(
-                spark, path, prev, prev["files"]
-            ).select(key_col),
-        )
-    )
-    affected = _affected_files_visible(spark, path, prev, source, key_col)
-    guard.join()
-    kept = [f for f in prev["files"] if f not in affected]
-
-    frames = []
-    if affected:
-        t = _read_files_with_dv(
-            spark, path, {**prev, "schema": merged}, sorted(affected)
-        ).alias("t")
-        s = source.alias("s")
-        # no forced broadcast: the source carries full rows and can be
-        # large — AQE picks broadcast when it is in fact small
-        j = t.join(
-            s, F.col(f"t.{key_col}") == F.col(f"s.{key_col}"), "left"
-        )
-        matched = F.col(f"s.{key_col}").isNotNull()
-        if matched_delete is not None:
-            j = j.where(~(matched & F.expr(matched_delete)))
-        upd = matched_update or {}
-        out_cols = [
-            F.when(matched, F.expr(upd[c])).otherwise(F.col(f"t.{c}"))
-            .alias(c)
-            if c in upd
-            else F.col(f"t.{c}").alias(c)
-            for c in table_cols
-        ]
-        frames.append(j.select(*out_cols))
-    if insert_unmatched:
-        # column-pruned key scan of the VISIBLE stored table (deletion
-        # vector applied): Delta MERGE semantics — a key whose only
-        # stored rows are DV-deleted is logically absent, so the SOURCE
-        # row inserts (upsert-after-delete). This is not resurrection:
-        # the inserted values are the source's, and the matched-file
-        # rewrite reads through the DV (above), so the deleted TARGET
-        # row's old values can never come back. Matches snap_merge,
-        # which always lands every source row (round-7 ADVICE: the two
-        # entry points previously diverged and upsert-after-delete
-        # silently dropped the source row here).
-        if not prev["files"]:  # empty table: every source row inserts
-            frames.append(source.select(*table_cols))
-        else:
-            keys_df = _read_files_with_dv(
-                spark, path, prev, prev["files"]
-            ).select(key_col)
-            inserts = source.join(
-                keys_df, on=key_col, how="left_anti"
-            ).select(*table_cols)
-            frames.append(inserts)
-
-    new: list[str] = []
-    if frames:
-        rows = frames[0]
-        for fr in frames[1:]:
-            rows = rows.unionByName(fr)
-        new = _write_new_files(rows, path, v)
-    extra = _dv_restrict(spark, path, prev, kept, v)
-    extra["schema"] = merged
-    _commit(path, v, kept + new, extra=extra)
-    return v
-
-
 def snap_file_deltas(
     spark: SparkSession,
     path: str,
@@ -1117,11 +720,12 @@ def snap_file_deltas(
     view maintenance needs (queries/storage.py::incremental_join_cdc).
 
     Files SHARED by both manifests can still differ logically when a
-    merge-on-read commit grew the deletion vector (snap_delete_rows) or
-    a restore shrank it: those rows never move files, so the manifest
-    diff alone misses them. The shared-file pass diffs the two DV
-    position sets and emits sgn -1 for newly deleted positions and +1
-    for restored ones, scanning ONLY the shared files actually named in
+    merge-on-read commit grew the deletion vector (snap_delete_rows), or
+    when a diff taken backwards (``from_version`` after ``to_version``)
+    sees it shrink: those rows never move files, so the manifest diff
+    alone misses them. The shared-file pass diffs the two DV position
+    sets and emits sgn -1 for newly deleted positions and +1 for
+    undeleted ones, scanning ONLY the shared files actually named in
     the position diff.
 
     Cost is O(changed files + DV-touched files), never O(table). Both
@@ -1156,7 +760,8 @@ def snap_file_deltas(
         if p is not None
     ]
 
-    # shared-file DV diff (merge-on-read deletes / restores)
+    # shared-file DV diff (merge-on-read deletes, or their undoing when
+    # diffed backwards)
     shared = ma & mb
     if shared:
         dv_a = _dv_positions(spark, path, m_a)
@@ -1309,7 +914,7 @@ def snap_changes(
     # deletion-vector delta over SHARED files: a DV-only commit changes
     # no file, so the row-level changes live purely in the position
     # sets. Positions new in B are deletes; positions gone from B (a
-    # RESTORE across a DV delete) are re-inserts. Only the files the
+    # backwards diff across a DV delete) are re-inserts. Only the files the
     # delta actually names are read — CDC stays O(changed positions).
     frames = [] if base is None else [base]
     shared = ma & mb
@@ -1417,132 +1022,3 @@ def check_expectations(
         )
     return df
 
-
-def snap_optimize(
-    spark: SparkSession,
-    path: str,
-    col_a: str,
-    col_b: str | None = None,
-    n_files: int = 16,
-) -> int:
-    """Delta's ``OPTIMIZE [ZORDER BY]`` as a snapshot commit: rewrite the
-    LATEST version's content into ``n_files`` files ordered by ``col_a``
-    (1-D range sort) or z-ordered on ``(col_a, col_b)``, record per-file
-    min/max COLUMN STATS for the cluster columns inside the manifest
-    (Iceberg's per-data-file stats), and commit it as a new version.
-    Layout-only by construction: the row set is untouched, so
-    ``snap_changes(pre, post)`` is EMPTY (every row's hash cancels
-    between the diff sides — pinned), historical versions keep their
-    files, and readers holding the old version are undisturbed.
-    ``snap_read_pruned`` then skips files by these stats."""
-    from pyspark.sql import functions as F
-
-    from cargo_chat_spark.sources.sorted_layout import _serialize, _zvalue
-
-    prev = manifest(path)
-    v = prev["version"] + 1
-    root = _local(path)
-    cur = snap_read(spark, path)
-    if not prev["files"] or not cur.head(1):
-        # an all-rows delete can commit an empty version; OPTIMIZE on it
-        # is a no-op layout commit (the z-value bounds would be NULL)
-        extra: dict = {"stats": {}}
-        if "schema" in prev:
-            extra["schema"] = prev["schema"]
-        _commit(path, v, [], extra=extra)
-        return v
-    kinds = dict(cur.dtypes)
-    if col_b is None:
-        ordered = cur.repartitionByRange(n_files, F.col(col_a))
-        ordered = ordered.sortWithinPartitions(col_a)
-        stat_cols = [col_a]
-    else:
-        b_num = (
-            f"unix_seconds({col_b})"
-            if kinds.get(col_b) == "timestamp"
-            else col_b
-        )
-        lo_a, hi_a, lo_b, hi_b = cur.selectExpr(
-            f"min({col_a})", f"max({col_a})", f"min({b_num})", f"max({b_num})"
-        ).first()
-        z = _zvalue(col_a, b_num, (lo_a, hi_a, lo_b, hi_b))
-        ordered = (
-            cur.withColumn("_z", z)
-            .repartitionByRange(n_files, F.col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-        stat_cols = [col_a, col_b]
-    new = _write_new_files(ordered, path, v)
-    # stats from the files AS WRITTEN (what is recorded is what is on
-    # disk), one column-pruned aggregate scan over the new files only
-    aggs = []
-    for c in stat_cols:
-        aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
-    rows = (
-        spark.read.parquet(*(os.path.join(root, f) for f in new))
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(*aggs)
-        .collect()  # bounded: one row per file
-    )
-    stats = {
-        os.path.basename(_local(r["file"])): {
-            c: [_serialize(r[f"lo_{c}"]), _serialize(r[f"hi_{c}"])]
-            for c in stat_cols
-        }
-        for r in rows
-    }
-    extra: dict = {"stats": stats}
-    if "schema" in prev:
-        extra["schema"] = prev["schema"]
-    _commit(path, v, new, extra=extra)
-    return v
-
-
-def snap_read_pruned(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    version: int | None = None,
-) -> DataFrame:
-    """Stats-pruned time-travel read: open only the files whose manifest
-    min/max overlap every ``{col: (lo, hi)}`` half-open band; files
-    WITHOUT recorded stats are always opened (pruning can only skip what
-    the stats prove disjoint — correctness never depends on them).
-    Predicates are re-applied row-level, so the result is identical to a
-    full scan + filter by construction."""
-    from pyspark.sql import functions as F
-
-    from cargo_chat_spark.sources.sorted_layout import _serialize
-
-    m = manifest(path, version)
-    stats = m.get("stats", {})
-    root = _local(path)
-
-    def overlaps(fname: str) -> bool:
-        st = stats.get(fname)
-        if st is None:
-            return True
-        for c, (lo, hi) in predicates.items():
-            if c not in st:
-                continue
-            flo, fhi = st[c]
-            r_lo, r_hi = _serialize(lo), _serialize(hi)
-            if fhi < r_lo or flo >= r_hi:
-                return False
-        return True
-
-    reader = spark.read
-    schema = _schema_of(m)
-    if schema is not None:
-        reader = reader.schema(schema)
-    files = [f for f in m["files"] if overlaps(f)]
-    if not files:
-        out = reader.parquet(
-            *(os.path.join(root, f) for f in m["files"])
-        ).where(F.lit(False))
-    else:
-        out = reader.parquet(*(os.path.join(root, f) for f in files))
-    for c, (lo, hi) in predicates.items():
-        out = out.where((F.col(c) >= F.lit(lo)) & (F.col(c) < F.lit(hi)))
-    return out

@@ -1,235 +1,26 @@
-"""Range-sorted parquet layout + min/max manifest file skipping.
+"""Range-sorted parquet layout.
 
-Partition pruning (storage.py gates) works when the predicate column IS
-the partition key; at 100 TB you cannot partition by every query column
-(a user_id partition per user is millions of directories). The standard
-lakehouse answer is DATA SKIPPING on file-level column statistics: lay
-the table out so each file covers a narrow range of the column
-(``repartitionByRange`` + ``sortWithinPartitions`` — the 1-D case of
-z-ordering), record per-file min/max in a manifest at write time, and
-have the reader open only the files whose range overlaps the predicate.
-Delta/Iceberg keep this manifest in the table log; plain parquet gets the
-same effect with an explicit sidecar here (underscore-named so vanilla
-readers ignore it). Within each opened file, parquet row-group min/max
-stats prune further for free because the rows are sorted.
-
-Guarantee: ``read_range_pruned`` re-applies the predicate row-level, so
-pruning is a pure I/O optimization — the result is identical to a full
-scan + filter by construction, which is exactly what the catalog gate
-(`events_range_pruned_scan`) value-checks against the raw table, while
-``tests/test_sorted_layout.py`` pins the PHYSICAL claim: the pruned plan
-lists only the overlapping files.
+Each file covers a narrow, disjoint range of one column
+(``repartitionByRange`` + ``sortWithinPartitions``), so a predicate on
+that column touches few files, and within each file parquet's row-group
+min/max stats prune further because the rows are sorted.
+``tests/test_sorted_layout.py`` pins the layout.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from cargo_chat_spark.sources._paths import strip_scheme as _local
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_MANIFEST = "_minmax_manifest.json"
 
 
 def write_range_sorted(
     df: DataFrame, path: str, col: str, n_files: int = 16
 ) -> None:
     """Write ``df`` as ``n_files`` parquet files, each covering a disjoint
-    range of ``col`` (range partition + in-file sort), plus a per-file
-    min/max manifest. Manifest stats are computed from the files as
-    written (one column-pruned aggregate scan), not from the input frame —
-    what is recorded is what is on disk."""
+    range of ``col`` (range partition + in-file sort)."""
     (
         df.repartitionByRange(n_files, F.col(col))
         .sortWithinPartitions(col)
         .write.mode("overwrite")
         .parquet(path)
     )
-    spark = df.sparkSession
-    stats = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
-        .collect()  # bounded: one row per file
-    )
-    manifest = {
-        "column": col,
-        "files": sorted(
-            (os.path.basename(_local(r["file"])), r["lo"], r["hi"])
-            for r in stats
-        ),
-    }
-    with open(os.path.join(_local(path), _MANIFEST), "w") as fh:
-        json.dump(manifest, fh, indent=1)
-
-
-def pruned_files(path: str, col: str, lo, hi) -> list[str]:
-    """File names whose [min, max] overlaps [lo, hi) per the manifest."""
-    with open(os.path.join(_local(path), _MANIFEST)) as fh:
-        manifest = json.load(fh)
-    if manifest["column"] != col:
-        raise ValueError(
-            f"manifest indexes {manifest['column']!r}, not {col!r}"
-        )
-    return [
-        name
-        for name, fmin, fmax in manifest["files"]
-        if not (fmax < lo or fmin >= hi)
-    ]
-
-
-def read_range_pruned(
-    spark: SparkSession, path: str, col: str, lo, hi
-) -> DataFrame:
-    """Scan only the manifest-selected files for ``lo <= col < hi``, with
-    the predicate re-applied row-level (pruning is I/O-only; empty
-    selection yields an empty frame with the table's schema)."""
-    files = [os.path.join(path, f) for f in pruned_files(path, col, lo, hi)]
-    pred = (F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(hi))
-    if not files:
-        return spark.read.parquet(path).where(F.lit(False))
-    return spark.read.parquet(*files).where(pred)
-
-
-# ------------------------------------------------- 2-D z-order layout
-# The 1-D range layout above skips files for ONE column; a second
-# selective column gets no help (its values scatter uniformly across the
-# range-sorted files). Z-ORDERING interleaves the bits of both columns'
-# rank-normalized values so files cover compact rectangles in (a, b)
-# space — per-file min/max stats then stay narrow on BOTH columns and a
-# predicate on EITHER prunes files (Delta's OPTIMIZE ZORDER, expressed on
-# plain parquet). The z-value is a pure JVM integer expression (no UDF);
-# it orders the write and is dropped before storage.
-_ZBITS = 16
-
-
-def _serialize(v):
-    """Manifest-storable form preserving order: datetimes → ISO strings
-    (lexicographically ordered), everything else as-is."""
-    import datetime
-
-    if isinstance(v, datetime.datetime):
-        return v.isoformat(sep=" ")
-    return v
-
-
-def _zvalue(col_a: str, col_b: str, bounds: tuple) -> F.Column:
-    """Interleave the _ZBITS-bit rank-normalized values of two numeric
-    columns (a gets the odd/higher bit positions). ``bounds`` =
-    (a_lo, a_hi, b_lo, b_hi) as longs."""
-    a_lo, a_hi, b_lo, b_hi = (int(x) for x in bounds)
-    top = (1 << _ZBITS) - 1
-
-    def scaled(col: str, lo: int, hi: int) -> str:
-        span = max(hi - lo, 1)
-        # (v - lo) * top fits a long for any span the fixture/real feeds
-        # produce (span * 65535 << 2^63)
-        return f"(({col} - {lo}L) * {top}L) div {span}L"
-
-    sa, sb = scaled(col_a, a_lo, a_hi), scaled(col_b, b_lo, b_hi)
-    terms = []
-    for i in range(_ZBITS):
-        terms.append(f"(shiftleft(shiftright({sa}, {i}) & 1L, {2 * i + 1}))")
-        terms.append(f"(shiftleft(shiftright({sb}, {i}) & 1L, {2 * i}))")
-    return F.expr(" + ".join(terms))
-
-
-def write_zordered(
-    df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 16
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files ordered by the z-value of
-    (col_a, col_b), plus a per-file manifest of BOTH columns' min/max
-    (computed from the files as written). col_b may be a timestamp — it
-    is z-ordered via unix seconds and recorded in the manifest in ISO
-    form (order-preserving)."""
-    spark = df.sparkSession
-    kinds = dict(df.dtypes)
-    b_num = f"unix_seconds({col_b})" if kinds.get(col_b) == "timestamp" else col_b
-    lo_a, hi_a, lo_b, hi_b = (
-        df.selectExpr(
-            f"min({col_a})", f"max({col_a})", f"min({b_num})", f"max({b_num})"
-        ).first()
-    )
-    z = _zvalue(col_a, b_num, (lo_a, hi_a, lo_b, hi_b))
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    stats = (
-        spark.read.parquet(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(
-            F.min(col_a).alias("alo"),
-            F.max(col_a).alias("ahi"),
-            F.min(col_b).alias("blo"),
-            F.max(col_b).alias("bhi"),
-        )
-        .collect()  # bounded: one row per file
-    )
-    manifest = {
-        "columns": [col_a, col_b],
-        "files": sorted(
-            (
-                os.path.basename(_local(r["file"])),
-                _serialize(r["alo"]),
-                _serialize(r["ahi"]),
-                _serialize(r["blo"]),
-                _serialize(r["bhi"]),
-            )
-            for r in stats
-        ),
-    }
-    with open(os.path.join(_local(path), _MANIFEST), "w") as fh:
-        json.dump(manifest, fh, indent=1)
-
-
-def pruned_files_2d(path: str, a_range=None, b_range=None) -> list[str]:
-    """Files overlapping [a_lo, a_hi) × [b_lo, b_hi); either range may be
-    None (no constraint on that column). Timestamp bounds are passed as
-    datetimes and compared in ISO form."""
-    with open(os.path.join(_local(path), _MANIFEST)) as fh:
-        manifest = json.load(fh)
-    if "columns" not in manifest:
-        raise ValueError("manifest is 1-D (write_range_sorted layout)")
-
-    def overlaps(lo, hi, rng):
-        if rng is None:
-            return True
-        r_lo, r_hi = (_serialize(v) for v in rng)
-        return not (hi < r_lo or lo >= r_hi)
-
-    return [
-        name
-        for name, alo, ahi, blo, bhi in manifest["files"]
-        if overlaps(alo, ahi, a_range) and overlaps(blo, bhi, b_range)
-    ]
-
-
-def read_zorder_pruned(
-    spark: SparkSession, path: str, col_a: str, col_b: str,
-    a_range=None, b_range=None,
-) -> DataFrame:
-    """Scan only the manifest-selected files, predicates re-applied
-    row-level (pruning is I/O-only, like read_range_pruned)."""
-    files = [
-        os.path.join(path, f) for f in pruned_files_2d(path, a_range, b_range)
-    ]
-    if not files:
-        return spark.read.parquet(path).where(F.lit(False))
-    out = spark.read.parquet(*files)
-    if a_range is not None:
-        out = out.where(
-            (F.col(col_a) >= F.lit(a_range[0])) & (F.col(col_a) < F.lit(a_range[1]))
-        )
-    if b_range is not None:
-        out = out.where(
-            (F.col(col_b) >= F.lit(b_range[0])) & (F.col(col_b) < F.lit(b_range[1]))
-        )
-    return out

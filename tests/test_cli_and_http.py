@@ -47,6 +47,26 @@ def test_http_provider_classify_and_hyde():
     assert t.calls[0][1]["response_format"]["type"] == "json_schema"
     assert t.calls[0][1]["temperature"] == 0.1
 
+    # a malformed classification is rejected naming the field, as the
+    # reference's typed parse rejects it, instead of reaching ranking
+    good = {"intent": "implementation", "wants_code": True, "confidence": 0.85}
+    for field, value in (
+        ("wants_code", None), ("wants_code", "false"), ("wants_code", 1),
+        ("confidence", None), ("confidence", "0.9"), ("confidence", True),
+        ("intent", None), ("intent", 3),
+        ("language", 7),
+        ("target_folders", "src"), ("target_extensions", ["rs", 1]),
+        ("exclude_patterns", {"a": 1}),
+    ):
+        bad = OpenAIHttpProvider(transport=_fake_transport(
+            {"gpt-4o-mini": json.dumps({**good, field: value})}))
+        with pytest.raises(ValueError, match=field):
+            bad.classify_query("q")
+    missing = OpenAIHttpProvider(transport=_fake_transport(
+        {"gpt-4o-mini": json.dumps({"intent": "explanation", "confidence": 0.5})}))
+    with pytest.raises(ValueError, match="wants_code"):
+        missing.classify_query("q")
+
     # HyDE respects the char budget (main.rs:497)
     t2 = _fake_transport({"gpt-4o-mini": "x" * 5000})
     p2 = OpenAIHttpProvider(transport=t2)

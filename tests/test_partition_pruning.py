@@ -1,67 +1,8 @@
-"""Physical evidence for the hive-partitioned layout gate
-(queries/storage.py): a predicate on the partition column must prune at
-planning time — PartitionFilters in the scan node and NO files read from
-non-matching partition directories."""
+"""Sink-side file control: a writer can bound file sizes and counts."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from cargo_chat_spark.queries.storage import write_partitioned_events
 from tests.conftest import SF_DIR_SMALL
-
-
-def _explain(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_partition_filter_prunes_directories(spark):
-    out = write_partitioned_events(spark, SF_DIR_SMALL)
-    back = spark.read.parquet(out)
-    pruned = back.where(F.col("event_type").isin("purchase", "error"))
-
-    # planner evidence: the IN predicate lands in PartitionFilters, not
-    # PushedFilters/post-scan Filter
-    plan = _explain(pruned)
-    assert "PartitionFilters" in plan
-    assert "event_type" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
-
-    # physical evidence: the EXECUTED scan only touches the two matching
-    # directories. (DataFrame.inputFiles() reports the unpruned FileIndex,
-    # so the proof must come from rows actually read.)
-    files = [
-        r[0]
-        for r in pruned.select(F.input_file_name()).distinct().collect()
-    ]
-    assert files, "pruned scan read no files"
-    assert all(
-        "event_type=purchase" in f or "event_type=error" in f for f in files
-    ), files[:5]
-
-    # and the unpruned scan reads strictly more partition directories
-    all_files = [
-        r[0] for r in back.select(F.input_file_name()).distinct().collect()
-    ]
-    assert len(set(all_files)) > len(set(files))
-
-
-def test_partitioned_roundtrip_preserves_rows(spark):
-    out = write_partitioned_events(spark, SF_DIR_SMALL)
-    back = spark.read.parquet(out)
-    raw = spark.read.parquet(f"{SF_DIR_SMALL}/events.parquet")
-    assert back.count() == raw.count()
-    # per-partition counts match the raw group-by
-    got = {
-        r["event_type"]: r["n"]
-        for r in back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    want = {
-        r["event_type"]: r["n"]
-        for r in raw.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got == want
 
 
 def test_max_records_per_file_bounds_output_files(spark, tmp_path):

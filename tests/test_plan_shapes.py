@@ -489,3 +489,17 @@ def test_bfs_join_strategy_is_size_guarded(spark):
         "SortMergeJoin" in shuffle_plan or "ShuffledHashJoin" in shuffle_plan
     )
     assert rows_s == rows_b, "join strategy changed the BFS hops"
+
+
+def test_reference_rank_plans_two_windows(spark):
+    """reference_rank's selection rank and code count share one Window
+    operator (one window spec, two frames); the final rank is the other."""
+    from cargo_chat_spark.operators import ranking
+    from tests.test_driver_ranking import DDL, _questions
+
+    df = ranking.reference_rank(spark.createDataFrame(_questions(), DDL))
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    windows = [n for _, n in _tree(final) if n.startswith("Window ")]
+    assert len(windows) == 2, final

@@ -1,22 +1,16 @@
-"""Runtime filter pins — the two Catalyst features that prune the FACT
-side of a join using information that only exists at runtime:
+"""Runtime filter pin — the Catalyst feature that prunes the FACT side
+of a join using information that only exists at runtime: for a selective
+join key, the optimizer injects a bloom-filter aggregate on the dim side
+and a might_contain probe above the fact scan, shrinking the shuffle.
 
-- Dynamic Partition Pruning (DPP): a selective filter on the dim side of
-  a join on the fact's PARTITION column turns into a runtime subquery
-  that prunes whole fact partitions before the scan.
-- Runtime Bloom-filter join: for a selective non-partition join key, the
-  optimizer injects a bloom-filter aggregate on the dim side and a
-  might_contain probe above the fact scan, shrinking the shuffle.
-
-Both are free declarative wins at 100 TB IF the plan stays join+filter
-shaped — these pins keep them from silently regressing.
+A free declarative win at 100 TB IF the plan stays join+filter shaped —
+this pin keeps it from silently regressing.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cargo_chat_spark.queries.storage import write_partitioned_events
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -37,34 +31,6 @@ def _restore(spark, old):
             spark.conf.unset(k)
         else:
             spark.conf.set(k, v)
-
-
-def test_dynamic_partition_pruning_on_partitioned_events(spark):
-    out = write_partitioned_events(spark, SF_DIR_SMALL)  # partitioned by event_type
-    fact = spark.read.parquet(out)
-    dim = spark.createDataFrame(
-        [("purchase", 1), ("error", 2), ("click", 3), ("view", 4), ("signup", 5)],
-        "event_type string, type_id int",
-    )
-    overrides = {
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
-        # force the reuse-broadcast path to be unnecessary so DPP shows
-        # even for this tiny fixture
-        "spark.sql.optimizer.dynamicPartitionPruning.useStats": "false",
-        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio": "10.0",
-    }
-    old = _with_conf(spark, overrides)
-    try:
-        joined = fact.join(dim, "event_type").where(F.col("type_id") <= 2)
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "dynamicpruning" in plan.lower(), plan[:2000]
-        # semantics unchanged: only the two selected partitions' rows
-        got = joined.select("event_type").distinct().collect()
-        assert {r[0] for r in got} == {"purchase", "error"}
-    finally:
-        _restore(spark, old)
 
 
 def test_runtime_bloom_filter_join(spark):

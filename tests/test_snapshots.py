@@ -2,7 +2,7 @@
 historical reads are immutable, copy-on-write deletes share unaffected
 files between manifests, a reader holding an old version is undisturbed
 by later commits, and vacuum removes exactly the unreachable files.
-The values contract is carried by the ``events_time_travel`` gate."""
+The values contract is carried by the ``incremental_join_cdc`` gate."""
 
 from __future__ import annotations
 
@@ -259,115 +259,6 @@ def test_commit_time_expectations(spark, tmp_path):
     assert versions(out) == [0, 1, 2]
 
 
-def test_optimize_is_layout_only_and_prunes_reads(spark, tmp_path):
-    """OPTIMIZE ZORDER as a snapshot commit: the change feed between
-    pre- and post-optimize versions is EMPTY (layout-only — every moved
-    row's hash cancels), historical reads are intact, and the
-    stats-pruned read opens a strict subset of the optimized files while
-    matching the full-scan filter exactly."""
-    import datetime
-
-    from cargo_chat_spark.sources.snapshots import (
-        snap_changes,
-        snap_optimize,
-        snap_read_pruned,
-    )
-
-    out = str(tmp_path / "snap")
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    # two unsorted appends -> fragmented, unclustered layout
-    snap_write(e.where(F.col("event_id") % 2 == 0), out)
-    snap_append(e.where(F.col("event_id") % 2 == 1), out)
-    v2 = snap_optimize(spark, out, "user_id", "ts", n_files=8)
-    assert v2 == 2
-
-    # layout-only: same rows, empty change feed across the optimize
-    assert _rows(snap_read(spark, out, 2)) == _rows(e)
-    assert snap_changes(spark, out, 1, 2, "event_id").count() == 0
-    assert _rows(snap_read(spark, out, 1)) == _rows(e)  # history intact
-
-    preds = {
-        "user_id": (3, 10),
-        "ts": (datetime.datetime(2024, 1, 8), datetime.datetime(2024, 1, 15)),
-    }
-    pruned = snap_read_pruned(spark, out, preds, version=2)
-    opened = {os.path.basename(f) for f in pruned.inputFiles()}
-    all_files = set(manifest(out, 2)["files"])
-    assert opened < all_files, f"no pruning: opened {len(opened)}"
-    want = _rows(
-        e.where(
-            (F.col("user_id") >= 3) & (F.col("user_id") < 10)
-            & (F.col("ts") >= F.lit(datetime.datetime(2024, 1, 8)))
-            & (F.col("ts") < F.lit(datetime.datetime(2024, 1, 15)))
-        )
-    )
-    assert _rows(pruned) == want
-
-    # un-statted versions are readable through the same API (no skipping)
-    legacy = snap_read_pruned(spark, out, preds, version=1)
-    assert _rows(legacy) == want
-
-
-def test_metadata_only_count(spark, tmp_path):
-    """snap_count answers from manifest row stats alone (footers at
-    commit time, carried forward for shared files) — verified against
-    real counts across the write/append/CoW-delete lifecycle."""
-    from cargo_chat_spark.sources.snapshots import snap_count
-
-    out = str(tmp_path / "snap")
-    e, _ = _build(spark, out)
-    assert snap_count(out, 0) == e.where(F.col("user_id") < 8).count()
-    assert snap_count(out, 1) == e.count()
-    assert snap_count(out) == e.where(~F.col("user_id").isin(7, 11)).count()
-
-
-def test_restore_is_metadata_only_and_preserves_history(spark, tmp_path):
-    """RESTORE commits the target's exact file list with zero data files
-    written or touched; history (incl. the rolled-back delete) stays
-    readable; restore is undoable by another restore; a vacuumed target
-    fails loudly instead of committing a manifest of dead files."""
-    import pytest
-
-    from cargo_chat_spark.sources.snapshots import snap_count, snap_restore
-
-    out = str(tmp_path / "snap")
-    e, (v0, v1, v2) = _build(spark, out)
-    before = set(os.listdir(out))
-    stats_before = _file_stats(out, manifest(out, v1)["files"])
-
-    v3 = snap_restore(out, v1)
-    assert v3 == 3
-    m3 = manifest(out, v3)
-    # metadata-only: file list IS v1's, no data file added or rewritten
-    assert m3["files"] == manifest(out, v1)["files"]
-    assert m3["restored_from"] == v1
-    assert {
-        f for f in os.listdir(out) if f.endswith(".parquet")
-    } == {f for f in before if f.endswith(".parquet")}
-    assert _file_stats(out, m3["files"]) == stats_before
-    # restored content == v1 content; carried row stats agree
-    assert _rows(snap_read(spark, out, v3)) == _rows(snap_read(spark, out, v1))
-    assert snap_count(out, v3) == snap_count(out, v1)
-    # the rolled-back delete version is still time-travel readable
-    want_v2 = _rows(e.where(~F.col("user_id").isin(7, 11)))
-    assert _rows(snap_read(spark, out, v2)) == want_v2
-    # restore is itself undoable
-    v4 = snap_restore(out, v2)
-    assert _rows(snap_read(spark, out, v4)) == want_v2
-
-    # a target whose data files are gone fails loudly BEFORE committing
-    victim = manifest(out, v0)["files"][0]
-    os.remove(os.path.join(out, victim))
-    tip = versions(out)[-1]
-    with pytest.raises(FileNotFoundError):
-        snap_restore(out, v0)
-    assert versions(out)[-1] == tip  # no manifest landed
-    # vacuum drops the rolled-back manifests too: restore target gone
-    expire_snapshots(out, keep_last=1)
-    with pytest.raises(ValueError):
-        snap_restore(out, v1)
-
-
 def test_concurrent_commit_put_if_absent(spark, tmp_path):
     """Two writers racing to the same version: the commit point is
     put-if-absent (os.link), so the loser raises ConcurrentCommitError,
@@ -472,71 +363,13 @@ def test_additive_schema_evolution(spark, tmp_path):
     )
 
 
-def test_retention_delete_drops_whole_files_by_stats(spark, tmp_path):
-    """DELETE WHERE ts < cutoff at file granularity: files whose stats
-    prove every row qualifies are dropped from the manifest without
-    being opened or rewritten (metadata-only), fully-surviving files are
-    kept byte-identical with their stats carried forward, and only the
-    straddling boundary files are rewritten row-level. A table without
-    stats classifies via a one-pass column-pruned probe instead."""
-    import datetime
-
-    from cargo_chat_spark.sources.snapshots import (
-        snap_delete_where,
-        snap_optimize,
-    )
-
-    cutoff = datetime.datetime(2024, 1, 12)
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    want = _rows(e.where(F.col("ts") >= F.lit(cutoff)))
-
-    out = str(tmp_path / "snap")
-    snap_write(e, out)
-    snap_optimize(spark, out, "ts", n_files=8)  # v1: ts-clustered + stats
-    m1 = manifest(out, 1)
-    cut = cutoff.isoformat(sep=" ")
-    dropped = [f for f in m1["files"] if m1["stats"][f]["ts"][1] < cut]
-    kept = [f for f in m1["files"] if m1["stats"][f]["ts"][0] >= cut]
-    straddling = [
-        f for f in m1["files"] if f not in dropped and f not in kept
-    ]
-    assert dropped and kept and straddling  # the fixture exercises all 3
-    kept_stats = _file_stats(out, kept + dropped)
-
-    v2 = snap_delete_where(spark, out, "ts", cutoff)
-    m2 = manifest(out, v2)
-    # dropped wholesale: out of the manifest, still on disk for history
-    for f in dropped:
-        assert f not in m2["files"]
-        assert os.path.exists(os.path.join(out, f))
-    # kept untouched byte-for-byte, stats carried forward
-    for f in kept:
-        assert f in m2["files"]
-        assert m2["stats"][f] == m1["stats"][f]
-    assert _file_stats(out, kept + dropped) == kept_stats
-    # only the straddling files were rewritten
-    new_files = [f for f in m2["files"] if f not in m1["files"]]
-    assert len(new_files) <= len(straddling) + 1
-    assert _rows(snap_read(spark, out)) == want
-    assert _rows(snap_read(spark, out, 1)) == _rows(e)  # history intact
-
-    # no-stats fallback: same answer via the on-the-fly min/max probe
-    out2 = str(tmp_path / "snap2")
-    snap_write(e.repartitionByRange(8, F.col("ts")), out2)
-    snap_delete_where(spark, out2, "ts", cutoff)
-    assert _rows(snap_read(spark, out2)) == want
-
-
 def test_deletion_vector_delete_touches_no_data_file(spark, tmp_path):
     """Row-level MOR delete: the commit references the UNTOUCHED data
     files plus a (file, row_index) sidecar — O(deleted rows) cost where
     copy-on-write would rewrite every file containing a matched row.
     Waves accumulate, re-deleting a key is a no-op, history stays
-    readable, and metadata counts subtract the vector exactly."""
-    from cargo_chat_spark.sources.snapshots import (
-        snap_count,
-        snap_delete_rows,
-    )
+    readable, and the manifest's ``dv_rows`` counts the vector exactly."""
+    from cargo_chat_spark.sources.snapshots import snap_delete_rows
 
     out = str(tmp_path / "snap")
     e = load_table(spark, SF_DIR_SMALL, "events")
@@ -557,7 +390,6 @@ def test_deletion_vector_delete_touches_no_data_file(spark, tmp_path):
     want1 = _rows(e.where(~F.col("user_id").isin(7, 11)))
     assert _rows(snap_read(spark, out)) == want1
     assert _rows(snap_read(spark, out, 0)) == _rows(e)  # history intact
-    assert snap_count(out) == len(want1)
 
     # second wave accumulates; re-deleting user 7 changes nothing
     v2 = snap_delete_rows(
@@ -570,26 +402,21 @@ def test_deletion_vector_delete_touches_no_data_file(spark, tmp_path):
     want2 = _rows(e.where(~F.col("user_id").isin(3, 7, 11)))
     assert _rows(snap_read(spark, out)) == want2
     assert m2["dv_rows"] == len(_rows(e)) - len(want2)
-    assert snap_count(out) == len(want2)
 
 
 @pytest.mark.slow
-def test_deletion_vector_compaction_and_cow_interplay(spark, tmp_path):
-    """Compacting the vector rewrites ONLY the dirty files and cannot
-    resurrect deleted rows; a copy-on-write key-delete over a table
-    with a DV materializes the vector for the files it rewrites and
-    carries the rest; the change feed across a compaction is EMPTY
-    (layout-only) while a DV-only commit feeds pure deletes."""
+def test_deletion_vector_cdc_and_cow_interplay(spark, tmp_path):
+    """A DV-only commit feeds pure deletes to the change feed; a
+    copy-on-write key-delete over a table with a DV materializes the
+    vector for the files it rewrites and carries the rest."""
     from cargo_chat_spark.sources.snapshots import (
         snap_changes,
-        snap_compact_dv,
         snap_delete_rows,
     )
 
     out = str(tmp_path / "snap")
     e = load_table(spark, SF_DIR_SMALL, "events")
     snap_write(e.repartitionByRange(8, F.col("user_id")), out)
-    m0 = manifest(out, 0)
 
     v1 = snap_delete_rows(
         spark, out, e.where(F.col("user_id").isin(7, 11)).select("event_id"),
@@ -604,28 +431,7 @@ def test_deletion_vector_compaction_and_cow_interplay(spark, tmp_path):
     )
     assert got == want
 
-    m1 = manifest(out, v1)
-    dirty = {r["file"] for r in (
-        spark.read.schema("file string, row_index bigint").parquet(
-            *(os.path.join(out, "_dv", f) for f in m1["dv"])
-        ).select("file").distinct().collect()
-    )}
-    clean = [f for f in m1["files"] if f not in dirty]
-    assert dirty and clean  # fixture exercises both
-    clean_stats = _file_stats(out, clean)
-
-    v2 = snap_compact_dv(spark, out)
-    m2 = manifest(out, v2)
-    assert "dv" not in m2
-    assert set(clean) <= set(m2["files"])  # clean files shared verbatim
-    assert _file_stats(out, clean) == clean_stats
-    assert not (dirty & set(m2["files"]))  # dirty files all replaced
-    want_rows = _rows(e.where(~F.col("user_id").isin(7, 11)))
-    assert _rows(snap_read(spark, out)) == want_rows
-    # layout-only: the feed across the compaction is empty
-    assert _rows(snap_changes(spark, out, v1, v2, "event_id")) == []
-
-    # CoW key-delete over a fresh DV: rewritten files materialize the
+    # CoW key-delete over the DV: rewritten files materialize the
     # vector (deleted rows stay gone), untouched files keep their DV
     v3 = snap_delete_rows(
         spark, out, e.where(F.col("user_id") == 2).select("event_id"),
@@ -642,94 +448,15 @@ def test_deletion_vector_compaction_and_cow_interplay(spark, tmp_path):
     )
 
 
-def test_merge_into_clauses(spark, tmp_path):
-    """Full conditional MERGE: WHEN MATCHED AND cond THEN DELETE beats
-    UPDATE; UPDATE SET rewrites only the listed columns via t./s.
-    expressions; NOT MATCHED inserts; only files holding a matched key
-    are rewritten; rows pending in the deletion vector are NOT matched
-    (logically absent) and a rewrite materializes them out. Per Delta
-    semantics a source key whose only stored rows are DV-deleted is NOT
-    MATCHED and therefore INSERTS the source row (upsert-after-delete;
-    round-7 ADVICE) — the target's old values stay gone, the source's
-    values land."""
-    from cargo_chat_spark.sources.snapshots import (
-        snap_delete_rows,
-        snap_merge_into,
-    )
-
-    out = str(tmp_path / "snap")
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    snap_write(e.repartitionByRange(8, F.col("user_id")), out)
-    # user 3's 'view' rows go into the deletion vector first: MERGE must
-    # treat them as absent (no update resurrects them)
-    snap_delete_rows(
-        spark, out,
-        e.where((F.col("user_id") == 3) & (F.col("event_type") == "view"))
-        .select("event_id"),
-        "event_id",
-    )
-    m1 = manifest(out, 1)
-
-    src = e.where(F.col("user_id").isin(3, 5)).unionByName(
-        e.where(F.col("user_id") == 9).withColumn(
-            "event_id", F.col("event_id") + F.lit(10_000_000)
-        )
-    )
-    v2 = snap_merge_into(
-        spark, out, src, "event_id",
-        matched_update={"value": "t.value + 1.0"},
-        matched_delete="s.event_type = 'error'",
-    )
-
-    matched = (F.col("user_id").isin(3, 5)) & ~(
-        (F.col("user_id") == 3) & (F.col("event_type") == "view")
-    )
-    want = _rows(
-        e.where(~F.col("user_id").isin(3, 5))  # untouched
-        .unionByName(
-            e.where(matched & (F.col("event_type") != "error"))
-            .withColumn("value", F.col("value") + F.lit(1.0))
-        )  # updated (non-error survivors; DV'd targets stay gone)
-        .unionByName(
-            e.where(F.col("user_id") == 9).withColumn(
-                "event_id", F.col("event_id") + F.lit(10_000_000)
-            )
-        )  # inserted (unseen keys)
-        .unionByName(
-            e.where(
-                (F.col("user_id") == 3) & (F.col("event_type") == "view")
-            )
-        )  # inserted (upsert-after-delete: source rows, verbatim)
-    )
-    assert _rows(snap_read(spark, out, v2)) == want
-
-    # CoW: files without a visible matched key are shared verbatim
-    m2 = manifest(out, v2)
-    shared = set(m1["files"]) & set(m2["files"])
-    assert shared and set(m1["files"]) - set(m2["files"]), (
-        "merge must rewrite some files and share the rest"
-    )
-    # history intact
-    assert _rows(snap_read(spark, out, 1)) == _rows(
-        e.where(~(
-            (F.col("user_id") == 3) & (F.col("event_type") == "view")
-        ))
-    )
-
-
 def test_merge_duplicate_source_keys_raise(spark, tmp_path):
     """Delta MERGE raises on multiple source matches per target row; the
-    left join would otherwise silently fan matched rows out. Both MERGE
-    entry points enforce it before any file is written. Duplicate source
+    left join would otherwise silently fan matched rows out. MERGE
+    enforces it before any file is written. Duplicate source
     keys matching NOTHING are legal and insert every row (exact Delta
     semantics, round-7 ADVICE — the guard was previously stricter)."""
     import pytest
 
-    from cargo_chat_spark.sources.snapshots import (
-        snap_merge,
-        snap_merge_into,
-        snap_read,
-    )
+    from cargo_chat_spark.sources.snapshots import snap_merge, snap_read
 
     out = str(tmp_path / "snap")
     e = load_table(spark, SF_DIR_SMALL, "events")
@@ -737,8 +464,6 @@ def test_merge_duplicate_source_keys_raise(spark, tmp_path):
     dup = e.limit(1).unionByName(e.limit(1))
     with pytest.raises(ValueError, match="duplicate"):
         snap_merge(spark, out, dup, "event_id")
-    with pytest.raises(ValueError, match="duplicate"):
-        snap_merge_into(spark, out, dup, "event_id")
     assert versions(out) == [0], "failed MERGE must not commit"
 
     # duplicates on an UNSEEN key match no target row: both rows insert
@@ -747,28 +472,16 @@ def test_merge_duplicate_source_keys_raise(spark, tmp_path):
         "event_id", F.col("event_id") + F.lit(77_000_000)
     )
     dup_unmatched = fresh.unionByName(fresh)
-    v = snap_merge_into(spark, out, dup_unmatched, "event_id")
+    v = snap_merge(spark, out, dup_unmatched, "event_id")
     assert snap_read(spark, out, v).count() == n0 + 2
-    v2 = snap_merge(
-        spark, out,
-        dup_unmatched.withColumn(
-            "event_id", F.col("event_id") + F.lit(1_000)
-        ),
-        "event_id",
-    )
-    assert snap_read(spark, out, v2).count() == n0 + 4
 
 
-def test_empty_version_reads_optimizes_and_reinserts(spark, tmp_path):
+def test_empty_version_reads_and_reinserts(spark, tmp_path):
     """Round-6 advice: a delete that removes every row commits a version
     with an empty file list — that version must stay readable (empty
-    frame, recorded schema), OPTIMIZE on it must not crash, and a MERGE
-    into the empty table inserts everything."""
-    from cargo_chat_spark.sources.snapshots import (
-        snap_count,
-        snap_merge_into,
-        snap_optimize,
-    )
+    frame, recorded schema), and a MERGE into the empty table inserts
+    everything."""
+    from cargo_chat_spark.sources.snapshots import snap_merge
 
     out = str(tmp_path / "snap")
     e = load_table(spark, SF_DIR_SMALL, "events").limit(50)
@@ -777,12 +490,9 @@ def test_empty_version_reads_optimizes_and_reinserts(spark, tmp_path):
     empty = snap_read(spark, out, v1)
     assert empty.count() == 0
     assert empty.columns == e.columns
-    v2 = snap_optimize(spark, out, "value", "ts")
-    assert snap_read(spark, out, v2).count() == 0
-    assert snap_count(out, v2) == 0
     src = e.limit(7)
-    v3 = snap_merge_into(spark, out, src, "event_id")
-    assert _rows(snap_read(spark, out, v3)) == _rows(src)
+    v2 = snap_merge(spark, out, src, "event_id")
+    assert _rows(snap_read(spark, out, v2)) == _rows(src)
 
 
 def test_expectation_null_semantics_agree_across_modes(spark):
@@ -885,7 +595,6 @@ def test_concurrent_appenders_stress(spark, tmp_path):
         ConcurrentCommitError,
         expire_snapshots,
         manifest,
-        snap_count,
         snap_read,
         versions,
     )
@@ -956,10 +665,9 @@ def test_concurrent_appenders_stress(spark, tmp_path):
         ]
     )
     assert got == want, "every batch exactly once, no loser rows"
-    assert snap_count(out) == len(want)
     # monotone history: every version's count grows by exactly one batch
     for v in vs:
-        assert snap_count(out, v) == 1 + v * rows_per
+        assert snap_read(spark, out, v).count() == 1 + v * rows_per
 
     # losers moved part files into the table dir before losing the
     # version link — invisible to every manifest; backdate them and
@@ -991,7 +699,6 @@ def test_vacuum_reclaims_cold_orphan_data_files(spark, tmp_path):
 
     from cargo_chat_spark.sources.snapshots import (
         expire_snapshots,
-        snap_count,
         snap_read,
         versions,
     )
@@ -999,7 +706,7 @@ def test_vacuum_reclaims_cold_orphan_data_files(spark, tmp_path):
     out = str(tmp_path / "snap")
     e = load_table(spark, SF_DIR_SMALL, "events").limit(20)
     snap_write(e, out)
-    n = snap_count(out)
+    n = snap_read(spark, out).count()
 
     cold = os.path.join(out, "v1-part-orphan-cold.parquet")
     live = os.path.join(out, "v1-part-orphan-live.parquet")
@@ -1029,7 +736,6 @@ def test_concurrent_append_and_dv_delete_race(spark, tmp_path):
 
     from cargo_chat_spark.sources.snapshots import (
         ConcurrentCommitError,
-        snap_count,
         snap_delete_rows,
         snap_read,
         versions,
@@ -1103,10 +809,9 @@ def test_concurrent_append_and_dv_delete_race(spark, tmp_path):
            for w in range(2) for b in range(2) for i in range(4)]
     )
     assert got == want, (got, want)
-    assert snap_count(out) == len(want)
-    # every intermediate version still readable and count-consistent
+    # every intermediate version still readable
     for v in vs:
-        assert snap_read(spark, out, v).count() == snap_count(out, v)
+        snap_read(spark, out, v).collect()
 
 
 # ------------------------------------------------- signed file-diff deltas
@@ -1172,14 +877,13 @@ def test_file_deltas_see_merge_on_read_commits(spark, tmp_path):
     """A merge-on-read delete keeps the file list and only grows the
     deletion vector — the manifest diff is empty while logical rows
     changed. The shared-file DV-diff pass must emit sgn=-1 for newly
-    deleted positions (and +1 when a restore shrinks the vector back),
-    or ivm_refresh / incremental_join_cdc consumers silently hold wrong
+    deleted positions (and +1 when diffed backwards, where the vector
+    shrinks), or ivm_refresh / incremental_join_cdc consumers silently hold wrong
     view state (round-7 ADVICE, high)."""
     from cargo_chat_spark.sources.snapshots import (
         manifest,
         snap_delete_rows,
         snap_file_deltas,
-        snap_restore,
         snap_write,
     )
 
@@ -1199,14 +903,10 @@ def test_file_deltas_see_merge_on_read_commits(spark, tmp_path):
     got = {(r["event_id"], r["sgn"]) for r in d.select("event_id", "sgn").collect()}
     assert got == {(i, -1) for i in dead}
 
-    # restore back to v0 (v2): the vector shrinks, same files → +1 rows
-    snap_restore(out, 0)
-    d2 = snap_file_deltas(spark, out, 1, 2)
+    # diffed backwards (v1 → v0): the vector shrinks, same files → +1 rows
+    d2 = snap_file_deltas(spark, out, 1, 0)
     got2 = {(r["event_id"], r["sgn"]) for r in d2.select("event_id", "sgn").collect()}
     assert got2 == {(i, 1) for i in dead}
-
-    # whole round trip v0→v2 is a logical no-op: empty delta
-    assert snap_file_deltas(spark, out, 0, 2).count() == 0
 
     # cost contract: the MoR delta reads only the DV-touched shared data
     # files (plus the O(deleted rows) DV sidecars themselves)
@@ -1224,105 +924,3 @@ def test_file_deltas_no_change_is_empty(spark, tmp_path):
     d = snap_file_deltas(spark, out, 0, 0)
     assert d.count() == 0
     assert "sgn" in d.columns and set(e.columns) <= set(d.columns)
-
-
-# ------------------------------------------------ small-file compaction
-
-
-def test_compact_small_files_binpack(spark, tmp_path):
-    """snap_compact_files rewrites ONLY the small files (large files
-    survive byte-identical), packs them into target-size bins,
-    materializes the DV for rewritten files while carrying it for
-    untouched ones, yields an EMPTY change feed, and no-ops when there
-    is nothing to pack."""
-    from cargo_chat_spark.sources.snapshots import (
-        manifest,
-        snap_append,
-        snap_changes,
-        snap_compact_files,
-        snap_delete_rows,
-        snap_read,
-        snap_write,
-    )
-
-    out = str(tmp_path / "t")
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    snap_write(e.where(F.col("user_id") % 5 == 0).coalesce(1), out)  # big
-    for m in range(1, 5):
-        snap_append(e.where(F.col("user_id") % 5 == m).coalesce(1), out)
-    big = manifest(out, 0)["files"]
-    assert len(big) == 1
-    # MoR delete rows living in BOTH the big file (user 10) and a small
-    # one (user 11): compaction must carry the former, materialize the
-    # latter
-    snap_delete_rows(
-        spark, out,
-        e.where(F.col("user_id").isin(10, 11)).select("event_id"),
-        "event_id",
-    )
-    pre = manifest(out)
-    pre_v = pre["version"]
-    want = _rows(snap_read(spark, out))
-
-    small_cut = os.path.getsize(os.path.join(out, big[0]))  # excludes big
-    stat_before = _file_stats(out, big)
-    v = snap_compact_files(
-        spark, out, small_bytes=small_cut, target_bytes=40_000
-    )
-    m2 = manifest(out, v)
-    assert big[0] in m2["files"], "the large file must survive"
-    assert _file_stats(out, big) == stat_before, "byte-identical"
-    new_files = [f for f in m2["files"] if f != big[0]]
-    assert 2 <= len(new_files) < 4, "target_bytes must force >1 bin"
-    # logical content unchanged; deletes not resurrected
-    assert _rows(snap_read(spark, out, v)) == want
-    assert snap_changes(spark, out, pre_v, v, "event_id").count() == 0
-    # DV: the untouched big file keeps its positions; rewritten files
-    # materialized theirs
-    dv_files = set()
-    from cargo_chat_spark.sources.snapshots import _dv_positions
-    pos = _dv_positions(spark, out, m2)
-    if pos is not None:
-        dv_files = {r["file"] for r in pos.select("file").distinct().collect()}
-    assert dv_files == {big[0]}
-    # idempotence: everything is now either big or already packed
-    v2 = snap_compact_files(
-        spark, out, small_bytes=small_cut, target_bytes=40_000
-    )
-    assert v2 == v or len(manifest(out, v2)["files"]) <= len(m2["files"])
-
-
-# --------------------------------------------------------- tags (refs)
-
-
-def test_tags_pin_versions_against_vacuum(spark, tmp_path):
-    """A tagged version and its files survive expire_snapshots; dropping
-    the tag releases them on the next vacuum; reads-by-tag are exact;
-    tagging a missing version raises."""
-    import pytest as _pytest
-
-    from cargo_chat_spark.sources.snapshots import (
-        expire_snapshots,
-        list_tags,
-        snap_drop_tag,
-        snap_read_tag,
-        snap_tag,
-        versions,
-    )
-
-    out = str(tmp_path / "t")
-    e, (v0, v1, v2) = _build(spark, out)
-    want_v1 = _rows(snap_read(spark, out, v1))
-    snap_tag(out, "train-run", v1)
-    assert list_tags(out) == {"train-run": v1}
-    with _pytest.raises(ValueError):
-        snap_tag(out, "oops", 99)
-
-    expire_snapshots(out, keep_last=1)
-    assert set(versions(out)) == {v1, v2}  # tagged v1 retained, v0 gone
-    assert _rows(snap_read_tag(spark, out, "train-run")) == want_v1
-
-    snap_drop_tag(out, "train-run")
-    expire_snapshots(out, keep_last=1)
-    assert set(versions(out)) == {v2}
-    assert _rows(snap_read(spark, out, v2)) == _rows(snap_read(spark, out))

@@ -1,41 +1,29 @@
 """Model-based randomized test of the snapshot store.
 
-The snapshot store (``sources/snapshots.py``) composes many mechanisms —
-copy-on-write deletes, merge-on-read deletion vectors, conditional MERGE,
-OPTIMIZE, RESTORE, DV compaction — whose INTERACTIONS are where round-6's
-one real defect lived (MERGE resurrecting DV'd rows). This test drives
-random operation sequences against a parallel in-Python model and checks
-after every step that every committed version still reads back exactly
-what the model predicts (content, metadata-only count, and time travel),
-with a final sweep over the entire history.
+The snapshot store (``sources/snapshots.py``) composes several mechanisms
+— copy-on-write deletes, merge-on-read deletion vectors, MERGE — whose
+INTERACTIONS are where round-6's one real defect lived (MERGE
+resurrecting DV'd rows). This test drives random operation sequences
+against a parallel in-Python model and checks after every step that
+every committed version still reads back exactly what the model predicts
+(content and time travel), with a final sweep over the entire history.
 
 The model is LAYOUT-INDEPENDENT: it tracks the visible row multiset per
 version plus a conservative ``maybe_ghost`` key set (keys that may still
 occupy raw files as deletion-vectored "ghost" rows). Visible content is
 exactly predictable for every operation; ghost materialization depends
 on which physical files a rewrite touches, so the model only *consumes*
-ghost state where it is unambiguous. MERGE insert detection runs against
-VISIBLE keys (Delta semantics, round-7 ADVICE fix), which makes every
-MERGE outcome layout-independent — sources hit maybe-ghost keys freely
-and a not-visible key always inserts the source row (upsert-after-delete
-is pinned with a controlled layout in test_merge_into_clauses too).
-Two commit outcomes that legitimately depend on physical state
-(whether compaction found a vector to clear, i.e. version no-op) are
-read back from the store and only validated for self-consistency.
+ghost state where it is unambiguous.
 
-Reference semantics modeled, with file:line anchors into snapshots.py:
-- snap_append / snap_write: add rows / replace content (:257, :274)
+Reference semantics modeled (``sources/snapshots.py``):
+- snap_append / snap_write: add rows / replace content
 - snap_delete (CoW): visible matched rows vanish; the deleted keys may
-  leave ghosts in files the rewrite did not touch (:307)
+  leave ghosts in files the rewrite did not touch
 - snap_delete_rows (MoR): visible matched rows vanish, files untouched,
-  deleted keys become ghosts (:555)
-- snap_compact_dv: content-preserving; clears every ghost; version no-op
-  iff the manifest carries no vector (:595)
-- snap_merge_into: UPDATE acts on visible matched rows; INSERT for keys
-  absent from the VISIBLE table (DV applied — Delta upsert-after-delete)
-- snap_optimize: full content rewrite through the DV — ghost-free,
-  content-identical (:1077)
-- snap_restore: deep copy of the target version's files + DV (:681)
+  deleted keys become ghosts
+- snap_merge: whole-row upsert by key — every visible row of a source
+  key is replaced by the source row; keys absent from the VISIBLE table
+  (DV applied) insert
 """
 
 from __future__ import annotations
@@ -47,16 +35,10 @@ import pytest
 from cargo_chat_spark.sources.snapshots import (
     snap_append,
     snap_changes,
-    snap_compact_dv,
-    snap_compact_files,
-    snap_count,
     snap_delete,
     snap_delete_rows,
-    snap_delete_where,
-    snap_merge_into,
-    snap_optimize,
+    snap_merge,
     snap_read,
-    snap_restore,
     snap_write,
     versions,
 )
@@ -97,7 +79,6 @@ def _check(spark, path, model, rng):
             for r in snap_read(spark, path, v).collect()
         )
         assert got == want, f"v{v}: got {got} want {want}"
-        assert snap_count(path, v) == len(want), f"v{v} count"
 
 
 def _rand_rows(rng, next_id, n, keys=KEYS):
@@ -119,9 +100,7 @@ def test_snapshot_store_matches_model(spark, tmp_path, seed):  # noqa: F811
     snap_write(_df(spark, rows), path)
     model = [State(rows, ())]
 
-    ops = ["append", "delete_cow", "delete_rows", "compact_dv",
-           "merge_into", "optimize", "restore", "write", "delete_where",
-           "compact_files"]
+    ops = ["append", "delete_cow", "delete_rows", "merge", "write"]
     for _ in range(16):
         op = rng.choice(ops)
         cur = model[-1]
@@ -154,20 +133,7 @@ def test_snapshot_store_matches_model(spark, tmp_path, seed):  # noqa: F811
             ghosted = {k for k in keys if k in cur.visible_keys()}
             model.append(State(vis, cur.maybe_ghost | ghosted))
 
-        elif op == "compact_dv":
-            pre = versions(path)[-1]
-            got_v = snap_compact_dv(spark, path)
-            if got_v == pre:
-                # store says: no vector -> genuinely no ghosts anywhere.
-                # Self-consistency: the model must at least have allowed
-                # that (it never tracks a DEFINITE ghost set, so only
-                # check it didn't just materialize one via delete_rows
-                # on visible keys with untouched files since)
-                continue
-            # vector cleared: content preserved, every ghost gone
-            model.append(State(cur.visible, ()))
-
-        elif op == "merge_into":
+        elif op == "merge":
             # insert detection is against VISIBLE keys (Delta semantics,
             # round-7 ADVICE fix): a source key whose only stored rows
             # are DV-deleted ghosts INSERTS the source row — fully
@@ -179,58 +145,9 @@ def test_snapshot_store_matches_model(spark, tmp_path, seed):  # noqa: F811
                 for i, k in enumerate(src_keys)
             ]
             next_id += len(src)
-            snap_merge_into(
-                spark, path, _df(spark, src), "k",
-                matched_update={"v": "s.v + t.v"},
-            )
-            by_key = {r[1]: r for r in src}
-            vis_keys = cur.visible_keys()
-            updated = [
-                (r[0], r[1], r[2] + by_key[r[1]][2])
-                if r[1] in by_key else r
-                for r in cur.visible
-            ]
-            inserts = [s for s in src if s[1] not in vis_keys]
-            model.append(State(updated + inserts, cur.maybe_ghost))
-
-        elif op == "delete_where":
-            # retention delete: DELETE WHERE v < cutoff, resolved at
-            # file granularity through stats (drop whole / keep whole /
-            # rewrite straddling through the DV) — visible semantics
-            # are layout-independent; ghost disposal is not (dropped
-            # and rewritten files shed theirs) so maybe_ghost stays
-            # conservative
-            cutoff = rng.randrange(1000)
-            snap_delete_where(spark, path, "v", cutoff)
-            vis = [r for r in cur.visible if r[2] >= cutoff]
-            model.append(State(vis, cur.maybe_ghost))
-
-        elif op == "optimize":
-            two_d = rng.random() < 0.5
-            snap_optimize(
-                spark, path, "k", "v" if two_d else None, n_files=2
-            )
-            # full rewrite through the DV: ghost-free, content-identical
-            model.append(State(cur.visible, ()))
-
-        elif op == "compact_files":
-            # binpack: rewritten small files shed their ghosts, untouched
-            # files keep theirs — carrying the full set stays on the
-            # model's conservative side. Fewer than 2 files commits
-            # nothing, so only append a state when a version landed.
-            prev_v = len(model) - 1
-            v_new = snap_compact_files(
-                spark, path, small_bytes=1 << 30, target_bytes=1 << 16
-            )
-            if v_new > prev_v:
-                model.append(State(cur.visible, cur.maybe_ghost))
-
-        elif op == "restore":
-            target = rng.choice(versions(path))
-            snap_restore(path, target)
-            model.append(
-                State(model[target].visible, model[target].maybe_ghost)
-            )
+            snap_merge(spark, path, _df(spark, src), "k")
+            vis = [r for r in cur.visible if r[1] not in set(src_keys)]
+            model.append(State(vis + src, cur.maybe_ghost))
 
         _check(spark, path, model, rng)
 
@@ -242,12 +159,11 @@ def test_snapshot_store_matches_model(spark, tmp_path, seed):  # noqa: F811
             for r in snap_read(spark, path, v).collect()
         )
         assert got == want, f"final sweep v{v}: got {got} want {want}"
-        assert snap_count(path, v) == len(want), f"final sweep v{v} count"
 
     # CDC invariant: the change feed between two versions (keyed by the
     # UNIQUE rowid) must equal the model's visible-set diff exactly —
-    # shared-file survivors, CoW moves, DV-only commits, restores and
-    # optimizes all cancel or surface per the documented semantics. One
+    # shared-file survivors, CoW moves and DV-only commits all cancel or
+    # surface per the documented semantics. One
     # exception mirrors snap_write's REPLACE: every old file leaves the
     # manifest, so an identical row rewritten by `write` hashes equal
     # on both sides and is correctly reported as no-change (our model

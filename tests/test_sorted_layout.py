@@ -1,132 +1,34 @@
-"""Physical pins for the min/max-manifest data-skipping layout
-(sources/sorted_layout.py): the pruned read lists ONLY the files whose
-range overlaps the predicate, boundary rows survive the overlap test,
-and an empty selection yields an empty (not failing) frame."""
+"""Physical pin for the range-sorted layout (sources/sorted_layout.py):
+each file covers a disjoint, ascending range of the sort column, rows are
+sorted within each file, and the layout loses or duplicates no row."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
 
-from cargo_chat_spark.sources.sorted_layout import (
-    pruned_files,
-    read_range_pruned,
-    write_range_sorted,
-)
+from cargo_chat_spark.sources.sorted_layout import write_range_sorted
 from cargo_chat_spark.sources.testdata import load_table
 from tests.conftest import SF_DIR_SMALL
 
 
-def _layout(spark, tmp_path, n_files=8):
+def test_range_sorted_files_cover_disjoint_sorted_ranges(spark, tmp_path):
     e = load_table(spark, SF_DIR_SMALL, "events")
     out = str(tmp_path / "sorted")
-    write_range_sorted(e, out, "user_id", n_files=n_files)
-    return e, out
+    write_range_sorted(e, out, "user_id", n_files=8)
 
+    files = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+    assert 1 < len(files) <= 8
+    ranges = []
+    for f in files:
+        ids = pq.read_table(os.path.join(out, f), columns=["user_id"])
+        ids = ids.column("user_id").to_pylist()
+        assert ids == sorted(ids), f"{f} is not sorted"
+        ranges.append((ids[0], ids[-1]))
+    ranges.sort()
+    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+        assert hi < lo, f"file ranges overlap: {ranges}"
 
-def test_pruned_scan_reads_subset_of_files_and_matches_full_filter(
-    spark, tmp_path
-):
-    e, out = _layout(spark, tmp_path)
-    lo, hi = 100, 140
-    df = read_range_pruned(spark, out, "user_id", lo, hi)
-
-    opened = {os.path.basename(f) for f in df.inputFiles()}
-    all_files = {
-        f for f in os.listdir(out) if f.endswith(".parquet")
-    }
-    assert opened == set(pruned_files(out, "user_id", lo, hi))
-    assert len(opened) < len(all_files), (
-        f"no skipping happened: opened {len(opened)}/{len(all_files)}"
-    )
-
-    want = sorted(
-        tuple(r)
-        for r in e.where(
-            (F.col("user_id") >= lo) & (F.col("user_id") < hi)
-        ).collect()
-    )
-    got = sorted(tuple(r) for r in df.collect())
-    assert got == want
-
-
-def test_boundary_rows_survive_and_disjoint_ranges_partition(spark, tmp_path):
-    e, out = _layout(spark, tmp_path)
-    total = e.count()
-    # three adjacent windows tile the id domain: no loss, no double-count
-    lo_all = e.agg(F.min("user_id")).first()[0]
-    hi_all = e.agg(F.max("user_id")).first()[0] + 1
-    mid1 = lo_all + (hi_all - lo_all) // 3
-    mid2 = lo_all + 2 * (hi_all - lo_all) // 3
-    n = sum(
-        read_range_pruned(spark, out, "user_id", a, b).count()
-        for a, b in ((lo_all, mid1), (mid1, mid2), (mid2, hi_all))
-    )
-    assert n == total
-
-
-def test_empty_selection_and_wrong_column_guard(spark, tmp_path):
-    import pytest
-
-    _, out = _layout(spark, tmp_path)
-    none = read_range_pruned(spark, out, "user_id", 10**9, 10**9 + 5)
-    assert none.count() == 0
-    with pytest.raises(ValueError):
-        pruned_files(out, "event_id", 0, 10)
-
-
-def test_zorder_prunes_on_either_column_and_matches_full_filter(
-    spark, tmp_path
-):
-    """Z-order's point vs the 1-D sort: a predicate on EITHER column
-    alone opens a strict subset of files, and the pruned two-column read
-    equals the full-scan filter exactly."""
-    import datetime
-
-    from cargo_chat_spark.sources.sorted_layout import (
-        pruned_files_2d,
-        read_zorder_pruned,
-        write_zordered,
-    )
-
-    e = load_table(spark, SF_DIR_SMALL, "events")
-    out = str(tmp_path / "zorder")
-    write_zordered(e, out, "user_id", "ts", n_files=16)
-    all_files = {f for f in os.listdir(out) if f.endswith(".parquet")}
-    assert len(all_files) == 16
-
-    a_only = pruned_files_2d(out, a_range=(3, 10))
-    b_only = pruned_files_2d(
-        out,
-        b_range=(datetime.datetime(2024, 1, 8), datetime.datetime(2024, 1, 15)),
-    )
-    assert 0 < len(a_only) < len(all_files), f"user band opened {len(a_only)}"
-    assert 0 < len(b_only) < len(all_files), f"time band opened {len(b_only)}"
-
-    both = pruned_files_2d(
-        out,
-        a_range=(3, 10),
-        b_range=(datetime.datetime(2024, 1, 8), datetime.datetime(2024, 1, 15)),
-    )
-    assert set(both) <= set(a_only) and set(both) <= set(b_only)
-
-    df = read_zorder_pruned(
-        spark, out, "user_id", "ts",
-        a_range=(3, 10),
-        b_range=(datetime.datetime(2024, 1, 8), datetime.datetime(2024, 1, 15)),
-    )
-    opened = {os.path.basename(f) for f in df.inputFiles()}
-    assert opened == set(both)
-
-    want = sorted(
-        tuple(r)
-        for r in e.where(
-            (F.col("user_id") >= 3)
-            & (F.col("user_id") < 10)
-            & (F.col("ts") >= F.lit(datetime.datetime(2024, 1, 8)))
-            & (F.col("ts") < F.lit(datetime.datetime(2024, 1, 15)))
-        ).collect()
-    )
-    got = sorted(tuple(r) for r in df.collect())
-    assert got == want
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == sorted(tuple(r) for r in e.collect())

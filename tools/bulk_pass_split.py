@@ -4,9 +4,11 @@
 
 Builds the seeded bulk index as perfbench does, warms up, runs ``--passes``
 passes with the event log on, and prints the split of the median pass: each
-Spark job's span with its stages and per-task times (input rows in
-brackets), and the driver-side gaps before the first job, between jobs and
-after the last one. It reads the event fields ``tools/profile_query.py``
+Spark job's span with its stages and tasks, and the driver-side gaps before
+the first job, between jobs and after the last one. Each task prints as
+``span(deserialize/run/cpu/gc)[input rows/shuffle records read]``, times in
+ms: the executor's deserialize, run, CPU and GC time of the task beside its
+launch-to-finish span. It reads the event fields ``tools/profile_query.py``
 reads. Everything it writes goes to a temporary directory it removes.
 """
 
@@ -52,12 +54,20 @@ def split(events: list[dict], t0: float, t1: float) -> list[str]:
         elif kind == "SparkListenerTaskEnd":
             info, metrics = ev["Task Info"], ev.get("Task Metrics") or {}
             rows = (metrics.get("Input Metrics") or {}).get("Records Read", 0)
+            shuffled = (metrics.get("Shuffle Read Metrics") or {}).get(
+                "Total Records Read", 0)
+            times = "/".join(str(round(t)) for t in (
+                metrics.get("Executor Deserialize Time", 0),
+                metrics.get("Executor Run Time", 0),
+                metrics.get("Executor CPU Time", 0) / 1e6,  # ns
+                metrics.get("JVM GC Time", 0)))
             tasks.setdefault(ev["Stage ID"], []).append(
-                f"{info['Finish Time'] - info['Launch Time']}[{rows}]")
+                f"{info['Finish Time'] - info['Launch Time']}({times})"
+                f"[{rows}/{shuffled}]")
     lines, last = [], t0
     for job_id, (start, end, stage_ids) in sorted(jobs.items()):
         lines.append(f"  driver gap   {start - last:6.0f} ms")
-        ran = [f"stage {s} {stages[s]}: tasks {'/'.join(tasks.get(s, []))} ms"
+        ran = [f"stage {s} {stages[s]}: tasks {' '.join(tasks.get(s, []))} ms"
                for s in stage_ids if s in stages]
         lines.append(f"  job {job_id:<8} {end - start:6.0f} ms  {'; '.join(ran)}")
         last = end

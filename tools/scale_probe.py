@@ -33,14 +33,6 @@ QUERIES = [
     "quality_score",
     "doc_fingerprints",
     "langid_heuristic",
-    # storage-lifecycle gates (r6): base write scales linearly while the
-    # delete/merge/CDC maintenance targets a FIXED user set (the replicas
-    # shift user_id, so matched rows stay constant as the table grows) —
-    # the realistic "bounded change wave on a growing table" shape
-    "events_merge_on_read",
-    "events_time_travel",
-    "events_snapshot_cdc",
-    "incremental_rollup_cdc",
     # graph family (r7): l_partkey is offset per replica, so each copy is
     # a DISJOINT subgraph — edges, wedges, and label frames scale
     # linearly with no cross-replica pair blowup
